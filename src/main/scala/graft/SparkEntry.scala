@@ -3468,8 +3468,11 @@ object SparkEntry {
     // NULL. Absorption probabilities by a 100-step fixed-point in
     // micro BIGINT (per-edge floor DIV, so the whole table is exact
     // integer and the oracle replays it as a WITH RECURSIVE list
-    // fold); chain + scenarios are model-size (|types|^2 edges), the
-    // only corpus-scale work is the per-user lead window
+    // fold); chain + scenarios are model-size (|types|^2 edges). The
+    // corpus-scale work is the per-user row_number/lead windows and
+    // one eager localCheckpoint of the pre-conversion path (every
+    // event up to each user's first purchase, lineage cut on executor
+    // storage: 2.95 -> 2.20 s isolated against re-deriving it ~5x)
     "q210_markov_attribution" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
@@ -5635,9 +5638,9 @@ object SparkEntry {
     // 9.4 vs 10.8 s bench)
     val curated = docs.join(survivors, Seq("doc_id"))
       .select(col("doc_id"), col("text"))
-    // The curated-corpus boundary. ProfileQ80/JobProfile attribution:
-    // over half of q80's wall time was DRIVER-side gaps between ~54
-    // jobs — every downstream action re-analyzed the five-stage
+    // The curated-corpus boundary. Per-job attribution: over half of
+    // q80's wall time was DRIVER-side gaps between ~54 jobs — every
+    // downstream action re-analyzed the five-stage
     // curation lineage, and each AQE stage re-optimized it. Writing
     // the boundary as a table (the between-pipeline table a production
     // run writes anyway) makes every downstream plan a manifest-

@@ -15,26 +15,31 @@ object Tables {
   /** Inferred parquet schema per table path, memoized for the JVM's
     * lifetime. `spark.read.parquet(path)` re-infers the schema on
     * EVERY call — file listing plus a footer-read pass that measured
-    * ~70 ms per load at sf0.1 (SchemaInferProbe: 354 ms vs 25 ms for
-    * 5 tables; a trivial one-table query 262 ms vs 75 ms end-to-end).
-    * Every `queries` entry loads 1–3 tables per invocation and the
-    * bench invokes each entry twice, so inference alone contributed
-    * tens of seconds of pure per-query fixed floor across the
-    * 331-query suite (guide §1.2: fix the machinery around the scan
-    * before the scan itself). The cache holds METADATA only (the
-    * schema a production deployment would get from its catalog —
-    * never rows, never results): every execution still scans parquet.
-    * Keyed by the full path, so different SF dirs never collide; the
-    * driver's testdata tables are immutable within a session.
+    * ~70 ms per load at sf0.1 (354 ms vs 25 ms for 5 tables; a trivial
+    * one-table query 262 ms vs 75 ms end-to-end). Every `queries`
+    * entry loads 1–3 tables per invocation and the bench invokes each
+    * entry twice, so inference alone contributed tens of seconds of
+    * pure per-query fixed floor across the 331-query suite (guide
+    * §1.2: fix the machinery around the scan before the scan itself).
+    * The cache holds METADATA only (the schema a production deployment
+    * would get from its catalog — never rows, never results): every
+    * execution still scans parquet. Each entry remembers the path's
+    * modification time, and a path rewritten since (possibly with
+    * another schema) is inferred again; an unchanged path costs one
+    * file-status call.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
+      String, (Long, org.apache.spark.sql.types.StructType)]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val (_, schema) = schemaCache.compute(path, (_, cached) =>
+      if (cached != null && cached._1 == mtime) cached
+      else (mtime, spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

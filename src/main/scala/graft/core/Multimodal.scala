@@ -315,10 +315,10 @@ object Multimodal {
           // metadata DIRECTLY (field writes), where a caller-passed
           // metadata object — even this writer's own default — takes
           // the convertImageMetadata path: getAsTree → a ~256-node DOM
-          // palette tree built and re-parsed PER FRAME (TaskSample on
-          // q90: getNativeTree + IIOMetadataNode.setAttribute owned
-          // the runnable samples). Identical default fields either
-          // way; pixel bytes untouched.
+          // palette tree built and re-parsed PER FRAME (executor
+          // thread samples on q90: getNativeTree +
+          // IIOMetadataNode.setAttribute owned the runnable samples).
+          // Identical default fields either way; pixel bytes untouched.
           writer.writeToSequence(new javax.imageio.IIOImage(f, null, null), param)
         }
         writer.endWriteSequence()
@@ -438,7 +438,7 @@ object Multimodal {
     // `AudioSystem.getAudioInputStream`/`.write` resolve their SPI
     // providers through com.sun.media.sound.JSSecurityManager PER
     // CALL, under one lock, re-walking the classpath jars each time —
-    // measured with TaskSample on q129: 36.6k of 36.6k blocked
+    // measured by thread sampling on q129: 36.6k of 36.6k blocked
     // executor samples sat in JSSecurityManager.getProviders once the
     // codec went 32-way parallel (a lock convoy; serial it "only"
     // costs the rescan). Resolve the public javax.sound.sampled.spi
@@ -452,7 +452,7 @@ object Multimodal {
         .iterator().asScala.toSeq
         // the JDK's MIDI-as-audio reader probes by calling back into
         // MidiSystem — the SAME per-call JDK13Services registry lock
-        // the cache here exists to avoid (TaskSample round 2: the
+        // the cache here exists to avoid (a second sampling round: the
         // convoy moved from AudioSystem to the MIDI probe). Every
         // sampled-audio reader rejects by header sniff; order them
         // first. At most one reader accepts a given payload, so order

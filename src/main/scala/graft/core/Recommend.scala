@@ -52,7 +52,10 @@ object Recommend {
                   minSupport: Long = 2L,
                   maxItemsPerUser: Int = Int.MaxValue): DataFrame = {
     require(maxItemsPerUser >= 1, "maxItemsPerUser must be >= 1")
+    // NULL users and items are no interaction: dropped here rather than
+    // left to the inner joins on the item counts below
     val interAll = ui.select(col(userCol).as("u"), col(itemCol).as("it"))
+      .filter(col("u").isNotNull && col("it").isNotNull)
       .distinct()
     val counts = interAll.groupBy(col("it")).agg(count(lit(1)).as("n_users"))
     // uncapped ⇒ skip the rank window entirely (no per-user sort paid

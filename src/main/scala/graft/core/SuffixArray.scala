@@ -55,18 +55,6 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
-  // stage timing to stderr when -Dgraft.sa.profile is set (the
-  // ProfileQ274 harness); zero cost otherwise
-  private def timed[A](name: String)(f: => A): A =
-    if (!sys.props.contains("graft.sa.profile")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[sa] $name%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
   /** Global DENSE rank of a level's `r` column (BIGINT result): range
     * partitioning colocates EQUAL keys (a range partitioner assigns
     * purely by key order), so a per-partition dense_rank plus the
@@ -200,17 +188,15 @@ object SuffixArray {
         .select(col("sa_doc"), col("pos"), col("rb"),
           expr(s"slice(toks, CAST(pos + $minLen + 1 AS INT), " +
             s"size(toks) - CAST(pos AS INT) - $minLen)").as("rest"))
-      val candShort = timed("gram adjacency") {
-        withRest
-          .withColumn("nxt",
-            lead(struct(col("sa_doc"), col("pos")), 1).over(
-              Window.partitionBy("rb")
-                .orderBy(col("rest"), col("sa_doc"), col("pos"))))
-          .filter(col("nxt").isNotNull)
-          .select(col("sa_doc").as("da"), col("pos").as("pa"),
-            col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
-          .localCheckpoint(true)
-      }
+      val candShort = withRest
+        .withColumn("nxt",
+          lead(struct(col("sa_doc"), col("pos")), 1).over(
+            Window.partitionBy("rb")
+              .orderBy(col("rest"), col("sa_doc"), col("pos"))))
+        .filter(col("nxt").isNotNull)
+        .select(col("sa_doc").as("da"), col("pos").as("pa"),
+          col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
+        .localCheckpoint(true)
       (candShort, bucketRows)
     } else {
       val toks = docs.select(col("sa_doc"),
@@ -227,12 +213,10 @@ object SuffixArray {
         vocab, "w", Seq(col("tok")))
       val nVocab = vr.count()
       val vrSlim = vr.select(col("tok"), col("rank").as("r"))
-      val r0 = timed("base token rank") {
-        toks.join(
-            if (nVocab <= 1000000L) broadcast(vrSlim) else vrSlim, "tok")
-          .select(col("sa_doc"), col("pos"), col("r"))
-          .localCheckpoint(true)
-      }
+      val r0 = toks.join(
+          if (nVocab <= 1000000L) broadcast(vrSlim) else vrSlim, "tok")
+        .select(col("sa_doc"), col("pos"), col("r"))
+        .localCheckpoint(true)
       vRel()
 
     // prefix doubling; levels accumulate newest-first (largest width
@@ -278,7 +262,7 @@ object SuffixArray {
       val extra = if (cur0.columns.contains("rb")) Seq("rb") else Nil
       val cur =
         if (leaves < leafCap) cur0
-        else timed(f"dense re-rank at w=$width") {
+        else {
           val (compressed, nGroups) = denseRankDirect(cur0, extra)
           if (nGroups == nTotal || nGroups == lastDenseRanks)
             converged = true
@@ -288,16 +272,14 @@ object SuffixArray {
           compressed
         }
       if (!converged) {
-        val next0 = timed(f"round w=${width * 2}") {
-          // checkpoint every level: the LCP descent joins each one,
-          // and re-deriving nested windows per join would be quadratic
-          cur.select(
+        // checkpoint every level: the LCP descent joins each one,
+        // and re-deriving nested windows per join would be quadratic
+        val next0 = cur.select(
             Seq(col("sa_doc"), col("pos")) ++ extra.map(col) :+
               struct(col("r").as("a"),
                 coalesce(lead(col("r"), width.toInt).over(byDoc), zero)
                   .as("b")).as("r"): _*)
-            .localCheckpoint(true)
-        }
+          .localCheckpoint(true)
         zero = struct(zero.as("a"), zero.as("b"))
         leaves *= 2
         width *= 2
@@ -329,17 +311,15 @@ object SuffixArray {
       .getOrElse(fin)
       .select(col("sa_doc"), col("pos"), col("rb"))
       .persist()
-    val candLong = timed("bucket adjacency") {
-      fin
-        .withColumn("nxt",
-          lead(struct(col("sa_doc"), col("pos")), 1).over(
-            Window.partitionBy("rb")
-              .orderBy(col("r"), col("sa_doc"), col("pos"))))
-        .filter(col("nxt").isNotNull)
-        .select(col("sa_doc").as("da"), col("pos").as("pa"),
-          col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
-        .localCheckpoint(true)
-    }
+    val candLong = fin
+      .withColumn("nxt",
+        lead(struct(col("sa_doc"), col("pos")), 1).over(
+          Window.partitionBy("rb")
+            .orderBy(col("r"), col("sa_doc"), col("pos"))))
+      .filter(col("nxt").isNotNull)
+      .select(col("sa_doc").as("da"), col("pos").as("pa"),
+        col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
+      .localCheckpoint(true)
     (candLong, bucketsLong)
     }
 
@@ -401,20 +381,18 @@ object SuffixArray {
     // repeat text from the first suffix of each adjacent pair; each
     // winner keeps a WITNESS suffix so the occurrence count below can
     // probe by the witness's rank bucket instead of scanning tokens
-    val winners = timed("winners") {
-      exact
-        .join(docs.select(col("sa_doc").as("da"), col("toks")), Seq("da"))
-        .select(
-          concat_ws(" ", slice(col("toks"), (col("pa") + 1).cast("int"),
-            col("lcp_f").cast("int"))).as("repeat_text"),
-          col("lcp_f").as("repeat_len"),
-          struct(col("da"), col("pa")).as("wit"))
-        .groupBy("repeat_text", "repeat_len")
-        .agg(min("wit").as("wit"))
-        .orderBy(col("repeat_len").desc, col("repeat_text").asc)
-        .limit(topK)
-        .localCheckpoint(true)
-    }
+    val winners = exact
+      .join(docs.select(col("sa_doc").as("da"), col("toks")), Seq("da"))
+      .select(
+        concat_ws(" ", slice(col("toks"), (col("pa") + 1).cast("int"),
+          col("lcp_f").cast("int"))).as("repeat_text"),
+        col("lcp_f").as("repeat_len"),
+        struct(col("da"), col("pa")).as("wit"))
+      .groupBy("repeat_text", "repeat_len")
+      .agg(min("wit").as("wit"))
+      .orderBy(col("repeat_len").desc, col("repeat_text").asc)
+      .limit(topK)
+      .localCheckpoint(true)
 
     // occurrence counts for the <= topK winners: every true occurrence
     // shares the witness's first-j0w tokens, hence its rank BUCKET —

@@ -111,6 +111,12 @@ object GraftShim {
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
+  /** Listeners registered on the bus — lets a spec check that a
+    * profiler removed the listener it added.
+    */
+  def listenerCount(spark: SparkSession): Int =
+    spark.sparkContext.listenerBus.listeners.size
+
   /** [[manifestParquet]]'s index as the RICHER
     * `PartitioningAwareFileIndex` the DSv2 `ParquetScanBuilder`
     * requires — same zero-storage-round-trip contract: leaf files and

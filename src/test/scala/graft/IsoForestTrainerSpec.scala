@@ -38,6 +38,18 @@ class IsoForestTrainerSpec extends SparkSpec {
     assert(maxOut < medIn)
   }
 
+  test("fit casts integer feature columns (count features) to double") {
+    val counts = data.withColumn("f3", round($"f3").cast("int"))
+    val model = IsoForestTrainer.fit(counts, Seq("f1", "f2", "f3"),
+      nTrees = 50, maxSamples = 128, seed = 11L)
+    val bc = spark.sparkContext.broadcast(model)
+    val scoreUdf = udf((a: Double, b: Double, c: Double) =>
+      bc.value.decisionFunction(Array(a, b, c)))
+    val caught = counts.filter($"planted" &&
+      scoreUdf($"f1", $"f2", $"f3".cast("double")) < 0).count()
+    assert(caught >= 36, s"caught $caught/40 planted outliers")
+  }
+
   test("fit is deterministic under a fixed seed") {
     val m1 = IsoForestTrainer.fit(data, Seq("f1", "f2", "f3"),
       nTrees = 20, maxSamples = 64, seed = 3L)

@@ -10,19 +10,33 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  test("partitionBy: filters on the partition column prune at the scan") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/readings"
-    val (readings, _) = graft.core.EnergyIngest.ingest(spark, RefCsv)
-    Layout.writePartitioned(readings, dir, Seq("Season"))
-    // physical layout: one dir per season
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("Season=Spring", "Season=Winter"))
-    val q = spark.read.parquet(dir).filter($"Season" === "Spring")
+  /** Writes `df` partitioned by `part`, checks one dir per expected
+    * value, and that a filter on `value` prunes at the scan with no
+    * rows lost.
+    */
+  private def assertPrunes(df: org.apache.spark.sql.DataFrame, part: String,
+                           values: Seq[String], value: String): Unit = {
+    val dir = Files.createTempDirectory("graft_layout").toString + "/t"
+    Layout.writePartitioned(df, dir, Seq(part))
+    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted.toSeq
+    assert(dirs == values.map(v => s"$part=$v"))
+    val q = spark.read.parquet(dir).filter(col(part) === value)
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan)
-    assert(plan.contains("Season=Spring") || plan.contains("isnotnull(Season"), plan)
-    val full = readings.filter($"Season" === "Spring").count()
-    assert(q.count() == full)
+    assert(plan.contains(s"$part=$value") || plan.contains(s"isnotnull($part"),
+      plan)
+    assert(q.count() == df.filter(col(part) === value).count())
+  }
+
+  test("partitionBy: filters on the partition column prune at the scan") {
+    val (readings, _) = graft.core.EnergyIngest.ingest(spark, RefCsv)
+    assertPrunes(readings, "Season", Seq("Spring", "Winter"), "Spring")
+  }
+
+  test("partitionBy on the events table: pruned read keeps every row") {
+    assertPrunes(Tables.events(spark, Sf0001), "event_type",
+      Seq("click", "error", "purchase", "signup", "view"), "purchase")
   }
 
   test("q181 star join: dims broadcast, facts meet on one shuffled key") {

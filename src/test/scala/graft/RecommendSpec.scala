@@ -12,9 +12,10 @@ class RecommendSpec extends SparkSpec {
   test("hand case: sims, support cut, ownership filter, scores") {
     // u1 {A,B}, u2 {A,B,C}, u3 {B,C}: common(A,B)=2, common(B,C)=2,
     // common(A,C)=1 (dies at support 2). |A|=2 |B|=3 |C|=2 ->
-    // sim(A,B) = sim(B,C) = 2/(sqrt(2)*sqrt(3)) = 816497 micro
+    // sim(A,B) = sim(B,C) = 2/(sqrt(2)*sqrt(3)) = 816497 micro. The
+    // NULL items of u1 and u2 are no interaction: they change nothing
     val ui = Seq((1L, "A"), (1L, "B"), (2L, "A"), (2L, "B"), (2L, "C"),
-      (3L, "B"), (3L, "C")).toDF("u", "it")
+      (3L, "B"), (3L, "C"), (1L, null), (2L, null)).toDF("u", "it")
     val sims = Recommend.itemItemSim(ui, "u", "it", minSupport = 2L)
       .as[(String, String, Long, Long)].collect().toSet
     assert(sims == Set(("A", "B", 2L, 816497L), ("B", "C", 2L, 816497L)),

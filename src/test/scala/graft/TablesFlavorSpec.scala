@@ -50,6 +50,20 @@ class TablesFlavorSpec extends SparkSpec {
     assert(e("label").dataType == IntegerType)
   }
 
+  test("load re-infers the schema of a path rewritten with another flavor") {
+    val d = Files.createTempDirectory("graft_rewrite")
+    val docs = d.resolve("documents.parquet")
+    Files.copy(Paths.get(s"$Sf0001/documents.parquet"), docs)
+    assert(Tables.load(spark, d.toString, "documents")
+      .schema("doc_id").dataType == LongType)
+    val in = getClass.getResourceAsStream("/tables_flavor/documents_narrow.parquet")
+    try Files.copy(in, docs, StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
+    val reloaded = Tables.load(spark, d.toString, "documents")
+    assert(reloaded.schema("doc_id").dataType == IntegerType)
+    assert(reloaded.count() == Tables.load(spark, Sf0001, "documents").count())
+  }
+
   // One query per distinct type-consumption path: text regex/tokens,
   // shingle/hash machinery, doc_id arithmetic + portable hashing,
   // n_chars arithmetic, sha2 dedup, BPE dict, per-source windows.

@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Full local gate: compile, tests, t1-style raw-session smoke,
-# t2 correctness (Verify at sf0.01 + DuckDB oracle replay), bench.
+# Full local gate: compile, tests, benchmark unit tests, t1-style
+# raw-session smoke, t2 correctness (Verify at sf0.01 + DuckDB oracle
+# replay), bench.
 # Usage: tools/gate.sh [--bench] [--sf0.1] [--probe10x]
 #   --bench    also run the sf0.1 bench and check BENCH_BUDGET drift
 #   --sf0.1    also replay EVERY oracle at sf0.1 (the second-SF audit —
@@ -13,6 +14,9 @@ cd "$(dirname "$0")/.."
 
 echo "== compile + test =="
 sbt -batch test | grep -E "Tests: |error" | tail -2
+
+echo "== benchmark unit tests =="
+python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -1
 
 echo "== smoke (raw session, sf0.001) =="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep -E "\[smoke\] (entry|ALL|.*FAIL)" | tail -3
