@@ -45,11 +45,11 @@ object Bench {
     val spark = Tables.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the "No Partition Defined" warnings here all come from
-    // lattice-/partition-count-bounded tables allow-listed and
-    // count-pinned on executed plans in WindowShapesSpec — that spec
-    // is the gate; the repeated warning only floods the bench log
-    // (VERDICT r11 "what's wrong" #4)
+    // silence WindowExec's "No Partition Defined" warning for log
+    // volume only: it repeats per query and run and floods the bench
+    // log (VERDICT r11 "what's wrong" #4). It is not evidence that
+    // every unpartitioned window is bounded — WindowShapesSpec pins
+    // only some of the queries that raise it (ROADMAP open item 3).
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

@@ -2414,10 +2414,8 @@ object SparkEntry {
       val uni = Tables.documents(s, dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
-      val (ranked, release) = graft.core.Packing.rankAndCumOrderedReleasable(
-        uni, "c", Seq(desc("c"), asc("w")))
-      val _ = release // one-shot batch shape: consumed at action time
-      ranked.crossJoin(broadcast(uni.agg(sum("c").as("total"))))
+      graft.core.Packing.rankAndCumOrdered(uni, "c", Seq(desc("c"), asc("w")))
+        .crossJoin(broadcast(uni.agg(sum("c").as("total"))))
         .select(col("rank"), col("w").as("token"), col("c"), col("cum"),
           expr("CAST(cum AS DECIMAL(38,0)) * 1000000 DIV total")
             .as("cum_share_micro"))
@@ -2573,10 +2571,10 @@ object SparkEntry {
       val nn = Similarity.ivfTopK(emb, emb, centroids, k = 5, nProbe = 2)
       // the kNN subtree feeds every vote round AND the output join —
       // persist the 5n-row edge list or the bucketed scoring runs
-      // once per consumer (the q80 stage-boundary discipline; bench
-      // clears caches between queries, session teardown reclaims)
-      val edges = nn.select(col("query_id").as("v"),
-        col("neighbor_id").as("u")).persist()
+      // once per consumer (the q80 stage-boundary discipline; the
+      // consumer's Materialize.scope releases it)
+      val edges = Materialize.persist(nn.select(col("query_id").as("v"),
+        col("neighbor_id").as("u")))
       val seeds = emb.filter(col("vec_id") % 4 =!= 0)
         .select(col("vec_id"), col("label").cast("long").as("l"))
       GraphOps.labelPropagate(edges, "v", "u", seeds, "vec_id", "l", 2)
@@ -3489,10 +3487,10 @@ object SparkEntry {
       // (firstp + the join), so the user-window subtree re-derived
       // ~5x; materialize the narrow (user_id, st, i) pre-conversion
       // path once (guide §5, the recommendTopK discipline)
-      val j = ordered.join(firstp, Seq("user_id"), "left")
-        .filter(col("pi").isNull || col("i") <= col("pi"))
-        .select("user_id", "st", "i")
-        .localCheckpoint(true)
+      val j = Materialize.localCheckpoint(
+        ordered.join(firstp, Seq("user_id"), "left")
+          .filter(col("pi").isNull || col("i") <= col("pi"))
+          .select("user_id", "st", "i"))
       val nx = j.withColumn("nxt",
         lead(col("st"), 1).over(Window.partitionBy("user_id").orderBy("i")))
       val trans = j.filter(col("i") === 1)
@@ -5630,13 +5628,14 @@ object SparkEntry {
   def corpusToSequences(s: SparkSession, dir: String,
                         encodeTable: Option[String] = None): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val (survivors, curCaches) = Curation.curateFullSurvivorIdsReleasable(
-      docs, maxNllMicro = 3450000L)
     // docs ⋈ broadcast(id list) — measured FASTER than pulling the
     // texts out of the stage caches (g3 ⋈ ids chained two text
     // shuffles; this is one broadcast hash join over the raw scan:
-    // 9.4 vs 10.8 s bench)
-    val curated = docs.join(survivors, Seq("doc_id"))
+    // 9.4 vs 10.8 s bench). A def, not a val: the curation stages must
+    // build inside the corpus-write scope below so it releases them.
+    def curated = docs.join(
+        Curation.curateFullSurvivorIds(docs, maxNllMicro = 3450000L),
+        Seq("doc_id"))
       .select(col("doc_id"), col("text"))
     // The curated-corpus boundary. Per-job attribution: over half of
     // q80's wall time was DRIVER-side gaps between ~54 jobs — every
@@ -5648,25 +5647,26 @@ object SparkEntry {
     // than pinning them until the encode write. The in-memory persist
     // remains the zero-side-effect small-corpus form.
     val corpus = encodeTable match {
-      case Some(t) =>
+      case Some(t) => Materialize.scope {
         graft.sources.SnapshotTable.overwrite(curated, t + "_corpus")
-        curCaches.unpersist()
         graft.sources.SnapshotTable.read(s, t + "_corpus")
-      case None => curated.persist()
+      }
+      case None => Materialize.persist(curated)
     }
     // ONE corpus scan feeds BOTH the training dict and the vocabulary:
     // the persisted word-frequency table is the training input (filter
     // + cap exactly as Bpe.train), and the char vocabulary derives
     // from word TYPES (Bpe.vocabFromCounts — identical char set, |word
     // types| rows scanned instead of a second corpus pass).
-    val wc = Bpe.wordCounts(corpus, "text").persist()
-    val dict = wc.filter(col("cnt") >= 2L)
-      .orderBy(col("cnt").desc, col("word")).limit(2000000)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val model = Bpe.trainFromDict(dict, numMerges = 100, minFrequency = 2L)
-    val vocabIds = Bpe.vocabFromCounts(wc, model)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    wc.unpersist()
+    val (model, vocabIds) = Materialize.scope {
+      val wc = Materialize.persist(Bpe.wordCounts(corpus, "text"))
+      val dict = wc.filter(col("cnt") >= 2L)
+        .orderBy(col("cnt").desc, col("word")).limit(2000000)
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      val model = Bpe.trainFromDict(dict, numMerges = 100, minFrequency = 2L)
+      (model, Bpe.vocabFromCounts(wc, model)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    }
     val enc = Bpe.encodeIds(corpus, "doc_id", "text", model, vocabIds)
     val packed = encodeTable match {
       case Some(t) =>

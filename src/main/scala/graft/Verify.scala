@@ -19,8 +19,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // one scope per query: whatever the query persisted is released
+      // once its output is written
+      try graft.core.Materialize.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         // A thrown query must surface as a RED row, not a missing one:
         // r6's q38 exception was swallowed here and the driver's

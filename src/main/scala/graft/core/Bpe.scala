@@ -203,24 +203,25 @@ object Bpe {
     *   2. one rewrite pass applying the merge (leftmost
     *      non-overlapping, same semantics as the driver loop).
     *
-    * Per merge the driver sees exactly one row. The dict persists
-    * each round (previous round unpersisted) and localCheckpoints
-    * every `checkpointEvery` merges so lineage stays flat across
-    * hundreds of iterations — the duplicateClusters discipline.
+    * Per merge the driver sees exactly one row. The initial dict
+    * persists and the dict localCheckpoints every `checkpointEvery`
+    * merges so lineage stays flat across hundreds of iterations — the
+    * duplicateClusters discipline. (A per-round persist bought
+    * nothing: each round's cache was read once, by the argmax that
+    * filled it.) Both are released when training returns.
     * k merges cost k small jobs over a table that only SHRINKS; use
     * [[train]] whenever the dict fits (it almost always does — dict
     * size is a property of the language, not the corpus).
     */
   def trainDistributed(df: DataFrame, textCol: String, numMerges: Int,
                        minFrequency: Long = 2L,
-                       checkpointEvery: Int = 8): Model = {
+                       checkpointEvery: Int = 8): Model = Materialize.scope {
     val spark = df.sparkSession
     import spark.implicits._
-    var dict = wordCounts(df, textCol)
+    var dict = Materialize.persist(wordCounts(df, textCol)
       .filter(col("cnt") >= minFrequency)
       .select(concat(split(col("word"), ""), array(lit(EndOfWord)))
-        .as("symbols"), col("cnt"))
-      .persist()
+        .as("symbols"), col("cnt")))
     val merges = mutable.ArrayBuffer.empty[(String, String)]
     var continue = numMerges > 0
     while (continue) {
@@ -238,18 +239,14 @@ object Bpe {
           merges += pair
           val applyMerge = udf((s: Seq[String]) =>
             mergePair(s.toArray, pair).toSeq)
-          val prev = dict
           dict = dict.select(applyMerge(col("symbols")).as("symbols"),
             col("cnt"))
           if (merges.length % checkpointEvery == 0)
-            dict = dict.localCheckpoint(true)
-          dict = dict.persist()
-          prev.unpersist()
+            dict = Materialize.localCheckpoint(dict)
           continue = merges.length < numMerges
         case _ => continue = false
       }
     }
-    dict.unpersist()
     Model(merges.toSeq)
   }
 

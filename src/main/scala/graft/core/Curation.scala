@@ -27,16 +27,9 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Handle over the stage caches a curation run pins. Call
-    * [[unpersist]] AFTER materializing the returned audit (write /
-    * collect) — the caches are what keep the five stages from
-    * re-deriving each other while the plan executes. Without release,
-    * caches accumulate for the session (the reason `Bench` has to
-    * `clearCache()` between queries).
-    */
-  final class StageCaches private[core] (releases: Seq[() => Unit]) {
-    def unpersist(): Unit = releases.foreach(_())
-  }
+  // Every stage boundary below is a Materialize.persist: the caches
+  // keep the stages from re-deriving each other while the returned
+  // plan executes, and the caller's Materialize.scope releases them.
 
   /** @param minQuality  quality gate on `TextAnalysis.qualityScore`
     * @param n           shingle size for near-dup candidate generation
@@ -47,17 +40,7 @@ object Curation {
   def curate(docs: DataFrame, idCol: String = "doc_id",
              textCol: String = "text", minQuality: Double = 0.51,
              n: Int = 3, jaccardThreshold: Double = 0.2,
-             maxDf: Int = Int.MaxValue): DataFrame =
-    curateReleasable(docs, idCol, textCol, minQuality, n,
-      jaccardThreshold, maxDf)._1
-
-  /** [[curate]] plus the cache handle — use this form when the session
-    * outlives the query (services, notebooks, multi-query jobs).
-    */
-  def curateReleasable(docs: DataFrame, idCol: String = "doc_id",
-                       textCol: String = "text", minQuality: Double = 0.51,
-                       n: Int = 3, jaccardThreshold: Double = 0.2,
-                       maxDf: Int = Int.MaxValue): (DataFrame, StageCaches) = {
+             maxDf: Int = Int.MaxValue): DataFrame = {
     // Fanout: stage 1 is a heavy per-doc scoring projection (tokenize,
     // regex, distinct counts) materialized into the persist BEFORE any
     // exchange — a one-row-group scan serializes it on one core and
@@ -68,26 +51,25 @@ object Curation {
     // — the r16 fan-out moved every extra doc column's bytes through
     // the shuffle for nothing, and the stage-1 persist then cached
     // them too.
-    val scored = TextAnalysis.langId(
+    val scored = Materialize.persist(TextAnalysis.langId(
       TextAnalysis.qualityScore(
         Fanout.ensure(docs.select(col(idCol), col(textCol))), textCol),
       textCol)
-      .withColumn("quality_ok", col("quality_score") >= minQuality)
-      .persist()
+      .withColumn("quality_ok", col("quality_score") >= minQuality))
     // `kept` feeds both the near-dup candidate action and the final
     // audit join. CHECKPOINTING it was measured slower (2.7s -> 3.3s
     // at sf0.1): materializing every column breaks scan pruning and
     // codegen fusion for the shingle branch. PERSISTING the stage
     // boundaries (in-memory, pruned lazily per consumer) has neither
     // problem — the curateFull measurement (7.8 -> 4.2s) transfers.
-    val kept = Dedup.dropExactDups(
-      scored.filter(col("quality_ok")), idCol, textCol).persist()
+    val kept = Materialize.persist(Dedup.dropExactDups(
+      scored.filter(col("quality_ok")), idCol, textCol))
     val pairs = Dedup.ngramJaccardPairs(
       kept, idCol, textCol, n, jaccardThreshold, maxDf)
     val resolved = Dedup.resolveSurvivors(kept, idCol, pairs)
       .select(col(idCol), col("survivor_id"), col("is_survivor"),
         lit(true).as("kept_exact"))
-    val audit = scored
+    scored
       .select(col(idCol), col("lang_pred"), col("quality_score"),
         col("quality_ok"))
       .join(resolved, Seq(idCol), "left")
@@ -95,8 +77,6 @@ object Curation {
       // docs dropped by the quality gate or exact dedup do not survive:
       // non-null false (survivor_id stays NULL — no surviving row)
       .withColumn("is_survivor", coalesce(col("is_survivor"), lit(false)))
-    (audit, new StageCaches(Seq(() => { scored.unpersist(); () },
-      () => { kept.unpersist(); () })))
   }
 
   /** Survivor ids only — the stage pipeline without the final audit
@@ -112,24 +92,10 @@ object Curation {
                             maxNllMicro: Long = 9000000L,
                             n: Int = 3, jaccardThreshold: Double = 0.2,
                             maxDf: Int = Int.MaxValue): DataFrame = {
-    val (_, _, _, resolved, _) = curateFullStages(docs, idCol, textCol,
+    val (_, _, _, resolved) = curateFullStages(docs, idCol, textCol,
       minQuality, maxDupTokenRatio, spanN, maxDupSpanRatio, maxNllMicro,
       n, jaccardThreshold, maxDf)
     resolved.filter(col("is_survivor")).select(col(idCol))
-  }
-
-  /** [[curateFullSurvivorIds]] plus the cache handle. */
-  def curateFullSurvivorIdsReleasable(
-      docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      minQuality: Double = 0.51, maxDupTokenRatio: Double = 0.6,
-      spanN: Int = 8, maxDupSpanRatio: Double = 0.8,
-      maxNllMicro: Long = 9000000L, n: Int = 3,
-      jaccardThreshold: Double = 0.2,
-      maxDf: Int = Int.MaxValue): (DataFrame, StageCaches) = {
-    val (_, _, _, resolved, caches) = curateFullStages(docs, idCol,
-      textCol, minQuality, maxDupTokenRatio, spanN, maxDupSpanRatio,
-      maxNllMicro, n, jaccardThreshold, maxDf)
-    (resolved.filter(col("is_survivor")).select(col(idCol)), caches)
   }
 
   /** The full modern curation composition — what a C4/Gopher/LLaMA-era
@@ -167,25 +133,11 @@ object Curation {
                  spanN: Int = 8, maxDupSpanRatio: Double = 0.8,
                  maxNllMicro: Long = 9000000L,
                  n: Int = 3, jaccardThreshold: Double = 0.2,
-                 maxDf: Int = Int.MaxValue): DataFrame =
-    curateFullReleasable(docs, idCol, textCol, minQuality,
-      maxDupTokenRatio, spanN, maxDupSpanRatio, maxNllMicro, n,
-      jaccardThreshold, maxDf)._1
-
-  /** [[curateFull]] plus the cache handle — release after the audit is
-    * materialized.
-    */
-  def curateFullReleasable(docs: DataFrame, idCol: String = "doc_id",
-                 textCol: String = "text", minQuality: Double = 0.51,
-                 maxDupTokenRatio: Double = 0.6,
-                 spanN: Int = 8, maxDupSpanRatio: Double = 0.8,
-                 maxNllMicro: Long = 9000000L,
-                 n: Int = 3, jaccardThreshold: Double = 0.2,
-                 maxDf: Int = Int.MaxValue): (DataFrame, StageCaches) = {
-    val (scored, spans, lmScores, resolved, caches) = curateFullStages(docs,
+                 maxDf: Int = Int.MaxValue): DataFrame = {
+    val (scored, spans, lmScores, resolved) = curateFullStages(docs,
       idCol, textCol, minQuality, maxDupTokenRatio, spanN,
       maxDupSpanRatio, maxNllMicro, n, jaccardThreshold, maxDf)
-    val audit = scored
+    scored
       .select(col(idCol), col("lang_pred"), col("quality_score"),
         col("quality_ok"), col("rep_ok"))
       .join(spans.select(col(idCol), col("span_ok")), Seq(idCol), "left")
@@ -196,11 +148,9 @@ object Curation {
       .withColumn("lm_ok", coalesce(col("lm_ok"), lit(false)))
       .withColumn("kept_exact", coalesce(col("kept_exact"), lit(false)))
       .withColumn("is_survivor", coalesce(col("is_survivor"), lit(false)))
-    (audit, caches)
   }
 
-  /** The shared 5-stage pipeline:
-    * (scored, spans, lmScores, resolved, caches).
+  /** The shared 5-stage pipeline: (scored, spans, lmScores, resolved).
     */
   private def curateFullStages(docs: DataFrame, idCol: String,
                                textCol: String, minQuality: Double,
@@ -209,7 +159,7 @@ object Curation {
                                maxNllMicro: Long,
                                n: Int, jaccardThreshold: Double,
                                maxDf: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, StageCaches) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // Stage boundaries PERSIST (narrow projections): unlike the
     // two-stage `curate` — where a checkpoint was measured slower than
     // recomputation — this composition re-enters each stage's lineage
@@ -238,31 +188,30 @@ object Curation {
     // machinery past what the parallel scoring pass saves. The
     // projection to (idCol, textCol) stays: it narrows the stage-1
     // persist to the columns the pipeline reads (guide §2.3).
-    val scored = TextAnalysis.langId(
+    val scored = Materialize.persist(TextAnalysis.langId(
         TextAnalysis.qualityScore(
           docs.select(col(idCol), col(textCol)), textCol),
         textCol)
       .withColumn("quality_ok", col("quality_score") >= minQuality)
       .withColumn("dup_token_ratio",
         TextAnalysis.dupTokenRatio(col(textCol)))
-      .withColumn("rep_ok", col("dup_token_ratio") <= maxDupTokenRatio)
-      .persist()
+      .withColumn("rep_ok", col("dup_token_ratio") <= maxDupTokenRatio))
     // stage 2: span gate over stage-1 survivors
     val g1 = scored.filter(col("quality_ok") && col("rep_ok"))
       .select(col(idCol), col(textCol))
-    val spans = TextAnalysis.dupSpans(g1, idCol, textCol, spanN)
-      .select(col(idCol), col("dup_ratio").as("span_ratio"))
-      .withColumn("span_ok", col("span_ratio") <= maxDupSpanRatio)
-      .persist()
+    val spans = Materialize.persist(
+      TextAnalysis.dupSpans(g1, idCol, textCol, spanN)
+        .select(col(idCol), col("dup_ratio").as("span_ratio"))
+        .withColumn("span_ok", col("span_ratio") <= maxDupSpanRatio))
     val g2 = g1.join(spans.filter(col("span_ok")).select(col(idCol)), Seq(idCol))
     // stage 3: exact dedup
-    val kept = Dedup.dropExactDups(g2, idCol, textCol).persist()
+    val kept = Materialize.persist(Dedup.dropExactDups(g2, idCol, textCol))
     // stage 4: self-trained LM perplexity gate (fixed-point compare)
     val lm = LanguageModel.trainBigram(kept, textCol)
-    val lmScores = LanguageModel.scoreBigram(kept, lm, idCol, textCol)
-      .withColumn("lm_ok",
-        col("ll_scaled") >= lit(-maxNllMicro) * col("n_bigrams"))
-      .persist()
+    val lmScores = Materialize.persist(
+      LanguageModel.scoreBigram(kept, lm, idCol, textCol)
+        .withColumn("lm_ok",
+          col("ll_scaled") >= lit(-maxNllMicro) * col("n_bigrams")))
     // g3 deliberately NOT persisted: caching it was measured SLOWER
     // (q73 7.6 -> 9.5 s cold) — materializing one more text-bearing
     // cache costs more than its two consumers' re-pay of the
@@ -275,12 +224,6 @@ object Curation {
     val resolved = Dedup.resolveSurvivors(g3, idCol, pairs)
       .select(col(idCol), col("survivor_id"), col("is_survivor"),
         lit(true).as("kept_exact"))
-    val caches = new StageCaches(Seq(
-      () => { scored.unpersist(); () },
-      () => { spans.unpersist(); () },
-      () => { kept.unpersist(); () },
-      () => { lmScores.unpersist(); () },
-      () => lm.unpersist()))
-    (scored, spans, lmScores, resolved, caches)
+    (scored, spans, lmScores, resolved)
   }
 }

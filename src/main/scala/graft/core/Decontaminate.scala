@@ -119,15 +119,13 @@ object Decontaminate {
     */
   private def scrubAgainstKeys(train: DataFrame, evalKeys: DataFrame,
                                idCol: String, textCol: String,
-                               n: Int): DataFrame = {
-    val docs = SuffixArray.tokenized(train, idCol, textCol).persist()
+                               n: Int): DataFrame = Materialize.scope {
+    val docs = Materialize.persist(SuffixArray.tokenized(train, idCol, textCol))
     val dupStarts = SuffixArray.gramRows(docs, n)
       .join(evalKeys, Seq("g"), "left_semi")
       .select(col("sa_doc"), col("pos"), lit(1L).as("ds"))
-    val out = SuffixArray.rewriteMarked(docs, dupStarts, n, idCol)
-    val mat = out.localCheckpoint(true)
-    docs.unpersist()
-    mat
+    Materialize.localCheckpoint(
+      SuffixArray.rewriteMarked(docs, dupStarts, n, idCol))
   }
 
   /** [[flagContaminated]] behind a BLOOM PRE-FILTER — the 100 TB
@@ -169,11 +167,11 @@ object Decontaminate {
     // at TWO jobs (collect + the main action) — the checkpoint
     // variant paid a third eager job whose fixed overhead dominated
     // at bench scale. The cached relation is eval-suite-sized and
-    // lives until the session drops it (the trainBigram model-table
+    // lives until the caller's scope ends (the trainBigram model-table
     // convention).
-    val evalShingles = eval
+    val evalShingles = Materialize.persist(eval
       .select(explode(Dedup.shingles(col(textCol), n)).as("shingle"))
-      .distinct().persist()
+      .distinct())
     val words = Sketches.bloomWords(
       Sketches.bloomBuild(evalShingles, col("shingle"), numBits,
         numHashes), numBits)

@@ -160,7 +160,7 @@ object Dedup {
     */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, threshold: Double = 0.5,
-                         maxDf: Int = Int.MaxValue): DataFrame = {
+                         maxDf: Int = Int.MaxValue): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     require(threshold > 0.0 && threshold <= 1.0,
       "prefix filtering needs 0 < threshold <= 1")
@@ -170,10 +170,9 @@ object Dedup {
     // verification sides read them, and candidate generation explodes
     // them once — the posting-level persist this replaces carried one
     // row per (doc, shingle).
-    val sh = Fanout.ensure(df).select(col(idCol).as("doc"),
+    val sh = Materialize.persist(Fanout.ensure(df).select(col(idCol).as("doc"),
       shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-      .persist()
+      .withColumn("n_sh", size(col("sh"))))
     val inv = sh.select(col("doc"), col("n_sh"),
       explode(col("sh")).as("shingle"))
     // document frequency as a full-frame window count over the shingle
@@ -212,7 +211,11 @@ object Dedup {
     // postings join + pair-keyed aggregation (3 exchanges + the
     // per-pair posting fan-out) with two doc-keyed joins and a scalar
     // projection (guide §2.3/§2.4: fewer exchanges, pair-level rows
-    // instead of posting-level rows).
+    // instead of posting-level rows). Assumes candidates × doc size
+    // fits the shuffle: every candidate pair carries both docs' FULL
+    // shingle arrays through the two joins, so a boilerplate-heavy
+    // corpus with long docs pays O(pairs · |d|) bytes here; a
+    // fixed-width hashed representation of the sets would bound it.
     val out = cand
       .join(sh.select(col("doc").as("doc_a"), col("sh").as("sh_a")),
         "doc_a")
@@ -228,9 +231,7 @@ object Dedup {
         round(col("jaccard"), 6).as("jaccard"))
     // materialize the (small) pair table so the shingle-set cache can
     // be released before returning (the liftTable lifecycle discipline)
-    val mat = out.localCheckpoint(true)
-    sh.unpersist()
-    mat
+    Materialize.localCheckpoint(out)
   }
 
   /** Shingle CONTAINMENT pairs — the asymmetric near-dup measure
@@ -554,11 +555,10 @@ object Dedup {
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     // canonical directed big→small, self-loops dropped
-    var edges = pairs
+    var edges = Materialize.localCheckpoint(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("a"),
         least(col("doc_a"), col("doc_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
+      .filter(col("a") =!= col("b")).distinct())
     // cheap stability probe: (edge count, order-independent hash sum)
     def checksum(e: DataFrame): (Long, Long) = {
       val r = e.agg(count(lit(1)), sum(xxhash64(col("a"), col("b")))).head()
@@ -578,12 +578,11 @@ object Dedup {
         .select(col("v").as("a"), col("m").as("b")).distinct()
       // small-star on the directed form: Γ⁻(a) = its smaller neighbors
       val minsS = large.groupBy("a").agg(min(col("b")).as("m"))
-      val small = large.join(minsS, "a")
+      val small = Materialize.localCheckpoint(large.join(minsS, "a")
         .filter(col("b") =!= col("m"))
         .select(col("b").as("a"), col("m").as("b"))
         .unionAll(minsS.select(col("a"), col("m").as("b")))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val cur = checksum(small)
       edges = small
       converged = cur == prev
@@ -707,10 +706,6 @@ object Dedup {
       .select(col(idCol), simhash.as("simhash"))
   }
 
-  /** Hamming distance between two simhash fingerprints. */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Distinct character q-grams of a string (Ed-Join signatures).
     * Native single-pass expression ([[graft.expressions.CharGramArray]]).
     */
@@ -758,15 +753,14 @@ object Dedup {
     */
   def editNearDupPairs(df: DataFrame, idCol: String, strCol: String,
                        k: Int, q: Int = 3,
-                       maxDf: Int = Int.MaxValue): DataFrame = {
+                       maxDf: Int = Int.MaxValue): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "edit-distance threshold must be >= 1")
     require(q >= 1, "gram size must be >= 1")
     // Fanout rationale: see prefixJaccardPairs
-    val base = Fanout.ensure(df.select(col(idCol).as("doc"),
+    val base = Materialize.persist(Fanout.ensure(df.select(col(idCol).as("doc"),
         coalesce(col(strCol), lit("")).as("s"))
-        .withColumn("slen", length(col("s"))))
-      .persist()
+        .withColumn("slen", length(col("s")))))
     val grams = base.select(col("doc"), col("slen"),
         charGrams(col("s"), q).as("g"))
       .withColumn("n_g", size(col("g")))
@@ -814,9 +808,7 @@ object Dedup {
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"),
         col("ed").cast("long").as("ed"))
     // the pair table is small; release the corpus persist before returning
-    val mat = out.localCheckpoint(true)
-    base.unpersist()
-    mat
+    Materialize.localCheckpoint(out)
   }
 
   // ---- winnowing fingerprints (Schleimer/Wilkerson/Aiken,
@@ -922,7 +914,7 @@ object Dedup {
     // without a materialized boundary each side re-derives the whole
     // selection pipeline (two corpus scans, two window passes — seen
     // in the q305 plan audit). The checkpoint is fingerprint-sized.
-    val capped = capped0.localCheckpoint(true)
+    val capped = Materialize.localCheckpoint(capped0)
     capped.join(capped.select(col("doc").as("doc_b"), col("fp")), "fp")
       .filter(col("doc") < col("doc_b"))
       .select(col("doc").as("doc_a"), col("doc_b"), col("fp"))

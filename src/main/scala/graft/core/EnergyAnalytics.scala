@@ -92,9 +92,4 @@ object EnergyAnalytics {
     */
   def sumBy(df: DataFrame, key: Column, keyName: String, value: String): DataFrame =
     df.groupBy(key.as(keyName)).agg(sum(value).as("total"))
-
-  /** P11/A8 — anomaly-row selection + count
-    * (`Forecast_Anomaly_Detection.py:65`, `ml_forecast_anomaly.py:226`).
-    */
-  def anomaliesOnly(scored: DataFrame): DataFrame = scored.filter(col("anomaly"))
 }

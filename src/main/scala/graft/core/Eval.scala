@@ -95,9 +95,9 @@ object Eval {
     */
   private def completeBlockCells(base: DataFrame, cellAgg: Column)
       : (DataFrame, Long, Long) = {
-    val sized = base.groupBy("b", "tr").agg(cellAgg.as("v"))
-      .withColumn("__m", count(lit(1)).over(Window.partitionBy("b")))
-      .localCheckpoint(true)
+    val sized = Materialize.localCheckpoint(
+      base.groupBy("b", "tr").agg(cellAgg.as("v"))
+        .withColumn("__m", count(lit(1)).over(Window.partitionBy("b"))))
     val k = sized.select("tr").distinct().count()
     val dropped = sized.filter(col("__m") =!= k)
       .select("b").distinct().count()
@@ -413,19 +413,19 @@ object Eval {
     val scored = df.select(col(idCol), scoreMicro.cast("long").as("__s"),
         when(label, 1L).otherwise(0L).as("__y"))
       .withColumn("n_tokens", lit(1L))
-    val (ranked, release) = Packing.offsetsOrderedReleasable(
-      scored, idCol, Seq(col("__s").desc, col(idCol).asc))
-    val tot = ranked.agg(max("tok_end").as("__n"), sum("__y").as("__p"))
-    val cells = ranked.crossJoin(broadcast(tot))
-      .withColumn("bucket", expr(s"(tok_end - 1) * $nBuckets DIV __n"))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_docs"), sum("__y").as("n_pos"),
-        max("__n").as("__n"), max("__p").as("__p"))
     // `cells` is nBuckets rows — materialize it eagerly so the
     // two-phase rank's internal persist can be RELEASED here instead of
     // leaking for the session lifetime (long-lived library callers).
-    val cellsMat = cells.localCheckpoint(true)
-    release()
+    val cellsMat = Materialize.scope {
+      val ranked = Packing.offsetsOrdered(
+        scored, idCol, Seq(col("__s").desc, col(idCol).asc))
+      val tot = ranked.agg(max("tok_end").as("__n"), sum("__y").as("__p"))
+      Materialize.localCheckpoint(ranked.crossJoin(broadcast(tot))
+        .withColumn("bucket", expr(s"(tok_end - 1) * $nBuckets DIV __n"))
+        .groupBy("bucket")
+        .agg(count(lit(1)).as("n_docs"), sum("__y").as("n_pos"),
+          max("__n").as("__n"), max("__p").as("__p")))
+    }
     val wc = Window.orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, 0) // nBuckets rows
     cellsMat
@@ -1840,7 +1840,7 @@ object Eval {
     */
   def shapleyAttribution(df: DataFrame, user: Column, channel: Column,
                          conversion: Column,
-                         maxChannels: Int = 12): DataFrame = {
+                         maxChannels: Int = 12): DataFrame = Materialize.scope {
     require(maxChannels >= 1 && maxChannels <= 12,
       "shapley lattice is 2^n; maxChannels must be in [1, 12]")
     val spark = df.sparkSession
@@ -1865,12 +1865,12 @@ object Eval {
     val coal = perUser.groupBy("mask")
       .agg(count(lit(1)).as("n_users"), sum("conv").as("n_conv"))
       .select(col("mask"), expr("n_conv * 1000000L DIV n_users").as("v"))
-    val lattice = spark.range(1L << n).select(col("id").as("mask"))
-      .join(coal, Seq("mask"), "left")
-      .select(col("mask"),
-        when(col("mask") === 0L, 0L)
-          .otherwise(coalesce(col("v"), lit(0L))).as("v"))
-      .persist()
+    val lattice = Materialize.persist(
+      spark.range(1L << n).select(col("id").as("mask"))
+        .join(coal, Seq("mask"), "left")
+        .select(col("mask"),
+          when(col("mask") === 0L, 0L)
+            .otherwise(coalesce(col("v"), lit(0L))).as("v")))
     // fact(i) = i! for i in 0..12 (11! still fits comfortably in long)
     val fact = (1 to 12).scanLeft(1L)((a, i) => a * i)
     val factLit = array(fact.take(12).map(lit(_)): _*)
@@ -1886,15 +1886,13 @@ object Eval {
       .select(col("ch"), (col("w") * (col("v_up") - col("v"))).as("t"))
     val perChanUsers = touched.join(bits, "bit")
       .groupBy("ch").agg(count(lit(1)).as("n_users"))
-    val out = terms.groupBy("ch").agg(sum("t").as("shapley_num"))
-      .withColumn("shapley_micro", expr(
-        s"(shapley_num - pmod(shapley_num, ${nFact}L)) DIV ${nFact}L"))
-      .join(perChanUsers.select(col("ch"), col("n_users")), "ch")
-      .select(col("ch").as("channel"), col("n_users"),
-        col("shapley_num"), col("shapley_micro"))
-    val mat = out.localCheckpoint(true)
-    lattice.unpersist()
-    mat
+    Materialize.localCheckpoint(
+      terms.groupBy("ch").agg(sum("t").as("shapley_num"))
+        .withColumn("shapley_micro", expr(
+          s"(shapley_num - pmod(shapley_num, ${nFact}L)) DIV ${nFact}L"))
+        .join(perChanUsers.select(col("ch"), col("n_users")), "ch")
+        .select(col("ch").as("channel"), col("n_users"),
+          col("shapley_num"), col("shapley_micro")))
   }
 
   /** Corpus-level BLEU COMPONENTS (Papineni et al. 2002) — everything

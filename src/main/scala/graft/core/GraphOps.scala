@@ -85,13 +85,13 @@ object GraphOps {
     * even be disjoint (bipartite graphs) without null noise.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int): DataFrame = {
+           iters: Int): DataFrame = Materialize.scope {
     require(iters >= 1, "iters must be >= 1")
     // persist: every half-iteration (and each scalar max) re-reads the
     // edge table — without the cache the upstream join/distinct would
     // recompute ~4x per iteration
-    val e = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .distinct().persist()
+    val e = Materialize.persist(
+      edges.select(col(srcCol).as("s"), col(dstCol).as("d")).distinct())
     // loud guard: an empty edge table would surface later as a bare
     // NPE on the first scalar max (agg(max) over zero rows is a NULL
     // row) — fail here with the actual problem named (ADVICE r12)
@@ -105,13 +105,13 @@ object GraphOps {
       // max from re-running every PRIOR iteration as a nested
       // subplan (the q274 per-level discipline — without it each
       // normalization branch re-executes the chain above it)
-      val aRaw = e.join(hub, "s").groupBy("d")
-        .agg(sum("h").as("ar")).localCheckpoint(true)
+      val aRaw = Materialize.localCheckpoint(
+        e.join(hub, "s").groupBy("d").agg(sum("h").as("ar")))
       val am = aRaw.agg(max("ar")).head().getLong(0)
       auth = aRaw.select(col("d"),
         expr(s"ar * 1000000L DIV ${am}L").as("a"))
-      val hRaw = e.join(auth, "d").groupBy("s")
-        .agg(sum("a").as("hr")).localCheckpoint(true)
+      val hRaw = Materialize.localCheckpoint(
+        e.join(auth, "d").groupBy("s").agg(sum("a").as("hr")))
       val hm = hRaw.agg(max("hr")).head().getLong(0)
       hub = hRaw.select(col("s"),
         expr(s"hr * 1000000L DIV ${hm}L").as("h"))
@@ -121,9 +121,7 @@ object GraphOps {
       .unionByName(auth.select(lit("auth").as("kind"),
         col("d").as("v"), col("a").as("score_micro")))
     // vertex-sized result; release the edge cache before returning
-    val mat = out.localCheckpoint(true)
-    e.unpersist()
-    mat
+    Materialize.localCheckpoint(out)
   }
 
   /** Semi-supervised label propagation over a directed neighbor list
@@ -320,14 +318,14 @@ object GraphOps {
     // ranked table is tiny (two longs per vertex); localCheckpoint
     // materializes it so the rank's internal persist is released
     // immediately instead of leaking for the session lifetime.
-    val (vRanked, vRelease) = graft.core.Packing.offsetsOrderedReleasable(
-      e.select(col("a").as("v"))
-        .unionAll(e.select(col("b").as("v"))).distinct()
-        .withColumn("n_tokens", lit(1L)),
-      "v", Seq(col("v")))
-    val verts = vRanked.select(col("v"), col("tok_end").as("vrank"))
-      .localCheckpoint(true)
-    vRelease()
+    val verts = Materialize.scope {
+      Materialize.localCheckpoint(graft.core.Packing.offsetsOrdered(
+          e.select(col("a").as("v"))
+            .unionAll(e.select(col("b").as("v"))).distinct()
+            .withColumn("n_tokens", lit(1L)),
+          "v", Seq(col("v")))
+        .select(col("v"), col("tok_end").as("vrank")))
+    }
     val nV = verts.agg(count(lit(1)).as("n_v"))
     val draws = e
       .select(col("a"), col("b"),
@@ -386,17 +384,16 @@ object GraphOps {
     // localCheckpoint per round (the connectedComponentsStar pattern):
     // each round references its parent three times (degree branch +
     // both semi joins), so untruncated lineage would grow 3^rounds
-    var edges = canon.localCheckpoint()
+    var edges = Materialize.localCheckpoint(canon)
     (1 to rounds).foreach { _ =>
       val deg = edges.select(col("a").as("v"))
         .unionAll(edges.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("v")
-      edges = edges
+      edges = Materialize.localCheckpoint(edges
         .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint()
+        .select("a", "b"))
     }
     edges.select(col("a").as("v"))
       .unionAll(edges.select(col("b").as("v")))

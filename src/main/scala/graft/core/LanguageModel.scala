@@ -41,10 +41,7 @@ object LanguageModel {
     * smoothing.
     */
   final case class BigramLm(bigrams: DataFrame, contexts: DataFrame,
-                            vocabSize: Long) {
-    /** Release the persisted model tables (see [[trainBigram]]). */
-    def unpersist(): Unit = { bigrams.unpersist(); contexts.unpersist() }
-  }
+                            vocabSize: Long)
 
   /** Adjacent token pairs of a text column as array<struct<w1,w2>>
     * (empty when the doc has fewer than 2 tokens).
@@ -78,8 +75,10 @@ object LanguageModel {
     // once per consumer. (At real scale the caller writes the LM to a
     // table between train and score; persist is the in-session
     // equivalent.)
-    val bigrams = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c")).persist()
-    val contexts = bigrams.groupBy("w1").agg(sum("c").as("c_ctx")).persist()
+    val bigrams = Materialize.persist(
+      pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c")))
+    val contexts = Materialize.persist(
+      bigrams.groupBy("w1").agg(sum("c").as("c_ctx")))
     val vocab = docs
       .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .agg(countDistinct(col("tok"))).head().getLong(0)

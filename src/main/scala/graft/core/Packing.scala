@@ -58,27 +58,15 @@ object Packing {
     * the same placement problem with a different weight.
     */
   def offsetsBy(counted: DataFrame, idCol: String): DataFrame =
-    offsetsByReleasable(counted, idCol)._1
-
-  /** [[offsetsBy]] plus a release handle for its internal persist —
-    * the (id, count, pid) cache must live until the caller's plans
-    * over the offsets have MATERIALIZED, which a one-shot batch job
-    * does implicitly at action time but a long-running caller (a
-    * foreachBatch loop — [[graft.streaming.PackStream]]) must end
-    * explicitly, or cached blocks accumulate without bound across
-    * batches. Same contract as [[Curation.StageCaches]].
-    */
-  def offsetsByReleasable(counted: DataFrame,
-                          idCol: String): (DataFrame, () => Unit) =
-    offsetsOrderedReleasable(counted, idCol, Seq(col(idCol)))
+    offsetsOrdered(counted, idCol, Seq(col(idCol)))
 
   /** The same two-phase prefix sum under an ARBITRARY total order
     * (`order` must be total — include the id as the last key):
     * placement by priority instead of id, the primitive under
     * budget-capped selection ([[Sampling.tokenBudgetSelect]]).
     */
-  def offsetsOrderedReleasable(counted: DataFrame, idCol: String,
-                               order: Seq[Column]): (DataFrame, () => Unit) = {
+  def offsetsOrdered(counted: DataFrame, idCol: String,
+                     order: Seq[Column]): DataFrame = {
     // persist the INPUT too (the denseRankDirect discipline):
     // repartitionByRange SAMPLES its child to pick range boundaries,
     // so an un-cached `counted` computes TWICE — once for the sampling
@@ -86,7 +74,7 @@ object Packing {
     // whole extra corpus tokenize. The sampling pass reads every input
     // row anyway, so it fills this cache and the map pass reads it.
     // Rows are the caller's narrow (id, count[, order]) projection.
-    val countedC = counted.persist()
+    val countedC = Materialize.persist(counted)
     val ranged = countedC.repartitionByRange(order: _*)
       .withColumn("_pid", spark_partition_id())
     // PERSIST: the per-partition totals below must see the SAME _pid
@@ -96,10 +84,9 @@ object Packing {
     // because range-boundary sampling happens to be deterministic —
     // a coincidence this function must not lean on. The cached rows
     // are (id, count, pid) — three words per doc.
-    val local = ranged.withColumn("_local_end",
+    val local = Materialize.persist(ranged.withColumn("_local_end",
       sum("n_tokens").over(
-        Window.partitionBy("_pid").orderBy(order: _*)))
-      .persist()
+        Window.partitionBy("_pid").orderBy(order: _*))))
     val prefixes = local.groupBy("_pid")
       .agg(sum("n_tokens").as("_ptotal"))
       .withColumn("_offset",
@@ -110,11 +97,10 @@ object Packing {
     // pass through every caller column (offsetsBy's counted is
     // (id, n_tokens) → the classic 4-column shape; ordered callers
     // keep their priority columns alongside the offsets)
-    val out = local.join(broadcast(prefixes), Seq("_pid"))
+    local.join(broadcast(prefixes), Seq("_pid"))
       .select(counted.columns.map(col) ++ Seq(
         (col("_local_end") + col("_offset") - col("n_tokens")).as("tok_start"),
         (col("_local_end") + col("_offset")).as("tok_end")): _*)
-    (out, () => { local.unpersist(); countedC.unpersist(); () })
   }
 
   /** Two-phase distributed RANK + inclusive running weight sum under
@@ -125,25 +111,22 @@ object Packing {
     * running-sum window — a single-partition sort of the WHOLE table,
     * vocab-sized at web scale — which this replaces with per-partition
     * locals plus a broadcast of per-partition (count, total) prefixes,
-    * the [[offsetsOrderedReleasable]] machinery with a second
-    * accumulator riding the same exchange. `order` must be total
-    * (include a unique key last). Output: caller columns + (rank, cum)
-    * BIGINT; release contract as [[offsetsByReleasable]].
+    * the [[offsetsOrdered]] machinery with a second accumulator riding
+    * the same exchange. `order` must be total (include a unique key
+    * last). Output: caller columns + (rank, cum) BIGINT.
     */
-  def rankAndCumOrderedReleasable(counted: DataFrame, weightCol: String,
-                                  order: Seq[Column]): (DataFrame, () => Unit) = {
-    // input persist: same sampling-pass rationale as
-    // [[offsetsOrderedReleasable]]
-    val countedC = counted.persist()
+  def rankAndCumOrdered(counted: DataFrame, weightCol: String,
+                        order: Seq[Column]): DataFrame = {
+    // input persist: same sampling-pass rationale as [[offsetsOrdered]]
+    val countedC = Materialize.persist(counted)
     val ranged = countedC.repartitionByRange(order: _*)
       .withColumn("_pid", spark_partition_id())
     val w = Window.partitionBy("_pid").orderBy(order: _*)
-    // persist for the same reason offsetsOrderedReleasable does: the
-    // totals branch must see the SAME _pid assignment
-    val local = ranged
+    // persist for the same reason offsetsOrdered does: the totals
+    // branch must see the SAME _pid assignment
+    val local = Materialize.persist(ranged
       .withColumn("_local_rank", row_number().over(w).cast("long"))
-      .withColumn("_local_cum", sum(col(weightCol)).over(w))
-      .persist()
+      .withColumn("_local_cum", sum(col(weightCol)).over(w)))
     val before = Window.orderBy("_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
     val prefixes = local.groupBy("_pid")
@@ -151,11 +134,10 @@ object Packing {
       .withColumn("_rank_off", coalesce(sum("_pn").over(before), lit(0L)))
       .withColumn("_cum_off", coalesce(sum("_pw").over(before), lit(0L)))
       .select(col("_pid"), col("_rank_off"), col("_cum_off"))
-    val out = local.join(broadcast(prefixes), Seq("_pid"))
+    local.join(broadcast(prefixes), Seq("_pid"))
       .select(counted.columns.map(col) ++ Seq(
         (col("_local_rank") + col("_rank_off")).as("rank"),
         (col("_local_cum") + col("_cum_off")).as("cum")): _*)
-    (out, () => { local.unpersist(); countedC.unpersist(); () })
   }
 
   /** The packing MAP — which documents contribute which token slices
@@ -236,7 +218,7 @@ object Packing {
     */
   def writeShards(seqs: DataFrame, table: String, shards: Int): Int = {
     require(shards >= 1, "shards must be >= 1")
-    // NO input persist here (unlike offsetsOrderedReleasable): packed
+    // NO input persist here (unlike offsetsOrdered): packed
     // sequences carry the token-id arrays, and caching payload-bearing
     // rows ahead of the range exchange was measured SLOWER than letting
     // the sampling pass recompute (the q100/q102 writer A/B, r17) —
@@ -325,11 +307,8 @@ object Packing {
       .select(col(idCol), col(lenCol).cast("long").as("len"),
         expr(s"cast($lenCol as bigint) DIV ${bucketWidth}L").as("bucket"))
       .withColumn("n_tokens", lit(1L))
-    // same leak-the-handle contract as offsetsBy: the internal persist
-    // must outlive the caller's action (a long-running caller should
-    // use the Releasable primitive directly)
-    val ranked = offsetsOrderedReleasable(bucketed, idCol,
-      Seq(col("bucket"), col("len").desc, col(idCol)))._1
+    val ranked = offsetsOrdered(bucketed, idCol,
+      Seq(col("bucket"), col("len").desc, col(idCol)))
     // tok_end under weight-1 rows IS the 1-based global rank
     val starts = ranked.groupBy("bucket")
       .agg(min("tok_end").as("__bstart"))

@@ -303,7 +303,7 @@ object Profile {
     * Scale shape: NO per-source window (a 20-source corpus would put
     * 5% of all rows in one window partition) — both rank passes are
     * the two-phase distributed prefix rank
-    * ([[Packing.offsetsOrderedReleasable]], weight-1): one pass in
+    * ([[Packing.offsetsOrdered]], weight-1): one pass in
     * (source, value, id) order whose per-source MIN gives each
     * source's rank offset (per-source rank = global position − source
     * start + 1), one pass in (value, id) order for the global order
@@ -315,10 +315,10 @@ object Profile {
     * normalized value).
     */
   def quantileNormalize(df: DataFrame, idCol: String, sourceCol: String,
-                        valueCol: String): DataFrame = {
+                        valueCol: String): DataFrame = Materialize.scope {
     val base = df.select(col(idCol), col(sourceCol), col(valueCol))
     val c1 = base.withColumn("n_tokens", lit(1L))
-    val (bysrc, rel1) = Packing.offsetsOrderedReleasable(c1, idCol,
+    val bysrc = Packing.offsetsOrdered(c1, idCol,
       Seq(col(sourceCol), col(valueCol), col(idCol)))
     val starts = bysrc.groupBy(sourceCol)
       .agg(min("tok_end").as("__s0"), count(lit(1)).as("n_source"))
@@ -328,20 +328,17 @@ object Profile {
         col("n_source"))
     val c2 = base.select(col(idCol), col(valueCol))
       .withColumn("n_tokens", lit(1L))
-    val (byval, rel2) = Packing.offsetsOrderedReleasable(c2, idCol,
+    val byval = Packing.offsetsOrdered(c2, idCol,
       Seq(col(valueCol), col(idCol)))
     val globalStats = byval.select(col("tok_end").as("__grank"),
       col(valueCol).as("qnorm"))
     val n = globalStats.agg(max("__grank").as("__n"))
-    val out = ranked.crossJoin(broadcast(n))
+    Materialize.localCheckpoint(ranked.crossJoin(broadcast(n))
       .withColumn("__target",
         expr("(src_rank * __n + n_source - 1) DIV n_source"))
       .join(globalStats, col("__target") === col("__grank"))
       .select(col(idCol), col(sourceCol), col(valueCol),
-        col("src_rank"), col("n_source"), col("qnorm"))
-    val mat = out.localCheckpoint(true)
-    rel1(); rel2()
-    mat
+        col("src_rank"), col("n_source"), col("qnorm")))
   }
 
   /** Benford first-digit audit — the forensic data-quality stat:
@@ -605,10 +602,9 @@ object Profile {
     // each iteration's broadcast subtree would otherwise re-derive the
     // WHOLE covariance aggregation (measured: q176 ≈ iters × q175's
     // covariance cost). dim² cells — model-size (guide §5).
-    val mm = full.groupBy(col("di").as("d"))
+    val mm = Materialize.persist(full.groupBy(col("di").as("d"))
       .agg(expr("transform(sort_array(collect_list(struct(dj, corr))), " +
-        "e -> e.corr)").as("mrow"))
-      .persist()
+        "e -> e.corr)").as("mrow")))
     var xs = spark.range(1).select(
       expr(s"transform(sequence(0, ${dim - 1}), i -> ${1.0 / dim}D)")
         .as("xs"), lit(0.0).as("nrm"))

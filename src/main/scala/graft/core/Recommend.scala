@@ -114,12 +114,12 @@ object Recommend {
     // (owned is panel-filtered; sims is support-thresholded), so
     // materialize once and read the snapshot twice (guide §5;
     // localCheckpoint as the cheap lineage cut).
-    val owned = ui.select(col(userCol).as("u"), col(itemCol).as("it"))
-      .distinct()
-      .join(panel.select(col(userCol).as("u")).distinct(), Seq("u"),
-        "left_semi")
-      .localCheckpoint(true)
-    val simsM = sims.localCheckpoint(true)
+    val owned = Materialize.localCheckpoint(
+      ui.select(col(userCol).as("u"), col(itemCol).as("it"))
+        .distinct()
+        .join(panel.select(col(userCol).as("u")).distinct(), Seq("u"),
+          "left_semi"))
+    val simsM = Materialize.localCheckpoint(sims)
     // undirected links: each pair contributes in both directions
     val links = simsM.select(col("item_a").as("it"),
         col("item_b").as("cand"), col("sim_micro"))

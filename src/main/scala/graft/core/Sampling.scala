@@ -335,7 +335,7 @@ object Sampling {
     * `counted` carries (idCol, n_tokens, priorityCol); priority should
     * be an exact integer (the fixed-point discipline) so the order is
     * engine-portable. The cumulative sum is the two-phase distributed
-    * prefix sum ([[Packing.offsetsOrderedReleasable]]) under the
+    * prefix sum ([[Packing.offsetsOrdered]]) under the
     * priority order — never a one-partition window.
     *
     * @return the selected rows: (idCol, n_tokens, priorityCol,
@@ -344,14 +344,9 @@ object Sampling {
     */
   def tokenBudgetSelect(counted: DataFrame, idCol: String,
                         priorityCol: String, budget: Long): DataFrame = {
-    val (offsets, release) = Packing.offsetsOrderedReleasable(
+    Packing.offsetsOrdered(
       counted, idCol, Seq(col(priorityCol).desc, col(idCol).asc))
-    val out = offsets.filter(col("tok_end") <= budget)
-    // one-shot batch shape: the prefix sum's internal persist is
-    // consumed at action time (same contract as offsetsBy); long-lived
-    // callers should use offsetsOrderedReleasable directly
-    val _ = release
-    out
+      .filter(col("tok_end") <= budget)
   }
 
   /** Deterministic uniform k-per-group sample: rank each group's rows
@@ -438,7 +433,7 @@ object Sampling {
     * engines share.
     *
     * The global rank is the two-phase distributed prefix rank
-    * (weight-1 [[Packing.offsetsOrderedReleasable]]) — never a
+    * (weight-1 [[Packing.offsetsOrdered]]) — never a
     * single-partition `Window.orderBy`, which is the q121/q123
     * discipline for corpus-wide order at scale.
     *
@@ -448,18 +443,15 @@ object Sampling {
                        k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val counted = df.withColumn("n_tokens", lit(1L))
-    val (ranked, release) = Packing.offsetsOrderedReleasable(
-      counted, idCol, order)
+    val ranked = Packing.offsetsOrdered(counted, idCol, order)
     val out = ranked.select(
       df.columns.map(col) :+ col("tok_end").as("rank"): _*)
     // n = max rank; the agg re-reads the persisted prefix-sum branch,
     // not the corpus
     val tot = out.agg(max("rank").as("n_total"))
-    val phased = out.crossJoin(broadcast(tot))
+    out.crossJoin(broadcast(tot))
       .withColumn("phase", expr(s"(rank - 1) * $k DIV n_total"))
       .drop("n_total")
-    val _ = release // one-shot batch shape (tokenBudgetSelect contract)
-    phased
   }
 
   /** Rank-ensemble quality blending (the FineWeb-style "multiple weak
@@ -485,27 +477,14 @@ object Sampling {
     val ranked = signalCols.map { s =>
       val counted = df.select(col(idCol), col(s))
         .withColumn("n_tokens", lit(1L))
-      Packing.offsetsOrderedReleasable(counted, idCol,
-          Seq(col(s).desc, col(idCol).asc))._1
+      Packing.offsetsOrdered(counted, idCol,
+          Seq(col(s).desc, col(idCol).asc))
         .select(col(idCol), col("tok_end").as(s"rank_$s"))
     }
     val joined = ranked.reduce(_.join(_, Seq(idCol)))
     joined.withColumn("blend_rank",
       signalCols.map(s => col(s"rank_$s")).reduce(_ + _))
   }
-
-  /** Drop the block-storage copy behind an eager `localCheckpoint`
-    * result that is no longer referenced. The checkpointed RDD is the
-    * `LogicalRDD` leaf of the returned Dataset's plan; unpersisting
-    * it deletes the blocks (the RDD becomes uncomputable — callers
-    * must have replaced every reference first).
-    */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Greedy maximum-coverage source selection (the (1−1/e) greedy of
     * Nemhauser-Wolsey-Fisher for submodular maximization) — "which k
@@ -533,13 +512,16 @@ object Sampling {
     * gained, covered_total after the pick).
     */
   def greedySetCover(pairs: DataFrame, setCol: String, elemCol: String,
-                     k: Int): DataFrame = {
+                     k: Int): DataFrame = Materialize.scope {
     require(k >= 1, "k must be >= 1")
     val spark = pairs.sparkSession
     import spark.implicits._
-    var remaining = pairs.select(col(setCol).cast("string").as("s"),
-        col(elemCol).cast("string").as("e"))
-      .distinct().localCheckpoint(true)
+    // every step's checkpoint lives until the function returns: at most
+    // k shrinking copies of the pair table, and none after return — the
+    // picks are collected scalars, so nothing downstream reads them
+    var remaining = Materialize.localCheckpoint(
+      pairs.select(col(setCol).cast("string").as("s"),
+        col(elemCol).cast("string").as("e")).distinct())
     var total = 0L
     val picks = Vector.newBuilder[(Long, String, Long, Long)]
     var step = 1
@@ -555,27 +537,13 @@ object Sampling {
           picks += ((step.toLong, s, gain, total))
           if (step < k) { // no subtraction needed after the last pick
             val pickedElems = remaining.filter(col("s") === s).select("e")
-            val prev = remaining
-            remaining = remaining
-              .join(pickedElems, Seq("e"), "left_anti")
-              .localCheckpoint(true)
-            // free the superseded checkpoint's blocks NOW: Dataset
-            // .unpersist is a cache-manager no-op for checkpoints, so
-            // without this each step pins another copy of the pair
-            // table in block storage until GC (ADVICE r13)
-            freeLocalCheckpoint(prev)
+            remaining = Materialize.localCheckpoint(
+              remaining.join(pickedElems, Seq("e"), "left_anti"))
           }
           step += 1
         case None => exhausted = true // everything already covered
       }
     }
-    // block-storage bound: at most TWO pair-table checkpoints are
-    // ever live (the new one materializes, then its predecessor is
-    // freed above), and the LAST one is released here — the picks
-    // are already collected scalars, so nothing downstream reads
-    // `remaining` and the function holds ZERO blocks after return
-    // (VERDICT r14 #2: the final copy used to pin until GC).
-    freeLocalCheckpoint(remaining)
     picks.result()
       .toDF("step", "picked", "new_elements", "covered_total")
   }
@@ -647,14 +615,13 @@ object Sampling {
     *         min-squared-micro-distance at selection; 0 for step 1).
     */
   def kCenterSelect(emb: DataFrame, idCol: String, vecCol: String,
-                    k: Int): DataFrame = {
+                    k: Int): DataFrame = Materialize.scope {
     require(k >= 1, "k must be >= 1")
     val spark = emb.sparkSession
     import spark.implicits._
-    val pts = emb.select(col(idCol).as("kc_id"),
+    val pts = Materialize.persist(emb.select(col(idCol).as("kc_id"),
         expr(s"transform($vecCol, v -> " +
-          "CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))").as("vm"))
-      .persist()
+          "CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))").as("vm")))
     def dist(center: Array[Long]): org.apache.spark.sql.Column =
       aggregate(
         zip_with(col("vm"), typedLit(center), (a, b) => (a - b) * (a - b)),
@@ -676,7 +643,6 @@ object Sampling {
       selected ::= ((step.toLong, next.getLong(0), next.getLong(1)))
       centerVm = next.getSeq[Long](2).toArray
     }
-    pts.unpersist()
     selected.reverse
       .toDF("step", "vec_id", "sel_dist")
       .withColumnRenamed("vec_id", idCol)

@@ -350,10 +350,10 @@ object Similarity {
       .crossJoin(broadcast(c))
       .withColumn("cos_c", cosine(col("q_vec"), col("cent_vec")))
     val wq = Window.partitionBy(col("query_id")).orderBy(desc("cos_c"), asc("centroid_id"))
-    val probes = qProbes.withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("centroid_id").as("bucket"))
-      .localCheckpoint()
+    val probes = Materialize.localCheckpoint(
+      qProbes.withColumn("rnk", row_number().over(wq))
+        .filter(col("rnk") <= nProbe)
+        .select(col("query_id"), col("q_vec"), col("centroid_id").as("bucket")))
     val buckets = probes.select("bucket").distinct()
       .collect().map(_.getLong(0)).sorted
     // ONE stat-pruned read over the probed buckets' [min, max]
@@ -395,10 +395,10 @@ object Similarity {
     // |queries| × nProbe rows — tiny by contract. Materialize ONCE so
     // the bucket collect below and the main join don't each re-run the
     // query-centroid scoring pipeline.
-    val probes = qProbes.withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= nProbe)
-      .select(col("query_id"), col("q_vec"), col("centroid_id").as("bucket"))
-      .localCheckpoint()
+    val probes = Materialize.localCheckpoint(
+      qProbes.withColumn("rnk", row_number().over(wq))
+        .filter(col("rnk") <= nProbe)
+        .select(col("query_id"), col("q_vec"), col("centroid_id").as("bucket")))
     val probedBuckets = probes.select("bucket").distinct()
       .collect().map(_.getLong(0))
     val index = spark.read.parquet(indexDir)
@@ -441,7 +441,7 @@ object Similarity {
     */
   def lof(emb: DataFrame, k: Int, idCol: String = "vec_id",
           vecCol: String = "embedding",
-          maxRows: Long = 100000L): DataFrame = {
+          maxRows: Long = 100000L): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "k must be >= 1")
     val guard = emb.groupBy().count()
@@ -464,26 +464,25 @@ object Similarity {
     // stage ran as ONE 2.5 s task on local[32]). Cost: one exchange of
     // the ≤ maxRows point table — model-size by the guard above.
     val par = emb.sparkSession.sparkContext.defaultParallelism
-    val pts = emb.select(col(idCol).as("id"),
+    val pts = Materialize.persist(emb.select(col(idCol).as("id"),
         expr(s"transform($vecCol, v -> CAST(" +
           "floor(CAST(v AS DOUBLE) * 1000.0) AS DOUBLE))").as("vm"))
       .repartition(par)
       .withColumn("n2", dot(col("vm"), col("vm")).cast("long"))
-      .crossJoin(broadcast(guard)).filter(col("__ok").isNull).drop("__ok")
-      .persist()
+      .crossJoin(broadcast(guard)).filter(col("__ok").isNull).drop("__ok"))
     val a = pts.select(col("id").as("p"), col("vm").as("va"),
       col("n2").as("na"))
     val b = pts.select(col("id").as("o"), col("vm").as("vb"),
       col("n2").as("nb"))
     // dot once per UNORDERED pair, mirror for the symmetric view —
     // the fold is the n² scan's cost center
-    val half = a.crossJoin(b).filter(col("p") < col("o"))
+    // cache the HALF table: the mirror union reads it twice and every
+    // downstream consumer again
+    val half = Materialize.persist(a.crossJoin(b).filter(col("p") < col("o"))
       .withColumn("d2",
         col("na") + col("nb") - lit(2L) * dot(col("va"), col("vb"))
           .cast("long"))
-      .select(col("p"), col("o"), col("d2"))
-      .persist() // cache the HALF table: the mirror union reads it
-                 // twice and every downstream consumer again
+      .select(col("p"), col("o"), col("d2")))
     val pairs = half.unionByName(half.select(col("o").as("p"),
       col("p").as("o"), col("d2")))
     val w = Window.partitionBy("p").orderBy(col("d2"), col("o"))
@@ -504,12 +503,10 @@ object Similarity {
       .withColumn("kdist_sq",
         max(when(col("rn") === k, col("d2")))
           .over(Window.partitionBy("p")))
-    val nbrs = ranked.filter(col("d2") <= col("kdist_sq"))
-      .select(col("p"), col("o"), col("d2"), col("rn"), col("kdist_sq"))
-      .persist()
-    val kdist = nbrs.filter(col("rn") === k)
-      .select(col("p"), col("kdist_sq"))
-      .persist()
+    val nbrs = Materialize.persist(ranked.filter(col("d2") <= col("kdist_sq"))
+      .select(col("p"), col("o"), col("d2"), col("rn"), col("kdist_sq")))
+    val kdist = Materialize.persist(nbrs.filter(col("rn") === k)
+      .select(col("p"), col("kdist_sq")))
     val reach = nbrs
       .join(kdist.select(col("p").as("o"), col("kdist_sq").as("ko")), "o")
       .select(col("p"), col("o"), col("kdist_sq"),
@@ -526,9 +523,7 @@ object Similarity {
       .select(col("p").as("id"), col("kdist_sq"),
         col("n_nb").as("n_neighbors"), col("lrd_q"),
         expr("sum_lrd_o * 1000000L DIV (n_nb * lrd_q)").as("lof_micro"))
-    val mat = out.localCheckpoint(true)
-    nbrs.unpersist(); kdist.unpersist(); half.unpersist(); pts.unpersist()
-    mat
+    Materialize.localCheckpoint(out)
   }
 
   /** Milli-lattice quantization shared by the integer-d² family
@@ -702,15 +697,14 @@ object Similarity {
     * assignment feed bit-identical downstream plans.
     */
   private def lofOverProbes(emb: DataFrame, rankedIn: DataFrame, k: Int,
-                            idCol: String, vecCol: String): DataFrame = {
+                            idCol: String, vecCol: String): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, "k must be >= 1")
-    val pts = emb.select(col(idCol).as("id"), quantMilli(vecCol).as("vm"))
-      .withColumn("n2", dot(col("vm"), col("vm")).cast("long"))
-      .persist()
-    val ranked = rankedIn
-      .select(col("id"), col("cid"), col("rnk"))
-      .persist()
+    val pts = Materialize.persist(
+      emb.select(col(idCol).as("id"), quantMilli(vecCol).as("vm"))
+        .withColumn("n2", dot(col("vm"), col("vm")).cast("long")))
+    val ranked = Materialize.persist(
+      rankedIn.select(col("id"), col("cid"), col("rnk")))
     val home = ranked.filter(col("rnk") === 1)
       .select(col("id").as("o"), col("cid").as("bucket"))
     val probes = ranked.select(col("id").as("p"), col("cid").as("bucket"))
@@ -741,16 +735,14 @@ object Similarity {
     // cand now has ONE consumer, so its persist is gone; nbrs/kdist
     // persist instead (model-size: ~n·k and n rows — guide §5).
     val w = Window.partitionBy("p").orderBy(col("d2"), col("o"))
-    val nbrs = cand.withColumn("rn", row_number().over(w))
+    val nbrs = Materialize.persist(cand.withColumn("rn", row_number().over(w))
       .withColumn("kdist_sq",
         max(when(col("rn") === k, col("d2")))
           .over(Window.partitionBy("p")))
       .filter(col("d2") <= col("kdist_sq"))
-      .select(col("p"), col("o"), col("d2"), col("rn"), col("kdist_sq"))
-      .persist()
-    val kdist = nbrs.filter(col("rn") === k)
-      .select(col("p"), col("kdist_sq"))
-      .persist()
+      .select(col("p"), col("o"), col("d2"), col("rn"), col("kdist_sq")))
+    val kdist = Materialize.persist(nbrs.filter(col("rn") === k)
+      .select(col("p"), col("kdist_sq")))
     val reach = nbrs
       .join(kdist.select(col("p").as("o"), col("kdist_sq").as("ko")), "o")
       .select(col("p"), col("o"), col("kdist_sq"),
@@ -768,9 +760,7 @@ object Similarity {
       .select(col("p").as("id"), col("bucket"), col("kdist_sq"),
         col("n_nb").as("n_neighbors"), col("lrd_q"),
         expr("sum_lrd_o * 1000000L DIV (n_nb * lrd_q)").as("lof_micro"))
-    val mat = out.localCheckpoint(true)
-    nbrs.unpersist(); kdist.unpersist(); ranked.unpersist(); pts.unpersist()
-    mat
+    Materialize.localCheckpoint(out)
   }
 
   /** Flat exact integer-d² bucket assignment — [[probeBucketsL2]]'s
@@ -846,12 +836,12 @@ object Similarity {
     // checkpoints also make the loud emptiness guards free (an empty
     // fine table would enter the fine argmin as a silent
     // assign-nothing; the guard semantics are unchanged from r13).
-    val coarse = prepCents(coarseCents, centIdCol, vecCol)
-      .localCheckpoint(true)
+    val coarse = Materialize.localCheckpoint(
+      prepCents(coarseCents, centIdCol, vecCol))
     require(!coarse.isEmpty,
       "assignBucketsHierarchical: coarse centroid table is empty")
-    val fineP = prepCents(fineCents, centIdCol, vecCol)
-      .localCheckpoint(true)
+    val fineP = Materialize.localCheckpoint(
+      prepCents(fineCents, centIdCol, vecCol))
     require(!fineP.isEmpty,
       "assignBucketsHierarchical: fine centroid table is empty")
     // each fine centroid's coarse parent: model x model, broadcast

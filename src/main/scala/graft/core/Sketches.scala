@@ -430,14 +430,13 @@ object Sketches {
     * Output: one row (n_keys, f2_exact, f2_est, err_micro).
     */
   def amsF2(df: DataFrame, key: Column, rows: Int = 5, cols: Int = 16,
-            seed: Long = 42L): DataFrame = {
+            seed: Long = 42L): DataFrame = Materialize.scope {
     import org.apache.spark.sql.expressions.Window
     require(rows >= 1 && rows % 2 == 1, "rows must be odd (exact median)")
     require(cols >= 1, "cols must be >= 1")
     val spark = df.sparkSession
-    val freq = df.select(key.cast("string").as("k"))
-      .groupBy("k").agg(count(lit(1)).as("fk"))
-      .persist()
+    val freq = Materialize.persist(df.select(key.cast("string").as("k"))
+      .groupBy("k").agg(count(lit(1)).as("fk")))
     val spine = spark.range(rows.toLong * cols)
       .select(expr(s"id DIV $cols").as("i"),
         pmod(col("id"), lit(cols.toLong)).as("j"))
@@ -456,12 +455,9 @@ object Sketches {
       .select(col("m").as("f2_est"))
     val exact = freq.agg(count(lit(1)).as("n_keys"),
       sum(expr("fk * fk")).as("f2_exact"))
-    val out = exact.crossJoin(est)
+    Materialize.localCheckpoint(exact.crossJoin(est)
       .select(col("n_keys"), col("f2_exact"), col("f2_est"),
         expr("abs(f2_est - f2_exact) * 1000000L DIV f2_exact")
-          .as("err_micro"))
-    val mat = out.localCheckpoint(true)
-    freq.unpersist()
-    mat
+          .as("err_micro")))
   }
 }

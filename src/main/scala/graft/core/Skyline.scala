@@ -34,14 +34,13 @@ object Skyline {
     * @param yMax integer column to MAXIMIZE
     */
   def skyline2d(df: DataFrame, id: Column, xMin: Column,
-                yMax: Column): DataFrame = {
+                yMax: Column): DataFrame = Materialize.scope {
     val pts = df.select(id.as("id"), xMin.as("x"), yMax.as("y"))
     val grid = pts.groupBy("x").agg(max("y").as("ymax"))
-    val ranged = grid.repartitionByRange(col("x"))
-      .withColumn("_pid", spark_partition_id())
-      // persist: the totals branch must see the SAME _pid assignment
-      // (the offsetsBy discipline — never lean on resample luck)
-      .persist()
+    // persist: the totals branch must see the SAME _pid assignment
+    // (the offsetsBy discipline — never lean on resample luck)
+    val ranged = Materialize.persist(grid.repartitionByRange(col("x"))
+      .withColumn("_pid", spark_partition_id()))
     val localMax = ranged.withColumn("_run",
       max("ymax").over(Window.partitionBy("_pid").orderBy("x")
         .rowsBetween(Window.unboundedPreceding, -1)))
@@ -55,11 +54,8 @@ object Skyline {
         coalesce(col("_run"), col("_before")),
         coalesce(col("_before"), col("_run"))), lit(Long.MinValue)))
       .select(col("x").as("_fx"), col("ymax").as("_fy"))
-    val out = pts.join(frontierX,
+    Materialize.localCheckpoint(pts.join(frontierX,
         col("x") === col("_fx") && col("y") === col("_fy"))
-      .select(col("id"), col("x"), col("y"))
-    val mat = out.localCheckpoint(true)
-    ranged.unpersist()
-    mat
+      .select(col("id"), col("x"), col("y")))
   }
 }

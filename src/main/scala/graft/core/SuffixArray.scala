@@ -66,16 +66,15 @@ object SuffixArray {
     * result never depends on the partitioner's sampling.
     */
   private def denseRankDirect(level: DataFrame, extraCols: Seq[String])
-      : (DataFrame, Long) = {
+      : (DataFrame, Long) = Materialize.scope {
     val spark = level.sparkSession
     import spark.implicits._
     // persist the INPUT too: repartitionByRange SAMPLES its child to
     // pick boundaries, so an unpersisted level would re-derive the
     // whole upstream window chain twice (sampling pass + exchange)
-    val src = level.persist()
-    val ranged = src.repartitionByRange(col("r"))
-      .withColumn("_pid", spark_partition_id())
-      .persist()
+    val src = Materialize.persist(level)
+    val ranged = Materialize.persist(src.repartitionByRange(col("r"))
+      .withColumn("_pid", spark_partition_id()))
     val parts = ranged.groupBy("_pid")
       .agg(countDistinct(col("r")).as("_ng"))
       .orderBy("_pid").collect()
@@ -83,15 +82,12 @@ object SuffixArray {
     val offsets = parts.toSeq.map { row =>
       val off = acc; acc += row.getLong(1); (row.getInt(0), off)
     }
-    val out = ranged
+    val out = Materialize.localCheckpoint(ranged
       .withColumn("_lr", dense_rank().over(
         Window.partitionBy("_pid").orderBy("r")).cast("long"))
       .join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
       .select(Seq(col("sa_doc"), col("pos")) ++ extraCols.map(col) :+
-        (col("_lr") + col("_off")).as("r"): _*)
-      .localCheckpoint(true)
-    ranged.unpersist()
-    src.unpersist()
+        (col("_lr") + col("_off")).as("r"): _*))
     (out, acc)
   }
 
@@ -109,9 +105,8 @@ object SuffixArray {
     * position table through a broadcast first-token probe + exact
     * slice equality — K-bounded work, one corpus pass.
     *
-    * NOT lazy: the result materializes at call time
-    * (the [[Curation.curateFullSurvivorIdsReleasable]] contract).
-    * Level lineage is LINEAR under the struct re-rank (each level
+    * NOT lazy: the rank levels and candidate pairs materialize at call
+    * time. Level lineage is LINEAR under the struct re-rank (each level
     * reads its parent once through one shared-spec window), so
     * short-doc corpora keep the whole doubling chain lazy in one
     * fused stage; long-doc corpora (LCP-descent path) checkpoint
@@ -127,11 +122,10 @@ object SuffixArray {
                      directLcpMaxDocLen: Int = 4096): DataFrame = {
     require(minLen >= 1, "minLen must be >= 1")
     require(topK >= 1, "topK must be >= 1")
-    val docs = df
+    val docs = Materialize.persist(df
       .filter(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("sa_doc"),
-        TextAnalysis.tokens(col(textCol)).as("toks"))
-      .persist()
+        TextAnalysis.tokens(col(textCol)).as("toks")))
     val lens = docs.select(col("sa_doc"),
       size(col("toks")).cast("long").as("slen"))
 
@@ -140,7 +134,6 @@ object SuffixArray {
       coalesce(max("slen"), lit(0L)).as("mx")).head()
     val (nTotal, maxDocLen) = (counts.getLong(0), counts.getLong(1))
     if (nTotal == 0L) {
-      docs.unpersist()
       return docs.sparkSession.emptyDataFrame
         .withColumn("repeat_len", lit(0L))
         .withColumn("n_docs", lit(0L))
@@ -177,9 +170,8 @@ object SuffixArray {
     val structOnly = maxDocLen <= directLcpMaxDocLen.toLong
     var levels: List[(Long, DataFrame)] = Nil
     val (cand, buckets) = if (structOnly) {
-      val bucketRows = gramRows(docs, minLen)
-        .withColumnRenamed("g", "rb")
-        .persist()
+      val bucketRows = Materialize.persist(gramRows(docs, minLen)
+        .withColumnRenamed("g", "rb"))
       val multi = bucketRows.join(
         bucketRows.groupBy("rb").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2L).select("rb"),
@@ -188,15 +180,14 @@ object SuffixArray {
         .select(col("sa_doc"), col("pos"), col("rb"),
           expr(s"slice(toks, CAST(pos + $minLen + 1 AS INT), " +
             s"size(toks) - CAST(pos AS INT) - $minLen)").as("rest"))
-      val candShort = withRest
+      val candShort = Materialize.localCheckpoint(withRest
         .withColumn("nxt",
           lead(struct(col("sa_doc"), col("pos")), 1).over(
             Window.partitionBy("rb")
               .orderBy(col("rest"), col("sa_doc"), col("pos"))))
         .filter(col("nxt").isNotNull)
         .select(col("sa_doc").as("da"), col("pos").as("pa"),
-          col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
-        .localCheckpoint(true)
+          col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb")))
       (candShort, bucketRows)
     } else {
       val toks = docs.select(col("sa_doc"),
@@ -209,15 +200,14 @@ object SuffixArray {
       // 100 TB with noisy text) falls back to the shuffled join
       val vocab = toks.select(col("tok")).distinct()
         .withColumn("w", lit(1L))
-      val (vr, vRel) = Packing.rankAndCumOrderedReleasable(
-        vocab, "w", Seq(col("tok")))
-      val nVocab = vr.count()
-      val vrSlim = vr.select(col("tok"), col("rank").as("r"))
-      val r0 = toks.join(
-          if (nVocab <= 1000000L) broadcast(vrSlim) else vrSlim, "tok")
-        .select(col("sa_doc"), col("pos"), col("r"))
-        .localCheckpoint(true)
-      vRel()
+      val r0 = Materialize.scope {
+        val vr = Packing.rankAndCumOrdered(vocab, "w", Seq(col("tok")))
+        val nVocab = vr.count()
+        val vrSlim = vr.select(col("tok"), col("rank").as("r"))
+        Materialize.localCheckpoint(toks.join(
+            if (nVocab <= 1000000L) broadcast(vrSlim) else vrSlim, "tok")
+          .select(col("sa_doc"), col("pos"), col("r")))
+      }
 
     // prefix doubling; levels accumulate newest-first (largest width
     // at the head). Rank composition is STRUCTURAL (r16 rewrite):
@@ -274,12 +264,11 @@ object SuffixArray {
       if (!converged) {
         // checkpoint every level: the LCP descent joins each one,
         // and re-deriving nested windows per join would be quadratic
-        val next0 = cur.select(
+        val next0 = Materialize.localCheckpoint(cur.select(
             Seq(col("sa_doc"), col("pos")) ++ extra.map(col) :+
               struct(col("r").as("a"),
                 coalesce(lead(col("r"), width.toInt).over(byDoc), zero)
-                  .as("b")).as("r"): _*)
-          .localCheckpoint(true)
+                  .as("b")).as("r"): _*))
         zero = struct(zero.as("a"), zero.as("b"))
         leaves *= 2
         width *= 2
@@ -307,19 +296,18 @@ object SuffixArray {
     // one memory-hungry cache in the rewrite and measured as an
     // IN-SUITE hazard (q274 14.2 s under suite memory pressure vs
     // ~6 s isolated). The narrow bucket rows persist instead.
-    val bucketsLong = levels.find(_._1 == j0wTarget).map(_._2)
-      .getOrElse(fin)
-      .select(col("sa_doc"), col("pos"), col("rb"))
-      .persist()
-    val candLong = fin
+    val bucketsLong = Materialize.persist(
+      levels.find(_._1 == j0wTarget).map(_._2)
+        .getOrElse(fin)
+        .select(col("sa_doc"), col("pos"), col("rb")))
+    val candLong = Materialize.localCheckpoint(fin
       .withColumn("nxt",
         lead(struct(col("sa_doc"), col("pos")), 1).over(
           Window.partitionBy("rb")
             .orderBy(col("r"), col("sa_doc"), col("pos"))))
       .filter(col("nxt").isNotNull)
       .select(col("sa_doc").as("da"), col("pos").as("pa"),
-        col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb"))
-      .localCheckpoint(true)
+        col("nxt.sa_doc").as("db"), col("nxt.pos").as("pb")))
     (candLong, bucketsLong)
     }
 
@@ -381,7 +369,7 @@ object SuffixArray {
     // repeat text from the first suffix of each adjacent pair; each
     // winner keeps a WITNESS suffix so the occurrence count below can
     // probe by the witness's rank bucket instead of scanning tokens
-    val winners = exact
+    val winners = Materialize.localCheckpoint(exact
       .join(docs.select(col("sa_doc").as("da"), col("toks")), Seq("da"))
       .select(
         concat_ws(" ", slice(col("toks"), (col("pa") + 1).cast("int"),
@@ -391,8 +379,7 @@ object SuffixArray {
       .groupBy("repeat_text", "repeat_len")
       .agg(min("wit").as("wit"))
       .orderBy(col("repeat_len").desc, col("repeat_text").asc)
-      .limit(topK)
-      .localCheckpoint(true)
+      .limit(topK))
 
     // occurrence counts for the <= topK winners: every true occurrence
     // shares the witness's first-j0w tokens, hence its rank BUCKET —
@@ -469,17 +456,14 @@ object SuffixArray {
     */
   def exactSubstrDedup(df: DataFrame, idCol: String, textCol: String,
                        minLen: Int = 20,
-                       hashGrams: Boolean = false): DataFrame = {
+                       hashGrams: Boolean = false): DataFrame = Materialize.scope {
     require(minLen >= 2, "minLen must be >= 2 (1 would drop every " +
       "token that appears twice anywhere)")
-    val docs = tokenized(df, idCol, textCol).persist()
+    val docs = Materialize.persist(tokenized(df, idCol, textCol))
     val grams = keyed(gramRows(docs, minLen), hashGrams)
     val dupStarts = grams.join(dupKeys(grams), Seq("g"), "left_semi")
       .select(col("sa_doc"), col("pos"), lit(1L).as("ds"))
-    val out = rewriteMarked(docs, dupStarts, minLen, idCol)
-    val mat = out.localCheckpoint(true)
-    docs.unpersist()
-    mat
+    Materialize.localCheckpoint(rewriteMarked(docs, dupStarts, minLen, idCol))
   }
 
   /** Corpus-duplicated gram keys: `groupBy(g).count >= 2`. A grouped
@@ -666,7 +650,8 @@ object SuffixArray {
                                   textCol: String, minLen: Int = 20,
                                   txnAppId: String = null,
                                   txnVersion: Long = -1L,
-                                  hashGrams: Boolean = false): DataFrame = {
+                                  hashGrams: Boolean = false)
+      : DataFrame = Materialize.scope {
     require(minLen >= 2, "minLen must be >= 2")
     writeGramIndex(newDocs, idCol, textCol, indexDir, minLen,
       txnAppId, txnVersion, hashGrams)
@@ -685,10 +670,10 @@ object SuffixArray {
       .select("g")
     val touched = idx.join(newlyDup, Seq("g"), "left_semi")
       .select("sa_doc").distinct()
-    val affected = touched
+    // read 3x below; truncate the index scan
+    val affected = Materialize.localCheckpoint(touched
       .unionByName(newDocs.select(col(idCol).as("sa_doc")).distinct())
-      .distinct()
-      .localCheckpoint(true) // read 3x below; truncate the index scan
+      .distinct())
     // dup status for every gram of an affected doc, counted over the
     // FULL index but only for the gram groups that matter — a
     // map-side-combinable grouped count, never a gram window (the
@@ -699,12 +684,8 @@ object SuffixArray {
     val dupG = dupKeys(idx.join(affKeys, Seq("g"), "left_semi"))
     val dupStarts = affRows.join(dupG, Seq("g"), "left_semi")
       .select(col("sa_doc"), col("pos"), lit(1L).as("ds"))
-    val docs = tokenized(corpusDocs, idCol, textCol)
-      .join(affected, Seq("sa_doc"), "left_semi")
-      .persist()
-    val out = rewriteMarked(docs, dupStarts, minLen, idCol)
-    val mat = out.localCheckpoint(true)
-    docs.unpersist()
-    mat
+    val docs = Materialize.persist(tokenized(corpusDocs, idCol, textCol)
+      .join(affected, Seq("sa_doc"), "left_semi"))
+    Materialize.localCheckpoint(rewriteMarked(docs, dupStarts, minLen, idCol))
   }
 }

@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Batch perceptron (Rosenblatt's rule, full-batch form) on the
   * micro-integer lattice — linear-classifier training expressed as
   * pure relational aggregation, the "ML training is just a grouped
@@ -35,17 +37,16 @@ import org.apache.spark.sql.functions._
 object Perceptron {
 
   def trainBatch(emb: DataFrame, vecCol: String, labelPos: Column,
-                 epochs: Int): DataFrame = {
+                 epochs: Int): DataFrame = Materialize.scope {
     require(epochs >= 1, "epochs must be >= 1")
     val spark = emb.sparkSession
     import spark.implicits._
-    val pts = emb.select(
+    val pts = Materialize.persist(emb.select(
         concat(
           expr(s"transform($vecCol, v -> " +
             "CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT))"),
           array(lit(1000000L))).as("xm"),
-        when(labelPos, 1L).otherwise(-1L).as("y"))
-      .persist()
+        when(labelPos, 1L).otherwise(-1L).as("y")))
     val dims = pts.select(size(col("xm"))).head().getInt(0)
     var w = Array.fill(dims)(0L)
     val misCurve = Array.newBuilder[(Int, Long)]
@@ -63,7 +64,6 @@ object Perceptron {
       w = w.indices.map(d => w(d) + delta.getOrElse(d, 0L)).toArray
       misCurve += (e -> nMis)
     }
-    pts.unpersist()
     val rows = misCurve.result().map { case (e, n) =>
       ("mis", e.toLong, n) } ++
       w.zipWithIndex.map { case (wd, d) => ("w", d.toLong, wd) }

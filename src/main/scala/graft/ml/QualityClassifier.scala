@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.LanguageModel
+import graft.core.{LanguageModel, Materialize}
 
 /** In-engine document quality classifier — the fastText-shaped linear
   * model training pipelines use to score "wiki-like" quality (CCNet,
@@ -68,13 +68,14 @@ object QualityClassifier {
   def train(docs: DataFrame, labelCol: String,
             idCol: String = "doc_id", textCol: String = "text",
             buckets: Int = 4096, iters: Int = 20,
-            learningRate: Double = 40.0, l2: Double = 1e-6): Model = {
+            learningRate: Double = 40.0, l2: Double = 1e-6): Model = Materialize.scope {
     val spark = docs.sparkSession
     import spark.implicits._
-    val feats = featurize(docs, idCol, textCol, buckets)
-      .repartition(col(idCol)).persist()
-    val labels = docs.select(col(idCol), col(labelCol).cast("double").as("y"))
-      .repartition(col(idCol)).persist()
+    val feats = Materialize.persist(featurize(docs, idCol, textCol, buckets)
+      .repartition(col(idCol)))
+    val labels = Materialize.persist(
+      docs.select(col(idCol), col(labelCol).cast("double").as("y"))
+        .repartition(col(idCol)))
     val nDocs = labels.count().toDouble
 
     val w = new Array[Double](buckets)
@@ -86,23 +87,23 @@ object QualityClassifier {
         .map { case (v, b) => (b.toLong, v) }.toDF("bucket", "w"))
       val scores = feats.join(wDf, Seq("bucket"))
         .groupBy(col(idCol)).agg(sum(col("x") * col("w")).as("s"))
-      val resid = labels.join(scores, Seq(idCol), "left")
-        .select(col(idCol), col("y"),
-          sigmoid(coalesce(col("s"), lit(0.0)) + lit(bias)).as("p"))
-        .select(col(idCol), (col("p") - col("y")).as("r"),
-          // clamped log-loss, for the trace only
-          (-(col("y") * log(greatest(col("p"), lit(1e-12))) +
-            (lit(1.0) - col("y")) *
-              log(greatest(lit(1.0) - col("p"), lit(1e-12))))).as("ll"))
-        .persist()
-      // per-bucket gradient: one co-partitioned join + keyed agg
-      val grad = feats.join(resid, Seq(idCol))
-        .groupBy(col("bucket")).agg(sum(col("x") * col("r")).as("g"))
-        .as[(Long, Double)].collect()
-      val tot = resid.agg(sum("r"), sum("ll")).head()
+      val (grad, tot) = Materialize.scope {
+        val resid = Materialize.persist(labels.join(scores, Seq(idCol), "left")
+          .select(col(idCol), col("y"),
+            sigmoid(coalesce(col("s"), lit(0.0)) + lit(bias)).as("p"))
+          .select(col(idCol), (col("p") - col("y")).as("r"),
+            // clamped log-loss, for the trace only
+            (-(col("y") * log(greatest(col("p"), lit(1e-12))) +
+              (lit(1.0) - col("y")) *
+                log(greatest(lit(1.0) - col("p"), lit(1e-12))))).as("ll")))
+        // per-bucket gradient: one co-partitioned join + keyed agg
+        (feats.join(resid, Seq(idCol))
+          .groupBy(col("bucket")).agg(sum(col("x") * col("r")).as("g"))
+          .as[(Long, Double)].collect(),
+          resid.agg(sum("r"), sum("ll")).head())
+      }
       val biasGrad = tot.getDouble(0) / nDocs
       val loss = tot.getDouble(1) / nDocs
-      resid.unpersist()
       // bold driver on the already-computed loss
       if (losses.nonEmpty)
         step = if (loss <= losses.last) step * 1.05 else step * 0.5
@@ -112,7 +113,6 @@ object QualityClassifier {
       }
       bias -= step * biasGrad
     }
-    feats.unpersist(); labels.unpersist()
     Model(w, bias, buckets, losses.toSeq)
   }
 

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Slowly-changing-dimension type 2 over a snapshot table — the
   * warehouse pattern that keeps FULL attribute history: every key
   * carries versioned rows (attrs, valid_from, valid_to, is_current),
@@ -36,14 +38,13 @@ object Scd2 {
     */
   def upsertBatch(spark: SparkSession, table: String, batch: DataFrame,
                   key: String, attrCols: Seq[String], effCol: String,
-                  writerId: String, batchVersion: Long): Int = {
+                  writerId: String, batchVersion: Long): Int = Materialize.scope {
     require(attrCols.nonEmpty, "SCD2 needs at least one tracked attribute")
-    val snap = batch.dropDuplicates(key)
+    val snap = Materialize.localCheckpoint(batch.dropDuplicates(key)
       .select((key +: attrCols).map(col) :+ col(effCol).as("valid_from"): _*)
       .withColumn("valid_to", lit(null).cast(
         batch.schema(effCol).dataType))
-      .withColumn("is_current", lit(true))
-      .localCheckpoint()
+      .withColumn("is_current", lit(true)))
     val exists = SnapshotTable.currentVersion(table).isDefined
     val current =
       if (exists) SnapshotTable.read(spark, table).filter(col("is_current"))
@@ -62,7 +63,7 @@ object Scd2 {
       .filter(changed)
       .select((key +: attrCols).map(col) :+ col("valid_from") :+
         col("valid_to") :+ col("is_current"): _*)
-    val toInsert = newKeys.unionByName(changedKeys).localCheckpoint()
+    val toInsert = Materialize.localCheckpoint(newKeys.unionByName(changedKeys))
     if (!exists) {
       SnapshotTable.appendIdempotent(toInsert, table,
         s"$writerId:insert", batchVersion)

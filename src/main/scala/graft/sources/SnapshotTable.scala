@@ -7,6 +7,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.core.Materialize
+
 /** Minimal snapshot-isolated table format over plain parquet — the
   * core idea of log-structured lakehouse formats (Delta Lake, VLDB'20)
   * reduced to its essentials:
@@ -896,8 +898,9 @@ object SnapshotTable {
       // materialize before writing: `merged` reads the files we replace
       val out = toPhysical(merged,
         base.map(v => columnMappingOf(table, Some(v))).getOrElse(Map.empty))
-        .localCheckpoint()
-      val newFiles = writeData(out, table)
+      val newFiles = Materialize.scope {
+        writeData(Materialize.localCheckpoint(out), table)
+      }
       val v = base.getOrElse(-1) + 1
       if (publishManifest(table, v, newFiles, Some(schema), prevTxns)) return v
       attempt += 1 // someone else committed base+1: re-merge from their snapshot
@@ -1002,25 +1005,6 @@ object SnapshotTable {
           "depend on filesystem metadata until the next commit")
       Files.getLastModifiedTime(p).toMillis
     }
-  }
-
-  /** AS OF TIMESTAMP time travel: read the LATEST version whose commit
-    * time is ≤ `tsMs` (the Delta/Iceberg floor semantics — "the table
-    * as a reader at that instant saw it"). Versions committed in the
-    * same millisecond resolve to the highest version (a reader at that
-    * instant saw the last one). Fails loudly when `tsMs` predates the
-    * first commit — there was no table to read.
-    */
-  def readAsOfTimestamp(spark: SparkSession, table: String, tsMs: Long,
-                        prune: Seq[ColRange] = Nil,
-                        probes: Seq[ColProbe] = Nil): DataFrame = {
-    val latest = currentVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $table"))
-    val v = (0 to latest).filter(commitTimeOf(table, _) <= tsMs)
-    require(v.nonEmpty,
-      s"timestamp $tsMs predates the first commit of $table " +
-        s"(${commitTimeOf(table, 0)})")
-    read(spark, table, Some(v.max), prune, probes)
   }
 
   /** The CHECK constraints recorded at `version` (current when None).
@@ -1398,7 +1382,9 @@ object SnapshotTable {
       // materialize before the rewrite: survivors read the files being
       // replaced only logically — writeData stages to new files, but a
       // lost race must re-filter against a DIFFERENT snapshot anyway
-      val newFiles = writeData(survivors.localCheckpoint(), table)
+      val newFiles = Materialize.scope {
+        writeData(Materialize.localCheckpoint(survivors), table)
+      }
       if (publishManifest(table, base + 1, untouched ++ newFiles, schemaOpt, prevTxns))
         return Some(base + 1)
       attempt += 1 // concurrent commit won: re-prune + re-filter its snapshot
@@ -1461,7 +1447,9 @@ object SnapshotTable {
         }: _*)
       // rewritten rows follow their (possibly updated) bases
       val rewritten = toPhysical(recomputeGenerated(rewritten0, table), mapping)
-      val newFiles = writeData(rewritten.localCheckpoint(), table)
+      val newFiles = Materialize.scope {
+        writeData(Materialize.localCheckpoint(rewritten), table)
+      }
       if (publishManifest(table, base + 1, untouched ++ newFiles, schemaOpt, prevTxns))
         return Some(base + 1)
       attempt += 1
@@ -1505,12 +1493,22 @@ object SnapshotTable {
             whenMatchedUpdate: Map[String, org.apache.spark.sql.Column] = Map.empty,
             whenMatchedDelete: Option[org.apache.spark.sql.Column] = None,
             whenNotMatchedInsert: Boolean = true,
-            txn: Map[String, Long] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct}
+            txn: Map[String, Long] = Map.empty): Int = Materialize.scope {
     require(columnMappingOf(table).isEmpty,
       s"MERGE on a column-mapped table is not supported yet ($table " +
         "carries renames) - upsert/update/delete are mapping-aware")
-    val deduped = updates.dropDuplicates(key).localCheckpoint()
+    mergeDeduped(spark, table,
+      Materialize.localCheckpoint(updates.dropDuplicates(key)), key,
+      whenMatchedUpdate, whenMatchedDelete, whenNotMatchedInsert, txn)
+  }
+
+  private def mergeDeduped(spark: SparkSession, table: String,
+                           deduped: DataFrame, key: String,
+                           whenMatchedUpdate: Map[String, org.apache.spark.sql.Column],
+                           whenMatchedDelete: Option[org.apache.spark.sql.Column],
+                           whenNotMatchedInsert: Boolean,
+                           txn: Map[String, Long]): Int = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct}
     // empty source: nothing can match or insert — without this guard a
     // null key envelope would make EVERY file a rewrite candidate and
     // copy the whole table for a no-op (an empty foreachBatch batch)
@@ -1593,7 +1591,9 @@ object SnapshotTable {
       // enforce on the MERGED output (updates may transform values),
       // before any data lands
       enforceConstraints(output, table)
-      val newFiles = writeData(output.localCheckpoint(), table)
+      val newFiles = Materialize.scope {
+        writeData(Materialize.localCheckpoint(output), table)
+      }
       val v = base.getOrElse(-1) + 1
       // recomputeGenerated may have materialized a registered column
       // the schema did not carry yet — publish the evolved shape

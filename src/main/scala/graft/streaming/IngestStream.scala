@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.EnergyIngest
+import graft.core.{EnergyIngest, Materialize}
 import graft.sources.ParquetMerge
 
 /** Event-driven ingest (SURVEY §2.10 E1): the reference's blob-trigger
@@ -39,17 +39,15 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val typed = EnergyIngest.transform(batch)
-        onBatchMetrics.foreach { cb => typed.persist() }
-        val (good, bad) = EnergyIngest.validate(typed)
-        // deterministic ids make replayed batches a no-op (E3)
-        ParquetMerge.upsert(batch.sparkSession, tableDir, good, "id")
-        rejectDir.foreach(d => bad.write.mode("append").parquet(d))
-        onBatchMetrics.foreach { cb =>
-          cb(batchId, good.count(), bad.count())
-          typed.unpersist()
+        Materialize.scope {
+          val typed = EnergyIngest.transform(batch)
+          if (onBatchMetrics.isDefined) Materialize.persist(typed)
+          val (good, bad) = EnergyIngest.validate(typed)
+          // deterministic ids make replayed batches a no-op (E3)
+          ParquetMerge.upsert(batch.sparkSession, tableDir, good, "id")
+          rejectDir.foreach(d => bad.write.mode("append").parquet(d))
+          onBatchMetrics.foreach(cb => cb(batchId, good.count(), bad.count()))
         }
-        ()
       }
       .start()
   }

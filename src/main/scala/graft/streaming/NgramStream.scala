@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.TextAnalysis
+import graft.core.{Materialize, TextAnalysis}
 
 /** Streaming boilerplate detection: windowed n-gram heavy hitters
   * over a document stream — the online form of
@@ -61,35 +61,32 @@ object NgramStream {
     private val candidates = scala.collection.mutable.Set.empty[String]
 
     /** foreachBatch body. */
-    def update(batch: DataFrame, textCol: String): Unit = {
-      val grams = batch.select(
-        explode(TextAnalysis.ngramsAll(col(textCol), n)).as("ngram"))
-      grams.persist()
-      try {
-        val batchCms = grams.stat.countMinSketch(
-          col("ngram"), eps, confidence, seed)
-        cms = if (cms == null) batchCms
-        else { cms.mergeInPlace(batchCms); cms }
-        candidates ++= grams.groupBy("ngram").count()
-          .orderBy(col("count").desc, col("ngram"))
-          .limit(topKPerBatch)
-          .collect().map(_.getString(0))
-        // Bound the candidate head: without eviction it grows by up
-        // to topKPerBatch per micro-batch, breaking the constant-state
-        // contract. Keep the `capFactor` × topK candidates with the
-        // highest CMS estimates — a dropped gram was below ~cap-K
-        // stream-so-far, and if it heats up later it re-enters through
-        // a batch top-K (the same admission path as any hitter).
-        val cap = capFactor * topKPerBatch
-        if (candidates.size > cap) {
-          val keep = candidates.toSeq
-            .map(g => (g, cms.estimateCount(g)))
-            .sortBy { case (g, c) => (-c, g) }
-            .take(cap).map(_._1)
-          candidates.clear()
-          candidates ++= keep
-        }
-      } finally grams.unpersist()
+    def update(batch: DataFrame, textCol: String): Unit = Materialize.scope {
+      val grams = Materialize.persist(batch.select(
+        explode(TextAnalysis.ngramsAll(col(textCol), n)).as("ngram")))
+      val batchCms = grams.stat.countMinSketch(
+        col("ngram"), eps, confidence, seed)
+      cms = if (cms == null) batchCms
+      else { cms.mergeInPlace(batchCms); cms }
+      candidates ++= grams.groupBy("ngram").count()
+        .orderBy(col("count").desc, col("ngram"))
+        .limit(topKPerBatch)
+        .collect().map(_.getString(0))
+      // Bound the candidate head: without eviction it grows by up
+      // to topKPerBatch per micro-batch, breaking the constant-state
+      // contract. Keep the `capFactor` × topK candidates with the
+      // highest CMS estimates — a dropped gram was below ~cap-K
+      // stream-so-far, and if it heats up later it re-enters through
+      // a batch top-K (the same admission path as any hitter).
+      val cap = capFactor * topKPerBatch
+      if (candidates.size > cap) {
+        val keep = candidates.toSeq
+          .map(g => (g, cms.estimateCount(g)))
+          .sortBy { case (g, c) => (-c, g) }
+          .take(cap).map(_._1)
+        candidates.clear()
+        candidates ++= keep
+      }
     }
 
     /** Stream-so-far heavy hitters: candidates whose CMS estimate

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Packing
+import graft.core.{Materialize, Packing}
 import graft.sources.SnapshotTable
 
 /** Continuous sequence packing — the streaming face of the q80
@@ -61,11 +61,11 @@ object PackStream {
     * the single state-recovery aggregate ([[recoverState]] — confined
     * to the last commit's files in steady state) and the idempotent
     * append itself. The sequence cut is computed in-plan from a
-    * broadcast one-row total, not with a count action, and every
-    * per-batch cache (the union of positioned tokens, the prefix-sum
-    * intermediate inside [[Packing.offsetsByReleasable]]) is released
-    * before returning — a long-running stream holds no cached blocks
-    * between batches.
+    * broadcast one-row total, not with a count action, and the batch
+    * runs in one [[Materialize.scope]], so every per-batch cache (the
+    * union of positioned tokens, the prefix-sum intermediates inside
+    * [[Packing.offsetsBy]]) is released before returning — a
+    * long-running stream holds no cached blocks between batches.
     *
     * @param writerId idempotence scope (the Delta txnAppId contract).
     *                  A stream RESTARTED FROM A FRESH CHECKPOINT must
@@ -90,73 +90,73 @@ object PackStream {
       .flatMap(v => SnapshotTable.txnVersions(table, v).get(CommitSeqKey))
       .map(_ + 1L).getOrElse(0L)
 
-    val (tailToks, nOpen, nextSeq) = recoverState(spark, table)
+    Materialize.scope {
+      val (tailToks, nOpen, nextSeq) = recoverState(spark, table)
 
-    val counted = batch.select(col(idCol).cast("long").as("doc_id"),
-      col("piece_ids"), size(col("piece_ids")).cast("long").as("n_tokens"))
-    val (offs, releaseOffs) = Packing.offsetsByReleasable(
-      counted.select(col("doc_id"), col("n_tokens")), "doc_id")
-    val batchToks = counted.join(offs, Seq("doc_id"))
-      .select(col("doc_id"), col("tok_start"),
-        posexplode(col("piece_ids")).as(Seq("i", "token_id")))
-      .select(col("doc_id"),
-        (lit(nOpen) + col("tok_start") + col("i")).as("pos"), col("token_id"))
+      val counted = batch.select(col(idCol).cast("long").as("doc_id"),
+        col("piece_ids"), size(col("piece_ids")).cast("long").as("n_tokens"))
+      val offs = Packing.offsetsBy(
+        counted.select(col("doc_id"), col("n_tokens")), "doc_id")
+      val batchToks = counted.join(offs, Seq("doc_id"))
+        .select(col("doc_id"), col("tok_start"),
+          posexplode(col("piece_ids")).as(Seq("i", "token_id")))
+        .select(col("doc_id"),
+          (lit(nOpen) + col("tok_start") + col("i")).as("pos"), col("token_id"))
 
-    // every positioned token of this batch (carried tail + new),
-    // persisted: the total, the sequence branch, and the tail branch
-    // each scan it once inside the SINGLE append action
-    val all = tailToks.select("pos", "token_id", "doc_id")
-      .unionByName(batchToks.select("pos", "token_id", "doc_id"))
-      .persist()
-    // pos is dense 0..n-1, so the token total is max(pos)+1 — derived
-    // in-plan via a broadcast one-row frame instead of a driver count
-    val tot = all.agg((coalesce(max(col("pos")), lit(-1L)) + 1L).as("_total"))
-    val withCut = all.crossJoin(broadcast(tot))
-      .withColumn("_cut", (col("_total") / seqLen).cast("long") * lit(seqLen.toLong))
+      // every positioned token of this batch (carried tail + new),
+      // persisted: the total, the sequence branch, and the tail branch
+      // each scan it once inside the SINGLE append action
+      val all = Materialize.persist(tailToks.select("pos", "token_id", "doc_id")
+        .unionByName(batchToks.select("pos", "token_id", "doc_id")))
+      // pos is dense 0..n-1, so the token total is max(pos)+1 — derived
+      // in-plan via a broadcast one-row frame instead of a driver count
+      val tot = all.agg((coalesce(max(col("pos")), lit(-1L)) + 1L).as("_total"))
+      val withCut = all.crossJoin(broadcast(tot))
+        .withColumn("_cut", (col("_total") / seqLen).cast("long") * lit(seqLen.toLong))
 
-    val seqs = withCut.filter(col("pos") < col("_cut"))
-      .withColumn("sl", (col("pos") / seqLen).cast("long"))
-      .groupBy(col("sl"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("n_tokens"),
-        transform(array_sort(collect_list(struct(col("pos"), col("token_id")))),
-          s => s.getField("token_id")).as("token_ids"))
-      .select((lit(nextSeq) + col("sl")).as("seq_id"),
-        lit("seq").as("kind"), lit(batchId).as("batch_id"),
-        lit(commitSeq).as("commit_seq"),
-        col("n_docs"), col("n_tokens"), col("token_ids"),
-        lit(null).cast("array<bigint>").as("doc_ids"))
+      val seqs = withCut.filter(col("pos") < col("_cut"))
+        .withColumn("sl", (col("pos") / seqLen).cast("long"))
+        .groupBy(col("sl"))
+        .agg(countDistinct(col("doc_id")).as("n_docs"),
+          count(lit(1)).as("n_tokens"),
+          transform(array_sort(collect_list(struct(col("pos"), col("token_id")))),
+            s => s.getField("token_id")).as("token_ids"))
+        .select((lit(nextSeq) + col("sl")).as("seq_id"),
+          lit("seq").as("kind"), lit(batchId).as("batch_id"),
+          lit(commitSeq).as("commit_seq"),
+          col("n_docs"), col("n_tokens"), col("token_ids"),
+          lit(null).cast("array<bigint>").as("doc_ids"))
 
-    // the new tail: one bounded row (< seqLen tokens), re-based to 0.
-    // Conditional aggregates over the UNfiltered token set so the row
-    // exists even when the tail is empty; its seq_id field carries the
-    // NEXT sequence id, which is what lets recovery read one row
-    // instead of aggregating every seq row ever written.
-    val tailStruct = when(col("pos") >= col("_cut"),
-      struct(col("pos"), col("token_id"), col("doc_id")))
-    val tail = withCut
-      .agg(
-        coalesce(sum(when(col("pos") >= col("_cut"), 1L)), lit(0L))
-          .as("n_tokens"),
-        countDistinct(when(col("pos") >= col("_cut"), col("doc_id")))
-          .as("n_docs"),
-        transform(array_sort(collect_list(tailStruct)),
-          s => s.getField("token_id")).as("token_ids"),
-        transform(array_sort(collect_list(tailStruct)),
-          s => s.getField("doc_id")).as("doc_ids"),
-        first(col("_cut")).as("_cutv"))
-      .select(
-        (lit(nextSeq) +
-          coalesce((col("_cutv") / seqLen).cast("long"), lit(0L)))
-          .as("seq_id"),
-        lit("tail").as("kind"), lit(batchId).as("batch_id"),
-        lit(commitSeq).as("commit_seq"),
-        col("n_docs"), col("n_tokens"), col("token_ids"), col("doc_ids"))
+      // the new tail: one bounded row (< seqLen tokens), re-based to 0.
+      // Conditional aggregates over the UNfiltered token set so the row
+      // exists even when the tail is empty; its seq_id field carries the
+      // NEXT sequence id, which is what lets recovery read one row
+      // instead of aggregating every seq row ever written.
+      val tailStruct = when(col("pos") >= col("_cut"),
+        struct(col("pos"), col("token_id"), col("doc_id")))
+      val tail = withCut
+        .agg(
+          coalesce(sum(when(col("pos") >= col("_cut"), 1L)), lit(0L))
+            .as("n_tokens"),
+          countDistinct(when(col("pos") >= col("_cut"), col("doc_id")))
+            .as("n_docs"),
+          transform(array_sort(collect_list(tailStruct)),
+            s => s.getField("token_id")).as("token_ids"),
+          transform(array_sort(collect_list(tailStruct)),
+            s => s.getField("doc_id")).as("doc_ids"),
+          first(col("_cut")).as("_cutv"))
+        .select(
+          (lit(nextSeq) +
+            coalesce((col("_cutv") / seqLen).cast("long"), lit(0L)))
+            .as("seq_id"),
+          lit("tail").as("kind"), lit(batchId).as("batch_id"),
+          lit(commitSeq).as("commit_seq"),
+          col("n_docs"), col("n_tokens"), col("token_ids"), col("doc_ids"))
 
-    try SnapshotTable.appendIdempotent(seqs.unionByName(tail), table,
-      writerId, batchId, Map(CommitSeqKey -> commitSeq))
-    finally { all.unpersist(); releaseOffs() }
-    ()
+      SnapshotTable.appendIdempotent(seqs.unionByName(tail), table,
+        writerId, batchId, Map(CommitSeqKey -> commitSeq))
+      ()
+    }
   }
 
   /** State recovery for [[packBatch]]: (carried tail tokens as (pos,

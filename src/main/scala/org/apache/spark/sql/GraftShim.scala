@@ -26,6 +26,17 @@ object GraftShim {
   def logicalPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** Whether the cache manager already holds a plan equivalent to
+    * `df`'s (the lookup `df.persist()` itself makes).
+    */
+  def isCached(df: Dataset[_]): Boolean =
+    df.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]]).isDefined
+
+  /** Entries in the session's cache manager (`private[sql]` there). */
+  def numCachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
+
   /** The physical plan with the AQE wrapper unwrapped (its INITIAL
     * plan — runtime re-optimization can only merge/coalesce, never
     * introduce a new unpartitioned window), for plan-shape regression

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Curation, Dedup, TextAnalysis}
+import graft.core.{Curation, Dedup, Materialize, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Composed curation pipeline invariants (q51 carries the end-to-end
@@ -91,21 +91,22 @@ class CurationSpec extends SparkSpec {
     full.unpersist()
   }
 
-  test("releasable forms: the cache handle releases every stage cache") {
+  test("scope form: the consumer's scope releases every stage cache") {
     val docs = Tables.documents(spark, Sf0001)
     spark.sharedState.cacheManager.clearCache()
-    val (audit2, caches) = Curation.curateReleasable(docs)
-    audit2.write.format("noop").mode("overwrite").save()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "stage caches pinned while the audit materializes")
-    caches.unpersist()
+    Materialize.scope {
+      Curation.curate(docs).write.format("noop").mode("overwrite").save()
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "stage caches pinned while the audit materializes")
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "handle released every stage cache")
-    val (ids, caches2) = Curation.curateFullSurvivorIdsReleasable(docs)
-    ids.write.format("noop").mode("overwrite").save()
-    assert(!spark.sharedState.cacheManager.isEmpty)
-    caches2.unpersist()
+      "scope released every stage cache")
+    Materialize.scope {
+      Curation.curateFullSurvivorIds(docs)
+        .write.format("noop").mode("overwrite").save()
+      assert(!spark.sharedState.cacheManager.isEmpty)
+    }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "full-pipeline handle releases the LM tables too")
+      "full-pipeline scope releases the LM tables too")
   }
 }

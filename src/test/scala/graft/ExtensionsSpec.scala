@@ -504,14 +504,15 @@ class ExtensionsSpec extends SparkSpec {
     val mlSql = spark.sql(
       "SELECT * FROM moore_lewis('r15_ml', 'r15_ml_in', 'r15_ml_gen', " +
         "'doc_id', 'text')").collect()
-    val inLm = graft.core.LanguageModel.trainBigram(
-      spark.table("r15_ml_in"))
-    val genLm = graft.core.LanguageModel.trainBigram(
-      spark.table("r15_ml_gen"))
-    val mlApi = graft.core.LanguageModel.mooreLewis(
-      spark.table("r15_ml"), inLm, genLm).collect()
-    assert(mlSql.toSet == mlApi.toSet && mlSql.length == 3)
-    inLm.unpersist(); genLm.unpersist()
+    graft.core.Materialize.scope {
+      val inLm = graft.core.LanguageModel.trainBigram(
+        spark.table("r15_ml_in"))
+      val genLm = graft.core.LanguageModel.trainBigram(
+        spark.table("r15_ml_gen"))
+      val mlApi = graft.core.LanguageModel.mooreLewis(
+        spark.table("r15_ml"), inLm, genLm).collect()
+      assert(mlSql.toSet == mlApi.toSet && mlSql.length == 3)
+    }
 
     Seq((1L, "card 4111111111111111 here"), (2L, "clean"))
       .toDF("doc_id", "text").createOrReplaceTempView("r15_cc")

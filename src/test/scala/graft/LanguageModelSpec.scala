@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.LanguageModel
+import graft.core.{LanguageModel, Materialize}
 import org.apache.spark.sql.functions._
 
 class LanguageModelSpec extends SparkSpec {
@@ -119,26 +119,27 @@ class LanguageModelSpec extends SparkSpec {
       (i, "the fluffy cat chased the playful dog around the garden"))
     val fin = (8L until 16L).map(i =>
       (i, "the quarterly stock report showed strong bond yields today"))
-    val inLm = LanguageModel.trainBigram(pets.toDF("doc_id", "text"))
-    val genLm = LanguageModel.trainBigram(fin.toDF("doc_id", "text"))
-    val probe = Seq(
-      (100L, "the fluffy cat chased the dog"),
-      (101L, "the quarterly stock report today"),
-      (102L, "x"))
-    val got = LanguageModel.mooreLewis(probe.toDF("doc_id", "text"),
-        inLm, genLm)
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> r).toMap
-    // pet-like doc scores ABOVE finance-like doc
-    assert(got(100L)._5 > got(101L)._5,
-      s"${got(100L)} should outrank ${got(101L)}")
-    // score == (ll_in - ll_gen) quot n exactly (truncation toward
-    // zero — Scala Long division shares the convention)
-    got.values.filter(_._2 > 0).foreach { case (_, n, in_, gen, s) =>
-      assert(s == (in_ - gen) / n)
+    Materialize.scope {
+      val inLm = LanguageModel.trainBigram(pets.toDF("doc_id", "text"))
+      val genLm = LanguageModel.trainBigram(fin.toDF("doc_id", "text"))
+      val probe = Seq(
+        (100L, "the fluffy cat chased the dog"),
+        (101L, "the quarterly stock report today"),
+        (102L, "x"))
+      val got = LanguageModel.mooreLewis(probe.toDF("doc_id", "text"),
+          inLm, genLm)
+        .as[(Long, Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> r).toMap
+      // pet-like doc scores ABOVE finance-like doc
+      assert(got(100L)._5 > got(101L)._5,
+        s"${got(100L)} should outrank ${got(101L)}")
+      // score == (ll_in - ll_gen) quot n exactly (truncation toward
+      // zero — Scala Long division shares the convention)
+      got.values.filter(_._2 > 0).foreach { case (_, n, in_, gen, s) =>
+        assert(s == (in_ - gen) / n)
+      }
+      assert(got(101L)._5 < 0)  // the general LM prefers the finance doc
+      assert(got(102L) == ((102L, 0L, 0L, 0L, 0L))) // < 2 tokens
     }
-    assert(got(101L)._5 < 0)  // the general LM prefers the finance doc
-    assert(got(102L) == ((102L, 0L, 0L, 0L, 0L))) // < 2 tokens
-    inLm.unpersist(); genLm.unpersist()
   }
 }

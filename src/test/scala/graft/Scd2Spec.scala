@@ -20,13 +20,14 @@ class Scd2Spec extends SparkSpec {
       rows.toSeq.toDF("k", "seg").withColumn("eff", lit(d(eff)))
     // b1: keys 1, 2. b2: 1 changes, 2 same, 3 arrives late.
     // b3: 1 reverts to its original value (a REAL change), 2 same.
-    Scd2.upsertBatch(spark, t, batch(1L -> "A", 2L -> "B")("2024-01-01"),
-      "k", Seq("seg"), "eff", "w", 1L)
-    Scd2.upsertBatch(spark, t,
+    // each batch releases its checkpoints (create, then close + insert)
+    leavesNothingPersisted(Scd2.upsertBatch(spark, t,
+      batch(1L -> "A", 2L -> "B")("2024-01-01"), "k", Seq("seg"), "eff", "w", 1L))
+    leavesNothingPersisted(Scd2.upsertBatch(spark, t,
       batch(1L -> "A2", 2L -> "B", 3L -> "C")("2024-02-01"),
-      "k", Seq("seg"), "eff", "w", 2L)
-    Scd2.upsertBatch(spark, t, batch(1L -> "A", 2L -> "B")("2024-03-01"),
-      "k", Seq("seg"), "eff", "w", 3L)
+      "k", Seq("seg"), "eff", "w", 2L))
+    leavesNothingPersisted(Scd2.upsertBatch(spark, t,
+      batch(1L -> "A", 2L -> "B")("2024-03-01"), "k", Seq("seg"), "eff", "w", 3L))
     val rows = SnapshotTable.read(spark, t)
       .select($"k", $"seg", $"valid_from", $"valid_to", $"is_current")
       .as[(Long, String, Date, Option[Date], Boolean)].collect().toSet

@@ -27,7 +27,8 @@ class SnapshotTableSpec extends SparkSpec {
   test("keyed upsert merges per snapshot; vacuum drops old versions") {
     val t = Files.createTempDirectory("graft_snap2").toString + "/t"
     SnapshotTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), t)
-    SnapshotTable.upsert(spark, Seq((2, "B"), (3, "c"), (3, "c2")).toDF("id", "v"), t, "id")
+    leavesNothingPersisted(SnapshotTable.upsert(spark,
+      Seq((2, "B"), (3, "c"), (3, "c2")).toDF("id", "v"), t, "id"))
     val now = SnapshotTable.read(spark, t).as[(Int, String)].collect().toMap
     assert(now.keySet == Set(1, 2, 3))
     assert(now(2) == "B")
@@ -251,7 +252,8 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.append((201 to 300).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1), t)
     val before = SnapshotTable.filesForRead(t).toSet
 
-    val v = SnapshotTable.delete(spark, t, col("id") >= 150 && col("id") < 160)
+    val v = leavesNothingPersisted(
+      SnapshotTable.delete(spark, t, col("id") >= 150 && col("id") < 160))
     assert(v.contains(3))
     val after = SnapshotTable.filesForRead(t).toSet
     // files 1 and 3 carry over by NAME; only the middle file rewrote
@@ -332,8 +334,8 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.append((101 to 200).map(i => (i, i * 1.0)).toDF("id", "x").coalesce(1), t)
     val before = SnapshotTable.filesForRead(t).toSet
 
-    val v = SnapshotTable.update(spark, t, col("id") <= 50,
-      Map("x" -> (col("x") * 10 + col("id"))))
+    val v = leavesNothingPersisted(SnapshotTable.update(spark, t, col("id") <= 50,
+      Map("x" -> (col("x") * 10 + col("id")))))
     assert(v.contains(2))
     assert((before & SnapshotTable.filesForRead(t).toSet).size == 1,
       "file outside the condition range carries over")
@@ -357,11 +359,11 @@ class SnapshotTableSpec extends SparkSpec {
 
     // source keys all land in the second file's range (plus one insert)
     val src = Seq((150, 0, "x"), (160, 0, "x"), (250, 0, "x")).toDF("id", "n", "tag")
-    SnapshotTable.merge(spark, t, src, "id",
+    leavesNothingPersisted(SnapshotTable.merge(spark, t, src, "id",
       whenMatchedUpdate = Map(
         "n" -> col("_src.n"), "tag" -> lit("updated")),
       whenMatchedDelete = Some(col("id") === 160),
-      whenNotMatchedInsert = true)
+      whenNotMatchedInsert = true))
 
     val after = SnapshotTable.filesForRead(t).toSet
     assert((before & after).size == 1, "file outside the source key envelope carries over")

@@ -25,5 +25,14 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` and asserts it left no RDD persisted behind. */
+  def leavesNothingPersisted[T](body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = body
+    val left = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(before)
+    assert(left.isEmpty, s"left ${left.size} persisted RDDs behind")
+    out
+  }
   val RefCsv = "/root/reference/home_energy_consumption_data.csv"
 }

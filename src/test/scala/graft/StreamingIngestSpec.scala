@@ -47,6 +47,16 @@ class StreamingIngestSpec extends SparkSpec {
     val q2 = IngestStream.start(spark, landing, table, s"$base/ckpt2", None)
     q2.awaitTermination()
     assert(spark.read.parquet(table).count() == 3L)
+
+    // a late blob, resumed from the ORIGINAL checkpoint: only the new
+    // file is processed, and the metrics batch holds nothing persisted
+    writeBlob("blob3.csv", Seq("99,TV,1.5,2:00,05-05-2023,12,Spring,3"))
+    val seen = metrics.size
+    leavesNothingPersisted(IngestStream.start(spark, landing, table, ckpt,
+      Some(rejects), onBatchMetrics = Some((id, g, b) =>
+        metrics.synchronized { metrics += ((id, g, b)) })).awaitTermination())
+    assert(spark.read.parquet(table).count() == 4L)
+    assert(metrics.drop(seen).map(m => (m._2, m._3)) == Seq((1L, 0L)))
   }
 
   test("parquet merge upsert: updates replace, inserts append, idempotent") {

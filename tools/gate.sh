@@ -18,6 +18,9 @@ sbt -batch test | grep -E "Tests: |error" | tail -2
 echo "== benchmark unit tests =="
 python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -1
 
+echo "== tools unit tests =="
+python3 -m unittest discover -s tools -p 'test_*.py' 2>&1 | tail -1
+
 echo "== smoke (raw session, sf0.001) =="
 sbt -batch "runMain graft.Smoke" 2>&1 | grep -E "\[smoke\] (entry|ALL|.*FAIL)" | tail -3
 
