@@ -7,6 +7,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftShim, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -23,8 +24,10 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *    write command's own planning.
   *
   * One `SparkListener` counts jobs, stages, tasks, executor time,
-  * shuffle and spill bytes; one sampler thread aggregates the stacks of
-  * the driver thread and of busy executor task threads.
+  * shuffle and spill bytes; Spark's codegen metrics count the classes
+  * Janino compiled (a plan shape already in the JVM-wide cache compiles
+  * none); one sampler thread aggregates the stacks of the driver thread
+  * and of busy executor task threads.
   *
   * Usage: runMain graft.QueryProfile <sfDir> [query ...]
   * (no names profiles every query, sorted). Each query is warmed once
@@ -42,7 +45,7 @@ object QueryProfile {
       query: String, buildMs: Long, planMs: Long, execMs: Long,
       jobs: Int, stages: Int, tasks: Int, runMs: Long, cpuMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
-      persistedRddsLeft: Int, cacheNonEmpty: Boolean,
+      codegenCompiles: Long, persistedRddsLeft: Int, cacheNonEmpty: Boolean,
       timeline: Seq[Job], plan: String,
       driverFrames: Seq[(String, Int)], executorFrames: Seq[(String, Int)]) {
 
@@ -55,6 +58,7 @@ object QueryProfile {
         s"tasks=$tasks run_ms=$runMs cpu_ms=$cpuMs " +
         s"shuffle_read_bytes=$shuffleReadBytes " +
         s"shuffle_write_bytes=$shuffleWriteBytes spill_bytes=$spillBytes " +
+        s"codegen_compiles=$codegenCompiles " +
         s"persisted_rdds_left=$persistedRddsLeft " +
         s"cache_nonempty=$cacheNonEmpty\n"
       timeline.foreach(j =>
@@ -163,6 +167,8 @@ object QueryProfile {
     // times are epoch ms, so jobs are assigned to layers by them
     val marks = mutable.ArrayBuffer[(Long, Long)]()
     def mark(): Unit = marks += ((System.nanoTime(), System.currentTimeMillis()))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val compilesBefore = compiles.getCount
     val df = try {
       mark()
       val df = build(spark, dir)
@@ -190,6 +196,7 @@ object QueryProfile {
       timeline.size, listener.stages.get.toInt, listener.tasks.get.toInt,
       listener.runMs.get, listener.cpuNs.get / 1000000L,
       listener.shuffleRead.get, listener.shuffleWrite.get, listener.spill.get,
+      compiles.getCount - compilesBefore,
       sc.getPersistentRDDs.keys.count(id => !rddsBefore(id)),
       !spark.sharedState.cacheManager.isEmpty,
       timeline, df.queryExecution.explainString(FormattedMode),

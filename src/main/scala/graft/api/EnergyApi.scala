@@ -1,7 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType}
 import graft.core.{EnergyAnalytics, TimeSeries}
 import graft.ml.{IsoForestScorer, ProphetScorer}
 
@@ -45,10 +47,11 @@ object EnergyApi {
                       start: Option[String] = None,
                       end: Option[String] = None): DataFrame = {
     val d = to_date(col("Date"), "dd-MM-yyyy")
+    val iso = d.cast("string")
     val filtered = EnergyAnalytics.dynamicFilter(readings, Seq(
       homeId.map(h => col("HomeID") === lit(h)),
-      start.map(s => d >= to_date(lit(s))),
-      end.map(e => d <= to_date(lit(e)))))
+      start.map(s => iso >= isoDate(s)),
+      end.map(e => iso <= isoDate(e))))
     val feats = TimeSeries.anomalyFeatures(filtered, "HomeID", d,
       "EnergyConsumption", "ApplianceType")
     IsoForestScorer.scoreFeatures(feats)
@@ -56,4 +59,17 @@ object EnergyApi {
         col("unique_appliances"), col("rolling_7_mean"), col("dow"),
         col("score"), col("anomaly"))
   }
+
+  /** A request's date bound as a string literal in the form
+    * `cast(date as string)` gives, parsed by Spark's own string-to-date
+    * cast (what `to_date(lit(s))` folds to): `2023-2-1` is accepted, and
+    * an unparseable or empty bound is NULL, which keeps no rows. Bounds are compared as strings, which for
+    * four-digit years sort as the dates do, because Spark writes a DATE
+    * literal into the generated Java source but passes a string literal
+    * to the compiled class by reference: as dates, every new range
+    * compiled ~4 classes; as strings, all ranges share them.
+    */
+  private def isoDate(s: String): Column =
+    lit(Option(Cast(Cast(Literal(s), DateType), StringType).eval())
+      .map(_.toString).orNull)
 }

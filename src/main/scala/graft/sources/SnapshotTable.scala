@@ -456,18 +456,6 @@ object SnapshotTable {
     Files.createDirectories(manifestDir(table))
     val root = mapper.createObjectNode()
     root.put("version", version)
-    // commit wall-clock for AS OF TIMESTAMP time travel — metadata
-    // only, never part of any data hash (the gate reads it back via
-    // commitTimeOf, so results stay deterministic). STRICTLY MONOTONE
-    // across versions (clock-skew / same-millisecond commits bump to
-    // prev+1, the Delta in-commit-timestamp discipline) so the floor
-    // lookup "latest version at ts" is always unambiguous.
-    val nowMs = System.currentTimeMillis()
-    root.put("committedAtMs",
-      if (version > 0 &&
-          Files.exists(manifestDir(table).resolve(s"v${version - 1}.json")))
-        math.max(nowMs, commitTimeOf(table, version - 1) + 1L)
-      else nowMs)
     schema.foreach(s => root.put("schema", s.json))
     if (txns.nonEmpty) {
       val t = root.putObject("txns")
@@ -979,32 +967,6 @@ object SnapshotTable {
     }
     // column mapping: files/stats stay physical, callers see logical
     toLogical(physical, columnMappingOf(table, Some(v)))
-  }
-
-  /** Commit wall-clock of `version` in epoch millis. Manifests written
-    * before the `committedAtMs` field existed fall back to the
-    * manifest file's mtime — same source Delta's timestamp resolution
-    * uses when the commit info is absent. The fallback is WARNED once
-    * per table: mtime is filesystem metadata (a copy/touch rewrites
-    * it, and mixed mtime/committedAtMs sequences need not be
-    * monotone), so AS OF TIMESTAMP on a migrated table is only as
-    * deterministic as its file history.
-    */
-  private val mtimeWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def commitTimeOf(table: String, version: Int): Long = {
-    val p = manifestDir(table).resolve(s"v$version.json")
-    require(Files.exists(p), s"no version $version in $table")
-    val node = mapper.readTree(Files.readString(p))
-    if (node.has("committedAtMs")) node.get("committedAtMs").asLong()
-    else {
-      if (mtimeWarned.add(table)) System.err.println(
-        s"[snapshot] WARN $table v$version has no committedAtMs; " +
-          "falling back to manifest mtime — AS OF TIMESTAMP results " +
-          "depend on filesystem metadata until the next commit")
-      Files.getLastModifiedTime(p).toMillis
-    }
   }
 
   /** The CHECK constraints recorded at `version` (current when None).

@@ -47,4 +47,14 @@ class QueryProfileSpec extends SparkSpec {
       r.report)
     assert(r.persistedRddsLeft == left, r.report)
   }
+
+  test("codegen_compiles: reported, and a repeated query compiles no more") {
+    val (first, _, _) = profile("q01_pricing_summary")
+    val (second, _, _) = profile("q01_pricing_summary")
+    assert(first.report.contains(s"codegen_compiles=${first.codegenCompiles} "),
+      first.report)
+    assert(second.codegenCompiles >= 0 &&
+      second.codegenCompiles <= first.codegenCompiles,
+      s"${first.report}\n${second.report}")
+  }
 }

@@ -24,6 +24,24 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t, Some(0)).count() == 2)
   }
 
+  test("a manifest still carrying committedAtMs reads and takes the next append") {
+    val t = Files.createTempDirectory("graft_snap_cat").toString + "/t"
+    SnapshotTable.append(Seq((1, "a")).toDF("id", "v"), t)
+    // tables committed before the field was dropped still carry it
+    val v0 = java.nio.file.Paths.get(t, "_manifests", "v0.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(Files.readString(v0))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(!root.has("committedAtMs"), "new commits no longer write it")
+    root.put("committedAtMs", 1700000000000L)
+    Files.writeString(v0, mapper.writeValueAsString(root))
+    assert(SnapshotTable.read(spark, t).as[(Int, String)].collect().toSet ==
+      Set((1, "a")))
+    assert(SnapshotTable.append(Seq((2, "b")).toDF("id", "v"), t) == 1)
+    assert(SnapshotTable.read(spark, t).as[(Int, String)].collect().toSet ==
+      Set((1, "a"), (2, "b")))
+  }
+
   test("keyed upsert merges per snapshot; vacuum drops old versions") {
     val t = Files.createTempDirectory("graft_snap2").toString + "/t"
     SnapshotTable.append(Seq((1, "a"), (2, "b")).toDF("id", "v"), t)
