@@ -3,9 +3,10 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Materialize
 
@@ -209,53 +210,69 @@ object SnapshotTable {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  private def statVal(n: com.fasterxml.jackson.databind.JsonNode): Any =
+  /** The one ordering of stat values — footer stats, chunk ranges,
+    * prune bounds and `IN` literals all compare through it. Longs
+    * compare exactly (a Double collapse of 64-bit keys above 2^53
+    * would prune a file holding a wanted key), other numbers as
+    * doubles, strings lexicographically; None means incomparable,
+    * which must never let a file skip.
+    */
+  private[graft] def cmpStat(a: Any, b: Any): Option[Int] = (a, b) match {
+    case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
+    case (x: Number, y: Number) =>
+      Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
+    case (x: String, y: String) => Some(x.compareTo(y))
+    case _ => None
+  }
+
+  private def statVal(n: JsonNode): Any =
     if (n.isIntegralNumber) n.asLong()
     else if (n.isFloatingPointNumber) n.asDouble()
     else n.asText()
 
-  private def readManifest(table: String, version: Int): Seq[FileEntry] =
-    readManifestFull(table, version)._1
+  /** Stats codec, shared by file entries and chunk refs. */
+  private def parseStats(s: JsonNode): Map[String, ColStats] =
+    if (s == null) Map.empty
+    else s.properties().asScala.map { e =>
+      e.getKey -> ColStats(statVal(e.getValue.get("min")),
+        statVal(e.getValue.get("max")))
+    }.toMap
 
-  private def parseEntry(f: com.fasterxml.jackson.databind.JsonNode): FileEntry =
+  private def putStats(o: ObjectNode, stats: Map[String, ColStats]): Unit =
+    if (stats.nonEmpty) {
+      val s = o.putObject("stats")
+      stats.foreach { case (c, cs) =>
+        val so = s.putObject(c)
+        putStat(so, "min", cs.min); putStat(so, "max", cs.max)
+      }
+    }
+
+  private def putStat(o: ObjectNode, k: String, v: Any): Unit = v match {
+    case l: Long => o.put(k, l)
+    case d: Double => o.put(k, d)
+    case s: String => o.put(k, s)
+    case other => o.put(k, other.toString)
+  }
+
+  private def parseEntry(f: JsonNode): FileEntry =
     if (f.isTextual) FileEntry(f.asText(), Map.empty) // pre-stats manifests
     else {
-      val stats = Option(f.get("stats")).map { s =>
-        s.properties().asScala.map { e =>
-          e.getKey -> ColStats(statVal(e.getValue.get("min")),
-            statVal(e.getValue.get("max")))
-        }.toMap
-      }.getOrElse(Map.empty[String, ColStats])
       val size = Option(f.get("size")).map(_.asLong()).getOrElse(-1L)
       val blooms = Option(f.get("blooms")).map(_.properties().asScala
         .map(e => e.getKey -> e.getValue.asText()).toMap)
         .getOrElse(Map.empty[String, String])
-      FileEntry(f.get("name").asText(), stats, size, blooms)
+      FileEntry(f.get("name").asText(), parseStats(f.get("stats")), size, blooms)
     }
 
   private def entryNode(arr: ArrayNode, fe: FileEntry): Unit = {
     val f = arr.addObject()
     f.put("name", fe.name)
     if (fe.size >= 0L) f.put("size", fe.size)
-    if (fe.stats.nonEmpty) {
-      val s = f.putObject("stats")
-      fe.stats.foreach { case (c, cs) =>
-        val o = s.putObject(c)
-        putStat(o, "min", cs.min); putStat(o, "max", cs.max)
-      }
-    }
+    putStats(f, fe.stats)
     if (fe.blooms.nonEmpty) {
       val b = f.putObject("blooms")
       fe.blooms.foreach { case (c, enc) => b.put(c, enc) }
     }
-  }
-
-  private def cmpStat(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
-    case (x: Number, y: Number) =>
-      Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case _ => None
   }
 
   /** Chunk-level ranges: a column participates only when EVERY file in
@@ -335,66 +352,119 @@ object SnapshotTable {
           Future(readChunkFile(table, c.name))), Duration.Inf).flatten
     }
 
-  /** Manifest = file entries + the snapshot's logical schema (the
-    * union of every commit's columns — see [[evolveSchema]]) + the
-    * per-writer txn watermarks, all from ONE read+parse. Schema is
-    * absent on manifests written before schema tracking; readers fall
-    * back to parquet inference then.
+  /** One version of the table, from ONE read + parse of its root
+    * manifest `_manifests/v{N}.json` (the Delta `Snapshot`). Every
+    * operation reads one snapshot and derives everything from it —
+    * file list, schema, txn watermarks, CHECKs, column mapping and
+    * generated columns — and a commit publishes the snapshot that
+    * follows it. `version` -1 is the empty table a first commit
+    * builds on.
+    *
+    * `schema` is the PHYSICAL union schema (every commit's columns —
+    * see [[evolveSchema]]); it is absent on manifests written before
+    * schema tracking, and readers fall back to parquet inference then.
+    * `constraints` holds the CHECKs plus the reserved `_gen:`/`_map:`
+    * entries; like the txn watermarks it carries into every commit
+    * built on this snapshot unless a constraint DDL replaces it — a
+    * data commit can never silently drop an invariant.
     */
-  private def readManifestFull(table: String,
-      version: Int): (Seq[FileEntry], Option[org.apache.spark.sql.types.StructType],
-        Map[String, Long]) = {
-    val (chunks, inline, schema, txns) = readManifestChunked(table, version)
-    (resolveChunks(table, chunks) ++ inline, schema, txns)
-  }
+  private final case class Snapshot(table: String, version: Int,
+                                    chunks: Seq[ChunkRef],
+                                    inline: Seq[FileEntry],
+                                    schema: Option[StructType],
+                                    txns: Map[String, Long],
+                                    constraints: Map[String, String]) {
+    def exists: Boolean = version >= 0
 
-  /** The ROOT manifest alone: chunk refs + inline entries + schema +
-    * txn watermarks, one small read+parse regardless of table size.
-    * Callers that need every file entry resolve the chunks (see
-    * [[readManifestFull]]); callers that only need the schema, the txn
-    * watermarks, or a PRUNED file list stop here and touch only what
-    * survives chunk-level pruning.
-    */
-  private def readManifestChunked(table: String, version: Int)
-      : (Seq[ChunkRef], Seq[FileEntry],
-         Option[org.apache.spark.sql.types.StructType], Map[String, Long]) = {
-    val p = manifestDir(table).resolve(s"v$version.json")
-    if (!Files.exists(p)) {
-      val live = manifestVersions(table).sorted
-      throw new IllegalArgumentException(
-        s"version $version of $table does not exist " +
-          (if (live.isEmpty) "(table has no committed versions)"
-           else s"(it was vacuumed or never committed; live versions: ${live.mkString(", ")})"))
+    /** Every file entry: resolves the chunk files (cached, immutable). */
+    lazy val entries: Seq[FileEntry] = resolveChunks(table, chunks) ++ inline
+
+    /** physical → logical column names; empty for unmapped tables. */
+    lazy val mapping: Map[String, String] = reserved(MapPrefix)
+
+    /** The physical name behind logical column `c`. */
+    def physicalName(c: String): String =
+      mapping.collectFirst { case (p, l) if l == c => p }.getOrElse(c)
+
+    /** Generated columns: column -> SQL expression. */
+    lazy val generated: Map[String, String] = reserved(GenPrefix)
+
+    private def reserved(prefix: String): Map[String, String] =
+      constraints.collect {
+        case (k, v) if k.startsWith(prefix) => k.stripPrefix(prefix) -> v
+      }
+
+    /** Chunk-then-file pruning: a chunk whose aggregated range misses
+      * a predicate is skipped without parsing its file entries — at 1M
+      * files a keyed read parses O(matching chunks), not the table.
+      * Probes prune per FILE only (a chunk-level bloom union would
+      * saturate), but an equality probe also range-prunes for free.
+      */
+    def pruned(prune: Seq[ColRange], probes: Seq[ColProbe]): Seq[FileEntry] = {
+      val ranges = prune ++ probes.collect {
+        case p if p.values.size == 1 =>
+          ColRange(p.column, Some(p.values.head), Some(p.values.head)) }
+      (resolveChunks(table,
+        chunks.filter(cr => ranges.forall(r => rangeKeeps(cr.stats, r)))) ++ inline)
+        .filter(fe => ranges.forall(r => rangeKeeps(fe.stats, r)) &&
+          probes.forall(p => bloomKeeps(fe, p)))
     }
-    val node = mapper.readTree(Files.readString(p))
-    val inline = Option(node.get("files"))
-      .map(_.elements().asScala.map(parseEntry).toSeq).getOrElse(Nil)
-    val chunks = Option(node.get("chunks")).map { cs =>
-      cs.elements().asScala.map { c =>
-        val stats = Option(c.get("stats")).map { s =>
-          s.properties().asScala.map { e =>
-            e.getKey -> ColStats(statVal(e.getValue.get("min")),
-              statVal(e.getValue.get("max")))
-          }.toMap
-        }.getOrElse(Map.empty[String, ColStats])
-        ChunkRef(c.get("name").asText(), c.get("count").asLong(), stats)
-      }.toSeq
-    }.getOrElse(Nil)
-    val schema = Option(node.get("schema")).map(s =>
-      org.apache.spark.sql.types.DataType.fromJson(s.asText())
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val txns = Option(node.get("txns")).map { t =>
-      t.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }.getOrElse(Map.empty[String, Long])
-    (chunks, inline, schema, txns)
   }
 
-  private def putStat(o: ObjectNode, k: String, v: Any): Unit = v match {
-    case l: Long => o.put(k, l)
-    case d: Double => o.put(k, d)
-    case s: String => o.put(k, s)
-    case other => o.put(k, other.toString)
+  private def emptySnapshot(table: String): Snapshot =
+    Snapshot(table, -1, Nil, Nil, None, Map.empty, Map.empty)
+
+  private def manifestPath(table: String, version: Int): Path =
+    manifestDir(table).resolve(s"v$version.json")
+
+  private def snapshotAt(table: String, version: Int): Snapshot = {
+    val json = try Files.readString(manifestPath(table, version)) catch {
+      case _: java.nio.file.NoSuchFileException =>
+        val live = manifestVersions(table).sorted
+        throw new IllegalArgumentException(
+          s"version $version of $table does not exist " +
+            (if (live.isEmpty) "(table has no committed versions)"
+             else s"(it was vacuumed or never committed; live versions: ${live.mkString(", ")})"))
+    }
+    val node = mapper.readTree(json)
+    def props[V](field: String)(value: JsonNode => V): Map[String, V] =
+      Option(node.get(field)).map(_.properties().asScala
+        .map(e => e.getKey -> value(e.getValue)).toMap).getOrElse(Map.empty)
+    Snapshot(table, version,
+      chunks = Option(node.get("chunks")).map(_.elements().asScala.map { c =>
+        ChunkRef(c.get("name").asText(), c.get("count").asLong(),
+          parseStats(c.get("stats")))
+      }.toSeq).getOrElse(Nil),
+      inline = Option(node.get("files"))
+        .map(_.elements().asScala.map(parseEntry).toSeq).getOrElse(Nil),
+      schema = Option(node.get("schema")).map(s =>
+        DataType.fromJson(s.asText()).asInstanceOf[StructType]),
+      txns = props("txns")(_.asLong()),
+      constraints = props("constraints")(_.asText()))
   }
+
+  /** The latest snapshot (one listing + one parse); the empty snapshot
+    * when the table has no commits.
+    */
+  private def latest(table: String): Snapshot =
+    currentVersion(table).fold(emptySnapshot(table))(snapshotAt(table, _))
+
+  /** The snapshot at `version` (latest when None) for operations that
+    * need a committed version.
+    */
+  private def snapshot(table: String, version: Option[Int]): Snapshot =
+    snapshotAt(table, version.orElse(currentVersion(table)).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $table")))
+
+  /** Like [[snapshot]], but a missing table or version reads as the
+    * empty snapshot — the metadata accessors' contract.
+    */
+  private def snapshotOrEmpty(table: String, version: Option[Int]): Snapshot =
+    version match {
+      case None => latest(table)
+      case Some(v) if Files.exists(manifestPath(table, v)) => snapshotAt(table, v)
+      case _ => emptySnapshot(table)
+    }
 
   /** Additive schema evolution (the Delta mergeSchema contract): new
     * columns append; existing columns must keep their exact type.
@@ -402,8 +472,8 @@ object SnapshotTable {
     * existed read it as null.
     */
   private[sources] def evolveSchema(
-      prev: org.apache.spark.sql.types.StructType,
-      next: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
+      prev: StructType,
+      next: StructType): StructType = {
     val prevByName = prev.fields.map(f => f.name -> f).toMap
     next.fields.foreach { f =>
       prevByName.get(f.name).foreach { p =>
@@ -413,7 +483,7 @@ object SnapshotTable {
       }
     }
     val added = next.fields.filterNot(f => prevByName.contains(f.name))
-    org.apache.spark.sql.types.StructType(prev.fields ++ added)
+    StructType(prev.fields ++ added)
   }
 
   /** Highest committed transaction version per writer id at `version`
@@ -421,83 +491,84 @@ object SnapshotTable {
     * versions).
     */
   def txnVersions(table: String, version: Int): Map[String, Long] =
-    if (!Files.exists(manifestDir(table).resolve(s"v$version.json"))) Map.empty
-    else readManifestChunked(table, version)._4
+    snapshotOrEmpty(table, Some(version)).txns
 
-  /** Full-list publish (rewrite ops): small lists stay inline in the
-    * root; large lists chunk at [[ChunkTargetEntries]], so a rewrite of
-    * a million-file table publishes a root of ~hundred chunk refs
-    * instead of a hundred-MB JSON.
+  /** Manifest layout of a full file list (rewrite ops): small lists
+    * stay inline in the root; large lists chunk at
+    * [[ChunkTargetEntries]], so a rewrite of a million-file table
+    * publishes a root of ~hundred chunk refs instead of a hundred-MB
+    * JSON. Returns (chunks, inline).
     */
-  private def publishManifest(table: String, version: Int,
-                              files: Seq[FileEntry],
-                              schema: Option[org.apache.spark.sql.types.StructType] = None,
-                              txns: Map[String, Long] = Map.empty): Boolean =
-    if (files.size <= InlineMaxEntries)
-      publishManifestRefs(table, version, Nil, files, schema, txns)
-    else
-      publishManifestRefs(table, version,
-        files.grouped(ChunkTargetEntries).map(writeChunkFile(table, _)).toSeq,
-        Nil, schema, txns)
+  private def layout(table: String,
+                     files: Seq[FileEntry]): (Seq[ChunkRef], Seq[FileEntry]) =
+    if (files.size <= InlineMaxEntries) (Nil, files)
+    else (files.grouped(ChunkTargetEntries).map(writeChunkFile(table, _)).toSeq, Nil)
 
-  /** Publish v{N}.json with put-if-absent semantics. Returns false if
-    * version N was already committed by a concurrent writer (the tmp
-    * file is cleaned up either way). Files.createLink fails with
-    * FileAlreadyExistsException when the target exists — unlike
-    * ATOMIC_MOVE, which silently replaces on POSIX rename and would
-    * let a later committer clobber an earlier commit.
+  /** Publish `s` as v{s.version}.json with put-if-absent semantics.
+    * Returns None if that version was already committed by a
+    * concurrent writer (the tmp file is cleaned up either way).
+    * Files.createLink fails with FileAlreadyExistsException when the
+    * target exists — unlike ATOMIC_MOVE, which silently replaces on
+    * POSIX rename and would let a later committer clobber an earlier
+    * commit.
     */
-  private def publishManifestRefs(table: String, version: Int,
-                                  chunks: Seq[ChunkRef],
-                                  inline: Seq[FileEntry],
-                                  schema: Option[org.apache.spark.sql.types.StructType] = None,
-                                  txns: Map[String, Long] = Map.empty,
-                                  constraintsOverride: Option[Map[String, String]] = None): Boolean = {
-    Files.createDirectories(manifestDir(table))
+  private def publish(s: Snapshot): Option[Int] = {
+    Files.createDirectories(manifestDir(s.table))
     val root = mapper.createObjectNode()
-    root.put("version", version)
-    schema.foreach(s => root.put("schema", s.json))
-    if (txns.nonEmpty) {
+    root.put("version", s.version)
+    s.schema.foreach(sc => root.put("schema", sc.json))
+    if (s.txns.nonEmpty) {
       val t = root.putObject("txns")
-      txns.foreach { case (k, v) => t.put(k, v) }
+      s.txns.foreach { case (k, v) => t.put(k, v) }
     }
-    // CHECK constraints carry forward through EVERY commit (like txn
-    // watermarks) unless a constraint DDL explicitly replaces the set —
-    // a data commit can never silently drop an invariant
-    val cons = constraintsOverride.getOrElse(
-      if (version == 0) Map.empty[String, String]
-      else readConstraints(table, version - 1))
-    if (cons.nonEmpty) {
+    if (s.constraints.nonEmpty) {
       val c = root.putObject("constraints")
-      cons.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
+      s.constraints.toSeq.sortBy(_._1).foreach { case (k, v) => c.put(k, v) }
     }
     val arr: ArrayNode = root.putArray("files")
-    inline.foreach(entryNode(arr, _))
-    if (chunks.nonEmpty) {
+    s.inline.foreach(entryNode(arr, _))
+    if (s.chunks.nonEmpty) {
       val cs = root.putArray("chunks")
-      chunks.foreach { cr =>
+      s.chunks.foreach { cr =>
         val c = cs.addObject()
         c.put("name", cr.name)
         c.put("count", cr.count)
-        if (cr.stats.nonEmpty) {
-          val s = c.putObject("stats")
-          cr.stats.foreach { case (col, st) =>
-            val o = s.putObject(col)
-            putStat(o, "min", st.min); putStat(o, "max", st.max)
-          }
-        }
+        putStats(c, cr.stats)
       }
     }
-    val tmp = manifestDir(table).resolve(
-      s".v$version-${java.util.UUID.randomUUID()}.json.tmp")
+    val tmp = manifestDir(s.table).resolve(
+      s".v${s.version}-${java.util.UUID.randomUUID()}.json.tmp")
     Files.writeString(tmp, mapper.writeValueAsString(root))
     try {
-      Files.createLink(manifestDir(table).resolve(s"v$version.json"), tmp)
-      true
+      Files.createLink(manifestPath(s.table, s.version), tmp)
+      Some(s.version)
     } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
+      case _: java.nio.file.FileAlreadyExistsException => None
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** Publish `files` as the version after `base` (rewrite commits);
+    * the constraints carry over from `base`.
+    */
+  private def publishFiles(base: Snapshot, files: Seq[FileEntry],
+                           schema: Option[StructType],
+                           txns: Map[String, Long]): Option[Int] = {
+    val (chunks, inline) = layout(base.table, files)
+    publish(base.copy(version = base.version + 1, chunks = chunks,
+      inline = inline, schema = schema, txns = txns))
+  }
+
+  /** Optimistic concurrency: `attempt` runs against `first`, then
+    * against a fresh read of the latest snapshot after each lost
+    * put-if-absent race (signalled by None) — only a lost race
+    * re-reads the manifest.
+    */
+  private def retrying[A](first: Snapshot, race: String)
+                         (attempt: Snapshot => Option[A]): A =
+    Iterator.iterate(first)(s => latest(s.table)).take(MaxCommitRetries)
+      .map(attempt).collectFirst { case Some(a) => a }
+      .getOrElse(throw new java.util.ConcurrentModificationException(
+        s"lost the $race race on ${first.table} $MaxCommitRetries times"))
 
   /** Column min/max from the just-written file's parquet footer —
     * stats parquet already maintains per row group; merged across row
@@ -514,12 +585,6 @@ object SnapshotTable {
     val reader = ParquetFileReader.open(in)
     try {
       val acc = scala.collection.mutable.HashMap.empty[String, ColStats]
-      def cmp(a: Any, b: Any): Int = (a, b) match {
-        case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-        case (x: Double, y: Double) => java.lang.Double.compare(x, y)
-        case (x: String, y: String) => x.compareTo(y)
-        case _ => 0
-      }
       for (block <- reader.getFooter.getBlocks.asScala;
            chunk <- block.getColumns.asScala) {
         val st = chunk.getStatistics
@@ -539,8 +604,8 @@ object SnapshotTable {
             case (Some(mn), Some(mx)) =>
               val merged = acc.get(path) match {
                 case Some(prev) => ColStats(
-                  if (cmp(mn, prev.min) < 0) mn else prev.min,
-                  if (cmp(mx, prev.max) > 0) mx else prev.max)
+                  if (cmpStat(mn, prev.min).exists(_ < 0)) mn else prev.min,
+                  if (cmpStat(mx, prev.max).exists(_ > 0)) mx else prev.max)
                 case None => ColStats(mn, mx)
               }
               acc(path) = merged
@@ -606,37 +671,34 @@ object SnapshotTable {
 
   private val MaxCommitRetries = 10
 
-  /** Optimistic-concurrency commit for APPEND-shaped writes: re-read
-    * the previous ROOT each attempt (chunk refs are carried forward by
-    * reference, never resolved — commit cost is O(new files + #chunks)
-    * at any table size), publish put-if-absent, retry at the next
-    * version on conflict. After `advance`, the inline buffer rolls
-    * into a chunk past [[InlineMaxEntries]], and accumulated small
-    * chunks compact toward [[ChunkTargetEntries]] — the only step that
-    * parses (small) chunk files, amortized O(1) commits.
+  /** Optimistic-concurrency commit for APPEND-shaped writes, built on
+    * `first` and on a fresh ROOT after each lost race (chunk refs are
+    * carried forward by reference, never resolved — commit cost is
+    * O(new files + #chunks) at any table size). After `advance`, the
+    * inline buffer rolls into a chunk past [[InlineMaxEntries]], and
+    * accumulated small chunks compact toward [[ChunkTargetEntries]] —
+    * the only step that parses (small) chunk files, amortized O(1)
+    * commits.
     */
-  private def commitLoop(table: String, newTxn: Map[String, Long] = Map.empty)
-                        (advance: (Seq[ChunkRef], Seq[FileEntry], Option[org.apache.spark.sql.types.StructType])
-                          => (Seq[ChunkRef], Seq[FileEntry], org.apache.spark.sql.types.StructType)): Int = {
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val v = currentVersion(table).getOrElse(-1) + 1
-      val (prevChunks, prevInline, prevSchema, prevTxns) =
-        if (v == 0) (Nil, Nil, None, Map.empty[String, Long])
-        else readManifestChunked(table, v - 1)
+  private def commitLoop(first: Snapshot, newTxn: Map[String, Long] = Map.empty)
+                        (advance: Snapshot => (Seq[ChunkRef], Seq[FileEntry], StructType)): Int =
+    retrying(first, "commit") { base =>
+      val (chunks, inline, schema) = advance(base)
+      val (nChunks, nInline) = normalizeChunks(base.table, chunks, inline)
       // txn watermarks carry forward through EVERY commit — dropping
       // them would let a replayed idempotent batch double-apply after
       // any unrelated commit
-      val txns = prevTxns ++ newTxn
-      val (chunks, inline, schema) = advance(prevChunks, prevInline, prevSchema)
-      val (nChunks, nInline) = normalizeChunks(table, chunks, inline)
-      if (publishManifestRefs(table, v, nChunks, nInline, Some(schema), txns))
-        return v
-      attempt += 1
+      publish(base.copy(version = base.version + 1, chunks = nChunks,
+        inline = nInline, schema = Some(schema), txns = base.txns ++ newTxn))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the commit race on $table $MaxCommitRetries times")
-  }
+
+  /** `advance` for a blind append of `files` written with `schema`:
+    * the snapshot schema EVOLVES additively (see [[evolveSchema]]).
+    */
+  private def appended(files: Seq[FileEntry], schema: StructType)
+                      (base: Snapshot): (Seq[ChunkRef], Seq[FileEntry], StructType) =
+    (base.chunks, base.inline ++ files,
+      evolveSchema(base.schema.getOrElse(schema), schema))
 
   /** Roll an over-full inline buffer into a chunk; compact small
     * chunks once enough accumulate. Lost-race orphan chunk files are
@@ -664,11 +726,22 @@ object SnapshotTable {
     * the catalog's CREATE TABLE. Fails if the table already has
     * commits.
     */
-  def create(table: String, schema: org.apache.spark.sql.types.StructType): Int = {
+  def create(table: String, schema: StructType): Int = {
     require(currentVersion(table).isEmpty, s"$table already exists")
-    require(publishManifest(table, 0, Nil, Some(schema)),
-      s"lost the create race on $table")
+    require(publish(emptySnapshot(table).copy(version = 0, schema = Some(schema)))
+      .isDefined, s"lost the create race on $table")
     0
+  }
+
+  /** An incoming data batch made ready to write on `base`: omitted
+    * generated columns filled in, vetted against the CHECKs, and
+    * aliased to physical names (generated/CHECK run on logical names;
+    * files store physical ones).
+    */
+  private def prepareBatch(df: DataFrame, base: Snapshot): DataFrame = {
+    val dfg = applyGenerated(df, base)
+    enforceConstraints(dfg, base)
+    toPhysical(dfg, base.mapping)
   }
 
   /** Append: new files + previous snapshot's files. Appends are
@@ -684,18 +757,10 @@ object SnapshotTable {
     */
   def append(df: DataFrame, table: String,
              bloomColumns: Seq[String] = Nil): Int = {
-    val dfg = applyGenerated(df, table)
-    enforceConstraints(dfg, table)
-    // column mapping: generated/CHECK ran on logical names; files
-    // store physical names
-    val inv = columnMappingOf(table).map(_.swap)
-    val dfp = toPhysical(dfg, columnMappingOf(table))
-    val newFiles = writeData(dfp, table,
-      bloomColumns.map(c => inv.getOrElse(c, c)))
-    commitLoop(table) { (chunks, inline, prevSchema) =>
-      (chunks, inline ++ newFiles,
-        evolveSchema(prevSchema.getOrElse(dfp.schema), dfp.schema))
-    }
+    val base = latest(table)
+    val dfp = prepareBatch(df, base)
+    val newFiles = writeData(dfp, table, bloomColumns.map(base.physicalName))
+    commitLoop(base)(appended(newFiles, dfp.schema))
   }
 
   /** Append with MANIFEST bloom indexes on `indexCols` (plus the
@@ -718,18 +783,13 @@ object SnapshotTable {
     require(indexCols.nonEmpty, "appendBloomIndexed needs index columns")
     require(bloomBits >= 64 && bloomBits % 8 == 0 && bloomK >= 1,
       s"bad bloom sizing: bits=$bloomBits k=$bloomK")
-    val dfg = applyGenerated(df, table)
-    enforceConstraints(dfg, table)
-    val inv = columnMappingOf(table).map(_.swap)
-    val physCols = indexCols.map(c => inv.getOrElse(c, c))
-    val dfp = toPhysical(dfg, columnMappingOf(table))
+    val base = latest(table)
+    val physCols = indexCols.map(base.physicalName)
+    val dfp = prepareBatch(df, base)
     val newFiles = writeData(dfp, table, physCols)
     val indexed = buildBlooms(df.sparkSession, table, newFiles, physCols,
       bloomBits, bloomK)
-    commitLoop(table) { (chunks, inline, prevSchema) =>
-      (chunks, inline ++ indexed,
-        evolveSchema(prevSchema.getOrElse(dfp.schema), dfp.schema))
-    }
+    commitLoop(base)(appended(indexed, dfp.schema))
   }
 
   /** One distributed hashing pass over `files`' data: returns the
@@ -794,21 +854,16 @@ object SnapshotTable {
   def appendIdempotent(df: DataFrame, table: String,
                        writerId: String, txnVersion: Long,
                        extraTxns: Map[String, Long] = Map.empty): Option[Int] = {
-    val already = currentVersion(table)
-      .exists(v => txnVersions(table, v).get(writerId).exists(_ >= txnVersion))
-    if (already) return None
-    val dfg = applyGenerated(df, table)
-    enforceConstraints(dfg, table)
-    val dfp = toPhysical(dfg, columnMappingOf(table))
+    def replay(s: Snapshot) = s.txns.get(writerId).exists(_ >= txnVersion)
+    val base = latest(table)
+    if (replay(base)) return None
+    val dfp = prepareBatch(df, base)
     val newFiles = writeData(dfp, table)
-    Some(commitLoop(table, Map(writerId -> txnVersion) ++ extraTxns) { (chunks, inline, prevSchema) =>
-      // re-check inside the loop: a concurrent retry of the same batch
-      // may have landed between the probe and this attempt
-      val cur = currentVersion(table)
-      if (cur.exists(v => txnVersions(table, v).get(writerId).exists(_ >= txnVersion)))
-        return None
-      (chunks, inline ++ newFiles,
-        evolveSchema(prevSchema.getOrElse(dfp.schema), dfp.schema))
+    Some(commitLoop(base, Map(writerId -> txnVersion) ++ extraTxns) { s =>
+      // re-check on every attempt: after a lost race, a concurrent
+      // retry of the same batch may be the winner
+      if (replay(s)) return None
+      appended(newFiles, dfp.schema)(s)
     })
   }
 
@@ -819,12 +874,9 @@ object SnapshotTable {
     * table will be READ; planning alone never touches storage.
     */
   private[graft] def appendEntries(table: String, entries: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       txn: Map[String, Long] = Map.empty): Int =
-    commitLoop(table, txn) { (chunks, inline, prevSchema) =>
-      (chunks, inline ++ entries,
-        evolveSchema(prevSchema.getOrElse(schema), schema))
-    }
+    commitLoop(latest(table), txn)(appended(entries, schema))
 
   /** Root-manifest shape at `version`: (chunk count, inline entry
     * count, per-chunk entry counts) — the observability surface for
@@ -832,10 +884,8 @@ object SnapshotTable {
     */
   private[graft] def manifestShape(table: String,
                                    version: Option[Int] = None): (Int, Int, Seq[Long]) = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version in $table"))
-    val (chunks, inline, _, _) = readManifestChunked(table, v)
-    (chunks.size, inline.size, chunks.map(_.count))
+    val s = snapshot(table, version)
+    (s.chunks.size, s.inline.size, s.chunks.map(_.count))
   }
 
   /** Overwrite: new files only (content independent of the previous
@@ -850,9 +900,10 @@ object SnapshotTable {
     * null-padded columns that toLogical then renders as duplicates.
     */
   def overwrite(df: DataFrame, table: String): Int = {
-    val out = toPhysical(df, columnMappingOf(table))
+    val base = latest(table)
+    val out = toPhysical(df, base.mapping)
     val newFiles = writeData(out, table)
-    commitLoop(table)((_, _, _) => (Nil, newFiles, out.schema))
+    commitLoop(base)(_ => (Nil, newFiles, out.schema))
   }
 
   /** Keyed MERGE (last-write-wins within `updates`, like ParquetMerge):
@@ -863,57 +914,38 @@ object SnapshotTable {
     * snapshot — the orphaned loser files stay unreferenced until
     * vacuum.
     */
-  def upsert(spark: SparkSession, df: DataFrame, table: String, key: String): Int = {
-    val deduped = applyGenerated(df.dropDuplicates(key), table)
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = currentVersion(table)
-      val (merged, schema, prevTxns) = base match {
-        case None => (deduped, deduped.schema, Map.empty[String, Long])
-        case Some(v) =>
-          val (_, prevSchema, txns) = readManifestFull(table, v)
+  def upsert(spark: SparkSession, df: DataFrame, table: String, key: String): Int =
+    retrying(latest(table), "upsert") { base =>
+      val deduped = applyGenerated(df.dropDuplicates(key), base)
+      val (merged, schema) =
+        if (!base.exists) (deduped, deduped.schema)
+        else {
+          val current = scan(spark, base)
           val evolved = evolveSchema(
-            prevSchema.getOrElse(
-              toPhysical(read(spark, table, Some(v)),
-                columnMappingOf(table, Some(v))).schema),
-            toPhysical(deduped, columnMappingOf(table, Some(v))).schema)
+            base.schema.getOrElse(toPhysical(current, base.mapping).schema),
+            toPhysical(deduped, base.mapping).schema)
           // allowMissingColumns: evolved commits may add columns the
           // other side lacks; missing fields fill with null
-          (read(spark, table, Some(v))
+          (current
             .join(deduped.select(key).distinct(), Seq(key), "left_anti")
-            .unionByName(deduped, allowMissingColumns = true), evolved, txns)
-      }
+            .unionByName(deduped, allowMissingColumns = true), evolved)
+        }
       // materialize before writing: `merged` reads the files we replace
-      val out = toPhysical(merged,
-        base.map(v => columnMappingOf(table, Some(v))).getOrElse(Map.empty))
+      val out = toPhysical(merged, base.mapping)
       val newFiles = Materialize.scope {
         writeData(Materialize.localCheckpoint(out), table)
       }
-      val v = base.getOrElse(-1) + 1
-      if (publishManifest(table, v, newFiles, Some(schema), prevTxns)) return v
-      attempt += 1 // someone else committed base+1: re-merge from their snapshot
+      // a lost race re-merges from the winner's snapshot
+      publishFiles(base, newFiles, Some(schema), base.txns)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the upsert race on $table $MaxCommitRetries times")
-  }
 
   private def rangeKeeps(stats: Map[String, ColStats], r: ColRange): Boolean =
     stats.get(r.column) match {
       case None => true // no stats for the column: cannot skip
       case Some(cs) =>
-        def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-          // exact integral compare first: a Double collapse of 64-bit
-          // keys above 2^53 would make EXCLUSIVE bounds mis-prune a
-          // file whose max equals bound+1
-          case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
-          case (x: Number, y: Number) =>
-            Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-          case (x: String, y: String) => Some(x.compareTo(y))
-          case _ => None // incomparable: cannot skip
-        }
-        val belowLower = r.lower.flatMap(l => cmp(cs.max, l))
+        val belowLower = r.lower.flatMap(l => cmpStat(cs.max, l))
           .exists(c => if (r.lowerInclusive) c < 0 else c <= 0)
-        val aboveUpper = r.upper.flatMap(u => cmp(cs.min, u))
+        val aboveUpper = r.upper.flatMap(u => cmpStat(cs.min, u))
           .exists(c => if (r.upperInclusive) c > 0 else c >= 0)
         !belowLower && !aboveUpper
     }
@@ -924,23 +956,16 @@ object SnapshotTable {
     */
   def read(spark: SparkSession, table: String, version: Option[Int] = None,
            prune: Seq[ColRange] = Nil,
-           probes: Seq[ColProbe] = Nil): DataFrame = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version in $table"))
-    val (chunks, inline, schemaOpt, _) = readManifestChunked(table, v)
-    // chunk-level pruning FIRST: a chunk whose aggregated range misses
-    // every predicate is skipped without parsing its file entries — at
-    // 1M files a keyed read parses O(matching chunks), not the table.
-    // Probes prune per FILE only (a chunk-level bloom union would
-    // saturate) — but an equality probe also range-prunes for free
-    val probeRanges = probes.collect { case p if p.values.size == 1 =>
-      ColRange(p.column, Some(p.values.head), Some(p.values.head)) }
-    val allRanges = prune ++ probeRanges
-    val entries = resolveChunks(table,
-      chunks.filter(cr => allRanges.forall(r => rangeKeeps(cr.stats, r)))) ++ inline
-    val files = entries.filter(fe =>
-      allRanges.forall(r => rangeKeeps(fe.stats, r)) &&
-        probes.forall(p => bloomKeeps(fe, p)))
+           probes: Seq[ColProbe] = Nil): DataFrame =
+    scan(spark, snapshot(table, version), prune, probes)
+
+  /** [[read]] of an already-loaded snapshot. */
+  private def scan(spark: SparkSession, snap: Snapshot,
+                   prune: Seq[ColRange] = Nil,
+                   probes: Seq[ColProbe] = Nil): DataFrame = {
+    val table = snap.table
+    val schemaOpt = snap.schema
+    val files = snap.pruned(prune, probes)
     val physical = if (files.isEmpty) schemaOpt match {
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
@@ -966,7 +991,7 @@ object SnapshotTable {
         files.map(fe => dataDir(table).resolve(fe.name).toString): _*)
     }
     // column mapping: files/stats stay physical, callers see logical
-    toLogical(physical, columnMappingOf(table, Some(v)))
+    toLogical(physical, snap.mapping)
   }
 
   /** The CHECK constraints recorded at `version` (current when None).
@@ -974,17 +999,7 @@ object SnapshotTable {
     */
   def constraintsOf(table: String,
                     version: Option[Int] = None): Map[String, String] =
-    version.orElse(currentVersion(table))
-      .map(readConstraints(table, _)).getOrElse(Map.empty)
-
-  private def readConstraints(table: String, version: Int): Map[String, String] = {
-    val p = manifestDir(table).resolve(s"v$version.json")
-    if (version < 0 || !Files.exists(p)) return Map.empty
-    val node = mapper.readTree(Files.readString(p))
-    Option(node.get("constraints")).map { c =>
-      c.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty)
-  }
+    snapshotOrEmpty(table, version).constraints
 
   /** Reject a batch that violates any recorded CHECK constraint — SQL
     * semantics: a row violates only when the expression evaluates to
@@ -993,14 +1008,15 @@ object SnapshotTable {
     * example rows are fetched only on the failure path. Runs on every
     * data-adding commit (append, bloom-indexed/idempotent append,
     * merge) — rewrite-only commits (delete, compact, Z-order) only
-    * reshuffle rows that already passed.
+    * reshuffle rows that already passed. The CHECKs are `base`'s, the
+    * snapshot the commit builds on.
     */
-  private def enforceConstraints(df: DataFrame, table: String): Unit = {
+  private def enforceConstraints(df: DataFrame, base: Snapshot): Unit = {
     import org.apache.spark.sql.functions._
     // a generated-column entry IS a check on batches that carry the
     // column explicitly: the value must null-safely equal the
     // expression (writers can't stamp conflicting derived values)
-    val cons = constraintsOf(table)
+    val cons = base.constraints
       .filter { case (k, _) => !k.startsWith(MapPrefix) } // mapping ≠ CHECK
       .map {
         case (k, v) if k.startsWith(GenPrefix) =>
@@ -1022,7 +1038,7 @@ object SnapshotTable {
           .limit(3).collect().mkString("; ")
         throw new IllegalArgumentException(
           s"CHECK constraint '$n' (${cons(n)}) violated by $bad row(s) " +
-            s"in the incoming batch for $table; e.g. $examples")
+            s"in the incoming batch for ${base.table}; e.g. $examples")
       }
     }
   }
@@ -1041,9 +1057,7 @@ object SnapshotTable {
     */
   def columnMappingOf(table: String,
                       version: Option[Int] = None): Map[String, String] =
-    constraintsOf(table, version).collect {
-      case (k, v) if k.startsWith(MapPrefix) => k.stripPrefix(MapPrefix) -> v
-    }
+    snapshotOrEmpty(table, version).mapping
 
   /** Rename a column WITHOUT rewriting any data file (the Delta
     * column-mapping contract): a metadata-only commit records
@@ -1064,16 +1078,15 @@ object SnapshotTable {
     * upsert / overwrite / compact / change feed all are.
     */
   def renameColumn(table: String, from: String, to: String): Int = {
-    val v = currentVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $table"))
-    val mapping = columnMappingOf(table, Some(v))
-    val physSchema = readManifestChunked(table, v)._3.getOrElse(
+    val base = snapshot(table, None)
+    val mapping = base.mapping
+    val physSchema = base.schema.getOrElse(
       throw new IllegalArgumentException(s"$table has no recorded schema"))
     val logicalNames = physSchema.fieldNames.map(p => mapping.getOrElse(p, p))
     require(logicalNames.contains(from), s"no column '$from' in $table")
     require(!logicalNames.contains(to), s"column '$to' already exists in $table")
     val word = java.util.regex.Pattern.compile(s"\\b${java.util.regex.Pattern.quote(from)}\\b")
-    constraintsOf(table, Some(v)).foreach { case (k, ex) =>
+    base.constraints.foreach { case (k, ex) =>
       if (!k.startsWith(MapPrefix) && word.matcher(ex).find())
         throw new IllegalArgumentException(
           s"cannot rename '$from': constraint/generated entry '$k' ($ex) references it")
@@ -1083,16 +1096,16 @@ object SnapshotTable {
     // leave the stamp/CHECK machinery bound to the stale key and a
     // later batch carrying the new name would get a SECOND stamped
     // column — reject loudly (drop the generated column first)
-    require(!constraintsOf(table, Some(v)).contains(GenPrefix + from),
+    require(!base.generated.contains(from),
       s"cannot rename '$from': it is a generated column " +
         s"(drop the ${GenPrefix}${from} entry first)")
     // the physical name behind `from`: an earlier mapping's key, or
     // `from` itself on first rename
-    val phys = mapping.find(_._2 == from).map(_._1).getOrElse(from)
-    val cons = constraintsOf(table, Some(v)) - (MapPrefix + phys)
+    val phys = base.physicalName(from)
+    val cons = base.constraints - (MapPrefix + phys)
     val entry = if (to == phys) Map.empty[String, String]
                 else Map(MapPrefix + phys -> to) // rename-back drops the entry
-    commitConstraints(table, cons ++ entry)
+    commitConstraints(base, cons ++ entry)
   }
 
   /** Alias a physical-schema frame to logical names (no-op when
@@ -1125,23 +1138,24 @@ object SnapshotTable {
   def addConstraint(spark: SparkSession, table: String,
                     name: String, exprSql: String): Int = {
     import org.apache.spark.sql.functions._
-    val cur = constraintsOf(table)
-    require(!cur.contains(name), s"constraint '$name' already exists on $table")
+    val base = snapshot(table, None)
+    require(!base.constraints.contains(name),
+      s"constraint '$name' already exists on $table")
     // resolve against the schema first (clear analysis error), then
     // vet the whole table
-    val existing = read(spark, table)
+    val existing = scan(spark, base)
     existing.limit(0).filter(expr(exprSql)).queryExecution.analyzed
     val bad = existing.filter(expr(exprSql) <=> lit(false)).count()
     require(bad == 0L,
       s"cannot add constraint '$name' ($exprSql): $bad existing row(s) violate it")
-    commitConstraints(table, cur + (name -> exprSql))
+    commitConstraints(base, base.constraints + (name -> exprSql))
   }
 
   /** Drop a named CHECK constraint (metadata-only commit). */
   def dropConstraint(table: String, name: String): Int = {
-    val cur = constraintsOf(table)
-    require(cur.contains(name), s"no constraint '$name' on $table")
-    commitConstraints(table, cur - name)
+    val base = latest(table)
+    require(base.constraints.contains(name), s"no constraint '$name' on $table")
+    commitConstraints(base, base.constraints - name)
   }
 
   // --- generated columns (the Delta GENERATED ALWAYS AS contract) ---
@@ -1160,10 +1174,7 @@ object SnapshotTable {
   /** Generated columns of `table`: column -> SQL expression. */
   def generatedColumnsOf(table: String,
                          version: Option[Int] = None): Map[String, String] =
-    constraintsOf(table, version).collect {
-      case (k, v) if k.startsWith(GenPrefix) =>
-        k.stripPrefix(GenPrefix) -> v
-    }
+    snapshotOrEmpty(table, version).generated
 
   /** Register `column` as GENERATED ALWAYS AS (`exprSql`) — a
     * metadata-only commit. If the column already exists in the
@@ -1175,39 +1186,39 @@ object SnapshotTable {
   def addGeneratedColumn(spark: SparkSession, table: String,
                          column: String, exprSql: String): Int = {
     import org.apache.spark.sql.functions.{col, expr}
-    val cur = constraintsOf(table)
-    require(!cur.contains(GenPrefix + column),
+    val base = snapshot(table, None)
+    require(!base.generated.contains(column),
       s"generated column '$column' already registered on $table")
-    val existing = read(spark, table)
+    val existing = scan(spark, base)
     // the expression must analyze against the current schema
     existing.limit(0).withColumn(column, expr(exprSql))
       .queryExecution.analyzed
-    if (schemaOf(spark, table).fieldNames.contains(column)) {
+    if (existing.columns.contains(column)) {
       val bad = existing
         .filter(!(col(column) <=> expr(exprSql))).count()
       require(bad == 0L, s"cannot register generated column '$column' " +
         s"($exprSql): $bad existing row(s) disagree with the expression")
     }
-    commitConstraints(table, cur + (GenPrefix + column -> exprSql))
+    commitConstraints(base, base.constraints + (GenPrefix + column -> exprSql))
   }
 
   /** Un-register a generated column (metadata-only; data keeps the
     * already-materialized values).
     */
   def dropGeneratedColumn(table: String, column: String): Int = {
-    val cur = constraintsOf(table)
-    require(cur.contains(GenPrefix + column),
+    val base = latest(table)
+    require(base.generated.contains(column),
       s"no generated column '$column' on $table")
-    commitConstraints(table, cur - (GenPrefix + column))
+    commitConstraints(base, base.constraints - (GenPrefix + column))
   }
 
-  /** Fill in any registered generated column the batch omitted.
+  /** Fill in any generated column of `base` the batch omitted.
     * Batches that DO carry the column pass through untouched here and
     * are vetted by [[enforceConstraints]]' `<=>` check instead.
     */
-  private def applyGenerated(df: DataFrame, table: String): DataFrame = {
+  private def applyGenerated(df: DataFrame, base: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.expr
-    generatedColumnsOf(table).foldLeft(df) { case (d, (c, e)) =>
+    base.generated.foldLeft(df) { case (d, (c, e)) =>
       if (d.columns.contains(c)) d else d.withColumn(c, expr(e))
     }
   }
@@ -1217,43 +1228,38 @@ object SnapshotTable {
     * just have changed: generated values are system-maintained, so
     * they follow the new bases rather than surviving stale.
     */
-  private def recomputeGenerated(df: DataFrame, table: String): DataFrame = {
+  private def recomputeGenerated(df: DataFrame, base: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.expr
-    generatedColumnsOf(table).foldLeft(df) { case (d, (c, e)) =>
+    base.generated.foldLeft(df) { case (d, (c, e)) =>
       d.withColumn(c, expr(e))
     }
   }
 
-  private def commitConstraints(table: String,
+  /** Metadata-only commit replacing `base`'s constraints map with
+    * `next`; a lost race re-publishes `next` on the winner's snapshot.
+    */
+  private def commitConstraints(base: Snapshot,
                                 next: Map[String, String]): Int = {
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val v = currentVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"$table has no committed version")) + 1
-      val (chunks, inline, schema, txns) = readManifestChunked(table, v - 1)
-      if (publishManifestRefs(table, v, chunks, inline, schema, txns,
-          constraintsOverride = Some(next)))
-        return v
-      attempt += 1
+    require(base.exists, s"${base.table} has no committed version")
+    retrying(base, "constraint commit") { b =>
+      publish(b.copy(version = b.version + 1, constraints = next))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the constraint commit race on $table $MaxCommitRetries times")
   }
 
-  /** The snapshot's logical schema (manifest union schema when
-    * recorded; parquet inference over the snapshot's files otherwise).
+  /** The snapshot's PHYSICAL schema: the column names the data files
+    * carry (manifest union schema when recorded; parquet inference
+    * over the snapshot's files otherwise). On a renamed table [[read]]
+    * shows the logical names of [[columnMappingOf]] instead.
     * Metadata-only when the manifest carries a schema — the DSv2
     * connector calls this at planning time.
     */
   def schemaOf(spark: SparkSession, table: String,
-               version: Option[Int] = None): org.apache.spark.sql.types.StructType = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version in $table"))
-    val (_, _, schemaOpt, _) = readManifestChunked(table, v)
-    schemaOpt.getOrElse {
-      val entries = readManifest(table, v)
-      require(entries.nonEmpty, s"$table v$v has no files and no recorded schema")
-      spark.read.parquet(dataDir(table).resolve(entries.head.name).toString).schema
+               version: Option[Int] = None): StructType = {
+    val s = snapshot(table, version)
+    s.schema.getOrElse {
+      require(s.entries.nonEmpty,
+        s"$table v${s.version} has no files and no recorded schema")
+      spark.read.parquet(dataDir(table).resolve(s.entries.head.name).toString).schema
     }
   }
 
@@ -1262,8 +1268,7 @@ object SnapshotTable {
     */
   def filePathsForRead(table: String, version: Option[Int] = None,
                        prune: Seq[ColRange] = Nil): Seq[String] =
-    filesForRead(table, version, prune)
-      .map(n => dataDir(table).resolve(n).toAbsolutePath.toString)
+    sizedFilesForRead(table, version, prune).map(_._1)
 
   /** (absolute path, byte size) of the files a pruned read would open;
     * size is −1 for entries from pre-size manifests. When every entry
@@ -1273,7 +1278,7 @@ object SnapshotTable {
   def sizedFilesForRead(table: String, version: Option[Int] = None,
                         prune: Seq[ColRange] = Nil,
                         probes: Seq[ColProbe] = Nil): Seq[(String, Long)] =
-    prunedEntries(table, version, prune, probes)
+    snapshot(table, version).pruned(prune, probes)
       .map(fe => (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size))
 
   /** The files a pruned read would open — exposed so tests and PLANS.md
@@ -1282,22 +1287,23 @@ object SnapshotTable {
   def filesForRead(table: String, version: Option[Int] = None,
                    prune: Seq[ColRange] = Nil,
                    probes: Seq[ColProbe] = Nil): Seq[String] =
-    prunedEntries(table, version, prune, probes).map(_.name)
+    snapshot(table, version).pruned(prune, probes).map(_.name)
 
-  /** Shared chunk-then-file pruning for every pruned-list surface. */
-  private def prunedEntries(table: String, version: Option[Int],
-                            prune: Seq[ColRange],
-                            probes: Seq[ColProbe] = Nil): Seq[FileEntry] = {
-    val v = version.orElse(currentVersion(table))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version in $table"))
-    val (chunks, inline, _, _) = readManifestChunked(table, v)
-    val allRanges = prune ++ probes.collect {
-      case p if p.values.size == 1 =>
-        ColRange(p.column, Some(p.values.head), Some(p.values.head)) }
-    (resolveChunks(table,
-      chunks.filter(cr => allRanges.forall(r => rangeKeeps(cr.stats, r)))) ++ inline)
-      .filter(fe => allRanges.forall(r => rangeKeeps(fe.stats, r)) &&
-        probes.forall(p => bloomKeeps(fe, p)))
+  /** Split `base`'s files into (candidates, untouched) for a
+    * copy-on-write rewrite: `condition` resolves + constant-folds
+    * against the snapshot's schema (the raw Column holds unresolved
+    * nodes), then its conjuncts translate to stat ranges exactly like
+    * the DSv2 scan does. Only candidates might hold a matching row.
+    */
+  private def rewriteCandidates(spark: SparkSession, base: Snapshot,
+                                condition: org.apache.spark.sql.Column)
+      : (Seq[FileEntry], Seq[FileEntry]) = {
+    val resolvedConds = scan(spark, base).filter(condition)
+      .queryExecution.optimizedPlan.collect {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
+    val ranges = graft.sources.v2.SnapshotPredicates.ranges(resolvedConds)
+    base.entries.partition(fe => ranges.forall(r => rangeKeeps(fe.stats, r)))
   }
 
   /** Row-level DELETE (copy-on-write, Delta-style): rows matching
@@ -1319,40 +1325,27 @@ object SnapshotTable {
              condition: org.apache.spark.sql.Column): Option[Int] = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val keep = not(coalesce(condition, lit(false)))
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = currentVersion(table).getOrElse(return None)
-      val (entries, schemaOpt, prevTxns) = readManifestFull(table, base)
-      // resolve + constant-fold the condition against the snapshot's
-      // schema (the raw Column holds unresolved nodes), then translate
-      // the conjuncts to stat ranges exactly like the DSv2 scan does
-      val resolvedConds = read(spark, table, Some(base)).filter(condition)
-        .queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
-      val ranges = graft.sources.v2.SnapshotPredicates.ranges(resolvedConds)
+    // a lost race re-prunes + re-filters the winner's snapshot
+    retrying(latest(table), "delete") { base =>
       val (candidates, untouched) =
-        entries.partition(fe => ranges.forall(r => rangeKeeps(fe.stats, r)))
-      if (candidates.isEmpty) return None
-      val reader = schemaOpt.fold(spark.read)(s => spark.read.schema(s))
-      val mapping = columnMappingOf(table, Some(base))
-      val survivors = toPhysical(
-        toLogical(reader.parquet(
-            candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
-          mapping)
-        .filter(keep), mapping)
-      // materialize before the rewrite: survivors read the files being
-      // replaced only logically — writeData stages to new files, but a
-      // lost race must re-filter against a DIFFERENT snapshot anyway
-      val newFiles = Materialize.scope {
-        writeData(Materialize.localCheckpoint(survivors), table)
+        if (base.exists) rewriteCandidates(spark, base, condition) else (Nil, Nil)
+      if (candidates.isEmpty) Some(None)
+      else {
+        val reader = base.schema.fold(spark.read)(s => spark.read.schema(s))
+        val survivors = toPhysical(
+          toLogical(reader.parquet(
+              candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
+            base.mapping)
+          .filter(keep), base.mapping)
+        // materialize before the rewrite: survivors read the files being
+        // replaced only logically — writeData stages to new files, but a
+        // lost race must re-filter against a DIFFERENT snapshot anyway
+        val newFiles = Materialize.scope {
+          writeData(Materialize.localCheckpoint(survivors), table)
+        }
+        publishFiles(base, untouched ++ newFiles, base.schema, base.txns).map(Some(_))
       }
-      if (publishManifest(table, base + 1, untouched ++ newFiles, schemaOpt, prevTxns))
-        return Some(base + 1)
-      attempt += 1 // concurrent commit won: re-prune + re-filter its snapshot
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the delete race on $table $MaxCommitRetries times")
   }
 
   /** Row-level UPDATE (copy-on-write, same pruning as [[delete]]):
@@ -1371,53 +1364,42 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     val cond = coalesce(condition, lit(false))
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = currentVersion(table).getOrElse(return None)
-      val (entries, schemaOpt, prevTxns) = readManifestFull(table, base)
-      val resolvedConds = read(spark, table, Some(base)).filter(condition)
-        .queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
-      val ranges = graft.sources.v2.SnapshotPredicates.ranges(resolvedConds)
+    retrying(latest(table), "update") { base =>
       val (candidates, untouched) =
-        entries.partition(fe => ranges.forall(r => rangeKeeps(fe.stats, r)))
-      if (candidates.isEmpty) return None
-      val mapping = columnMappingOf(table, Some(base))
-      val tgtSchemaPhys = schemaOpt.getOrElse(
-        toPhysical(read(spark, table, Some(base)), mapping).schema)
-      // the LOGICAL view of the target schema: set/cond reference
-      // logical names; files keep physical ones
-      val tgtSchema = org.apache.spark.sql.types.StructType(
-        tgtSchemaPhys.map(f => f.copy(name = mapping.getOrElse(f.name, f.name))))
-      set.keys.foreach(c => require(tgtSchema.fieldNames.contains(c),
-        s"UPDATE SET references unknown column $c"))
-      val gens = generatedColumnsOf(table)
-      set.keys.foreach(c => require(!gens.contains(c),
-        s"UPDATE SET cannot target generated column $c (it is " +
-          "recomputed from its expression)"))
-      val reader = spark.read.schema(tgtSchemaPhys)
-      val rewritten0 = toLogical(reader.parquet(
-          candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
-          mapping)
-        .select(tgtSchema.fieldNames.toSeq.map { c =>
-          set.get(c) match {
-            case Some(expr) =>
-              when(cond, expr).otherwise(col(c)).cast(tgtSchema(c).dataType).as(c)
-            case None => col(c)
-          }
-        }: _*)
-      // rewritten rows follow their (possibly updated) bases
-      val rewritten = toPhysical(recomputeGenerated(rewritten0, table), mapping)
-      val newFiles = Materialize.scope {
-        writeData(Materialize.localCheckpoint(rewritten), table)
+        if (base.exists) rewriteCandidates(spark, base, condition) else (Nil, Nil)
+      if (candidates.isEmpty) Some(None)
+      else {
+        val mapping = base.mapping
+        val tgtSchemaPhys = base.schema.getOrElse(
+          toPhysical(scan(spark, base), mapping).schema)
+        // the LOGICAL view of the target schema: set/cond reference
+        // logical names; files keep physical ones
+        val tgtSchema = StructType(
+          tgtSchemaPhys.map(f => f.copy(name = mapping.getOrElse(f.name, f.name))))
+        set.keys.foreach(c => require(tgtSchema.fieldNames.contains(c),
+          s"UPDATE SET references unknown column $c"))
+        set.keys.foreach(c => require(!base.generated.contains(c),
+          s"UPDATE SET cannot target generated column $c (it is " +
+            "recomputed from its expression)"))
+        val reader = spark.read.schema(tgtSchemaPhys)
+        val rewritten0 = toLogical(reader.parquet(
+            candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
+            mapping)
+          .select(tgtSchema.fieldNames.toSeq.map { c =>
+            set.get(c) match {
+              case Some(expr) =>
+                when(cond, expr).otherwise(col(c)).cast(tgtSchema(c).dataType).as(c)
+              case None => col(c)
+            }
+          }: _*)
+        // rewritten rows follow their (possibly updated) bases
+        val rewritten = toPhysical(recomputeGenerated(rewritten0, base), mapping)
+        val newFiles = Materialize.scope {
+          writeData(Materialize.localCheckpoint(rewritten), table)
+        }
+        publishFiles(base, untouched ++ newFiles, base.schema, base.txns).map(Some(_))
       }
-      if (publishManifest(table, base + 1, untouched ++ newFiles, schemaOpt, prevTxns))
-        return Some(base + 1)
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the update race on $table $MaxCommitRetries times")
   }
 
   /** Conditional MERGE (the Delta `MERGE INTO` contract, reduced to
@@ -1456,26 +1438,28 @@ object SnapshotTable {
             whenMatchedDelete: Option[org.apache.spark.sql.Column] = None,
             whenNotMatchedInsert: Boolean = true,
             txn: Map[String, Long] = Map.empty): Int = Materialize.scope {
-    require(columnMappingOf(table).isEmpty,
+    val first = latest(table)
+    require(first.mapping.isEmpty,
       s"MERGE on a column-mapped table is not supported yet ($table " +
         "carries renames) - upsert/update/delete are mapping-aware")
-    mergeDeduped(spark, table,
+    mergeDeduped(spark, first,
       Materialize.localCheckpoint(updates.dropDuplicates(key)), key,
       whenMatchedUpdate, whenMatchedDelete, whenNotMatchedInsert, txn)
   }
 
-  private def mergeDeduped(spark: SparkSession, table: String,
+  private def mergeDeduped(spark: SparkSession, first: Snapshot,
                            deduped: DataFrame, key: String,
                            whenMatchedUpdate: Map[String, org.apache.spark.sql.Column],
                            whenMatchedDelete: Option[org.apache.spark.sql.Column],
                            whenNotMatchedInsert: Boolean,
                            txn: Map[String, Long]): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct}
+    val table = first.table
     // empty source: nothing can match or insert — without this guard a
     // null key envelope would make EVERY file a rewrite candidate and
     // copy the whole table for a no-op (an empty foreachBatch batch)
     if (deduped.isEmpty)
-      return currentVersion(table).getOrElse(create(table, deduped.schema))
+      return if (first.exists) first.version else create(table, deduped.schema)
     // the source key envelope: one tiny agg, reused every retry
     val bounds = deduped.agg(
       org.apache.spark.sql.functions.min(col(key)),
@@ -1484,89 +1468,80 @@ object SnapshotTable {
       if (bounds.isNullAt(0)) None
       else Some(ColRange(key, Some(toStatVal(bounds.get(0))), Some(toStatVal(bounds.get(1)))))
 
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = currentVersion(table)
-      val (entries, schemaOpt, prevTxns) = base match {
-        case None => (Nil, None, Map.empty[String, Long])
-        case Some(v) => readManifestFull(table, v)
-      }
+    // a lost race re-prunes + re-merges against the winner
+    retrying(first, "merge") { base =>
       // idempotence: an already-recorded (writer, version) pair makes
       // this delivery a replay — additive updates must not re-apply
       if (txn.nonEmpty &&
-          txn.forall { case (w, v0) => prevTxns.get(w).exists(_ >= v0) })
-        return base.getOrElse(0)
-      val (candidates, untouched) =
-        entries.partition(fe => keyRange.forall(r => rangeKeeps(fe.stats, r)))
-      val tgtSchema = schemaOpt.getOrElse(
-        if (entries.nonEmpty) read(spark, table, base).schema else deduped.schema)
-      val targetCols = tgtSchema.fieldNames.toSeq
+          txn.forall { case (w, v0) => base.txns.get(w).exists(_ >= v0) })
+        Some(math.max(base.version, 0))
+      else {
+        val (candidates, untouched) =
+          base.entries.partition(fe => keyRange.forall(r => rangeKeeps(fe.stats, r)))
+        val tgtSchema = base.schema.getOrElse(
+          if (base.entries.nonEmpty) scan(spark, base).schema else deduped.schema)
+        val targetCols = tgtSchema.fieldNames.toSeq
 
-      val candidateDf =
-        if (candidates.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            tgtSchema)
-        else {
-          val reader = spark.read.schema(tgtSchema)
-          reader.parquet(candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*)
-        }
+        val candidateDf =
+          if (candidates.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+              tgtSchema)
+          else {
+            val reader = spark.read.schema(tgtSchema)
+            reader.parquet(candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*)
+          }
 
-      // one full-outer-shaped pass: candidates LEFT JOIN source decides
-      // update/delete/keep; source LEFT ANTI candidates decides inserts
-      val srcStruct = struct(deduped.columns.map(col): _*)
-      val joined = candidateDf.join(
-        deduped.select(col(key).as("_src_key"), srcStruct.as("_src")),
-        candidateDf(key) === col("_src_key"), "left")
-      val matched = col("_src_key").isNotNull
-      val deleteCond = whenMatchedDelete
-        .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
-      val kept = joined.filter(not(matched) || not(deleteCond))
-      // every output column casts onto the target schema type: a
-      // clause (or unionByName widening on the source) must never
-      // write files whose physical types drift from the manifest schema
-      val updatedCols = targetCols.map { c =>
-        whenMatchedUpdate.get(c) match {
-          case Some(expr) =>
-            org.apache.spark.sql.functions.when(matched, expr)
-              .otherwise(candidateDf(c)).cast(tgtSchema(c).dataType).as(c)
-          case None => candidateDf(c).as(c)
+        // one full-outer-shaped pass: candidates LEFT JOIN source decides
+        // update/delete/keep; source LEFT ANTI candidates decides inserts
+        val srcStruct = struct(deduped.columns.map(col): _*)
+        val joined = candidateDf.join(
+          deduped.select(col(key).as("_src_key"), srcStruct.as("_src")),
+          candidateDf(key) === col("_src_key"), "left")
+        val matched = col("_src_key").isNotNull
+        val deleteCond = whenMatchedDelete
+          .map(c => coalesce(c, lit(false))).getOrElse(lit(false))
+        val kept = joined.filter(not(matched) || not(deleteCond))
+        // every output column casts onto the target schema type: a
+        // clause (or unionByName widening on the source) must never
+        // write files whose physical types drift from the manifest schema
+        val updatedCols = targetCols.map { c =>
+          whenMatchedUpdate.get(c) match {
+            case Some(expr) =>
+              org.apache.spark.sql.functions.when(matched, expr)
+                .otherwise(candidateDf(c)).cast(tgtSchema(c).dataType).as(c)
+            case None => candidateDf(c).as(c)
+          }
         }
+        val rewritten = kept.select(updatedCols: _*)
+
+        val inserts =
+          if (!whenNotMatchedInsert) None
+          else {
+            val unmatched = deduped.join(candidateDf.select(col(key)), Seq(key), "left_anti")
+            // inserts project onto the target schema (typed); missing
+            // columns null
+            val projected = unmatched.select(targetCols.map(c =>
+              if (unmatched.columns.contains(c)) col(c).cast(tgtSchema(c).dataType).as(c)
+              else lit(null).cast(tgtSchema(c).dataType).as(c)): _*)
+            Some(projected)
+          }
+        val output0 = inserts.fold(rewritten)(ins => rewritten.unionByName(ins))
+        // merge REBUILDS rows, so generated columns are recomputed from
+        // the post-update bases (an updated base column must not leave a
+        // stale derived value; inserts projected them as null)
+        val output = recomputeGenerated(output0, base)
+        // enforce on the MERGED output (updates may transform values),
+        // before any data lands
+        enforceConstraints(output, base)
+        val newFiles = Materialize.scope {
+          writeData(Materialize.localCheckpoint(output), table)
+        }
+        // recomputeGenerated may have materialized a registered column
+        // the schema did not carry yet — publish the evolved shape
+        publishFiles(base, untouched ++ newFiles,
+          Some(evolveSchema(tgtSchema, output.schema)), base.txns ++ txn)
       }
-      val rewritten = kept.select(updatedCols: _*)
-
-      val inserts =
-        if (!whenNotMatchedInsert) None
-        else {
-          val unmatched = deduped.join(candidateDf.select(col(key)), Seq(key), "left_anti")
-          // inserts project onto the target schema (typed); missing
-          // columns null
-          val projected = unmatched.select(targetCols.map(c =>
-            if (unmatched.columns.contains(c)) col(c).cast(tgtSchema(c).dataType).as(c)
-            else lit(null).cast(tgtSchema(c).dataType).as(c)): _*)
-          Some(projected)
-        }
-      val output0 = inserts.fold(rewritten)(ins => rewritten.unionByName(ins))
-      // merge REBUILDS rows, so generated columns are recomputed from
-      // the post-update bases (an updated base column must not leave a
-      // stale derived value; inserts projected them as null)
-      val output = recomputeGenerated(output0, table)
-      // enforce on the MERGED output (updates may transform values),
-      // before any data lands
-      enforceConstraints(output, table)
-      val newFiles = Materialize.scope {
-        writeData(Materialize.localCheckpoint(output), table)
-      }
-      val v = base.getOrElse(-1) + 1
-      // recomputeGenerated may have materialized a registered column
-      // the schema did not carry yet — publish the evolved shape
-      if (publishManifest(table, v, untouched ++ newFiles,
-          Some(evolveSchema(tgtSchema, output.schema)),
-          prevTxns ++ txn))
-        return v
-      attempt += 1 // lost the race: re-prune + re-merge against the winner
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the merge race on $table $MaxCommitRetries times")
   }
 
   private def toStatVal(v: Any): Any = v match {
@@ -1588,8 +1563,12 @@ object SnapshotTable {
     * file set; `sinceVersion < 0` means everything in `toVersion`).
     */
   def addedPathsBetween(table: String, sinceVersion: Int, toVersion: Int): Seq[String] =
-    addedEntriesBetween(table, sinceVersion, toVersion)
+    addedEntries(snapshotFrom(table, sinceVersion), snapshotAt(table, toVersion))
       .map(fe => dataDir(table).resolve(fe.name).toAbsolutePath.toString)
+
+  /** The snapshot at `version`; the empty one before the first commit. */
+  private def snapshotFrom(table: String, version: Int): Snapshot =
+    if (version < 0) emptySnapshot(table) else snapshotAt(table, version)
 
   /** Entries in `hi`'s manifest but not `lo`'s. Chunk-aware fast path:
     * when `lo`'s chunk set is a SUBSET of `hi`'s (every append-only
@@ -1602,20 +1581,16 @@ object SnapshotTable {
     * rewrite commits replace chunk refs, breaking the subset property
     * — those fall back to the full name-set diff.
     */
-  private def addedEntriesBetween(table: String, lo: Int,
-                                  hi: Int): Seq[FileEntry] = {
-    if (lo < 0) return readManifest(table, hi)
-    val (hiChunks, hiInline, _, _) = readManifestChunked(table, hi)
-    val (loChunks, loInline, _, _) = readManifestChunked(table, lo)
-    val loChunkNames = loChunks.map(_.name).toSet
-    if (loChunkNames.subsetOf(hiChunks.map(_.name).toSet)) {
-      val loInlineNames = loInline.map(_.name).toSet
-      (hiChunks.filterNot(c => loChunkNames(c.name))
-        .flatMap(c => readChunkFile(table, c.name)) ++ hiInline)
+  private def addedEntries(lo: Snapshot, hi: Snapshot): Seq[FileEntry] = {
+    val loChunkNames = lo.chunks.map(_.name).toSet
+    if (loChunkNames.subsetOf(hi.chunks.map(_.name).toSet)) {
+      val loInlineNames = lo.inline.map(_.name).toSet
+      (hi.chunks.filterNot(c => loChunkNames(c.name))
+        .flatMap(c => readChunkFile(hi.table, c.name)) ++ hi.inline)
         .filterNot(fe => loInlineNames(fe.name))
     } else {
-      val prev = readManifest(table, lo).map(_.name).toSet
-      readManifest(table, hi).filterNot(fe => prev(fe.name))
+      val prev = lo.entries.map(_.name).toSet
+      hi.entries.filterNot(fe => prev(fe.name))
     }
   }
 
@@ -1645,63 +1620,59 @@ object SnapshotTable {
     */
   def compact(spark: SparkSession, table: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
-              sortBy: Seq[String] = Nil): Option[Int] = {
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val base = currentVersion(table).getOrElse(return None)
-      val (entries, schemaOpt, prevTxns) = readManifestFull(table, base)
-      val sized = entries.map(fe =>
-        fe -> Files.size(dataDir(table).resolve(fe.name)))
+              sortBy: Seq[String] = Nil): Option[Int] =
+    retrying(latest(table), "compaction") { base =>
+      // sized entries record their byte length; only entries from
+      // pre-size manifests (-1) need a stat
+      val sized = base.entries.map(fe => fe ->
+        (if (fe.size >= 0L) fe.size else Files.size(dataDir(table).resolve(fe.name))))
       val (small, big) = sized.partition(_._2 < targetFileBytes)
-      if (small.length < 2) return None
-      val smallBytes = small.map(_._2).sum
-      val bins = math.max(1, math.ceil(smallBytes.toDouble / targetFileBytes).toInt)
-      // read through the union schema so mixed-schema (evolved) files
-      // pack into uniform output files
-      val reader = schemaOpt.fold(spark.read)(s => spark.read.schema(s))
-      val smallDf = reader.parquet(
-        small.map(s => dataDir(table).resolve(s._1.name).toString): _*)
-      // callers name sort columns LOGICALLY; the files being packed
-      // carry physical names on a column-mapped table — translate
-      val inv = columnMappingOf(table, Some(base)).map(_.swap)
-      val sortPhys = sortBy.map(c => inv.getOrElse(c, c))
-      val packed =
-        if (sortPhys.isEmpty) smallDf.repartition(bins)
-        else smallDf
-          .repartitionByRange(bins, sortPhys.map(org.apache.spark.sql.functions.col): _*)
-          .sortWithinPartitions(sortPhys.head, sortPhys.tail: _*)
-      // safe to read lazily: compaction deletes nothing — the source
-      // files stay on disk (and referenced by older manifests) until a
-      // later vacuum
-      val newFiles = writeData(packed, table)
-      // re-index: a compacted file must answer point-lookup probes as
-      // well as the bloomed small files it replaced (losing the bloom
-      // is CORRECT — no bloom means keep — but forfeits the pruning);
-      // sizing carries over from the widest existing bloom
-      val bloomCols = small.flatMap(_._1.blooms.keys).distinct
-      val indexed =
-        if (bloomCols.isEmpty) newFiles
-        else {
-          val (bits, k) = small.iterator
-            .flatMap(_._1.blooms.values)
-            .map { enc => val a = enc.split(":", 3); (a(0).toInt, a(1).toInt) }
-            .reduce((x, y) => (math.max(x._1, y._1), math.max(x._2, y._2)))
-          buildBlooms(spark, table, newFiles, bloomCols, bits, k)
-        }
-      if (publishManifest(table, base + 1, big.map(_._1) ++ indexed, schemaOpt,
-          prevTxns))
-        return Some(base + 1)
-      attempt += 1
+      if (small.length < 2) Some(None)
+      else {
+        val smallBytes = small.map(_._2).sum
+        val bins = math.max(1, math.ceil(smallBytes.toDouble / targetFileBytes).toInt)
+        // read through the union schema so mixed-schema (evolved) files
+        // pack into uniform output files
+        val reader = base.schema.fold(spark.read)(s => spark.read.schema(s))
+        val smallDf = reader.parquet(
+          small.map(s => dataDir(table).resolve(s._1.name).toString): _*)
+        // callers name sort columns LOGICALLY; the files being packed
+        // carry physical names on a column-mapped table — translate
+        val sortPhys = sortBy.map(base.physicalName)
+        val packed =
+          if (sortPhys.isEmpty) smallDf.repartition(bins)
+          else smallDf
+            .repartitionByRange(bins, sortPhys.map(org.apache.spark.sql.functions.col): _*)
+            .sortWithinPartitions(sortPhys.head, sortPhys.tail: _*)
+        // safe to read lazily: compaction deletes nothing — the source
+        // files stay on disk (and referenced by older manifests) until a
+        // later vacuum
+        val newFiles = writeData(packed, table)
+        // re-index: a compacted file must answer point-lookup probes as
+        // well as the bloomed small files it replaced (losing the bloom
+        // is CORRECT — no bloom means keep — but forfeits the pruning);
+        // sizing carries over from the widest existing bloom
+        val bloomCols = small.flatMap(_._1.blooms.keys).distinct
+        val indexed =
+          if (bloomCols.isEmpty) newFiles
+          else {
+            val (bits, k) = small.iterator
+              .flatMap(_._1.blooms.values)
+              .map { enc => val a = enc.split(":", 3); (a(0).toInt, a(1).toInt) }
+              .reduce((x, y) => (math.max(x._1, y._1), math.max(x._2, y._2)))
+            buildBlooms(spark, table, newFiles, bloomCols, bits, k)
+          }
+        publishFiles(base, big.map(_._1) ++ indexed, base.schema, base.txns)
+          .map(Some(_))
+      }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the compaction race on $table $MaxCommitRetries times")
-  }
 
   /** File names added by `version` relative to `version - 1` (the
     * manifest diff).
     */
   def addedFiles(table: String, version: Int): Seq[String] =
-    addedEntriesBetween(table, version - 1, version).map(_.name)
+    addedEntries(snapshotFrom(table, version - 1), snapshotAt(table, version))
+      .map(_.name)
 
   /** Incremental read (change feed, file granularity): the rows of
     * every data file added in versions (`sinceVersion`, `toVersion`],
@@ -1718,8 +1689,8 @@ object SnapshotTable {
   def readChanges(spark: SparkSession, table: String, sinceVersion: Int,
                   toVersion: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val hi = toVersion.orElse(currentVersion(table))
-      .getOrElse(throw new IllegalArgumentException(s"no committed version in $table"))
+    val hiSnap = snapshot(table, toVersion)
+    val hi = hiSnap.version
     require(sinceVersion <= hi,
       s"sinceVersion $sinceVersion is beyond latest version $hi")
     // all versions' files read through the END version's union schema
@@ -1728,21 +1699,21 @@ object SnapshotTable {
     // forever, and a CDC consumer of a renamed table must see the same
     // logical names a plain read() shows (the empty-diff path below
     // goes through read() and is logical already)
-    val hiSchema = readManifestFull(table, hi)._2
-    val hiMapping = columnMappingOf(table, Some(hi))
-    val parts = ((sinceVersion + 1) to hi).flatMap { v =>
-      val added = addedFiles(table, v)
+    // each version in [sinceVersion, hi] is parsed once
+    val snaps = (sinceVersion until hi).map(snapshotFrom(table, _)) :+ hiSnap
+    val parts = snaps.zip(snaps.tail).flatMap { case (lo, cur) =>
+      val added = addedEntries(lo, cur)
       if (added.isEmpty) None
       else Some(toLogical(
-          hiSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(
-            added.map(n => dataDir(table).resolve(n).toString): _*),
-          hiMapping)
-        .withColumn("_commit_version", lit(v)))
+          hiSnap.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(
+            added.map(fe => dataDir(table).resolve(fe.name).toString): _*),
+          hiSnap.mapping)
+        .withColumn("_commit_version", lit(cur.version)))
     }
     if (parts.isEmpty) {
       // preserve the table schema (plus the version tag) for an empty diff
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        read(spark, table, Some(hi)).schema
+        scan(spark, hiSnap).schema
           .add("_commit_version", org.apache.spark.sql.types.IntegerType))
     } else parts.reduce(_ unionByName _)
   }
@@ -1807,18 +1778,10 @@ object SnapshotTable {
     * batches that were committed in the rolled-back range).
     */
   def restore(table: String, version: Int): Int = {
-    val (files, schema, _) = readManifestFull(table, version)
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val latest = currentVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-      if (publishManifest(table, latest + 1, files, schema,
-          txnVersions(table, latest)))
-        return latest + 1
-      attempt += 1
+    val target = snapshotAt(table, version)
+    retrying(snapshot(table, None), "restore") { base =>
+      publishFiles(base, target.entries, target.schema, base.txns)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"lost the restore race on $table $MaxCommitRetries times")
   }
 
   /** Shallow clone (Delta `CLONE`): a NEW table whose v0 manifest
@@ -1839,11 +1802,9 @@ object SnapshotTable {
   def cloneShallow(src: String, dst: String,
                    version: Option[Int] = None): Int = {
     require(currentVersion(dst).isEmpty, s"$dst already exists")
-    val v = version.getOrElse(currentVersion(src).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $src")))
-    val (files, schema, _) = readManifestFull(src, v)
+    val source = snapshot(src, version)
     Files.createDirectories(dataDir(dst))
-    files.foreach { fe =>
+    source.entries.foreach { fe =>
       val from = dataDir(src).resolve(fe.name)
       val to = dataDir(dst).resolve(fe.name)
       if (!Files.exists(to)) {
@@ -1855,12 +1816,9 @@ object SnapshotTable {
         }
       }
     }
-    val chunks =
-      if (files.size <= InlineMaxEntries) Nil
-      else files.grouped(ChunkTargetEntries).map(writeChunkFile(dst, _)).toSeq
-    val inline = if (files.size <= InlineMaxEntries) files else Nil
-    require(publishManifestRefs(dst, 0, chunks, inline, schema,
-      Map.empty, Some(readConstraints(src, v))),
+    val (chunks, inline) = layout(dst, source.entries)
+    require(publish(Snapshot(dst, 0, chunks, inline, source.schema,
+      Map.empty, source.constraints)).isDefined,
       s"lost the create race on $dst")
     0
   }
@@ -1871,7 +1829,7 @@ object SnapshotTable {
     */
   def history(table: String): Seq[(Int, Int, Long)] =
     manifestVersions(table).sorted.map { v =>
-      val files = readManifest(table, v)
+      val files = snapshotAt(table, v).entries
       val bytes = files.map { fe =>
         val p = dataDir(table).resolve(fe.name)
         if (Files.exists(p)) Files.size(p) else 0L
@@ -1886,11 +1844,12 @@ object SnapshotTable {
     * manifests.
     */
   def vacuum(table: String, keepVersions: Int = 1): Unit = {
-    val latest = currentVersion(table).getOrElse(return)
     val present = manifestVersions(table).toSet
-    val keep = (math.max(0, latest - keepVersions + 1) to latest)
+    if (present.isEmpty) return
+    val keep = (math.max(0, present.max - keepVersions + 1) to present.max)
       .filter(present.contains)
-    val referenced = keep.flatMap(readManifest(table, _).map(_.name)).toSet
+    val kept = keep.map(snapshotAt(table, _))
+    val referenced = kept.flatMap(_.entries.map(_.name)).toSet
     listDir(dataDir(table))(_
       .filter(p => !referenced.contains(p.getFileName.toString))
       .foreach(Files.delete))
@@ -1904,8 +1863,7 @@ object SnapshotTable {
     // chunk files referenced by no kept root: dropped versions' chunks
     // plus lost-commit-race / superseded-compaction orphans
     if (Files.exists(chunksDir(table))) {
-      val refChunks = keep
-        .flatMap(v => readManifestChunked(table, v)._1.map(_.name)).toSet
+      val refChunks = kept.flatMap(_.chunks.map(_.name)).toSet
       listDir(chunksDir(table))(_
         .filter(p => !refChunks.contains(p.getFileName.toString))
         .foreach(Files.delete))

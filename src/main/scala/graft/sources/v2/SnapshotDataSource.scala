@@ -145,8 +145,18 @@ private[v2] class SnapshotV2Table(path: String, version: Option[Int],
       TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+  /** Scans see the PHYSICAL schema ([[SnapshotTable.schemaOf]]), so a
+    * renamed table would silently show its old column names — rejected
+    * loudly instead, like `SnapshotTable.merge`.
+    */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val mapping = SnapshotTable.columnMappingOf(path, version)
+    require(mapping.isEmpty,
+      s"reading a column-mapped table through graft-snapshot is not supported " +
+        s"yet ($path renames ${mapping.keys.toSeq.sorted.mkString(", ")}) - " +
+        "use SnapshotTable.read")
     new SnapshotScanBuilder(SparkSession.active, path, version, tableSchema, options)
+  }
 
   /** Write path via the V1Write bridge: the insert maps straight onto
     * the format's transactional commits — `append` (blind-append with
@@ -314,14 +324,14 @@ private[graft] object SnapshotPredicates {
       (attrName(a), vs.map(litVal)) match {
         case (Some(n), lits) if lits.nonEmpty && lits.forall(_.isDefined) =>
           val values = lits.flatten
-          def cmp(x: Any, y: Any): Int = (x, y) match {
-            case (p: Number, q: Number) =>
-              java.lang.Double.compare(p.doubleValue(), q.doubleValue())
-            case (p: String, q: String) => p.compareTo(q)
-            case _ => 0
+          // the envelope needs one total order over the literals:
+          // an incomparable pair prunes nothing
+          if (values.exists(v => SnapshotTable.cmpStat(v, values.head).isEmpty)) Nil
+          else {
+            val ord = Ordering.fromLessThan[Any](
+              SnapshotTable.cmpStat(_, _).exists(_ < 0))
+            Seq(ColRange(n, Some(values.min(ord)), Some(values.max(ord))))
           }
-          Seq(ColRange(n, Some(values.min(Ordering.fromLessThan[Any](cmp(_, _) < 0))),
-            Some(values.max(Ordering.fromLessThan[Any](cmp(_, _) < 0)))))
         case _ => Nil
       }
     case _ => Nil

@@ -85,6 +85,32 @@ class SnapshotDsv2Spec extends SparkSpec {
     assert(scannedFiles(all.filter($"k" === "mike")) == 1)
     assert(scannedFiles(all.filter($"k".isin("alpha", "beta"))) == 1)
     assert(all.filter($"k".isin("alpha", "zulu")).count() == 2) // envelope spans files, still correct
+
+    // 64-bit keys above 2^53 collapse as doubles: the envelope of
+    // (2^53+1, 2^53) must still reach the file holding 2^53
+    val big = newTable("dsv2_big")
+    val p53 = 1L << 53
+    SnapshotTable.append(Seq((p53, 1)).toDF("k", "n").coalesce(1), big)
+    SnapshotTable.append(Seq((p53 + 5, 2)).toDF("k", "n").coalesce(1), big)
+    val bigAll = spark.read.format("graft-snapshot").load(big)
+    assert(bigAll.filter($"k".isin(p53 + 1, p53)).as[(Long, Int)].collect().toSeq
+      == Seq((p53, 1)))
+    SnapshotTable.delete(spark, big, $"k".isin(p53 + 1, p53))
+    assert(SnapshotTable.read(spark, big).as[(Long, Int)].collect().toSeq
+      == Seq((p53 + 5, 2)), "delete must remove the row keyed 2^53")
+  }
+
+  test("a column-mapped table is rejected, never read with physical names") {
+    val t = newTable("dsv2_renamed")
+    SnapshotTable.append(Seq((1, 10.0)).toDF("id", "amount"), t)  // v0
+    SnapshotTable.renameColumn(t, "amount", "price")              // v1
+    assert(SnapshotTable.read(spark, t).columns.toSeq == Seq("id", "price"))
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("graft-snapshot").load(t).collect())
+    assert(e.getMessage.contains("column-mapped"), e.getMessage)
+    // the pre-rename version has no mapping and still reads
+    val v0 = spark.read.format("graft-snapshot").option("version", "0").load(t)
+    assert(v0.columns.toSeq == Seq("id", "amount") && v0.count() == 1)
   }
 
   test("timestamp predicates prune on micros footer stats") {
