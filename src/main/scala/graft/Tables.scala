@@ -139,10 +139,17 @@ object Tables {
     *   `local[4]`) the heap retains 3.9 MB more than at 100 entries.
     *   A session built without this call, such as a caller's raw
     *   `SparkSession`, keeps 100.
+    * - codegen.useIdInClassName off: the cache is keyed by the generated
+    *   source, and by default the whole-stage codegen stage id is part
+    *   of the class name. AQE numbers the stages it creates in the order
+    *   their inputs finish, so an identical plan often came back under
+    *   another id and recompiled (8 to 22 of a repeated curation pass's
+    *   classes, all identical to a first-pass class but for the id).
     */
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")

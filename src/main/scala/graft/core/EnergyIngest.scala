@@ -88,7 +88,8 @@ object EnergyIngest {
     * make ingest + MERGE idempotent).
     */
   def transform(raw: DataFrame): DataFrame = {
-    val named = raw.columns.foldLeft(raw) { (df, c) => df.withColumnRenamed(c, normalizeHeader(c)) }
+    // one projection: a withColumnRenamed per column re-analyses the plan each time
+    val named = raw.toDF(raw.columns.toSeq.map(normalizeHeader): _*)
     named.select(
       col("homeid").as("HomeID"),
       col("appliancetype").as("ApplianceType"),

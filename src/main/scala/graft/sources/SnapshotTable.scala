@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, TimestampType}
 
 import graft.core.Materialize
 
@@ -368,7 +368,7 @@ object SnapshotTable {
     * built on this snapshot unless a constraint DDL replaces it — a
     * data commit can never silently drop an invariant.
     */
-  private final case class Snapshot(table: String, version: Int,
+  private[graft] final case class Snapshot(table: String, version: Int,
                                     chunks: Seq[ChunkRef],
                                     inline: Seq[FileEntry],
                                     schema: Option[StructType],
@@ -409,6 +409,23 @@ object SnapshotTable {
         .filter(fe => ranges.forall(r => rangeKeeps(fe.stats, r)) &&
           probes.forall(p => bloomKeeps(fe, p)))
     }
+
+    /** (absolute path, byte size) of the files a pruned read opens;
+      * size is −1 for entries from pre-size manifests.
+      */
+    def sizedFiles(prune: Seq[ColRange],
+                   probes: Seq[ColProbe]): Seq[(String, Long)] =
+      pruned(prune, probes).map(fe =>
+        (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size))
+
+    /** The PHYSICAL schema: the manifest's union schema when recorded,
+      * parquet inference over one of the files otherwise.
+      */
+    def physicalSchema(spark: SparkSession): StructType = schema.getOrElse {
+      require(entries.nonEmpty,
+        s"$table v$version has no files and no recorded schema")
+      spark.read.parquet(dataDir(table).resolve(entries.head.name).toString).schema
+    }
   }
 
   private def emptySnapshot(table: String): Snapshot =
@@ -448,6 +465,15 @@ object SnapshotTable {
     */
   private def latest(table: String): Snapshot =
     currentVersion(table).fold(emptySnapshot(table))(snapshotAt(table, _))
+
+  /** The one snapshot a connector's whole read works from: `version`,
+    * or the latest (the empty snapshot before the first commit).
+    * Schema, column-mapping check and file list all come from it, so a
+    * commit landing mid-planning can never pair one version's schema
+    * with the next version's files.
+    */
+  private[graft] def pin(table: String, version: Option[Int]): Snapshot =
+    version.fold(latest(table))(snapshotAt(table, _))
 
   /** The snapshot at `version` (latest when None) for operations that
     * need a committed version.
@@ -573,16 +599,19 @@ object SnapshotTable {
   /** Column min/max from the just-written file's parquet footer —
     * stats parquet already maintains per row group; merged across row
     * groups here. Only top-level primitive columns with non-null typed
-    * statistics are recorded.
+    * statistics are recorded. `conf` is the writing session's Hadoop
+    * conf: without read options parquet builds a `new Configuration()`
+    * per file, which re-parses the Hadoop XML resources (~16 ms).
     */
-  private def footerStats(file: Path): Map[String, ColStats] = {
+  private def footerStats(file: Path,
+                          conf: org.apache.hadoop.conf.Configuration): Map[String, ColStats] = {
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), new org.apache.hadoop.conf.Configuration())
-    val reader = ParquetFileReader.open(in)
+    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf)
+    val reader = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
     try {
       val acc = scala.collection.mutable.HashMap.empty[String, ColStats]
       for (block <- reader.getFooter.getBlocks.asScala;
@@ -637,22 +666,12 @@ object SnapshotTable {
     // chunk stays fully dictionary-encoded (the dictionary already
     // answers membership), and a bloom-worthy column is high-cardinality
     // by definition
-    // TIMESTAMP_MICROS must be pinned on the SESSION conf — parquet's
-    // prepareWrite re-reads it from the session and overwrites any
-    // writer option, so an option-only spelling silently falls back to
-    // INT96 (no footer stats). A cloned session keeps the pin isolated:
-    // no set/restore race with concurrent writers on the caller's
-    // session, and the clone shares the SparkContext so the write is
-    // the same distributed job.
-    val writeSession = org.apache.spark.sql.GraftShim.cloneSession(df.sparkSession)
-    writeSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val pinned = org.apache.spark.sql.GraftShim.ofRows(
-      writeSession, org.apache.spark.sql.GraftShim.logicalPlan(df))
-    val writer = bloomColumns.foldLeft(pinned.write.mode(SaveMode.Overwrite)) {
+    val writer = bloomColumns.foldLeft(microsTimestamps(df).write.mode(SaveMode.Overwrite)) {
       (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.enable.dictionary#$c", "false")
     }
     writer.parquet(staging.toString)
+    val hadoopConf = org.apache.spark.sql.GraftShim.hadoopConf(df.sparkSession)
     Files.createDirectories(dataDir(table))
     val moved = listDir(staging)(_
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -660,13 +679,42 @@ object SnapshotTable {
         val name = s"${java.util.UUID.randomUUID()}.parquet"
         val dest = dataDir(table).resolve(name)
         Files.move(p, dest)
-        FileEntry(name, footerStats(dest), Files.size(dest))
+        FileEntry(name, footerStats(dest, hadoopConf), Files.size(dest))
       }.toSeq)
     val walk = Files.walk(staging)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.delete(p))
     finally walk.close()
     moved
+  }
+
+  /** `df` bound to a session that writes TIMESTAMP as INT64 micros.
+    * The pin must sit on the SESSION conf — parquet's prepareWrite
+    * re-reads it from the session and overwrites any writer option, so
+    * an option-only spelling silently falls back to INT96. A cloned
+    * session keeps the pin isolated (no set/restore race with
+    * concurrent writers on the caller's session) and shares the
+    * SparkContext, so the write is the same distributed job. Only the
+    * TIMESTAMP writer reads that conf, so a batch without a TIMESTAMP
+    * at any depth writes in the caller's session: a fresh session
+    * makes the write task recompile its generated code.
+    */
+  private def microsTimestamps(df: DataFrame): DataFrame =
+    if (!holdsTimestamp(df.schema)) df
+    else {
+      val writeSession = org.apache.spark.sql.GraftShim.cloneSession(df.sparkSession)
+      writeSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      org.apache.spark.sql.GraftShim.ofRows(
+        writeSession, org.apache.spark.sql.GraftShim.logicalPlan(df))
+    }
+
+  /** Whether `dt` holds a [[TimestampType]] at any nesting depth. */
+  private def holdsTimestamp(dt: DataType): Boolean = dt match {
+    case TimestampType => true
+    case s: StructType => s.fields.exists(f => holdsTimestamp(f.dataType))
+    case a: ArrayType => holdsTimestamp(a.elementType)
+    case m: MapType => holdsTimestamp(m.keyType) || holdsTimestamp(m.valueType)
+    case _ => false
   }
 
   private val MaxCommitRetries = 10
@@ -679,11 +727,23 @@ object SnapshotTable {
     * accumulated small chunks compact toward [[ChunkTargetEntries]] —
     * the only step that parses (small) chunk files, amortized O(1)
     * commits.
+    *
+    * The new files were prepared against `first`'s constraints map
+    * (generated columns filled, CHECKs vetted, names mapped), so a
+    * winner that changed that map aborts the commit with a
+    * [[java.util.ConcurrentModificationException]] — Delta's
+    * metadata-conflict abort. Re-vetting cannot help: the files are
+    * already written.
     */
   private def commitLoop(first: Snapshot, newTxn: Map[String, Long] = Map.empty)
                         (advance: Snapshot => (Seq[ChunkRef], Seq[FileEntry], StructType)): Int =
     retrying(first, "commit") { base =>
       val (chunks, inline, schema) = advance(base)
+      if (base.constraints != first.constraints)
+        throw new java.util.ConcurrentModificationException(
+          s"${first.table} v${base.version} changed its CHECK constraints, " +
+            "generated columns or column mapping while this commit's batch, " +
+            s"prepared on v${first.version}, was being written")
       val (nChunks, nInline) = normalizeChunks(base.table, chunks, inline)
       // txn watermarks carry forward through EVERY commit — dropping
       // them would let a replayed idempotent batch double-apply after
@@ -1250,18 +1310,11 @@ object SnapshotTable {
     * carry (manifest union schema when recorded; parquet inference
     * over the snapshot's files otherwise). On a renamed table [[read]]
     * shows the logical names of [[columnMappingOf]] instead.
-    * Metadata-only when the manifest carries a schema — the DSv2
-    * connector calls this at planning time.
+    * Metadata-only when the manifest carries a schema.
     */
   def schemaOf(spark: SparkSession, table: String,
-               version: Option[Int] = None): StructType = {
-    val s = snapshot(table, version)
-    s.schema.getOrElse {
-      require(s.entries.nonEmpty,
-        s"$table v${s.version} has no files and no recorded schema")
-      spark.read.parquet(dataDir(table).resolve(s.entries.head.name).toString).schema
-    }
-  }
+               version: Option[Int] = None): StructType =
+    snapshot(table, version).physicalSchema(spark)
 
   /** Absolute paths of the files a pruned read would open — the DSv2
     * scan builds its file index from exactly this list.
@@ -1278,8 +1331,7 @@ object SnapshotTable {
   def sizedFilesForRead(table: String, version: Option[Int] = None,
                         prune: Seq[ColRange] = Nil,
                         probes: Seq[ColProbe] = Nil): Seq[(String, Long)] =
-    snapshot(table, version).pruned(prune, probes)
-      .map(fe => (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size))
+    snapshot(table, version).sizedFiles(prune, probes)
 
   /** The files a pruned read would open — exposed so tests and PLANS.md
     * can assert data-skipping without inspecting the scan.
@@ -1639,9 +1691,13 @@ object SnapshotTable {
         // callers name sort columns LOGICALLY; the files being packed
         // carry physical names on a column-mapped table — translate
         val sortPhys = sortBy.map(base.physicalName)
+        // one bin: coalesce feeds the single writer task directly — a
+        // repartition would sort and round-robin shuffle every row only
+        // to land them in that same task
         val packed =
-          if (sortPhys.isEmpty) smallDf.repartition(bins)
-          else smallDf
+          if (sortPhys.isEmpty) {
+            if (bins == 1) smallDf.coalesce(1) else smallDf.repartition(bins)
+          } else smallDf
             .repartitionByRange(bins, sortPhys.map(org.apache.spark.sql.functions.col): _*)
             .sortWithinPartitions(sortPhys.head, sortPhys.tail: _*)
         // safe to read lazily: compaction deletes nothing — the source

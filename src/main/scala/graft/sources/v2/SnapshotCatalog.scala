@@ -79,12 +79,16 @@ class SnapshotCatalog extends TableCatalog {
     SnapshotTable.currentVersion(pathOf(ident)).isDefined
 
   override def loadTable(ident: Identifier): Table = {
-    val path = pathOf(ident)
-    if (SnapshotTable.currentVersion(path).isEmpty) throw new NoSuchTableException(ident)
-    new SnapshotV2Table(path, None,
-      SnapshotDataSource.nullableCopy(
-        SnapshotTable.schemaOf(SparkSession.active, path)))
+    val snap = SnapshotTable.pin(pathOf(ident), None)
+    if (!snap.exists) throw new NoSuchTableException(ident)
+    tableOf(snap, None)
   }
+
+  /** The table over `snap`: its schema and every scan come from it. */
+  private def tableOf(snap: SnapshotTable.Snapshot, version: Option[Int]): Table =
+    new SnapshotV2Table(snap.table, version,
+      SnapshotDataSource.nullableCopy(snap.physicalSchema(SparkSession.active)),
+      Some(snap))
 
   /** `SELECT ... FROM snap.t VERSION AS OF n` — SQL time travel onto
     * the manifest log.
@@ -95,9 +99,7 @@ class SnapshotCatalog extends TableCatalog {
       case _: NumberFormatException => throw new IllegalArgumentException(
         s"snapshot versions are integers; got '$version'")
     }
-    new SnapshotV2Table(path, Some(v),
-      SnapshotDataSource.nullableCopy(
-        SnapshotTable.schemaOf(SparkSession.active, path, Some(v))))
+    tableOf(SnapshotTable.pin(path, Some(v)), Some(v))
   }
 
   override def createTable(ident: Identifier, schema: StructType,

@@ -75,22 +75,27 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister {
   private def tableVersion(options: CaseInsensitiveStringMap): Option[Int] =
     Option(options.get("version")).map(_.toInt)
 
+  // Spark instantiates the provider per load and calls inferSchema,
+  // then getTable, on that instance: the snapshot the schema came from
+  // is the one the table scans
+  private var inferred: Option[SnapshotTable.Snapshot] = None
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = tablePath(options)
+    val snap = SnapshotTable.pin(tablePath(options), tableVersion(options))
+    inferred = Some(snap)
     // a not-yet-created table has no schema: report empty so a WRITE
     // can proceed (the insert defines the schema); a read of an empty
     // table fails at scan time with the clear no-committed-version error
-    if (SnapshotTable.currentVersion(path).isEmpty && tableVersion(options).isEmpty)
-      new StructType()
-    else SnapshotDataSource.nullableCopy(
-      SnapshotTable.schemaOf(SparkSession.active, path, tableVersion(options)))
+    if (!snap.exists) new StructType()
+    else SnapshotDataSource.nullableCopy(snap.physicalSchema(SparkSession.active))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new SnapshotV2Table(tablePath(opts), tableVersion(opts),
-      SnapshotDataSource.nullableCopy(schema))
+    val path = tablePath(opts)
+    new SnapshotV2Table(path, tableVersion(opts),
+      SnapshotDataSource.nullableCopy(schema), inferred.filter(_.table == path))
   }
 }
 
@@ -115,10 +120,18 @@ object SnapshotDataSource {
   }
 }
 
+/** `resolved` is the snapshot `tableSchema` was read from, when there
+  * is one; every scan of this table reads that one snapshot (resolved
+  * at the first scan otherwise — a write never resolves it), so an
+  * unversioned DataFrame keeps reading the version it was loaded at.
+  */
 private[v2] class SnapshotV2Table(path: String, version: Option[Int],
-                                  tableSchema: StructType)
+                                  tableSchema: StructType,
+                                  resolved: Option[SnapshotTable.Snapshot] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
+
+  private lazy val snapshot = resolved.getOrElse(SnapshotTable.pin(path, version))
 
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     filters.forall(f => FilterColumns.toColumn(f).isDefined)
@@ -150,12 +163,12 @@ private[v2] class SnapshotV2Table(path: String, version: Option[Int],
     * loudly instead, like `SnapshotTable.merge`.
     */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val mapping = SnapshotTable.columnMappingOf(path, version)
+    val mapping = snapshot.mapping
     require(mapping.isEmpty,
       s"reading a column-mapped table through graft-snapshot is not supported " +
         s"yet ($path renames ${mapping.keys.toSeq.sorted.mkString(", ")}) - " +
         "use SnapshotTable.read")
-    new SnapshotScanBuilder(SparkSession.active, path, version, tableSchema, options)
+    new SnapshotScanBuilder(SparkSession.active, snapshot, tableSchema, options)
   }
 
   /** Write path via the V1Write bridge: the insert maps straight onto
@@ -185,8 +198,8 @@ private[v2] class SnapshotV2Table(path: String, version: Option[Int],
   * Catalyst pushes filters before aggregates and column pruning, so
   * the file list is settled by then.
   */
-private[v2] class SnapshotScanBuilder(spark: SparkSession, table: String,
-                                      version: Option[Int],
+private[v2] class SnapshotScanBuilder(spark: SparkSession,
+                                      snapshot: SnapshotTable.Snapshot,
                                       tableSchema: StructType,
                                       options: CaseInsensitiveStringMap)
     extends ScanBuilder
@@ -199,11 +212,12 @@ private[v2] class SnapshotScanBuilder(spark: SparkSession, table: String,
 
   private def ensureInner(): ParquetScanBuilder = {
     if (inner == null) {
+      require(snapshot.exists, s"no committed version in ${snapshot.table}")
       val ranges = SnapshotPredicates.ranges(filterExprs)
       // equality/IN probes additionally consult manifest blooms — the
       // SQL path gets the q122 plan-time file skipping transparently
       val probes = SnapshotPredicates.probes(filterExprs)
-      val sized = SnapshotTable.sizedFilesForRead(table, version, ranges, probes)
+      val sized = snapshot.sizedFiles(ranges, probes)
       // manifest-built index when every entry carries its size (zero
       // storage round-trips at plan time — the programmatic read()'s
       // contract); pre-size manifests fall back to a listed index
@@ -242,7 +256,7 @@ private[v2] class SnapshotScanBuilder(spark: SparkSession, table: String,
     ensureInner().supportCompletePushDown(aggregation)
 
   override def build(): Scan =
-    SnapshotScan(spark, table, tableSchema, options, ensureInner().build())
+    SnapshotScan(spark, snapshot.table, tableSchema, options, ensureInner().build())
 }
 
 /** Catalyst predicate → manifest [[ColRange]] translation. Strict

@@ -62,6 +62,12 @@ object GraftShim {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** The session's Hadoop conf: the SparkContext's (already parsed)
+    * conf plus the session's `spark.hadoop.*` overrides.
+    */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConf()
+
   /** DataFrame over an EXPLICIT parquet file list with KNOWN sizes:
     * the caller's (manifest-derived) file index is handed to the
     * planner as-is, so planning performs ZERO storage round-trips —

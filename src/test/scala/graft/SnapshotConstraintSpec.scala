@@ -1,8 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, ExecutionException, Executors, TimeUnit}
 import graft.sources.SnapshotTable
 import org.apache.spark.sql.functions._
+
+/** Latches a test UDF uses to park an append's write task until the
+  * main thread has committed a concurrent DDL (local mode: executor
+  * tasks run in this JVM).
+  */
+object AppendRace {
+  @volatile var entered = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
+}
 
 /** CHECK constraints on the snapshot table — the Delta ALTER TABLE
   * ADD CONSTRAINT contract: vet existing data on add, reject
@@ -89,5 +99,39 @@ class SnapshotConstraintSpec extends SparkSpec {
     SnapshotTable.merge(spark, t, Seq((1, 9.0)).toDF("id", "kwh"), "id",
       whenMatchedUpdate = Map("kwh" -> col("kwh")))
     assert(SnapshotTable.read(spark, t).count() == 2)
+  }
+
+  test("a CHECK committed while an append is in flight aborts the append") {
+    val t = Files.createTempDirectory("graft_cons_race").toString + "/t"
+    SnapshotTable.append(Seq((1, 10.0)).toDF("id", "kwh"), t)
+    AppendRace.entered = new CountDownLatch(1)
+    AppendRace.release = new CountDownLatch(1)
+    // the batch's kwh comes from a UDF that parks the write until the
+    // CHECK has committed: the batch was vetted on v0, which had none
+    val park = udf { (x: Double) =>
+      AppendRace.entered.countDown()
+      AppendRace.release.await(120, TimeUnit.SECONDS)
+      x
+    }
+    val batch = spark.range(1).select(lit(2).as("id"), park(lit(-5.0)).as("kwh"))
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val append = pool.submit(new java.util.concurrent.Callable[Int] {
+        def call(): Int = SnapshotTable.append(batch, t)
+      })
+      assert(AppendRace.entered.await(120, TimeUnit.SECONDS), "the write never started")
+      assert(SnapshotTable.addConstraint(spark, t, "kwh_pos", "kwh > 0") == 1)
+      AppendRace.release.countDown()
+      val e = intercept[ExecutionException](append.get(120, TimeUnit.SECONDS))
+      assert(e.getCause.isInstanceOf[java.util.ConcurrentModificationException],
+        s"expected a metadata-conflict abort, got ${e.getCause}")
+      // the unvetted row never landed
+      assert(SnapshotTable.currentVersion(t).contains(1))
+      assert(SnapshotTable.read(spark, t).as[(Int, Double)].collect().toSeq
+        == Seq((1, 10.0)))
+    } finally {
+      AppendRace.release.countDown()
+      pool.shutdownNow()
+    }
   }
 }

@@ -127,6 +127,33 @@ class SnapshotDsv2Spec extends SparkSpec {
     val feb = all.filter($"ts" >= lit("2024-02-01") && $"ts" < lit("2024-03-01"))
     assert(scannedFiles(feb) == 1, "month query must open only February's file")
     assert(feb.select($"id").as[Int].collect().toSet == Set(3, 4))
+
+    // a TIMESTAMP nested in a struct is written as INT64 micros too:
+    // only then does the footer carry stats for it (INT96 has none)
+    val nested = newTable("dsv2_ts_nested")
+    Seq(("2024-01-01", "2024-01-31"), ("2024-02-01", "2024-02-28"),
+        ("2024-03-01", "2024-03-31")).zipWithIndex.foreach { case ((lo, hi), i) =>
+      SnapshotTable.append(Seq((2 * i + 1, day(lo)), (2 * i + 2, day(hi)))
+        .toDF("id", "ts").select($"id", struct($"ts").as("s")).coalesce(1), nested)
+    }
+    def micros(d: String) = day(d).getTime * 1000L
+    val febRange = SnapshotTable.ColRange("s.ts",
+      Some(micros("2024-02-01")), Some(micros("2024-02-29")))
+    assert(SnapshotTable.filesForRead(nested, prune = Seq(febRange)).size == 1,
+      "nested micros footer stats must prune to February's file")
+    assert(spark.read.format("graft-snapshot").load(nested)
+      .filter($"s.ts" >= lit("2024-02-01") && $"s.ts" < lit("2024-03-01"))
+      .select($"id").as[Int].collect().toSet == Set(3, 4))
+  }
+
+  test("an unversioned DataFrame keeps reading the version it was loaded at") {
+    val t = newTable("dsv2_pin")
+    SnapshotTable.append(Seq((1, "a")).toDF("id", "v"), t)
+    val loaded = spark.read.format("graft-snapshot").load(t)
+    SnapshotTable.append(Seq((2, "b")).toDF("id", "v"), t)
+    assert(loaded.as[(Int, String)].collect().toSet == Set((1, "a")))
+    // a fresh load resolves the new latest
+    assert(spark.read.format("graft-snapshot").load(t).count() == 2)
   }
 
   test("column pruning and parquet row-group pushdown reach the inner scan") {

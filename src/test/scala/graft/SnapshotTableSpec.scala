@@ -1,6 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+
+import graft.core.EnergyIngest
 import graft.sources.SnapshotTable
 
 class SnapshotTableSpec extends SparkSpec {
@@ -134,6 +140,25 @@ class SnapshotTableSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
+  /** Jobs started and shuffle bytes written while `body` runs. */
+  private def jobsAndShuffle[A](body: => A): (A, Int, Long) = {
+    val jobs = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark, 30000L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark, 30000L)
+      (out, jobs.get, shuffleBytes.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("compaction bin-packs small files; content identical; old snapshot intact") {
     val t = Files.createTempDirectory("graft_snap5").toString + "/t"
     // 4 appends x 2 files each = 8 small files
@@ -142,8 +167,12 @@ class SnapshotTableSpec extends SparkSpec {
         spark.range(i * 100, (i + 1) * 100).selectExpr("id").repartition(2), t))
     val before = SnapshotTable.filesForRead(t)
     assert(before.size == 8)
-    val v = SnapshotTable.compact(spark, t, targetFileBytes = 512L * 1024 * 1024)
+    val (v, jobs, shuffled) = jobsAndShuffle(
+      SnapshotTable.compact(spark, t, targetFileBytes = 512L * 1024 * 1024))
     assert(v.contains(4))
+    // one bin: the single writer task reads the small files directly
+    assert(shuffled == 0L, s"one-bin compaction shuffled $shuffled bytes")
+    assert(jobs == 1, s"one-bin compaction ran $jobs jobs")
     val after = SnapshotTable.filesForRead(t)
     assert(after.size == 1, s"expected 1 packed file, got ${after.size}")
     // identical content, and the pre-compaction snapshot still reads
@@ -155,6 +184,45 @@ class SnapshotTableSpec extends SparkSpec {
     // compaction keeps footer stats usable for pruning on the new file
     val pr = Seq(SnapshotTable.ColRange("id", lower = Some(0L), upper = Some(399L)))
     assert(SnapshotTable.filesForRead(t, prune = pr).size == 1)
+  }
+
+  test("multi-bin compaction still round-robins into one file per bin") {
+    val t = Files.createTempDirectory("graft_compact_multi").toString + "/t"
+    (0 until 4).foreach(i => SnapshotTable.append(
+      spark.range(i * 100, (i + 1) * 100).selectExpr("id").repartition(2), t))
+    // every small file under the target, their sum over it: several bins
+    val sizes = SnapshotTable.sizedFilesForRead(t).map(_._2)
+    val target = sizes.max + 1
+    val bins = math.ceil(sizes.sum.toDouble / target).toInt
+    assert(sizes.size == 8 && bins > 1)
+    val (v, _, shuffled) = jobsAndShuffle(
+      SnapshotTable.compact(spark, t, targetFileBytes = target))
+    assert(v.contains(4))
+    assert(SnapshotTable.filesForRead(t).size == bins)
+    assert(SnapshotTable.read(spark, t).as[Long].collect().sorted.toSeq == (0L until 400L))
+    assert(shuffled > 0L, "a multi-bin compaction round-robins its rows")
+  }
+
+  test("a second append of a same-shaped ingest batch compiles no classes") {
+    val dir = Files.createTempDirectory("graft_snap_codegen")
+    val t = dir.toString + "/t"
+    val header = EnergyIngest.rawSchema.fieldNames.mkString(",")
+    def batch(i: Int): String = {
+      val p = dir.resolve(s"batch$i.csv")
+      Files.write(p, (header +: (1 to 20).map(r =>
+        s"H${i * 100 + r},Fridge,${r * 0.5},10:00,01-0$i-2023,20,Winter,3"))
+        .mkString("\n").getBytes)
+      p.toString
+    }
+    def append(i: Int): Int =
+      SnapshotTable.append(EnergyIngest.ingest(spark, batch(i))._1, t)
+    append(1) // compiles the write's generated classes once
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    assert(append(2) == 1)
+    assert(compiles.getCount - before == 0L,
+      s"the second append compiled ${compiles.getCount - before} classes")
+    assert(SnapshotTable.read(spark, t).count() == 40)
   }
 
   test("schema evolution: appended columns project as null over old files") {
@@ -333,8 +401,10 @@ class SnapshotTableSpec extends SparkSpec {
       SnapshotTable.ColRange("id", Some(10L), Some(20L))))
     assert(noPrune.size == 4, "degraded layout: every file intersects")
 
-    val v = SnapshotTable.compact(spark, t, targetFileBytes = 4096, sortBy = Seq("id"))
+    val (v, _, shuffled) = jobsAndShuffle(
+      SnapshotTable.compact(spark, t, targetFileBytes = 4096, sortBy = Seq("id")))
     assert(v.isDefined)
+    assert(shuffled > 0L, "a sorted compaction range-partitions its rows")
     val total = SnapshotTable.filesForRead(t).size
     val pruned = SnapshotTable.filesForRead(t, prune = Seq(
       SnapshotTable.ColRange("id", Some(10L), Some(20L))))
