@@ -41,7 +41,8 @@ object EnergyApi {
 
   /** GET /api/DetectAnomalies (`ml_forecast_anomaly.py:145-234`):
     * optional HomeID/date filters -> daily feature pipeline -> scorer.
-    * One Catalyst DAG; groupBy and window share the HomeID exchange.
+    * One Catalyst DAG over one scan; over a snapshot read Spark plans as
+    * one split it has no exchange, so a request is one job.
     */
   def detectAnomalies(readings: DataFrame, homeId: Option[String] = None,
                       start: Option[String] = None,

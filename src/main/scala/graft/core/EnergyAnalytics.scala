@@ -74,17 +74,20 @@ object EnergyAnalytics {
     )
 
   /** J1 — per-home category totals vs global category averages
-    * (`Household_Energy_Analytics.py:57-58`): inner equi-join on the
-    * category; the right side is a tiny aggregate, so it is explicitly
-    * broadcast — at 100 TB the left side never shuffles for this join.
+    * (`Household_Energy_Analytics.py:57-58`), the reference's inner
+    * join of the two, as ONE grouped aggregate over one scan: a
+    * conditional sum and row count for the home beside the global
+    * average, keeping the (non-null) categories the home has rows in —
+    * exactly the categories the inner join kept.
     */
   def homeVsGlobalAvg(readings: DataFrame, homeId: String): DataFrame = {
-    val home = readings.filter(col("HomeID") === lit(homeId))
-      .groupBy("ApplianceType")
-      .agg(sum("EnergyConsumption").as("EnergyConsumption_Home"))
-    val globalAvg = readings.groupBy("ApplianceType")
-      .agg(avg("EnergyConsumption").as("EnergyConsumption_Avg"))
-    home.join(broadcast(globalAvg), Seq("ApplianceType"), "inner")
+    val isHome = col("HomeID") === lit(homeId)
+    readings.groupBy("ApplianceType")
+      .agg(sum(when(isHome, col("EnergyConsumption"))).as("EnergyConsumption_Home"),
+        avg("EnergyConsumption").as("EnergyConsumption_Avg"),
+        count(when(isHome, lit(1))).as("home_rows"))
+      .filter(col("ApplianceType").isNotNull && col("home_rows") > 0)
+      .drop("home_rows")
   }
 
   /** A2/A3 — group-sum by an arbitrary key (Season / Date daily rollup:

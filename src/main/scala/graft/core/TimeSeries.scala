@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * The reference densifies per home in an O(n_homes) driver-side Python
   * loop (`ml_forecast_anomaly.py:199-208`); here the whole thing is one
-  * distributed plan. The groupBy and the window both partition by the
-  * same key, so Catalyst reuses a single exchange (SURVEY §3 EP3).
+  * distributed plan (SURVEY §3 EP3).
   */
 object TimeSeries {
 
@@ -30,16 +29,28 @@ object TimeSeries {
 
   /** W2 — calendar densification (`ml_forecast_anomaly.py:199-208`):
     * per-key dense date spine [min, max], missing days zero-filled.
-    * `sequence + explode` generates the spine distributed; the left
-    * join is key-partitioned on both sides.
+    * One pass over `daily`, no join back: each row explodes into its
+    * own day plus the gap up to the key's next observed day (`lead`,
+    * in its own column: Spark rejects a window inside `explode`), and
+    * keeps its values on its own day only. The rows are those of the
+    * left join from a `[min, max]` spine: a NULL-date row is dropped, a
+    * NULL key's days carry no values (NULL never joins), and `na.fill`
+    * zeroes NaN as well as the gaps.
     */
   def densify(daily: DataFrame, key: String, fillCols: Seq[String]): DataFrame = {
-    val spine = daily
-      .groupBy(key)
-      .agg(min(col("Date")).as("lo"), max(col("Date")).as("hi"))
-      .select(col(key), explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("Date"))
-    spine
-      .join(daily, Seq(key, "Date"), "left")
+    val (k, d, next, day) = (col(key), col("Date"), col("__next"), col("__day"))
+    val end = coalesce(date_sub(next, 1), d)
+    val days = when(d.isNull, lit(null))
+      .when(end >= d, sequence(d, end, expr("interval 1 day")))
+      // a repeated (key, day): that row alone; for a NULL key, whose
+      // days carry no values, the last of the repeats spans the day
+      .when(k.isNotNull, array(d))
+    val values = daily.columns.toSeq.filterNot(Set(key, "Date")).map(c =>
+      when(k.isNotNull && day === d, col(c)).as(c))
+    daily
+      .withColumn("__next", lead(d, 1).over(Window.partitionBy(k).orderBy(d)))
+      .withColumn("__day", explode(days))
+      .select(k +: day.as("Date") +: values: _*)
       .na.fill(0, fillCols)
   }
 

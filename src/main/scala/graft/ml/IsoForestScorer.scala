@@ -18,10 +18,11 @@ import org.apache.spark.sql.functions._
   *   decision(x) = −score(x) − offset;  anomaly ⇔ decision < 0.
   *
   * The flattened tree ensemble (~150k int/double array slots) is
-  * broadcast once; scoring is a Scala UDF — O(avg depth · 200) per row,
-  * embarrassingly parallel, no shuffle. A UDF (not a codegen'd
-  * Expression) is the right cost point here: the array-walk dominates
-  * and boxing overhead is one struct per row.
+  * broadcast once per SparkContext (the first `scoreFeatures` call's
+  * broadcast serves every later call); scoring is a Scala UDF —
+  * O(avg depth · 200) per row, embarrassingly parallel, no shuffle. A
+  * UDF (not a codegen'd Expression) is the right cost point here: the
+  * array-walk dominates and boxing overhead is one struct per row.
   */
 object IsoForestScorer {
 
@@ -305,8 +306,7 @@ object IsoForestScorer {
   def scoreFeatures(df: DataFrame, features: Seq[String] = Seq(
       "total_kwh", "unique_appliances", "rolling_7_mean", "dow"),
       model: Model = bundled): DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
+    val bc = ContextBroadcast(df.sparkSession.sparkContext, model)(model)
     val scoreUdf = udf { (a: Double, b: Double, c: Double, d: Double) =>
       bc.value.decisionFunction(Array(a, b, c, d))
     }

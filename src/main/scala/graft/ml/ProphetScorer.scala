@@ -172,16 +172,20 @@ object ProphetScorer {
     *
     * The spine is generated distributed (`sequence`+`explode`); each
     * row's mean + interval is computed independently under a broadcast
-    * model — the plan scales linearly in `days` with no shuffle.
+    * model — the plan scales linearly in `days` with no shuffle. The
+    * model and the draws for each (horizon, seed) are broadcast once
+    * per SparkContext.
     */
   def forecast(spark: SparkSession, days: Int, homeId: Option[String] = None,
                seed: Long = 42L): DataFrame = {
     val model = bundled
-    val bc = spark.sparkContext.broadcast(model)
+    val sc = spark.sparkContext
+    val bc = ContextBroadcast(sc, model)(model)
     // per-sample future-trend draws are sample-level, not row-level:
-    // drawn once here (1000 tiny tuples), broadcast with the model
+    // drawn once per (horizon, seed) (1000 tiny tuples), broadcast
+    // beside the model
     val horizonT = ((model.historyEnd.plusDays(days).toEpochDay * 86400.0) - model.start) / model.tScale
-    val sims = spark.sparkContext.broadcast(
+    val sims = ContextBroadcast(sc, (model, horizonT, seed))(
       TrendSim.drawPortable(model, horizonT, seed))
 
     val quantUdf = udf { (epochSec: Double) =>

@@ -961,7 +961,8 @@ object SnapshotTable {
     */
   def overwrite(df: DataFrame, table: String): Int = {
     val base = latest(table)
-    val out = toPhysical(df, base.mapping)
+    // the CHECKs carry over into the new version, so they vet the batch
+    val out = prepareBatch(df, base)
     val newFiles = writeData(out, table)
     commitLoop(base)(_ => (Nil, newFiles, out.schema))
   }
@@ -977,6 +978,7 @@ object SnapshotTable {
   def upsert(spark: SparkSession, df: DataFrame, table: String, key: String): Int =
     retrying(latest(table), "upsert") { base =>
       val deduped = applyGenerated(df.dropDuplicates(key), base)
+      enforceConstraints(deduped, base)
       val (merged, schema) =
         if (!base.exists) (deduped, deduped.schema)
         else {
@@ -1037,7 +1039,9 @@ object SnapshotTable {
       // storage round-trips at plan time. `spark.read.parquet(paths*)`
       // stats every path to build its InMemoryFileIndex, O(files)
       // driver I/O that measured 16.7 s just to PLAN a 10k-file read
-      // (ManifestProbe, PLANS.md round 5); this path is flat.
+      // (ManifestProbe, PLANS.md round 5); this path is flat. A read
+      // Spark plans as one split comes back as one partition, so the
+      // operators above it plan no exchange.
       org.apache.spark.sql.GraftShim.manifestParquet(spark,
         files.map(fe =>
           (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size)),
@@ -1067,8 +1071,8 @@ object SnapshotTable {
     * conditional-count aggregation over the batch for ALL constraints;
     * example rows are fetched only on the failure path. Runs on every
     * data-adding commit (append, bloom-indexed/idempotent append,
-    * merge) — rewrite-only commits (delete, compact, Z-order) only
-    * reshuffle rows that already passed. The CHECKs are `base`'s, the
+    * overwrite, upsert, merge) — rewrite-only commits (delete, compact,
+    * Z-order) only reshuffle rows that already passed. The CHECKs are `base`'s, the
     * snapshot the commit builds on.
     */
   private def enforceConstraints(df: DataFrame, base: Snapshot): Unit = {

@@ -78,6 +78,13 @@ object GraftShim {
     * knows every file's size. Split planning, column pruning, filter
     * pushdown and AQE stats (sizeInBytes = manifest sum) all behave
     * exactly as with a listed index.
+    *
+    * When Spark's own split planning (`FilePartition.maxSplitBytes`,
+    * `getFilePartitions`) packs the files into ONE partition, the read
+    * comes back as `coalesce(1)`: the scan is one task either way, and
+    * the coalesce reports `SinglePartition`, so aggregates, windows and
+    * joins above it plan no exchange (AQE would shrink each of those
+    * shuffles to one task anyway, one stage boundary per operator).
     */
   def manifestParquet(spark: SparkSession,
                       files: Seq[(String, Long)],
@@ -118,7 +125,25 @@ object GraftShim {
     val relation = HadoopFsRelation(index, new types.StructType(),
       schema.asNullable, None, new parquet.ParquetFileFormat(), Map.empty)(
       spark.asInstanceOf[classic.SparkSession])
-    ofRows(spark, LogicalRelation(relation, isStreaming = false))
+    val df = ofRows(spark, LogicalRelation(relation, isStreaming = false))
+    if (filePartitions(spark, statuses) == 1) df.coalesce(1) else df
+  }
+
+  /** The number of partitions a file scan over `statuses` plans, by the
+    * same calls `FileSourceScanExec` makes (parquet is splittable).
+    */
+  private def filePartitions(spark: SparkSession,
+                             statuses: Seq[org.apache.hadoop.fs.FileStatus]): Int = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.PartitionedFileUtil
+    import org.apache.spark.sql.execution.datasources._
+    val files = statuses.map(FileStatusWithMetadata(_, Map.empty))
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, files)))
+    val splits = files.flatMap(f => PartitionedFileUtil.splitFiles(f,
+      f.getPath, isSplitable = true, maxSplit, InternalRow.empty))
+      .sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).size
   }
 
   /** Drain the async SparkListener bus (it is `private[spark]`) — for

@@ -33,11 +33,14 @@ class CodegenReuseSpec extends SparkSpec {
     }
   }
 
-  test("a repeated curation pass compiles at most a tenth of the first's classes") {
-    val first = compiled(curationPass())
+  // An absolute bound: how many classes the first pass compiles depends
+  // on what earlier suites left in the JVM-wide class cache, so a ratio
+  // to it moves with suite order. 14 is below every tenth-of-the-first
+  // bar seen (14.6 to 26).
+  test("a repeated curation pass compiles at most 14 classes") {
+    curationPass()
     val second = compiled(curationPass())
-    assert(second <= 0.1 * first,
-      s"first pass compiled $first classes, the identical second pass $second")
+    assert(second <= 14, s"the identical second pass compiled $second classes")
   }
 
   /** Three homes over Jan–Apr 2023, in the ingested readings' shape,

@@ -101,6 +101,30 @@ class SnapshotConstraintSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t).count() == 2)
   }
 
+  test("overwrite and upsert reject a batch that breaks a CHECK the new " +
+      "version carries") {
+    val t = Files.createTempDirectory("graft_cons4").toString + "/t"
+    SnapshotTable.append(Seq((1, 10.0)).toDF("id", "kwh"), t)
+    SnapshotTable.addConstraint(spark, t, "kwh_pos", "kwh > 0")
+    val before = SnapshotTable.currentVersion(t)
+    val bad = Seq((2, -5.0)).toDF("id", "kwh")
+    val eOver = intercept[IllegalArgumentException](
+      SnapshotTable.overwrite(bad, t))
+    assert(eOver.getMessage.contains("kwh_pos"))
+    val eUp = intercept[IllegalArgumentException](
+      SnapshotTable.upsert(spark, bad, t, "id"))
+    assert(eUp.getMessage.contains("kwh_pos"))
+    assert(SnapshotTable.currentVersion(t) == before)
+    assert(SnapshotTable.read(spark, t).as[(Int, Double)].collect().toSeq
+      == Seq(1 -> 10.0))
+    // passing batches still commit, and the constraint carries
+    SnapshotTable.upsert(spark, Seq((2, 5.0)).toDF("id", "kwh"), t, "id")
+    SnapshotTable.overwrite(Seq((3, 3.0)).toDF("id", "kwh"), t)
+    assert(SnapshotTable.read(spark, t).as[(Int, Double)].collect().toSeq
+      == Seq(3 -> 3.0))
+    assert(SnapshotTable.constraintsOf(t) == Map("kwh_pos" -> "kwh > 0"))
+  }
+
   test("a CHECK committed while an append is in flight aborts the append") {
     val t = Files.createTempDirectory("graft_cons_race").toString + "/t"
     SnapshotTable.append(Seq((1, 10.0)).toDF("id", "kwh"), t)

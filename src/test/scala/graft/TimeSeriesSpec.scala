@@ -66,6 +66,31 @@ class TimeSeriesSpec extends SparkSpec {
     assert(gap.getAs[Double]("total_kwh") == 0.0)
     // no duplicate days
     assert(dense.groupBy("HomeID", "Date").count().filter($"count" > 1).isEmpty)
+
+    // the rows of the spine-join formulation, edge inputs included: a
+    // NULL key (its days, values zeroed), NULL dates (dropped), NaN
+    // (zeroed), a single-day key, and a repeated (key, day)
+    def spineJoin(in: org.apache.spark.sql.DataFrame) = in
+      .groupBy("HomeID").agg(min($"Date").as("lo"), max($"Date").as("hi"))
+      .select($"HomeID", explode(sequence($"lo", $"hi", expr("interval 1 day"))).as("Date"))
+      .join(in, Seq("HomeID", "Date"), "left")
+      .na.fill(0, Seq("total_kwh"))
+    val d = (s: String) => Option(s).map(Date.valueOf).orNull
+    val edges = daily.unionByName(Seq[(String, Date, Double, String)](
+      (null, d("2023-03-01"), 7.0, "x"), (null, d("2023-03-04"), 8.0, "y"),
+      (null, d("2023-03-04"), 9.0, "z"), (null, null, 1.0, "w"),
+      ("h3", null, 2.0, "v"), ("h4", null, 4.0, "u"), ("h4", d("2023-04-01"), 3.0, "t"),
+      ("h4", d("2023-04-03"), Double.NaN, "s"), ("h5", d("2023-05-05"), 5.0, "r"),
+      ("h6", d("2023-06-01"), 1.0, "q"), ("h6", d("2023-06-01"), 2.0, "p"),
+      ("h6", d("2023-06-03"), 3.0, "o")
+    ).toDF("HomeID", "Date", "total_kwh", "tag"), allowMissingColumns = true)
+    val got = TimeSeries.densify(edges, "HomeID", Seq("total_kwh"))
+    val want = spineJoin(edges)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want))
+    assert(rows(got.filter($"HomeID".isNull)).size == 4) // Mar 1..4, once each
+    assert(rows(got.filter($"HomeID" === "h6")).size == 4) // Jun 1 twice, 2, 3
   }
 
   test("rolling 7 mean: shrinking frame matches pandas min_periods=1") {

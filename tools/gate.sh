@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Full local gate: compile, tests, benchmark unit tests, one short
-# ingest benchmark run, t1-style raw-session smoke, t2 correctness
-# (Verify at sf0.01 + DuckDB oracle replay), bench.
+# ingest and one short api benchmark run, t1-style raw-session smoke,
+# t2 correctness (Verify at sf0.01 + DuckDB oracle replay), bench.
 # Usage: tools/gate.sh [--bench] [--sf0.1] [--probe10x]
 #   --bench    also run the sf0.1 bench and check BENCH_BUDGET drift
 #   --sf0.1    also replay EVERY oracle at sf0.1 (the second-SF audit —
@@ -18,17 +18,27 @@ sbt -batch test | grep -E "Tests: |error" | tail -2
 echo "== benchmark unit tests =="
 python3 -m unittest discover -s perfbench -p 'test_*.py' 2>&1 | tail -1
 
-echo "== benchmark: one short ingest run =="
-# read-after-write freshness and reject counts, end to end: the run's
-# last line must say every operation was checked correct, none failed
-last=$(python3 perfbench/run.py --workload ingest --seed 1 --seconds 3 --trace 0 | tail -1)
-python3 -c '
+# one short run per workload below: the run's last line must say every
+# operation was checked correct, none failed
+smoke() {
+  local last
+  last=$(python3 perfbench/run.py --workload "$1" --seed 1 --seconds 3 --trace 0 | tail -1)
+  python3 -c '
 import json, sys
-r = json.loads(sys.argv[1])
+r = json.loads(sys.argv[2])
 ok = r.get("correct") is True and r.get("failed") == 0
-print("ingest: correct=%s failed=%s attempted=%s -> %s"
-      % (r.get("correct"), r.get("failed"), r.get("attempted"), "OK" if ok else "FAIL"))
-sys.exit(0 if ok else 1)' "$last"
+print("%s: correct=%s failed=%s attempted=%s -> %s"
+      % (sys.argv[1], r.get("correct"), r.get("failed"), r.get("attempted"), "OK" if ok else "FAIL"))
+sys.exit(0 if ok else 1)' "$1" "$last"
+}
+
+echo "== benchmark: one short ingest run =="
+# read-after-write freshness and reject counts, end to end
+smoke ingest
+
+echo "== benchmark: one short api run =="
+# every endpoint's rows checked against the generator's tallies
+smoke api
 
 echo "== tools unit tests =="
 python3 -m unittest discover -s tools -p 'test_*.py' 2>&1 | tail -1
