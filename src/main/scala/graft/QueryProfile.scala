@@ -9,7 +9,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
@@ -24,7 +24,8 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *    write command's own planning.
   *
   * One `SparkListener` counts jobs, stages, tasks, executor time,
-  * shuffle and spill bytes; Spark's codegen metrics count the classes
+  * shuffle and spill bytes, and the task skew of the heaviest stage;
+  * Spark's codegen metrics count the classes
   * Janino compiled (a plan shape already in the JVM-wide cache compiles
   * none); one sampler thread aggregates the stacks of the driver thread
   * and of busy executor task threads.
@@ -45,6 +46,7 @@ object QueryProfile {
       query: String, buildMs: Long, planMs: Long, execMs: Long,
       jobs: Int, stages: Int, tasks: Int, runMs: Long, cpuMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+      heavyStageMaxMs: Long, heavyStageMedianMs: Long,
       codegenCompiles: Long, persistedRddsLeft: Int, cacheNonEmpty: Boolean,
       timeline: Seq[Job], plan: String,
       driverFrames: Seq[(String, Int)], executorFrames: Seq[(String, Int)]) {
@@ -58,6 +60,8 @@ object QueryProfile {
         s"tasks=$tasks run_ms=$runMs cpu_ms=$cpuMs " +
         s"shuffle_read_bytes=$shuffleReadBytes " +
         s"shuffle_write_bytes=$shuffleWriteBytes spill_bytes=$spillBytes " +
+        s"heavy_stage_max_ms=$heavyStageMaxMs " +
+        s"heavy_stage_median_ms=$heavyStageMedianMs " +
         s"codegen_compiles=$codegenCompiles " +
         s"persisted_rdds_left=$persistedRddsLeft " +
         s"cache_nonempty=$cacheNonEmpty\n"
@@ -73,6 +77,8 @@ object QueryProfile {
   private final class Listener extends SparkListener {
     val stages, tasks, runMs, cpuNs, shuffleRead, shuffleWrite, spill =
       new AtomicLong
+    /** task run times (ms) per stage id */
+    val taskMs = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
     private val starts = new ConcurrentHashMap[Int, (Long, String)]()
     private val sqlSites = new ConcurrentHashMap[String, String]()
     /** (job id, start epoch ms, end epoch ms, call site) */
@@ -103,11 +109,22 @@ object QueryProfile {
       tasks.incrementAndGet()
       Option(e.taskMetrics).foreach { m =>
         runMs.addAndGet(m.executorRunTime)
+        taskMs.computeIfAbsent(e.stageId, _ => new ConcurrentLinkedQueue[Long]())
+          .add(m.executorRunTime)
         cpuNs.addAndGet(m.executorCpuTime)
         shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
         spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
+    }
+
+    /** Task max and median run time (ms) of the stage with the most run
+      * time among those of at least 8 tasks (fewer have no skew to
+      * measure); (0, 0) when there is none.
+      */
+    def heavyStage: (Long, Long) = {
+      val ts = taskMs.values.asScala.map(_.asScala.toSeq.sorted).filter(_.size >= 8)
+      if (ts.isEmpty) (0L, 0L) else { val h = ts.maxBy(_.sum); (h.last, h(h.size / 2)) }
     }
   }
 
@@ -152,9 +169,15 @@ object QueryProfile {
     * listener and the sampler. Leaves whatever the query persisted in
     * place and counts it as `persistedRddsLeft`.
     */
-  def record(spark: SparkSession, query: String, dir: String): Record = {
+  def record(spark: SparkSession, query: String, dir: String): Record =
+    record(spark, query, SparkEntry.queries(query)(spark, _), dir)
+
+  /** [[record]] for any DataFrame builder: `build(dir)` is the build
+    * layer, and the record carries `label` as its query name.
+    */
+  def record(spark: SparkSession, label: String,
+      build: String => DataFrame, dir: String): Record = {
     val sc = spark.sparkContext
-    val build = SparkEntry.queries(query)
     spark.sharedState.cacheManager.clearCache()
     val rddsBefore = sc.getPersistentRDDs.keySet
     // events of earlier jobs must not reach the new listener
@@ -171,7 +194,7 @@ object QueryProfile {
     val compilesBefore = compiles.getCount
     val df = try {
       mark()
-      val df = build(spark, dir)
+      val df = build(dir)
       mark()
       df.queryExecution.executedPlan
       mark()
@@ -192,10 +215,12 @@ object QueryProfile {
           .collectFirst { case (p, end) if t0 < end => p }.getOrElse("exec")
         Job(id, t1 - t0, phase, site)
     }
-    Record(query, buildMs, planMs, execMs,
+    val (heavyMax, heavyMedian) = listener.heavyStage
+    Record(label, buildMs, planMs, execMs,
       timeline.size, listener.stages.get.toInt, listener.tasks.get.toInt,
       listener.runMs.get, listener.cpuNs.get / 1000000L,
       listener.shuffleRead.get, listener.shuffleWrite.get, listener.spill.get,
+      heavyMax, heavyMedian,
       compiles.getCount - compilesBefore,
       sc.getPersistentRDDs.keys.count(id => !rddsBefore(id)),
       !spark.sharedState.cacheManager.isEmpty,

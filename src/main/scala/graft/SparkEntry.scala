@@ -4173,7 +4173,7 @@ object SparkEntry {
 
     // the CAPPED prefix-Jaccard path (maxDf drops hot prefix postings
     // from candidate generation — the linear-scale hook on a clone-
-    // heavy corpus, SkewProbe-measured): on this corpus no prefix
+    // heavy corpus, measured by `ScaleProbe skew`): on this corpus no prefix
     // posting exceeds 64 docs, so the capped result is pinned to the
     // SAME exact oracle as the lossless q253 while the gate exercises
     // the capped code path (the q94/q95 capped-gate discipline)

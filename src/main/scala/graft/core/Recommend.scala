@@ -45,8 +45,8 @@ object Recommend {
     *
     * The default is EXACT (no cap): a cap silently turns intersection
     * counts into lower bounds, which a caller must opt into knowingly.
-    * At production scale pass an explicit cap (500 holds the SkewProbe
-    * power-user corpus at 1.1× task skew where uncapped rides 13.3×).
+    * At production scale pass an explicit cap (500 holds the `ScaleProbe
+    * skew` power-user corpus at 1.1× task skew where uncapped rides 13.3×).
     */
   def itemItemSim(ui: DataFrame, userCol: String, itemCol: String,
                   minSupport: Long = 2L,

@@ -928,9 +928,9 @@ object SnapshotTable {
   }
 
   /** Append PRE-BUILT manifest entries (no data write) — the seam the
-    * chunked-manifest spec and `ManifestProbe`'s synthetic mode use to
-    * exercise commit/plan cost at file counts that would take hours to
-    * write for real. Entries must reference files under `data/` if the
+    * chunked-manifest spec uses to exercise commit/plan cost at file
+    * counts that would take hours to write for real (real commits at
+    * scale: the `snap` rows of `ScaleProbe 10`). Entries must reference files under `data/` if the
     * table will be READ; planning alone never touches storage.
     */
   private[graft] def appendEntries(table: String, entries: Seq[FileEntry],
@@ -1039,7 +1039,8 @@ object SnapshotTable {
       // storage round-trips at plan time. `spark.read.parquet(paths*)`
       // stats every path to build its InMemoryFileIndex, O(files)
       // driver I/O that measured 16.7 s just to PLAN a 10k-file read
-      // (ManifestProbe, PLANS.md round 5); this path is flat. A read
+      // (PLANS.md round 5); this path is flat (`ScaleProbe 10`'s `snap
+      // pruned scan` row measures it at 10x). A read
       // Spark plans as one split comes back as one partition, so the
       // operators above it plan no exchange.
       org.apache.spark.sql.GraftShim.manifestParquet(spark,

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.GraftShim
+import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.functions._
 
 /** The per-query profiler: layer times fit inside the wall time, the
   * listener counts are consistent, build-time jobs are attributed to
@@ -12,14 +13,17 @@ class QueryProfileSpec extends SparkSpec {
     * call and the RDDs it left persisted. Releases those RDDs and the
     * cache so the shared session stays clean for other suites.
     */
-  private def profile(q: String): (QueryProfile.Record, Long, Int) = {
+  private def profile(q: String): (QueryProfile.Record, Long, Int) =
+    profileWith(QueryProfile.record(spark, q, Sf0001))
+
+  private def profileWith(run: => QueryProfile.Record): (QueryProfile.Record, Long, Int) = {
     val sc = spark.sparkContext
     // record clears the cache first; take the same baseline here
     spark.sharedState.cacheManager.clearCache()
     val before = sc.getPersistentRDDs.keySet
     val listeners = GraftShim.listenerCount(spark)
     val t0 = System.nanoTime()
-    val r = QueryProfile.record(spark, q, Sf0001)
+    val r = run
     val wallMs = (System.nanoTime() - t0) / 1000000L
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     left.values.foreach(_.unpersist(blocking = true))
@@ -56,5 +60,32 @@ class QueryProfileSpec extends SparkSpec {
     assert(second.codegenCompiles >= 0 &&
       second.codegenCompiles <= first.codegenCompiles,
       s"${first.report}\n${second.report}")
+  }
+
+  private def built(build: String => DataFrame): QueryProfile.Record =
+    profileWith(QueryProfile.record(spark, "built", build, Sf0001))._1
+
+  test("the builder form counts what the query-name form counts") {
+    profile("q01_pricing_summary") // warm
+    val (byName, _, _) = profile("q01_pricing_summary")
+    val byBuilder = built(SparkEntry.queries("q01_pricing_summary")(spark, _))
+    assert(byBuilder.query == "built")
+    assert((byBuilder.jobs, byBuilder.stages, byBuilder.tasks) ==
+      (byName.jobs, byName.stages, byName.tasks),
+      s"${byName.report}\n${byBuilder.report}")
+  }
+
+  test("heavy stage: task max >= median > 0 on a stage of 16 tasks") {
+    val r = built(_ => spark.range(0L, 16L * 2000000L, 1L, 16)
+      .select(sum(xxhash64(col("id"), col("id") * 7))))
+    assert(r.heavyStageMedianMs > 0, r.report)
+    assert(r.heavyStageMaxMs >= r.heavyStageMedianMs, r.report)
+    assert(r.report.contains(s"heavy_stage_max_ms=${r.heavyStageMaxMs} "), r.report)
+  }
+
+  test("heavy stage: 0 when every stage has fewer than 8 tasks") {
+    val r = built(_ => spark.range(0L, 100000L, 1L, 2).select(sum(col("id"))))
+    assert(r.tasks > 0, r.report)
+    assert((r.heavyStageMaxMs, r.heavyStageMedianMs) == (0L, 0L), r.report)
   }
 }

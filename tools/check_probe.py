@@ -6,11 +6,13 @@ Usage:
     python3 tools/check_probe.py PROBE_BUDGET.json /tmp/probe.log
     python3 tools/check_probe.py --refresh PROBE_BUDGET.json /tmp/probe.log
 
-Parses `[scale-probe] <label> sf0.1=Xs 10x=Ys ratio=R` lines and
-compares each label's ratio to its budgeted maximum. A documented-
-linear path exceeding its budget is a GATE failure — the probe curve
-is enforced, not remembered (the same promotion gate.sh --sf0.1 gave
-the second-SF oracle audit). Labels absent from the budget are
+Parses `[scale-probe] <label> sf0.1=Xs 10x=Ys ratio=R` lines (fields
+after the ratio are ignored, and a `100x=` or `skew=` line is not a 10x
+row) and compares each label's ratio to its budgeted maximum. A
+`[scale-probe] <label> FAILED: <msg>` line fails the gate and names the
+label. A documented-linear path exceeding its budget is a GATE
+failure — the probe curve is enforced, not remembered (the same
+promotion gate.sh --sf0.1 gave the second-SF oracle audit). Labels absent from the budget are
 reported informationally (known-quadratic exact baselines are
 deliberately unbudgeted). Sub-second sf0.1 times get an absolute
 floor: ratio = big/small explodes on scheduler jitter when small is
@@ -31,16 +33,21 @@ ABS_SLACK = 2.0  # seconds of absolute growth forgiven beyond the ratio
 LINE = re.compile(
     r"\[scale-probe\]\s+(.+?)\s+sf0\.1=\s*([0-9.]+)s\s+10x=\s*([0-9.]+)s"
     r"\s+ratio=\s*([0-9.]+)")
+FAILED = re.compile(r"\[scale-probe\]\s+(.+?)\s+FAILED:")
 
 
 def parse(lines):
-    out = {}
+    """(label -> (small, big, ratio), labels that FAILED)"""
+    out, failed = {}, set()
     for ln in lines:
         m = LINE.search(ln)
         if m:
             out[m.group(1).strip()] = (float(m.group(2)), float(m.group(3)),
                                        float(m.group(4)))
-    return out
+        f = FAILED.search(ln)
+        if f:
+            failed.add(f.group(1).strip())
+    return out, failed
 
 
 def main():
@@ -50,10 +57,10 @@ def main():
     budget_path = args[0]
     if len(args) > 1:
         with open(args[1]) as f:
-            rows = parse(f.readlines())
+            rows, failed = parse(f.readlines())
     else:
-        rows = parse(sys.stdin.readlines())
-    if not rows:
+        rows, failed = parse(sys.stdin.readlines())
+    if not rows and not failed:
         print("check_probe: no [scale-probe] lines found", file=sys.stderr)
         sys.exit(2)
 
@@ -92,7 +99,9 @@ def main():
               f"{small:.2f}s -> {big:.2f}s){tag}")
         if over:
             drift.append(label)
-    missing = sorted(set(budget) - set(rows))
+    for label in sorted(failed):
+        print(f"  FAILED {label} — the probe threw on this label")
+    missing = sorted(set(budget) - set(rows) - failed)
     for label in missing:
         print(f"  MISSING {label} — budgeted but not probed")
     # every >10x budget must carry a provenance class (VERDICT r15 #3:
@@ -104,9 +113,10 @@ def main():
         print(f"  NOCLASS {label} — budget {budget[label]}x > 10 needs a "
               f"provenance class (exact-face / by-design-product / "
               f"linear-headroom / needs-fix)")
-    if drift or missing or unclassified:
+    if drift or missing or unclassified or failed:
         print(f"check_probe: FAIL ({len(drift)} drift, {len(missing)} "
-              f"missing, {len(unclassified)} unclassified)")
+              f"missing, {len(unclassified)} unclassified)"
+              + (f", {len(failed)} failed" if failed else ""))
         sys.exit(1)
     print(f"check_probe: OK ({len(rows)} labels, "
           f"{len(budget)} budgeted, {len(classes)} classed)")

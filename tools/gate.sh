@@ -6,9 +6,12 @@
 #   --bench    also run the sf0.1 bench and check BENCH_BUDGET drift
 #   --sf0.1    also replay EVERY oracle at sf0.1 (the second-SF audit —
 #              scale coverage enforced, not remembered)
-#   --probe10x also run the 10x ScaleProbe and fail on super-linear
-#              growth of any documented-linear path (PROBE_BUDGET.json
-#              — the probe curve enforced, not remembered)
+#   --probe10x also run ScaleProbe's default 10x variant and fail on
+#              super-linear growth of any documented-linear path
+#              (PROBE_BUDGET.json — the probe curve enforced, not
+#              remembered) or on any label that throws; the `100` and
+#              `skew` variants (runMain graft.ScaleProbe 100|skew) record
+#              without a gate
 set -euo pipefail
 cd "$(dirname "$0")/.."
 

@@ -14,9 +14,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 SCRIPT = os.path.join(HERE, "check_probe.py")
 
 
-def probe_line(label, small, big):
+def probe_line(label, small, big, scale="10x", tail=""):
     return (f"[info] [scale-probe] {label} sf0.1={small:.2f}s "
-            f"10x={big:.2f}s ratio={big / small:.1f}\n")
+            f"{scale}={big:.2f}s ratio={big / small:.1f}{tail}\n")
 
 
 class CheckProbeTest(unittest.TestCase):
@@ -89,6 +89,37 @@ class CheckProbeTest(unittest.TestCase):
                             probe_line("q_exact", 1.0, 90.0)])
         self.assertEqual(r.returncode, 0, r.stdout)
         self.assertIn("(info) q_exact", r.stdout)
+
+    def test_trailing_fields_do_not_change_the_parse(self):
+        tail = (" stages=7->9 shuffle_bytes=1200->98000"
+                " heavy_ms=40/12->390/120")
+        r = self.run_probe({"q1_scan": 6.0},
+                           [probe_line("q1_scan", 1.0, 5.0, tail=tail)])
+        self.assertEqual(r.returncode, 0, r.stdout)
+        self.assertIn("ok    q1_scan", r.stdout)
+        self.assertIn("ratio    5.0x (max 6.0x, 1.00s -> 5.00s)", r.stdout)
+
+    def test_a_100x_line_is_not_a_10x_row(self):
+        # recorded by the 100x battery, never gated: a 90x ratio on a
+        # budgeted label must neither drift nor count as probed
+        r = self.run_probe({"q1_scan": 6.0, "q_big": 6.0},
+                           [probe_line("q1_scan", 1.0, 5.0),
+                            probe_line("q_big", 1.0, 90.0, scale="100x")])
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertNotIn("DRIFT", r.stdout)
+        self.assertIn("MISSING q_big", r.stdout)
+
+    def test_a_failed_label_fails_the_gate_and_is_named(self):
+        r = self.run_probe({"q1_scan": 6.0, "q_boom": 6.0},
+                           [probe_line("q1_scan", 1.0, 5.0),
+                            "[info] [scale-probe] q_boom FAILED: boom\n",
+                            "[info] [scale-probe] q_free FAILED: gone\n"])
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("FAILED q_boom", r.stdout)
+        self.assertIn("FAILED q_free", r.stdout)
+        self.assertNotIn("MISSING q_boom", r.stdout)
+        self.assertIn("(0 drift, 0 missing, 0 unclassified), 2 failed",
+                      r.stdout)
 
 
 if __name__ == "__main__":
