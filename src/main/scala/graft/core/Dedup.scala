@@ -75,7 +75,21 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, threshold: Double = 0.5,
-                        maxDf: Int = Int.MaxValue): DataFrame = {
+                        maxDf: Int = Int.MaxValue): DataFrame =
+    sharedShingleCounts(df, idCol, textCol, n, maxDf)
+      .withColumn("jaccard",
+        col("n_common").cast("double")
+          / (col("n_a") + col("n_b") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+
+  /** Candidate pairs with their shingle counts: (doc_a, doc_b, n_a,
+    * n_b, n_common) for every pair sharing a shingle whose posting
+    * list holds at most `maxDf` documents. The candidate block of
+    * [[ngramJaccardPairs]] and [[containmentPairs]].
+    */
+  private def sharedShingleCounts(df: DataFrame, idCol: String, textCol: String,
+                                  n: Int, maxDf: Int): DataFrame = {
     // Fanout rationale: see prefixJaccardPairs
     val sh = Fanout.ensure(df).select(col(idCol).as("doc"),
       shingles(col(textCol), n).as("sh"))
@@ -88,7 +102,7 @@ object Dedup {
     // shingled the corpus twice and shuffled three times. Posting-list
     // skew is bounded: a stop-shingle with document frequency d emits
     // d^2/2 combos, so extreme-DF shingles should be filtered upstream
-    // by the caller at web scale (maxDf hook below).
+    // by the caller at web scale (the maxDf hook).
     val byShingle = inv.groupBy("shingle")
       .agg(collect_list(struct(col("doc"), col("n_sh"))).as("ds"))
       .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
@@ -101,15 +115,9 @@ object Dedup {
         graft.expressions.PairCombinations(
           org.apache.spark.sql.GraftShim.expression(col("ds"))))
         .as(Seq("doc_a", "n_a", "doc_b", "n_b")))
-    val pairs = combos
+    combos
       .groupBy(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("n_common"))
-    pairs
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
   /** Prefix-filtered exact Jaccard pairs — the AllPairs/PPJoin
@@ -247,24 +255,8 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, thresholdMicro: Long = 800000L,
-                       maxDf: Int = Int.MaxValue): DataFrame = {
-    // Fanout rationale: see prefixJaccardPairs
-    val sh = Fanout.ensure(df).select(col(idCol).as("doc"),
-      shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val inv = sh.select(col("doc"), col("n_sh"), explode(col("sh")).as("shingle"))
-    val byShingle = inv.groupBy("shingle")
-      .agg(collect_list(struct(col("doc"), col("n_sh"))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
-      .select(array_sort(col("ds")).as("ds"))
-    val combos = byShingle.select(
-      org.apache.spark.sql.GraftShim.column(
-        graft.expressions.PairCombinations(
-          org.apache.spark.sql.GraftShim.expression(col("ds"))))
-        .as(Seq("doc_a", "n_a", "doc_b", "n_b")))
-    combos
-      .groupBy(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"))
-      .agg(count(lit(1)).as("n_common"))
+                       maxDf: Int = Int.MaxValue): DataFrame =
+    sharedShingleCounts(df, idCol, textCol, n, maxDf)
       .withColumn("contain_a_micro", expr("n_common * 1000000 DIV n_a"))
       .withColumn("contain_b_micro", expr("n_common * 1000000 DIV n_b"))
       .filter(greatest(col("contain_a_micro"), col("contain_b_micro"))
@@ -272,7 +264,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
         col("n_common"), col("contain_a_micro"), col("contain_b_micro"))
-  }
 
   /** Affine mixing constants for the k MinHash "permutations"
     * (h_i = (A_i·h + B_i) mod P over an md5-derived base hash). Fixed

@@ -34,7 +34,16 @@ object IncrementalRollup {
     * @return the committed manifest version
     */
   def upsertDaily(spark: SparkSession, batch: DataFrame, table: String,
-                  tsCol: String = "ts", valueCol: String = "value"): Int = {
+                  tsCol: String = "ts", valueCol: String = "value"): Int =
+    mergePartials(spark, batch, table, tsCol, valueCol, txn = Map.empty)
+
+  /** The additive merge of `batch`'s partial (d, total_micro, n)
+    * aggregates; `txn` is [[SnapshotTable.merge]]'s idempotence
+    * watermark.
+    */
+  private def mergePartials(spark: SparkSession, batch: DataFrame, table: String,
+                            tsCol: String, valueCol: String,
+                            txn: Map[String, Long]): Int = {
     val partial = batch
       .groupBy(to_date(col(tsCol)).as("d"))
       .agg(sum(floor(col(valueCol) * lit(1000000.0)).cast("long"))
@@ -44,7 +53,8 @@ object IncrementalRollup {
       whenMatchedUpdate = Map(
         "total_micro" -> (col("total_micro") + col("_src.total_micro")),
         "n" -> (col("n") + col("_src.n"))),
-      whenNotMatchedInsert = true)
+      whenNotMatchedInsert = true,
+      txn = txn)
   }
 
   /** The maintained view: (d, total_micro, n). */
@@ -68,21 +78,13 @@ object IncrementalRollup {
                             table: String, writerId: String, batchId: Long,
                             tsCol: String = "ts",
                             valueCol: String = "value"): Boolean = {
-    val partial = batch
-      .groupBy(to_date(col(tsCol)).as("d"))
-      .agg(sum(floor(col(valueCol) * lit(1000000.0)).cast("long"))
-          .as("total_micro"),
-        count(lit(1)).as("n"))
+    // merge re-checks the watermark inside its retry loop; this check
+    // only decides the return value
     val before = SnapshotTable.currentVersion(table)
       .map(v => SnapshotTable.txnVersions(table, v).getOrElse(writerId, -1L))
       .getOrElse(-1L)
     if (batchId <= before) return false
-    SnapshotTable.merge(spark, table, partial, "d",
-      whenMatchedUpdate = Map(
-        "total_micro" -> (col("total_micro") + col("_src.total_micro")),
-        "n" -> (col("n") + col("_src.n"))),
-      whenNotMatchedInsert = true,
-      txn = Map(writerId -> batchId))
+    mergePartials(spark, batch, table, tsCol, valueCol, Map(writerId -> batchId))
     true
   }
 }

@@ -31,10 +31,13 @@ import graft.core.Materialize
   *    manifest ranges. At 100 TB a point query on the layout key
   *    touches O(matching files), not the table;
   *  - old versions stay readable (time travel) until vacuumed;
-  *    reading a vacuumed version raises a clear error.
+  *    reading a vacuumed version raises a clear error;
+  *  - every read plans from the manifest alone: each entry records
+  *    its byte size and every manifest that lists files records the
+  *    union schema, so no read lists, stats or infers over data files.
   *
-  * This upgrades `ParquetMerge`'s whole-directory swap: commits are
-  * O(new data) instead of O(table) and concurrent readers are never
+  * It is the only table format: batch, API and streaming writers all
+  * commit here, and commits are O(new data) with readers never
   * blocked.
   */
 object SnapshotTable {
@@ -48,11 +51,9 @@ object SnapshotTable {
     */
   final case class ColStats(min: Any, max: Any)
 
-  /** `size` = the data file's byte length, recorded at write time.
-    * With every entry sized, [[read]] hands the planner a
-    * manifest-built file index (zero storage round-trips at plan
-    * time); -1 marks entries from pre-size manifests, which fall back
-    * to a listed read.
+  /** `size` = the data file's byte length, recorded at write time:
+    * every read hands the planner a manifest-built file index (zero
+    * storage round-trips at plan time).
     *
     * `blooms` = per-column MANIFEST-LEVEL bloom filters (the Delta
     * bloom-index idea folded into the manifest): min/max ranges prune
@@ -65,7 +66,7 @@ object SnapshotTable {
     * row groups after the file is opened; these skip the open).
     */
   final case class FileEntry(name: String, stats: Map[String, ColStats],
-                             size: Long = -1L,
+                             size: Long,
                              blooms: Map[String, String] = Map.empty)
 
   /** Value range for pruning: keep files whose [min,max] intersects
@@ -254,20 +255,24 @@ object SnapshotTable {
     case other => o.put(k, other.toString)
   }
 
-  private def parseEntry(f: JsonNode): FileEntry =
-    if (f.isTextual) FileEntry(f.asText(), Map.empty) // pre-stats manifests
-    else {
-      val size = Option(f.get("size")).map(_.asLong()).getOrElse(-1L)
-      val blooms = Option(f.get("blooms")).map(_.properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap)
-        .getOrElse(Map.empty[String, String])
-      FileEntry(f.get("name").asText(), parseStats(f.get("stats")), size, blooms)
-    }
+  /** One file entry; `where` names the manifest it came from. An entry
+    * without a recorded size (or a bare file name) is rejected: every
+    * read plans from the sizes.
+    */
+  private def parseEntry(where: String)(f: JsonNode): FileEntry = {
+    require(f.isObject && f.hasNonNull("size"),
+      s"$where lists a file without a recorded size ($f)")
+    val blooms = Option(f.get("blooms")).map(_.properties().asScala
+      .map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty[String, String])
+    FileEntry(f.get("name").asText(), parseStats(f.get("stats")),
+      f.get("size").asLong(), blooms)
+  }
 
   private def entryNode(arr: ArrayNode, fe: FileEntry): Unit = {
     val f = arr.addObject()
     f.put("name", fe.name)
-    if (fe.size >= 0L) f.put("size", fe.size)
+    f.put("size", fe.size)
     putStats(f, fe.stats)
     if (fe.blooms.nonEmpty) {
       val b = f.putObject("blooms")
@@ -329,7 +334,8 @@ object SnapshotTable {
       if (hit != null) return hit
     }
     val node = mapper.readTree(Files.readString(Paths.get(key)))
-    val entries = node.get("files").elements().asScala.map(parseEntry).toSeq
+    val entries = node.get("files").elements().asScala
+      .map(parseEntry(s"$table chunk $name")).toSeq
     chunkCache.synchronized { chunkCache.put(key, entries) }
     entries
   }
@@ -361,8 +367,9 @@ object SnapshotTable {
     * builds on.
     *
     * `schema` is the PHYSICAL union schema (every commit's columns —
-    * see [[evolveSchema]]); it is absent on manifests written before
-    * schema tracking, and readers fall back to parquet inference then.
+    * see [[evolveSchema]]). Every manifest that lists files records
+    * it (parsing rejects one that does not), so it is absent only on
+    * the empty table and on a manifest that lists no files.
     * `constraints` holds the CHECKs plus the reserved `_gen:`/`_map:`
     * entries; like the txn watermarks it carries into every commit
     * built on this snapshot unless a constraint DDL replaces it — a
@@ -410,23 +417,20 @@ object SnapshotTable {
           probes.forall(p => bloomKeeps(fe, p)))
     }
 
-    /** (absolute path, byte size) of the files a pruned read opens;
-      * size is −1 for entries from pre-size manifests.
-      */
+    /** (absolute path, byte size) of the files a pruned read opens. */
     def sizedFiles(prune: Seq[ColRange],
                    probes: Seq[ColProbe]): Seq[(String, Long)] =
-      pruned(prune, probes).map(fe =>
-        (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size))
+      pruned(prune, probes).map(sized(table, _))
 
-    /** The PHYSICAL schema: the manifest's union schema when recorded,
-      * parquet inference over one of the files otherwise.
+    /** The PHYSICAL schema; a snapshot without files may carry none,
+      * and reads it as no columns.
       */
-    def physicalSchema(spark: SparkSession): StructType = schema.getOrElse {
-      require(entries.nonEmpty,
-        s"$table v$version has no files and no recorded schema")
-      spark.read.parquet(dataDir(table).resolve(entries.head.name).toString).schema
-    }
+    def physicalSchema: StructType = schema.getOrElse(new StructType())
   }
+
+  /** (absolute path, byte size) of `fe`, a data file of `table`. */
+  private def sized(table: String, fe: FileEntry): (String, Long) =
+    (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size)
 
   private def emptySnapshot(table: String): Snapshot =
     Snapshot(table, -1, Nil, Nil, None, Map.empty, Map.empty)
@@ -447,17 +451,21 @@ object SnapshotTable {
     def props[V](field: String)(value: JsonNode => V): Map[String, V] =
       Option(node.get(field)).map(_.properties().asScala
         .map(e => e.getKey -> value(e.getValue)).toMap).getOrElse(Map.empty)
-    Snapshot(table, version,
+    val where = s"$table v$version"
+    val snap = Snapshot(table, version,
       chunks = Option(node.get("chunks")).map(_.elements().asScala.map { c =>
         ChunkRef(c.get("name").asText(), c.get("count").asLong(),
           parseStats(c.get("stats")))
       }.toSeq).getOrElse(Nil),
       inline = Option(node.get("files"))
-        .map(_.elements().asScala.map(parseEntry).toSeq).getOrElse(Nil),
+        .map(_.elements().asScala.map(parseEntry(where)).toSeq).getOrElse(Nil),
       schema = Option(node.get("schema")).map(s =>
         DataType.fromJson(s.asText()).asInstanceOf[StructType]),
       txns = props("txns")(_.asLong()),
       constraints = props("constraints")(_.asText()))
+    require(snap.schema.isDefined || (snap.chunks.isEmpty && snap.inline.isEmpty),
+      s"$where lists files but records no schema")
+    snap
   }
 
   /** The latest snapshot (one listing + one parse); the empty snapshot
@@ -847,23 +855,22 @@ object SnapshotTable {
     val physCols = indexCols.map(base.physicalName)
     val dfp = prepareBatch(df, base)
     val newFiles = writeData(dfp, table, physCols)
-    val indexed = buildBlooms(df.sparkSession, table, newFiles, physCols,
-      bloomBits, bloomK)
+    val indexed = buildBlooms(df.sparkSession, table, dfp.schema, newFiles,
+      physCols, bloomBits, bloomK)
     commitLoop(base)(appended(indexed, dfp.schema))
   }
 
-  /** One distributed hashing pass over `files`' data: returns the
-    * entries with per-column manifest blooms attached. Shared by
-    * [[appendBloomIndexed]] and [[compact]]'s re-index (a compacted
-    * file must answer probes as well as the small files it replaced).
+  /** One distributed hashing pass over `files`' data (written with
+    * the physical `schema`): returns the entries with per-column
+    * manifest blooms attached. Shared by [[appendBloomIndexed]] and
+    * [[compact]]'s re-index (a compacted file must answer probes as
+    * well as the small files it replaced).
     */
-  private def buildBlooms(spark: SparkSession, table: String,
+  private def buildBlooms(spark: SparkSession, table: String, schema: StructType,
                           files: Seq[FileEntry], indexCols: Seq[String],
                           bloomBits: Int, bloomK: Int): Seq[FileEntry] = {
     import org.apache.spark.sql.functions._
-    val paths = files.map(fe =>
-      dataDir(table).resolve(fe.name).toAbsolutePath.toString)
-    val keyed = spark.read.parquet(paths: _*)
+    val keyed = frameOf(spark, table, schema, files, Map.empty)
       .select(input_file_name().as("__f"),
         explode(array(indexCols.map(c =>
           struct(lit(c).as("c"), col(c).cast("string").as("v"))): _*))
@@ -967,10 +974,12 @@ object SnapshotTable {
     commitLoop(base)(_ => (Nil, newFiles, out.schema))
   }
 
-  /** Keyed MERGE (last-write-wins within `updates`, like ParquetMerge):
-    * survivors of the current snapshot + deduped updates become the
-    * next version's files. O(table) rewrite like any copy-on-write
-    * merge, but readers keep the old snapshot until the atomic publish.
+  /** Keyed MERGE, last-write-wins within `updates`: rows replace the
+    * current rows with the same key, all other rows survive, and
+    * re-running the same updates leaves the same rows. Survivors of
+    * the current snapshot + deduped updates become the next version's
+    * files. O(table) rewrite like any copy-on-write merge, but readers
+    * keep the old snapshot until the atomic publish.
     * A lost commit race RECOMPUTES the merge against the winner's
     * snapshot — the orphaned loser files stay unreferenced until
     * vacuum.
@@ -983,9 +992,8 @@ object SnapshotTable {
         if (!base.exists) (deduped, deduped.schema)
         else {
           val current = scan(spark, base)
-          val evolved = evolveSchema(
-            base.schema.getOrElse(toPhysical(current, base.mapping).schema),
-            toPhysical(deduped, base.mapping).schema)
+          val physical = toPhysical(deduped, base.mapping).schema
+          val evolved = evolveSchema(base.schema.getOrElse(physical), physical)
           // allowMissingColumns: evolved commits may add columns the
           // other side lacks; missing fields fill with null
           (current
@@ -1024,39 +1032,31 @@ object SnapshotTable {
   /** [[read]] of an already-loaded snapshot. */
   private def scan(spark: SparkSession, snap: Snapshot,
                    prune: Seq[ColRange] = Nil,
-                   probes: Seq[ColProbe] = Nil): DataFrame = {
-    val table = snap.table
-    val schemaOpt = snap.schema
-    val files = snap.pruned(prune, probes)
-    val physical = if (files.isEmpty) schemaOpt match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => spark.emptyDataFrame
-    }
-    else if (schemaOpt.isDefined && files.forall(_.size >= 0L)) {
-      // the manifest IS the file index: schema + per-file sizes are
-      // already known, so the planner gets them directly — zero
-      // storage round-trips at plan time. `spark.read.parquet(paths*)`
-      // stats every path to build its InMemoryFileIndex, O(files)
-      // driver I/O that measured 16.7 s just to PLAN a 10k-file read
-      // (PLANS.md round 5); this path is flat (`ScaleProbe 10`'s `snap
-      // pruned scan` row measures it at 10x). A read
-      // Spark plans as one split comes back as one partition, so the
-      // operators above it plan no exchange.
-      org.apache.spark.sql.GraftShim.manifestParquet(spark,
-        files.map(fe =>
-          (dataDir(table).resolve(fe.name).toAbsolutePath.toString, fe.size)),
-        schemaOpt.get)
-    } else {
-      // pre-size or pre-schema manifests: listed read. The manifest's
-      // union schema (when present) projects evolved columns as null
-      // over files written before the column existed.
-      val reader = schemaOpt.fold(spark.read)(s => spark.read.schema(s))
-      reader.parquet(
-        files.map(fe => dataDir(table).resolve(fe.name).toString): _*)
-    }
+                   probes: Seq[ColProbe] = Nil): DataFrame =
+    frameOf(spark, snap.table, snap.physicalSchema, snap.pruned(prune, probes),
+      snap.mapping)
+
+  /** The one read of data files: the logical frame over `entries` of
+    * `table`, read through the physical `schema` (files written before
+    * an evolved column project it as null) and aliased through
+    * `mapping`. The manifest IS the file index: paths, sizes and schema
+    * go to the planner directly, zero storage round-trips at plan
+    * time, where a listed parquet read stats every path (16.7 s just
+    * to PLAN a 10k-file read, PLANS.md round 5;
+    * `ScaleProbe 10`'s `snap pruned scan` row measures this path at
+    * 10x). A read Spark plans as one split comes back as one
+    * partition, so the operators above it plan no exchange.
+    */
+  private def frameOf(spark: SparkSession, table: String, schema: StructType,
+                      entries: Seq[FileEntry],
+                      mapping: Map[String, String]): DataFrame = {
+    val physical =
+      if (entries.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else org.apache.spark.sql.GraftShim.manifestParquet(spark,
+        entries.map(sized(table, _)), schema)
     // column mapping: files/stats stay physical, callers see logical
-    toLogical(physical, snap.mapping)
+    toLogical(physical, mapping)
   }
 
   /** The CHECK constraints recorded at `version` (current when None).
@@ -1145,9 +1145,7 @@ object SnapshotTable {
   def renameColumn(table: String, from: String, to: String): Int = {
     val base = snapshot(table, None)
     val mapping = base.mapping
-    val physSchema = base.schema.getOrElse(
-      throw new IllegalArgumentException(s"$table has no recorded schema"))
-    val logicalNames = physSchema.fieldNames.map(p => mapping.getOrElse(p, p))
+    val logicalNames = base.physicalSchema.fieldNames.map(p => mapping.getOrElse(p, p))
     require(logicalNames.contains(from), s"no column '$from' in $table")
     require(!logicalNames.contains(to), s"column '$to' already exists in $table")
     val word = java.util.regex.Pattern.compile(s"\\b${java.util.regex.Pattern.quote(from)}\\b")
@@ -1312,14 +1310,12 @@ object SnapshotTable {
   }
 
   /** The snapshot's PHYSICAL schema: the column names the data files
-    * carry (manifest union schema when recorded; parquet inference
-    * over the snapshot's files otherwise). On a renamed table [[read]]
+    * carry, from the manifest alone. On a renamed table [[read]]
     * shows the logical names of [[columnMappingOf]] instead.
-    * Metadata-only when the manifest carries a schema.
     */
   def schemaOf(spark: SparkSession, table: String,
                version: Option[Int] = None): StructType =
-    snapshot(table, version).physicalSchema(spark)
+    snapshot(table, version).physicalSchema
 
   /** Absolute paths of the files a pruned read would open — the DSv2
     * scan builds its file index from exactly this list.
@@ -1328,10 +1324,9 @@ object SnapshotTable {
                        prune: Seq[ColRange] = Nil): Seq[String] =
     sizedFilesForRead(table, version, prune).map(_._1)
 
-  /** (absolute path, byte size) of the files a pruned read would open;
-    * size is −1 for entries from pre-size manifests. When every entry
-    * is sized, readers can build their file index from the manifest
-    * alone — no storage listing.
+  /** (absolute path, byte size) of the files a pruned read would open:
+    * readers build their file index from the manifest alone, with no
+    * storage listing.
     */
   def sizedFilesForRead(table: String, version: Option[Int] = None,
                         prune: Seq[ColRange] = Nil,
@@ -1388,12 +1383,9 @@ object SnapshotTable {
         if (base.exists) rewriteCandidates(spark, base, condition) else (Nil, Nil)
       if (candidates.isEmpty) Some(None)
       else {
-        val reader = base.schema.fold(spark.read)(s => spark.read.schema(s))
         val survivors = toPhysical(
-          toLogical(reader.parquet(
-              candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
-            base.mapping)
-          .filter(keep), base.mapping)
+          frameOf(spark, table, base.physicalSchema, candidates, base.mapping)
+            .filter(keep), base.mapping)
         // materialize before the rewrite: survivors read the files being
         // replaced only logically — writeData stages to new files, but a
         // lost race must re-filter against a DIFFERENT snapshot anyway
@@ -1427,8 +1419,7 @@ object SnapshotTable {
       if (candidates.isEmpty) Some(None)
       else {
         val mapping = base.mapping
-        val tgtSchemaPhys = base.schema.getOrElse(
-          toPhysical(scan(spark, base), mapping).schema)
+        val tgtSchemaPhys = base.physicalSchema
         // the LOGICAL view of the target schema: set/cond reference
         // logical names; files keep physical ones
         val tgtSchema = StructType(
@@ -1438,10 +1429,7 @@ object SnapshotTable {
         set.keys.foreach(c => require(!base.generated.contains(c),
           s"UPDATE SET cannot target generated column $c (it is " +
             "recomputed from its expression)"))
-        val reader = spark.read.schema(tgtSchemaPhys)
-        val rewritten0 = toLogical(reader.parquet(
-            candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*),
-            mapping)
+        val rewritten0 = frameOf(spark, table, tgtSchemaPhys, candidates, mapping)
           .select(tgtSchema.fieldNames.toSeq.map { c =>
             set.get(c) match {
               case Some(expr) =>
@@ -1535,18 +1523,10 @@ object SnapshotTable {
       else {
         val (candidates, untouched) =
           base.entries.partition(fe => keyRange.forall(r => rangeKeeps(fe.stats, r)))
-        val tgtSchema = base.schema.getOrElse(
-          if (base.entries.nonEmpty) scan(spark, base).schema else deduped.schema)
+        val tgtSchema = base.schema.getOrElse(deduped.schema)
         val targetCols = tgtSchema.fieldNames.toSeq
-
-        val candidateDf =
-          if (candidates.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              tgtSchema)
-          else {
-            val reader = spark.read.schema(tgtSchema)
-            reader.parquet(candidates.map(fe => dataDir(table).resolve(fe.name).toString): _*)
-          }
+        // merge rejects column-mapped tables: physical names throughout
+        val candidateDf = frameOf(spark, table, tgtSchema, candidates, Map.empty)
 
         // one full-outer-shaped pass: candidates LEFT JOIN source decides
         // update/delete/keep; source LEFT ANTI candidates decides inserts
@@ -1615,13 +1595,15 @@ object SnapshotTable {
     case other => other
   }
 
-  /** Absolute paths of the data files present in `toVersion`'s
-    * manifest but not in `sinceVersion`'s (the streaming micro-batch
-    * file set; `sinceVersion < 0` means everything in `toVersion`).
+  /** (absolute path, byte size) of the data files present in
+    * `toVersion`'s manifest but not in `sinceVersion`'s (the streaming
+    * micro-batch file set; `sinceVersion < 0` means everything in
+    * `toVersion`).
     */
-  def addedPathsBetween(table: String, sinceVersion: Int, toVersion: Int): Seq[String] =
+  def addedPathsBetween(table: String, sinceVersion: Int,
+                        toVersion: Int): Seq[(String, Long)] =
     addedEntries(snapshotFrom(table, sinceVersion), snapshotAt(table, toVersion))
-      .map(fe => dataDir(table).resolve(fe.name).toAbsolutePath.toString)
+      .map(sized(table, _))
 
   /** The snapshot at `version`; the empty one before the first commit. */
   private def snapshotFrom(table: String, version: Int): Snapshot =
@@ -1679,20 +1661,14 @@ object SnapshotTable {
               targetFileBytes: Long = 128L * 1024 * 1024,
               sortBy: Seq[String] = Nil): Option[Int] =
     retrying(latest(table), "compaction") { base =>
-      // sized entries record their byte length; only entries from
-      // pre-size manifests (-1) need a stat
-      val sized = base.entries.map(fe => fe ->
-        (if (fe.size >= 0L) fe.size else Files.size(dataDir(table).resolve(fe.name))))
-      val (small, big) = sized.partition(_._2 < targetFileBytes)
+      val (small, big) = base.entries.partition(_.size < targetFileBytes)
       if (small.length < 2) Some(None)
       else {
-        val smallBytes = small.map(_._2).sum
+        val smallBytes = small.map(_.size).sum
         val bins = math.max(1, math.ceil(smallBytes.toDouble / targetFileBytes).toInt)
         // read through the union schema so mixed-schema (evolved) files
-        // pack into uniform output files
-        val reader = base.schema.fold(spark.read)(s => spark.read.schema(s))
-        val smallDf = reader.parquet(
-          small.map(s => dataDir(table).resolve(s._1.name).toString): _*)
+        // pack into uniform output files; physical names, as stored
+        val smallDf = frameOf(spark, table, base.physicalSchema, small, Map.empty)
         // callers name sort columns LOGICALLY; the files being packed
         // carry physical names on a column-mapped table — translate
         val sortPhys = sortBy.map(base.physicalName)
@@ -1713,17 +1689,17 @@ object SnapshotTable {
         // well as the bloomed small files it replaced (losing the bloom
         // is CORRECT — no bloom means keep — but forfeits the pruning);
         // sizing carries over from the widest existing bloom
-        val bloomCols = small.flatMap(_._1.blooms.keys).distinct
+        val bloomCols = small.flatMap(_.blooms.keys).distinct
         val indexed =
           if (bloomCols.isEmpty) newFiles
           else {
             val (bits, k) = small.iterator
-              .flatMap(_._1.blooms.values)
+              .flatMap(_.blooms.values)
               .map { enc => val a = enc.split(":", 3); (a(0).toInt, a(1).toInt) }
               .reduce((x, y) => (math.max(x._1, y._1), math.max(x._2, y._2)))
-            buildBlooms(spark, table, newFiles, bloomCols, bits, k)
+            buildBlooms(spark, table, base.physicalSchema, newFiles, bloomCols, bits, k)
           }
-        publishFiles(base, big.map(_._1) ++ indexed, base.schema, base.txns)
+        publishFiles(base, big ++ indexed, base.schema, base.txns)
           .map(Some(_))
       }
     }
@@ -1764,11 +1740,11 @@ object SnapshotTable {
     val snaps = (sinceVersion until hi).map(snapshotFrom(table, _)) :+ hiSnap
     val parts = snaps.zip(snaps.tail).flatMap { case (lo, cur) =>
       val added = addedEntries(lo, cur)
+      // `cur` lists files, so it records a schema even where `hiSnap`
+      // lists none
       if (added.isEmpty) None
-      else Some(toLogical(
-          hiSnap.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(
-            added.map(fe => dataDir(table).resolve(fe.name).toString): _*),
-          hiSnap.mapping)
+      else Some(frameOf(spark, table, hiSnap.schema.getOrElse(cur.physicalSchema),
+          added, hiSnap.mapping)
         .withColumn("_commit_version", lit(cur.version)))
     }
     if (parts.isEmpty) {
@@ -1885,17 +1861,13 @@ object SnapshotTable {
   }
 
   /** Version history: (version, n_files, total_bytes) for every
-    * manifest still present — the audit surface for time travel,
-    * vacuum and restore decisions.
+    * manifest still present, from the recorded sizes — the audit
+    * surface for time travel, vacuum and restore decisions.
     */
   def history(table: String): Seq[(Int, Int, Long)] =
     manifestVersions(table).sorted.map { v =>
       val files = snapshotAt(table, v).entries
-      val bytes = files.map { fe =>
-        val p = dataDir(table).resolve(fe.name)
-        if (Files.exists(p)) Files.size(p) else 0L
-      }.sum
-      (v, files.size, bytes)
+      (v, files.size, files.map(_.size).sum)
     }
 
   /** Drop data files not referenced by the latest `keepVersions`

@@ -5,7 +5,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -87,7 +86,7 @@ class SnapshotCatalog extends TableCatalog {
   /** The table over `snap`: its schema and every scan come from it. */
   private def tableOf(snap: SnapshotTable.Snapshot, version: Option[Int]): Table =
     new SnapshotV2Table(snap.table, version,
-      SnapshotDataSource.nullableCopy(snap.physicalSchema(SparkSession.active)),
+      SnapshotDataSource.nullableCopy(snap.physicalSchema),
       Some(snap))
 
   /** `SELECT ... FROM snap.t VERSION AS OF n` — SQL time travel onto

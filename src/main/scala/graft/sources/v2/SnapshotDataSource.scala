@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.util
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -13,7 +12,6 @@ import org.apache.spark.sql.connector.catalog.SupportsWrite
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -86,8 +84,7 @@ class SnapshotDataSource extends TableProvider with DataSourceRegister {
     // a not-yet-created table has no schema: report empty so a WRITE
     // can proceed (the insert defines the schema); a read of an empty
     // table fails at scan time with the clear no-committed-version error
-    if (!snap.exists) new StructType()
-    else SnapshotDataSource.nullableCopy(snap.physicalSchema(SparkSession.active))
+    SnapshotDataSource.nullableCopy(snap.physicalSchema)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -118,6 +115,16 @@ object SnapshotDataSource {
     }
     loop(s).asInstanceOf[StructType]
   }
+
+  /** Spark's own parquet scan over `files` (absolute path, byte size),
+    * indexed from the manifest: the batch read and every streaming
+    * micro-batch go through here.
+    */
+  private[v2] def parquetScanBuilder(spark: SparkSession, files: Seq[(String, Long)],
+                                     schema: StructType,
+                                     options: CaseInsensitiveStringMap): ParquetScanBuilder =
+    ParquetScanBuilder(spark, org.apache.spark.sql.GraftShim.manifestFileIndex(spark, files),
+      schema, schema, options)
 }
 
 /** `resolved` is the snapshot `tableSchema` was read from, when there
@@ -217,17 +224,10 @@ private[v2] class SnapshotScanBuilder(spark: SparkSession,
       // equality/IN probes additionally consult manifest blooms — the
       // SQL path gets the q122 plan-time file skipping transparently
       val probes = SnapshotPredicates.probes(filterExprs)
-      val sized = snapshot.sizedFiles(ranges, probes)
-      // manifest-built index when every entry carries its size (zero
-      // storage round-trips at plan time — the programmatic read()'s
-      // contract); pre-size manifests fall back to a listed index
-      val index =
-        if (sized.nonEmpty && sized.forall(_._2 >= 0L))
-          org.apache.spark.sql.GraftShim.manifestFileIndex(spark, sized)
-        else new InMemoryFileIndex(spark, sized.map(f => new HadoopPath(f._1)),
-          Map.empty, Some(tableSchema),
-          org.apache.spark.sql.execution.datasources.NoopCache, None, None)
-      inner = ParquetScanBuilder(spark, index, tableSchema, tableSchema, options)
+      // manifest-built index: zero storage round-trips at plan time,
+      // the programmatic read()'s contract
+      inner = SnapshotDataSource.parquetScanBuilder(spark,
+        snapshot.sizedFiles(ranges, probes), tableSchema, options)
       if (filterExprs.nonEmpty) inner.pushFilters(filterExprs)
     }
     inner

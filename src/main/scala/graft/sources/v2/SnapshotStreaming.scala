@@ -1,36 +1,14 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, Statistics}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.read.SupportsReportStatistics
-import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.SnapshotTable
-
-/** Shared construction of the delegated parquet scan over an explicit
-  * file list (the batch read path and every streaming micro-batch both
-  * go through here).
-  */
-private[v2] object ParquetDelegate {
-  def scan(spark: SparkSession, files: Seq[String], schema: StructType,
-           options: CaseInsensitiveStringMap,
-           filters: Seq[Expression] = Nil,
-           prune: Option[StructType] = None): ParquetScan = {
-    val index = new InMemoryFileIndex(spark, files.map(new HadoopPath(_)),
-      Map.empty, Some(schema),
-      org.apache.spark.sql.execution.datasources.NoopCache, None, None)
-    val b = ParquetScanBuilder(spark, index, schema, schema, options)
-    if (filters.nonEmpty) b.pushFilters(filters)
-    prune.foreach(b.pruneColumns)
-    b.build()
-  }
-}
 
 /** The Scan handed to Spark: batch execution delegates wholesale to
   * the inner [[ParquetScan]] over the manifest-pruned file list;
@@ -99,15 +77,16 @@ private[v2] class SnapshotMicroBatchStream(spark: SparkSession, table: String,
     if (e <= s) return Array.empty
     val files = SnapshotTable.addedPathsBetween(table, s, e)
     if (files.isEmpty) Array.empty
-    else ParquetDelegate.scan(spark, files, tableSchema, options)
-      .toBatch.planInputPartitions()
+    else parquetScan(files).toBatch.planInputPartitions()
   }
 
   // one factory serves every batch: the parquet reader factory is
   // schema+conf-bound, not file-bound (partitions carry the files)
   override def createReaderFactory(): PartitionReaderFactory =
-    ParquetDelegate.scan(spark, Nil, tableSchema, options)
-      .toBatch.createReaderFactory()
+    parquetScan(Nil).toBatch.createReaderFactory()
+
+  private def parquetScan(files: Seq[(String, Long)]): ParquetScan =
+    SnapshotDataSource.parquetScanBuilder(spark, files, tableSchema, options).build()
 
   override def commit(end: Offset): Unit = () // checkpoint-managed
 

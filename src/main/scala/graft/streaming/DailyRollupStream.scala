@@ -3,12 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.sources.ParquetMerge
+import graft.sources.SnapshotTable
 
 /** Continuous analytics path: event stream -> watermarked daily
-  * windows -> idempotent MERGE into a daily aggregate table that the
-  * batch feature/scoring pipeline (TimeSeries.anomalyFeatures +
-  * IsoForestScorer) reads.
+  * windows -> idempotent MERGE into a daily aggregate
+  * [[graft.sources.SnapshotTable]] that the batch feature/scoring
+  * pipeline (TimeSeries.anomalyFeatures + IsoForestScorer) reads.
   *
   * This is the streaming re-architecture of the reference's EP3: the
   * per-request Cosmos fetch + pandas rebuild becomes a standing
@@ -40,7 +40,7 @@ object DailyRollupStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val keyed = batch.withColumn("k",
           concat_ws("|", col("user_id"), col("Date")))
-        ParquetMerge.upsert(batch.sparkSession, tableDir, keyed, "k")
+        SnapshotTable.upsert(batch.sparkSession, keyed, tableDir, "k")
         ()
       }
       .start()

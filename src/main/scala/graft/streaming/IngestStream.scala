@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.{EnergyIngest, Materialize}
-import graft.sources.ParquetMerge
+import graft.sources.SnapshotTable
 
 /** Event-driven ingest (SURVEY §2.10 E1): the reference's blob-trigger
   * (`/root/reference/function-app/blobToCosmos.py:28-29` — one function
@@ -11,7 +11,7 @@ import graft.sources.ParquetMerge
   * re-expressed as a Structured Streaming file source + `foreachBatch`.
   *
   * Checkpointing + idempotent keyed upsert gives exactly-once into the
-  * parquet table — strictly stronger than the reference, which
+  * [[graft.sources.SnapshotTable]] the API reads — strictly stronger than the reference, which
   * double-ingests re-uploaded blobs (uuid ids) and silently drops a
   * whole blob on mid-file failure (`blobToCosmos.py:83-84`).
   *
@@ -44,7 +44,7 @@ object IngestStream {
           if (onBatchMetrics.isDefined) Materialize.persist(typed)
           val (good, bad) = EnergyIngest.validate(typed)
           // deterministic ids make replayed batches a no-op (E3)
-          ParquetMerge.upsert(batch.sparkSession, tableDir, good, "id")
+          SnapshotTable.upsert(batch.sparkSession, good, tableDir, "id")
           rejectDir.foreach(d => bad.write.mode("append").parquet(d))
           onBatchMetrics.foreach(cb => cb(batchId, good.count(), bad.count()))
         }

@@ -90,20 +90,7 @@ object GraftShim {
                       files: Seq[(String, Long)],
                       schema: types.StructType): DataFrame = {
     import org.apache.spark.sql.execution.datasources._
-    // qualify exactly as manifestFileIndex does: against a non-local
-    // defaultFS an unqualified path would resolve differently from the
-    // listed-read fallback, and the two manifest paths must agree
-    val hconf = spark.sessionState.newHadoopConf()
-    // ONE FileSystem resolution for the whole list (a synchronized
-    // cache lookup per file would serialize 1M-file planning); table
-    // files share a filesystem by construction
-    val fs = files.headOption.map { case (p, _) =>
-      new org.apache.hadoop.fs.Path(p).getFileSystem(hconf) }
-    val statuses = files.map { case (p, len) =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-        fs.get.makeQualified(hp))
-    }
+    val statuses = fileStatuses(spark, files)
     val index = new FileIndex {
       override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
         statuses.map(_.getPath)
@@ -127,6 +114,25 @@ object GraftShim {
       spark.asInstanceOf[classic.SparkSession])
     val df = ofRows(spark, LogicalRelation(relation, isStreaming = false))
     if (filePartitions(spark, statuses) == 1) df.coalesce(1) else df
+  }
+
+  /** The manifest's (path, length) list as qualified `FileStatus`es,
+    * shared by both manifest indexes. Qualified through the filesystem
+    * (`file:/…` locally): `PartitioningAwareFileIndex` qualifies root
+    * paths before looking them up in `leafFiles`, so an unqualified
+    * status would miss every lookup and the scan would silently read
+    * nothing. ONE FileSystem resolution for the whole list (a
+    * synchronized cache lookup per file would serialize 1M-file
+    * planning); table files share a filesystem by construction.
+    */
+  private def fileStatuses(spark: SparkSession, files: Seq[(String, Long)])
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    val fs = files.headOption.map { case (p, _) =>
+      new HPath(p).getFileSystem(spark.sessionState.newHadoopConf()) }
+    files.map { case (p, len) =>
+      new FileStatus(len, false, 1, 134217728L, 0L, fs.get.makeQualified(new HPath(p)))
+    }
   }
 
   /** The number of partitions a file scan over `statuses` plans, by the
@@ -163,25 +169,14 @@ object GraftShim {
     * `PartitioningAwareFileIndex` the DSv2 `ParquetScanBuilder`
     * requires — same zero-storage-round-trip contract: leaf files and
     * their lengths come straight from the caller's manifest, no
-    * listing, no per-file stat.
+    * listing, no per-file stat. The V1 index stays a plain `FileIndex`:
+    * this class re-qualifies its paths on every listing call.
     */
   def manifestFileIndex(spark: SparkSession, files: Seq[(String, Long)])
       : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
     import org.apache.spark.sql.execution.datasources._
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-    // PartitioningAwareFileIndex qualifies root paths through the
-    // filesystem before looking them up in leafFiles/
-    // leafDirToChildrenFiles — the recorded statuses must carry the
-    // SAME qualified form (file:/… locally) or every lookup misses and
-    // the scan silently reads nothing
-    val hconf = spark.sessionState.newHadoopConf()
-    // one FileSystem resolution for the list, as in manifestParquet
-    val fs = files.headOption.map { case (p, _) =>
-      new HPath(p).getFileSystem(hconf) }
-    val statuses = files.map { case (p, len) =>
-      val hp = new HPath(p)
-      new FileStatus(len, false, 1, 134217728L, 0L, fs.get.makeQualified(hp))
-    }
+    val statuses = fileStatuses(spark, files)
     new PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
       // planning calls these accessors repeatedly — build both
       // collections ONCE (O(files) per call would tax exactly the

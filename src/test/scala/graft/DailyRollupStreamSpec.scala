@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.sources.SnapshotTable
 import graft.streaming.DailyRollupStream
 
 /** Streaming rollup -> merged daily table -> batch scoring: the
@@ -30,7 +31,7 @@ class DailyRollupStreamSpec extends SparkSpec {
     DailyRollupStream.start(spark, events, s"$base/daily", s"$base/ckpt")
       .awaitTermination()
 
-    val table = spark.read.parquet(s"$base/daily")
+    val table = SnapshotTable.read(spark, s"$base/daily")
     val rows = table.select($"user_id", $"Date".cast("string"), $"total_kwh")
       .as[(Long, String, Double)].collect().toSet
     assert(rows.contains((1L, "2024-01-01", 3.0)))
@@ -41,11 +42,11 @@ class DailyRollupStreamSpec extends SparkSpec {
     val before = table.count()
     DailyRollupStream.start(spark, events, s"$base/daily", s"$base/ckpt2")
       .awaitTermination()
-    assert(spark.read.parquet(s"$base/daily").count() == before)
+    assert(SnapshotTable.read(spark, s"$base/daily").count() == before)
 
     // batch feature + scorer path over the accumulated table
     val feats = graft.core.TimeSeries.rollingMean7(
-      spark.read.parquet(s"$base/daily"), "user_id", "Date", "total_kwh")
+      SnapshotTable.read(spark, s"$base/daily"), "user_id", "Date", "total_kwh")
     val scored = graft.ml.IsoForestScorer.scoreFeatures(
       graft.core.TimeSeries.withDow(feats, "Date"))
     assert(scored.filter($"score".isNull).count() == 0)

@@ -56,6 +56,9 @@ class SnapshotTableSpec extends SparkSpec {
     val now = SnapshotTable.read(spark, t).as[(Int, String)].collect().toMap
     assert(now.keySet == Set(1, 2, 3))
     assert(now(2) == "B")
+    // re-running the applied update leaves the same rows
+    SnapshotTable.upsert(spark, Seq((2, "B"), (3, now(3))).toDF("id", "v"), t, "id")
+    assert(SnapshotTable.read(spark, t).as[(Int, String)].collect().toMap == now)
     // pre-upsert snapshot still intact
     assert(SnapshotTable.read(spark, t, Some(0)).as[(Int, String)]
       .collect().toMap == Map(1 -> "a", 2 -> "b"))
@@ -489,6 +492,53 @@ class SnapshotTableSpec extends SparkSpec {
     assert(empty.columns.toSeq == Seq("id", "v", "_commit_version"))
     // since == latest is fine; beyond it errors clearly
     intercept[IllegalArgumentException](SnapshotTable.readChanges(spark, t, 99))
+  }
+
+  test("readChanges plans from the manifest, not a listed file index") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+    val t = Files.createTempDirectory("graft_snap_cdf").toString + "/t"
+    SnapshotTable.append(Seq((1, "a")).toDF("id", "v"), t)
+    SnapshotTable.append(Seq((2, "b")).toDF("id", "v"), t)
+    val plan = SnapshotTable.readChanges(spark, t, sinceVersion = 0)
+      .queryExecution.optimizedPlan
+    val locations = plan.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+    assert(locations.nonEmpty, plan)
+    assert(!locations.exists(_.isInstanceOf[InMemoryFileIndex]), locations)
+  }
+
+  test("legacy manifests are rejected: textual, unsized or schemaless entries") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import java.nio.file.Paths
+    val root = Files.createTempDirectory("graft_snap_legacy").toString
+    val src = s"$root/src"
+    SnapshotTable.append(Seq((1, "a")).toDF("id", "v"), src)
+    val mapper = new ObjectMapper()
+    val v0 = mapper.readTree(Files.readString(Paths.get(src, "_manifests", "v0.json")))
+      .asInstanceOf[ObjectNode]
+    val name = v0.get("files").get(0).get("name").asText()
+    // a v0 manifest over a copy of the one real data file, edited
+    // into a shape written before sizes and schemas were recorded
+    def legacy(label: String)(edit: ObjectNode => Unit): String = {
+      val t = s"$root/$label"
+      Files.createDirectories(Paths.get(t, "data"))
+      Files.createDirectories(Paths.get(t, "_manifests"))
+      Files.copy(Paths.get(src, "data", name), Paths.get(t, "data", name))
+      val m = v0.deepCopy()
+      edit(m)
+      Files.writeString(Paths.get(t, "_manifests", "v0.json"), mapper.writeValueAsString(m))
+      t
+    }
+    val tables = Seq(
+      legacy("textual") { m => m.putArray("files").add(name); () },
+      legacy("unsized") { m =>
+        m.get("files").get(0).asInstanceOf[ObjectNode].remove("size"); () },
+      legacy("schemaless") { m => m.remove("schema"); () })
+    tables.foreach { t =>
+      val err = intercept[IllegalArgumentException](SnapshotTable.read(spark, t))
+      assert(err.getMessage.contains(s"$t v0"), err.getMessage)
+    }
   }
 
   test("cloneShallow: zero-copy, isolated lifecycles, constraints carried") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 /** E3 streaming face: in-stream exact dedup with a bounded state
   * window (`dropDuplicatesWithinWatermark`) — the streaming analogue
   * of `Dedup.dropExactDups`. The batch path dedups retroactively at
-  * MERGE time (sha2 id + ParquetMerge, StreamingIngestSpec); this
+  * MERGE time (sha2 id + SnapshotTable.upsert, StreamingIngestSpec); this
   * covers dedup BEFORE the sink, where at 100 TB the state store only
   * holds keys inside the watermark horizon instead of the full key
   * history.

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.ParquetMerge
+import graft.sources.SnapshotTable
 import graft.streaming.IngestStream
 
 /** E1/E3: streaming file-source ingest is exactly-once and idempotent
@@ -35,7 +35,7 @@ class StreamingIngestSpec extends SparkSpec {
       onBatchMetrics = Some((id, g, b) => metrics.synchronized { metrics += ((id, g, b)) }))
     q.awaitTermination()
 
-    val got = spark.read.parquet(table)
+    val got = SnapshotTable.read(spark, table)
     // 4 good rows minus 1 cross-blob duplicate (deterministic id) = 3
     assert(got.count() == 3L)
     assert(spark.read.parquet(rejects).count() == 1L)
@@ -46,7 +46,7 @@ class StreamingIngestSpec extends SparkSpec {
     // replay the same landing dir from a fresh checkpoint: counts stable
     val q2 = IngestStream.start(spark, landing, table, s"$base/ckpt2", None)
     q2.awaitTermination()
-    assert(spark.read.parquet(table).count() == 3L)
+    assert(SnapshotTable.read(spark, table).count() == 3L)
 
     // a late blob, resumed from the ORIGINAL checkpoint: only the new
     // file is processed, and the metrics batch holds nothing persisted
@@ -55,18 +55,7 @@ class StreamingIngestSpec extends SparkSpec {
     leavesNothingPersisted(IngestStream.start(spark, landing, table, ckpt,
       Some(rejects), onBatchMetrics = Some((id, g, b) =>
         metrics.synchronized { metrics += ((id, g, b)) })).awaitTermination())
-    assert(spark.read.parquet(table).count() == 4L)
+    assert(SnapshotTable.read(spark, table).count() == 4L)
     assert(metrics.drop(seen).map(m => (m._2, m._3)) == Seq((1L, 0L)))
-  }
-
-  test("parquet merge upsert: updates replace, inserts append, idempotent") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_merge").toString + "/t"
-    ParquetMerge.upsert(spark, dir, Seq((1, "a"), (2, "b")).toDF("id", "v"), "id")
-    ParquetMerge.upsert(spark, dir, Seq((2, "B"), (3, "c")).toDF("id", "v"), "id")
-    val after = spark.read.parquet(dir).as[(Int, String)].collect().toMap
-    assert(after == Map(1 -> "a", 2 -> "B", 3 -> "c"))
-    ParquetMerge.upsert(spark, dir, Seq((2, "B"), (3, "c")).toDF("id", "v"), "id")
-    assert(spark.read.parquet(dir).count() == 3L)
   }
 }

@@ -43,6 +43,11 @@ echo "== benchmark: one short api run =="
 # every endpoint's rows checked against the generator's tallies
 smoke api
 
+echo "== benchmark: one short curation run =="
+# q302, q73, q101 and q19, each query's output checked against its
+# DuckDB oracle
+smoke curation
+
 echo "== tools unit tests =="
 python3 -m unittest discover -s tools -p 'test_*.py' 2>&1 | tail -1
 
