@@ -204,7 +204,8 @@ object ScaleProbe {
       // in-line form — PLANS.md "q80 encode boundary" records the
       // crossover reasoning from these two numbers
       row("q80 enc=table") { dir =>
-        SparkEntry.corpusToSequences(spark, dir, encodeTable = Some(tmpTable("probe_encmat")))
+        graft.queries.TokenizePackQueries.corpusToSequences(spark, dir,
+          encodeTable = Some(tmpTable("probe_encmat")))
       }
       row("lsh L=4 multiProbe=1") { dir =>
         Similarity.lshNearDupPairs(embeddings(dir),

@@ -16,19 +16,24 @@ import graft.ml.{IsoForestScorer, ProphetScorer}
   */
 object EnergyApi {
 
-  /** GET /api/GetAllEnergyData (`data_analytics_api.py:24-38`). */
+  /** GET /api/GetAllEnergyData (`data_analytics_api.py:24-38`): P1 —
+    * `SELECT HomeID, ApplianceType, EnergyConsumption, Season, Date`.
+    */
   def getAllEnergy(readings: DataFrame): DataFrame =
-    EnergyAnalytics.getAllEnergy(readings)
+    readings.select("HomeID", "ApplianceType", "EnergyConsumption", "Season", "Date")
 
-  /** GET /api/GetEnergyByHomeID (`data_analytics_api.py:44-76`). */
+  /** GET /api/GetEnergyByHomeID (`data_analytics_api.py:44-76`): P5 —
+    * equality filter on the partition key (`data_analytics_api.py:67`).
+    * HomeID stays a STRING ('430' semantics — SURVEY §7.4 #2).
+    */
   def getEnergyByHomeID(readings: DataFrame, homeId: String): DataFrame =
-    EnergyAnalytics.getEnergyByHome(readings, homeId)
+    getAllEnergy(readings).filter(col("HomeID") === lit(homeId))
 
   /** GET /api/GetSeasonalConsumption (`data_analytics_api.py:82-99`) —
-    * projection-only, like the reference (despite the name).
+    * P2, projection-only, like the reference (despite the name).
     */
   def getSeasonalConsumption(readings: DataFrame): DataFrame =
-    EnergyAnalytics.getSeasonalConsumption(readings)
+    readings.select("Season", "ApplianceType", "EnergyConsumption")
 
   /** GET /api/Forecast (`ml_forecast_anomaly.py:96-139`). Parity L-1:
     * the output is independent of `homeId` — the reference builds the

@@ -296,20 +296,15 @@ object Decontaminate {
     * all three decontamination modalities (doc-level n-gram,
     * span-level, embedding) share one persistence story. Rows are
     * (eval_doc, embedding) verbatim; append-only because a doc's
-    * embedding is a pure function of the doc. Pass (`txnAppId`,
-    * `txnVersion`) for replay-safe appends.
+    * embedding is a pure function of the doc. Pass
+    * `writer = Some((appId, version))` for replay-safe appends.
     */
   def writeEvalEmbeddingIndex(eval: DataFrame, idCol: String,
                               vecCol: String, indexDir: String,
-                              txnAppId: String = null,
-                              txnVersion: Long = -1L): Unit = {
+                              writer: Option[(String, Long)] = None): Unit = {
     val rows = eval.select(col(idCol).as("eval_doc"),
       col(vecCol).as("embedding"))
-    if (txnAppId == null)
-      graft.sources.SnapshotTable.append(rows, indexDir)
-    else
-      graft.sources.SnapshotTable.appendIdempotent(rows, indexDir,
-        txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(rows, indexDir, writer)
   }
 
   /** [[flagContaminatedEmbedding]] against the persisted index — a
@@ -434,11 +429,9 @@ object Decontaminate {
                                            threshold: Double,
                                            idCol: String = "vec_id",
                                            vecCol: String = "embedding",
-                                           txnAppId: String = null,
-                                           txnVersion: Long = -1L)
+                                           writer: Option[(String, Long)] = None)
       : DataFrame = {
-    writeEvalEmbeddingIndex(newEval, idCol, vecCol, indexDir,
-      txnAppId, txnVersion)
+    writeEvalEmbeddingIndex(newEval, idCol, vecCol, indexDir, writer)
     flagContaminatedEmbedding(train, newEval, threshold, idCol, vecCol)
   }
 
@@ -469,22 +462,18 @@ object Decontaminate {
     * persist PER EVAL DOC (not pre-distincted): provenance survives
     * (WHICH benchmark doc a training doc collides with), and
     * batch-vs-history key novelty stays decidable at probe time.
-    * Pass (`txnAppId`, `txnVersion`) for replay-safe appends. New
+    * Pass `writer = Some((appId, version))` for replay-safe appends. New
     * batches must carry NEW eval doc ids (suite versions, not
     * in-place edits — the append-only contract of every incremental
     * face here).
     */
   def writeEvalShingleIndex(eval: DataFrame, idCol: String,
                             textCol: String, indexDir: String,
-                            n: Int = 8, txnAppId: String = null,
-                            txnVersion: Long = -1L): Unit = {
+                            n: Int = 8,
+                            writer: Option[(String, Long)] = None): Unit = {
     val rows = eval.select(col(idCol).as("eval_doc"),
       explode(Dedup.shingles(col(textCol), n)).as("shingle"))
-    if (txnAppId == null)
-      graft.sources.SnapshotTable.append(rows, indexDir)
-    else
-      graft.sources.SnapshotTable.appendIdempotent(rows, indexDir,
-        txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(rows, indexDir, writer)
   }
 
   /** Shingle keys a just-appended eval batch NEWLY added: present
@@ -535,10 +524,9 @@ object Decontaminate {
   def flagContaminatedIncremental(spark: SparkSession, train: DataFrame,
                                   newEval: DataFrame, indexDir: String,
                                   idCol: String, textCol: String,
-                                  n: Int = 8, txnAppId: String = null,
-                                  txnVersion: Long = -1L): DataFrame = {
-    writeEvalShingleIndex(newEval, idCol, textCol, indexDir, n,
-      txnAppId, txnVersion)
+                                  n: Int = 8,
+                                  writer: Option[(String, Long)] = None): DataFrame = {
+    writeEvalShingleIndex(newEval, idCol, textCol, indexDir, n, writer)
     val fresh = freshKeys(spark, newEval, idCol, indexDir)
     train.select(col(idCol),
         explode(Dedup.shingles(col(textCol), n)).as("shingle"))
@@ -576,11 +564,10 @@ object Decontaminate {
   def scrubSpansIncremental(spark: SparkSession, train: DataFrame,
                             newEval: DataFrame, indexDir: String,
                             idCol: String, textCol: String,
-                            n: Int = 8, txnAppId: String = null,
-                            txnVersion: Long = -1L): DataFrame = {
+                            n: Int = 8,
+                            writer: Option[(String, Long)] = None): DataFrame = {
     require(n >= 2, "n must be >= 2")
-    writeEvalShingleIndex(newEval, idCol, textCol, indexDir, n,
-      txnAppId, txnVersion)
+    writeEvalShingleIndex(newEval, idCol, textCol, indexDir, n, writer)
     val fresh = freshKeys(spark, newEval, idCol, indexDir)
       .select(col("shingle").as("g"))
     val affectedIds = SuffixArray.gramRows(

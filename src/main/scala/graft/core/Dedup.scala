@@ -380,17 +380,15 @@ object Dedup {
     * [[graft.sources.SnapshotTable]]): the structure that makes dedup
     * INCREMENTAL — a new crawl batch is checked against the
     * accumulated corpus without recomputing or rescanning the corpus
-    * text. Pass (`txnAppId`, `txnVersion`) to make the append
+    * text. Pass `writer = Some((appId, version))` to make the append
     * replay-safe (exactly-once under pipeline retries).
     */
   def writeBandIndex(df: DataFrame, idCol: String, textCol: String,
                      indexDir: String, k: Int = 8, rowsPerBand: Int = 2,
-                     n: Int = 3, txnAppId: String = null,
-                     txnVersion: Long = -1L): Unit = {
+                     n: Int = 3,
+                     writer: Option[(String, Long)] = None): Unit = {
     val rows = bandedSignatures(df, idCol, textCol, k, rowsPerBand, n)
-    if (txnAppId == null) graft.sources.SnapshotTable.append(rows, indexDir)
-    else graft.sources.SnapshotTable.appendIdempotent(rows, indexDir,
-      txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(rows, indexDir, writer)
   }
 
   /** Flag each NEW-batch doc against the persisted index: does it
@@ -922,19 +920,14 @@ object Dedup {
     * text (selection windows never cross documents), so corpus
     * growth only ADDS rows — nothing persisted ever needs rewriting
     * (the property SA ranks lack and gram counts/band keys share).
-    * Pass (`txnAppId`, `txnVersion`) for replay-safe appends.
+    * Pass `writer = Some((appId, version))` for replay-safe appends.
     */
   def writeFingerprintIndex(df: DataFrame, idCol: String,
                             textCol: String, indexDir: String,
                             k: Int = 3, w: Int = 4,
-                            txnAppId: String = null,
-                            txnVersion: Long = -1L): Unit = {
+                            writer: Option[(String, Long)] = None): Unit = {
     val rows = winnowFingerprints(df, idCol, textCol, k, w)
-    if (txnAppId == null)
-      graft.sources.SnapshotTable.append(rows, indexDir)
-    else
-      graft.sources.SnapshotTable.appendIdempotent(rows, indexDir,
-        txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(rows, indexDir, writer)
   }
 
   /** INCREMENTAL winnowing near-dup pairs — a new crawl batch joins
@@ -967,10 +960,8 @@ object Dedup {
                                   idCol: String, textCol: String,
                                   k: Int = 3, w: Int = 4,
                                   maxDf: Int = Int.MaxValue,
-                                  txnAppId: String = null,
-                                  txnVersion: Long = -1L): DataFrame = {
-    writeFingerprintIndex(newDocs, idCol, textCol, indexDir, k, w,
-      txnAppId, txnVersion)
+                                  writer: Option[(String, Long)] = None): DataFrame = {
+    writeFingerprintIndex(newDocs, idCol, textCol, indexDir, k, w, writer)
     val idx = graft.sources.SnapshotTable.read(spark, indexDir)
       .select(col("doc"), col("fp")).distinct()
     val capped =

@@ -3,11 +3,12 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The reference's analytics surface — every projection/filter/aggregate
+/** The reference's analytics surface — every filter/aggregate
   * the API tier (`/root/reference/function-app/data_analytics_api.py`)
   * and the frontend tier
   * (`/root/reference/streamlit-frontend/pages/`) compute, collapsed
-  * into single DataFrame programs.
+  * into single DataFrame programs; the three projection endpoints are
+  * defined once, in [[graft.api.EnergyApi]].
   *
   * The reference ships the ENTIRE table over HTTP and aggregates
   * client-side in pandas (SURVEY §3 EP2); here the filter/projection is
@@ -21,25 +22,6 @@ import org.apache.spark.sql.functions._
   * table.
   */
 object EnergyAnalytics {
-
-  /** P1 — `SELECT HomeID, ApplianceType, EnergyConsumption, Season, Date`
-    * (`data_analytics_api.py:30`).
-    */
-  def getAllEnergy(readings: DataFrame): DataFrame =
-    readings.select("HomeID", "ApplianceType", "EnergyConsumption", "Season", "Date")
-
-  /** P5 — equality filter on the partition key
-    * (`data_analytics_api.py:67`). HomeID stays a STRING ('430'
-    * semantics — SURVEY §7.4 #2).
-    */
-  def getEnergyByHome(readings: DataFrame, homeId: String): DataFrame =
-    getAllEnergy(readings).filter(col("HomeID") === lit(homeId))
-
-  /** P2 — `GetSeasonalConsumption` is projection-only despite its name
-    * (`data_analytics_api.py:88`).
-    */
-  def getSeasonalConsumption(readings: DataFrame): DataFrame =
-    readings.select("Season", "ApplianceType", "EnergyConsumption")
 
   /** P7 — dynamic predicate builder (`ml_forecast_anomaly.py:158-167`):
     * optional filters AND-ed together; None = no filter.

@@ -202,11 +202,7 @@ object Retrieval {
                             clusterPartitions: Option[Int] = None,
                             writer: Option[(String, Long)] = None): Option[Int] = {
     val rows = indexRows(newDocs, idCol, textCol, buckets, clusterPartitions)
-    writer match {
-      case Some((w, v)) =>
-        graft.sources.SnapshotTable.appendIdempotent(rows, table, w, v)
-      case None => Some(graft.sources.SnapshotTable.append(rows, table))
-    }
+    graft.sources.SnapshotTable.appendAs(rows, table, writer)
   }
 
   /** BM25 top-k served FROM the index: query terms hash to their

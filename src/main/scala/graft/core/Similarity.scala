@@ -326,11 +326,7 @@ object Similarity {
                        clusterPartitions: Option[Int] = None): Option[Int] = {
     val rows = clusteredAssignments(newVectors, centroids, idCol, vecCol,
       clusterPartitions)
-    writer match {
-      case Some((w, v)) =>
-        graft.sources.SnapshotTable.appendIdempotent(rows, table, w, v)
-      case None => Some(graft.sources.SnapshotTable.append(rows, table))
-    }
+    graft.sources.SnapshotTable.appendAs(rows, table, writer)
   }
 
   /** [[ivfTopKIndexed]] over the snapshot-table index: probed buckets

@@ -582,8 +582,9 @@ object SuffixArray {
     * [[exactSubstrDedupIncremental]]: every fitting minLen-window of
     * the batch as (sa_doc, pos, g) rows appended to a transactional
     * [[graft.sources.SnapshotTable]] — the [[Dedup.writeBandIndex]]
-    * discipline, applied to exact-substring state. Pass (`txnAppId`,
-    * `txnVersion`) for replay-safe (exactly-once) appends.
+    * discipline, applied to exact-substring state. Pass
+    * `writer = Some((appId, version))` for replay-safe (exactly-once)
+    * appends.
     *
     * Why GRAM COUNTS and not suffix-array ranks: the removal product
     * is fixed-threshold, where gram marking is exactly equivalent to
@@ -595,8 +596,7 @@ object SuffixArray {
     */
   def writeGramIndex(df: DataFrame, idCol: String, textCol: String,
                      indexDir: String, minLen: Int = 20,
-                     txnAppId: String = null,
-                     txnVersion: Long = -1L,
+                     writer: Option[(String, Long)] = None,
                      hashGrams: Boolean = false): Unit = {
     // hashGrams shrinks the PERSISTED index ~an order of magnitude
     // (16-byte two-seed keys instead of minLen-token strings) — at
@@ -607,11 +607,7 @@ object SuffixArray {
     // schema).
     val rows = keyed(gramRows(tokenized(df, idCol, textCol), minLen),
       hashGrams)
-    if (txnAppId == null)
-      graft.sources.SnapshotTable.append(rows, indexDir)
-    else
-      graft.sources.SnapshotTable.appendIdempotent(rows, indexDir,
-        txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(rows, indexDir, writer)
   }
 
   /** INCREMENTAL ExactSubstr rewrite — a new crawl batch updates the
@@ -648,13 +644,11 @@ object SuffixArray {
                                   newDocs: DataFrame, corpusDocs: DataFrame,
                                   indexDir: String, idCol: String,
                                   textCol: String, minLen: Int = 20,
-                                  txnAppId: String = null,
-                                  txnVersion: Long = -1L,
+                                  writer: Option[(String, Long)] = None,
                                   hashGrams: Boolean = false)
       : DataFrame = Materialize.scope {
     require(minLen >= 2, "minLen must be >= 2")
-    writeGramIndex(newDocs, idCol, textCol, indexDir, minLen,
-      txnAppId, txnVersion, hashGrams)
+    writeGramIndex(newDocs, idCol, textCol, indexDir, minLen, writer, hashGrams)
     val idx = graft.sources.SnapshotTable.read(spark, indexDir)
     // every downstream step keys on "g" generically, so the hashed
     // struct key rides the same joins/aggregations — only the

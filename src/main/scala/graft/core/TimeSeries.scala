@@ -528,7 +528,7 @@ object TimeSeries {
     * exactly (`StreamingHampelSpec`), INCLUDING late data: the
     * re-emitted rows overwrite the stale flags.
     *
-    * Pass (`txnAppId`, `txnVersion`) for replay-safe appends (a
+    * Pass `writer = Some((appId, version))` for replay-safe appends (a
     * foreachBatch caller passes the batch id — exactly-once on
     * restart).
     *
@@ -539,16 +539,12 @@ object TimeSeries {
                                newEvents: DataFrame, dailyDir: String,
                                keyCol: String, dayCol: Column,
                                valueCol: Column, window: Int = 7,
-                               nMad: Int = 3, txnAppId: String = null,
-                               txnVersion: Long = -1L): DataFrame = {
+                               nMad: Int = 3,
+                               writer: Option[(String, Long)] = None): DataFrame = {
     val delta = newEvents
       .select(col(keyCol).as("k"), dayCol.as("d"), valueCol.as("v"))
       .groupBy("k", "d").agg(sum("v").as("v"))
-    if (txnAppId == null)
-      graft.sources.SnapshotTable.append(delta, dailyDir)
-    else
-      graft.sources.SnapshotTable.appendIdempotent(delta, dailyDir,
-        txnAppId, txnVersion)
+    graft.sources.SnapshotTable.appendAs(delta, dailyDir, writer)
     val touched = newEvents.select(col(keyCol).as("k")).distinct()
     val daily = graft.sources.SnapshotTable.read(spark, dailyDir)
       .join(touched, Seq("k"), "left_semi")

@@ -903,6 +903,19 @@ object SnapshotTable {
     files.map(fe => fe.copy(blooms = byFile.getOrElse(fe.name, Map.empty)))
   }
 
+  /** Append under an optional replay token: `None` is a plain
+    * [[append]]; `Some((writerId, txnVersion))` is an
+    * [[appendIdempotent]], so a replayed batch is skipped. The token is
+    * one value, so a writer id cannot be passed without its version.
+    *
+    * @return Some(version) when committed, None when skipped as a replay
+    */
+  def appendAs(df: DataFrame, table: String,
+               writer: Option[(String, Long)]): Option[Int] = writer match {
+    case Some((w, v)) => appendIdempotent(df, table, w, v)
+    case None => Some(append(df, table))
+  }
+
   /** Idempotent append for replayable writers (the Delta txnAppId/
     * txnVersion contract): a (writerId, txnVersion) pair applies AT
     * MOST ONCE — re-delivery of an already-committed version is a

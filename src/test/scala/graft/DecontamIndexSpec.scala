@@ -115,7 +115,7 @@ class DecontamIndexSpec extends SparkSpec {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val delta = Decontaminate.flagContaminatedIncremental(spark,
           train, batch, idx, "doc_id", "text", n = 3,
-          txnAppId = "decontam_stream", txnVersion = id)
+          writer = Some(("decontam_stream", id)))
         delta.as[(Long, Long)].collect().foreach { case (doc, h) =>
           folded = folded.updated(doc, folded.getOrElse(doc, 0L) + h)
         }
@@ -131,7 +131,7 @@ class DecontamIndexSpec extends SparkSpec {
     // exactly-once: replaying batch 0's append must not grow the index
     val before = graft.sources.SnapshotTable.read(spark, idx).count()
     Decontaminate.writeEvalShingleIndex(ev(eval1), "doc_id", "text",
-      idx, n = 3, txnAppId = "decontam_stream", txnVersion = 0L)
+      idx, n = 3, writer = Some(("decontam_stream", 0L)))
     val after = graft.sources.SnapshotTable.read(spark, idx).count()
     assert(after == before, "replayed append must be a no-op")
   }
@@ -237,8 +237,7 @@ class DecontamIndexSpec extends SparkSpec {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         Decontaminate.flagContaminatedEmbeddingIncremental(spark,
-            train, batch, idx, 0.9, txnAppId = "emb_stream",
-            txnVersion = id)
+            train, batch, idx, 0.9, writer = Some(("emb_stream", id)))
           .as[(Long, Double, Long, Boolean)].collect().foreach { r =>
             // the q330 fold: keep the higher rounded cosine (ties to
             // the lower eval id); contaminated ORs across deltas
@@ -265,7 +264,7 @@ class DecontamIndexSpec extends SparkSpec {
     val before = graft.sources.SnapshotTable.read(spark, idx).count()
     Decontaminate.writeEvalEmbeddingIndex(
       ev1.toDF("vec_id", "embedding"), "vec_id", "embedding", idx,
-      txnAppId = "emb_stream", txnVersion = 0L)
+      writer = Some(("emb_stream", 0L)))
     assert(graft.sources.SnapshotTable.read(spark, idx).count() == before)
   }
 
@@ -305,9 +304,9 @@ class DecontamIndexSpec extends SparkSpec {
       df.as[(Long, Double, Long, Boolean)].collect()
         .map(r => r._1 -> r).toMap
     val d1 = m(Decontaminate.flagContaminatedEmbeddingIncremental(
-      spark, train, ev1, idx, 0.9, txnAppId = "emb", txnVersion = 0L))
+      spark, train, ev1, idx, 0.9, writer = Some(("emb", 0L))))
     val d2 = m(Decontaminate.flagContaminatedEmbeddingIncremental(
-      spark, train, ev2, idx, 0.9, txnAppId = "emb", txnVersion = 1L))
+      spark, train, ev2, idx, 0.9, writer = Some(("emb", 1L))))
     // fold: keep the higher cosine, ties to the LOWER eval id
     val folded = (d1.keySet ++ d2.keySet).map { id =>
       val a = d1(id); val b = d2(id)
@@ -323,7 +322,7 @@ class DecontamIndexSpec extends SparkSpec {
     // replayed append is a no-op
     val before = graft.sources.SnapshotTable.read(spark, idx).count()
     Decontaminate.writeEvalEmbeddingIndex(ev1, "vec_id", "embedding",
-      idx, txnAppId = "emb", txnVersion = 0L)
+      idx, writer = Some(("emb", 0L)))
     assert(graft.sources.SnapshotTable.read(spark, idx).count() == before)
   }
 }

@@ -45,11 +45,11 @@ class IncrementalDedupSpec extends SparkSpec {
     // must not double the rows
     val b2 = docs.filter($"doc_id" >= 100 && $"doc_id" < 200)
     Dedup.writeBandIndex(b2, "doc_id", "text", dir,
-      txnAppId = "ingest", txnVersion = 1L)
+      writer = Some(("ingest", 1L)))
     val n2 = graft.sources.SnapshotTable.read(spark, dir).count()
     assert(n2 > n1)
     Dedup.writeBandIndex(b2, "doc_id", "text", dir,
-      txnAppId = "ingest", txnVersion = 1L)
+      writer = Some(("ingest", 1L)))
     assert(graft.sources.SnapshotTable.read(spark, dir).count() == n2)
     // a batch-2 near-dup is now visible to batch 3
     val probe = docs.filter($"doc_id" >= 100 && $"doc_id" < 110)
@@ -89,7 +89,7 @@ class IncrementalDedupSpec extends SparkSpec {
         val clean = batch.join(
           audit.filter(!col("is_dup")).select("doc_id"), "doc_id")
         Dedup.writeBandIndex(clean, "doc_id", "text", dir,
-          txnAppId = "stream-dedup", txnVersion = id)
+          writer = Some(("stream-dedup", id)))
         audit.unpersist(); ()
       }
       .start()

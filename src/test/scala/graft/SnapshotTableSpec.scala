@@ -304,6 +304,16 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t).count() == 4)
   }
 
+  test("appendAs: no writer commits every batch, one token commits once") {
+    val t = Files.createTempDirectory("graft_snap_as").toString + "/t"
+    val batch = Seq((1, "a")).toDF("id", "v")
+    assert(SnapshotTable.appendAs(batch, t, None).contains(0))
+    assert(SnapshotTable.appendAs(batch, t, None).contains(1))
+    assert(SnapshotTable.appendAs(batch, t, Some(("w", 0L))).contains(2))
+    assert(SnapshotTable.appendAs(batch, t, Some(("w", 0L))).isEmpty)
+    assert(SnapshotTable.read(spark, t).count() == 3)
+  }
+
   test("SnapshotSink: streamed ingest lands exactly once, batch replay safe") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

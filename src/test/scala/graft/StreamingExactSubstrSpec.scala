@@ -36,7 +36,7 @@ class StreamingExactSubstrSpec extends SparkSpec {
         val corpus = spark.read.parquet(corpusDir)
         val delta = SuffixArray.exactSubstrDedupIncremental(spark,
           batch, corpus, idxDir, "doc_id", "text", minLen = 7,
-          txnAppId = "sa_stream", txnVersion = id)
+          writer = Some(("sa_stream", id)))
         folded = folded ++ delta
           .as[(Long, String, Long, Long)].collect()
           .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -59,7 +59,7 @@ class StreamingExactSubstrSpec extends SparkSpec {
     val before = graft.sources.SnapshotTable.read(spark, idxDir).count()
     SuffixArray.writeGramIndex(b1.toDF("doc_id", "text"),
       "doc_id", "text", idxDir, minLen = 7,
-      txnAppId = "sa_stream", txnVersion = 0L)
+      writer = Some(("sa_stream", 0L)))
     val after = graft.sources.SnapshotTable.read(spark, idxDir).count()
     assert(after == before, s"replayed append must not grow the index")
   }

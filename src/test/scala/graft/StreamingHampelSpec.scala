@@ -50,7 +50,7 @@ class StreamingHampelSpec extends SparkSpec {
         folded = folded ++ asMap(TimeSeries.hampelDespikeIncremental(
           spark, batch, dir, "event_type", col("day"), col("cents"),
           window = 5, nMad = 3,
-          txnAppId = "hampel_stream", txnVersion = id))
+          writer = Some(("hampel_stream", id))))
       }
       .start()
     input.addData(batch1: _*); q.processAllAvailable()
@@ -72,7 +72,7 @@ class StreamingHampelSpec extends SparkSpec {
     TimeSeries.hampelDespikeIncremental(spark,
       batch2.toDF("event_type", "day", "cents"), dir, "event_type",
       col("day"), col("cents"), window = 5, nMad = 3,
-      txnAppId = "hampel_stream", txnVersion = 1L)
+      writer = Some(("hampel_stream", 1L)))
     assert(graft.sources.SnapshotTable.read(spark, dir).count() == before)
   }
 }

@@ -107,14 +107,14 @@ class WinnowingSpec extends SparkSpec {
       .createTempDirectory("wn_inc").toString + "/idx"
     val d1 = asPairs(Dedup.winnowMatchPairsIncremental(spark,
       batch1.toDF("doc_id", "text"), dir, "doc_id", "text",
-      txnAppId = "wn_inc", txnVersion = 1L))
+      writer = Some(("wn_inc", 1L))))
     // first delta IS the batch result
     assert(d1 == asPairs(Dedup.winnowMatchPairs(
       batch1.toDF("doc_id", "text"), "doc_id", "text")))
     assert(d1.contains((1L, 2L)))
     val d2 = asPairs(Dedup.winnowMatchPairsIncremental(spark,
       batch2.toDF("doc_id", "text"), dir, "doc_id", "text",
-      txnAppId = "wn_inc", txnVersion = 2L))
+      writer = Some(("wn_inc", 2L))))
     // every delta-2 pair touches the batch; the old (1,2) pair is
     // absent (its fingerprint sets are frozen)
     assert(d2.keys.forall { case (a, b) => a >= 10L || b >= 10L })
@@ -128,7 +128,7 @@ class WinnowingSpec extends SparkSpec {
     // must not grow the index
     val before = graft.sources.SnapshotTable.read(spark, dir).count()
     Dedup.writeFingerprintIndex(batch2.toDF("doc_id", "text"),
-      "doc_id", "text", dir, txnAppId = "wn_inc", txnVersion = 2L)
+      "doc_id", "text", dir, writer = Some(("wn_inc", 2L)))
     assert(graft.sources.SnapshotTable.read(spark, dir).count() == before)
   }
 
@@ -150,7 +150,7 @@ class WinnowingSpec extends SparkSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         folded = folded ++ asPairs(Dedup.winnowMatchPairsIncremental(
           spark, batch, dir, "doc_id", "text",
-          txnAppId = "wn_stream", txnVersion = id))
+          writer = Some(("wn_stream", id))))
       }
       .start()
     input.addData(b1: _*); q.processAllAvailable()

@@ -4,13 +4,15 @@
 Reads the Verify output dir (per-query parquet + oracle_sql.json), runs
 each oracle SQL in DuckDB over the same sf dir, and compares: schema
 (column names), row count, and values (columns sorted by name, rows
-sorted by all columns). Not the driver's exact hasher, but strictly
+sorted by all columns). A query output with no oracle entry fails too,
+so a query cannot drop out of the count unnoticed. Not the driver's exact hasher, but strictly
 stronger than "probably fine".
 
 Usage: python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -100,7 +102,14 @@ def main(sf_dir: str, out_dir: str) -> int:
             failures += 1
         else:
             print(f"OK   {name}: {len(got)} rows")
-    print(f"\n{len(oracle) - failures}/{len(oracle)} queries match")
+    orphans = sorted(n for n in os.listdir(out_dir)
+                     if n != "oracle_sql.json" and n[0] not in "._"
+                     and n not in oracle)
+    for name in orphans:
+        print(f"FAIL {name}: spark output has no oracle_sql.json entry")
+    failures += len(orphans)
+    total = len(oracle) + len(orphans)
+    print(f"\n{total - failures}/{total} queries match")
     return 1 if failures else 0
 
 

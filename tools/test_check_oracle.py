@@ -66,6 +66,15 @@ class CheckOracleTest(unittest.TestCase):
         self.assertIn("FAIL q2: no spark output", r.stdout)
         self.assertIn("1/2 queries match", r.stdout)
 
+    def test_output_without_oracle_fails(self):
+        self.spark_output("q1", {"id": pa.array([0], pa.int64())})
+        self.spark_output("q2", {"id": pa.array([1], pa.int64())})
+        r = self.check({"q1": "SELECT id FROM region"})
+        self.assertEqual(r.returncode, 1, r.stdout)
+        self.assertIn("FAIL q2: spark output has no oracle_sql.json entry",
+                      r.stdout)
+        self.assertIn("1/2 queries match", r.stdout)
+
     def test_column_name_mismatch_fails(self):
         self.spark_output("q1", {"ident": pa.array([0], pa.int64())})
         r = self.check({"q1": "SELECT id FROM region"})
