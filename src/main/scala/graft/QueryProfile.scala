@@ -27,8 +27,11 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * shuffle and spill bytes, and the task skew of the heaviest stage;
   * Spark's codegen metrics count the classes
   * Janino compiled (a plan shape already in the JVM-wide cache compiles
-  * none); one sampler thread aggregates the stacks of the driver thread
-  * and of busy executor task threads.
+  * none); `analyzed_nodes` counts the returned DataFrame's analyzed
+  * plan nodes, subqueries included (the size of what each eager call
+  * on it re-analyzes, and a count that does not swing with the host's
+  * load as wall time does); one sampler thread aggregates the stacks
+  * of the driver thread and of busy executor task threads.
   *
   * Usage: runMain graft.QueryProfile <sfDir> [query ...]
   * (no names profiles every query, sorted). Each query is warmed once
@@ -47,7 +50,8 @@ object QueryProfile {
       jobs: Int, stages: Int, tasks: Int, runMs: Long, cpuMs: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
       heavyStageMaxMs: Long, heavyStageMedianMs: Long,
-      codegenCompiles: Long, persistedRddsLeft: Int, cacheNonEmpty: Boolean,
+      codegenCompiles: Long, analyzedNodes: Int,
+      persistedRddsLeft: Int, cacheNonEmpty: Boolean,
       timeline: Seq[Job], plan: String,
       driverFrames: Seq[(String, Int)], executorFrames: Seq[(String, Int)]) {
 
@@ -62,7 +66,7 @@ object QueryProfile {
         s"shuffle_write_bytes=$shuffleWriteBytes spill_bytes=$spillBytes " +
         s"heavy_stage_max_ms=$heavyStageMaxMs " +
         s"heavy_stage_median_ms=$heavyStageMedianMs " +
-        s"codegen_compiles=$codegenCompiles " +
+        s"codegen_compiles=$codegenCompiles analyzed_nodes=$analyzedNodes " +
         s"persisted_rdds_left=$persistedRddsLeft " +
         s"cache_nonempty=$cacheNonEmpty\n"
       timeline.foreach(j =>
@@ -222,6 +226,7 @@ object QueryProfile {
       listener.shuffleRead.get, listener.shuffleWrite.get, listener.spill.get,
       heavyMax, heavyMedian,
       compiles.getCount - compilesBefore,
+      df.queryExecution.analyzed.collectWithSubqueries { case p => p }.size,
       sc.getPersistentRDDs.keys.count(id => !rddsBefore(id)),
       !spark.sharedState.cacheManager.isEmpty,
       timeline, df.queryExecution.explainString(FormattedMode),

@@ -26,12 +26,49 @@ object GraftShim {
   def logicalPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Whether the cache manager already holds a plan equivalent to
-    * `df`'s (the lookup `df.persist()` itself makes).
+  /** The cache manager's entry for a plan equivalent to `df`'s (the
+    * lookup `df.persist()` itself makes): it canonicalizes `df`'s plan
+    * and compares it with every entry.
     */
-  def isCached(df: Dataset[_]): Boolean =
+  def cachedEntry(df: Dataset[_]): Option[execution.CachedData] =
     df.sparkSession.asInstanceOf[classic.SparkSession].sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]]).isDefined
+      .lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+
+  /** Whether the cache manager already holds a plan equivalent to `df`'s. */
+  def isCached(df: Dataset[_]): Boolean = cachedEntry(df).isDefined
+
+  /** Whether `entry` was added by persisting `df` itself: the cache
+    * manager keys a new entry by the very normalized plan of the
+    * Dataset that persisted it.
+    */
+  def persistedBy(entry: execution.CachedData, df: Dataset[_]): Boolean =
+    entry.plan eq df.asInstanceOf[classic.Dataset[_]].queryExecution.normalized
+
+  /** The object that identifies `entry`'s cache: its builder, which
+    * every copy of the entry's in-memory relation shares (`private[sql]`
+    * type, so handed out as `AnyRef`).
+    */
+  def cacheId(entry: execution.CachedData): AnyRef =
+    entry.cachedRepresentation.cacheBuilder
+
+  /** The caches `plan` reads through in-memory relation leaves,
+    * subqueries included: each one's [[cacheId]] and the plan the cache
+    * is computed from.
+    */
+  def cacheLeaves(plan: catalyst.plans.logical.LogicalPlan)
+      : Seq[(AnyRef, catalyst.plans.logical.LogicalPlan)] =
+    plan.collectWithSubqueries {
+      case r: execution.columnar.InMemoryRelation =>
+        (r.cacheBuilder, r.cacheBuilder.logicalPlan)
+    }
+
+  /** `df` as a DataFrame whose plan is one leaf: `entry`'s in-memory
+    * relation, carrying `df`'s output attributes (the substitution
+    * `QueryExecution.withCachedData` makes for a cached sub-plan).
+    */
+  def cachedLeaf(df: Dataset[_], entry: execution.CachedData): DataFrame =
+    ofRows(df.sparkSession,
+      entry.cachedRepresentation.withOutput(df.queryExecution.analyzed.output))
 
   /** Entries in the session's cache manager (`private[sql]` there). */
   def numCachedEntries(spark: SparkSession): Int =

@@ -62,6 +62,12 @@ class QueryProfileSpec extends SparkSpec {
       s"${first.report}\n${second.report}")
   }
 
+  test("analyzed_nodes: q73's persisted stages are leaves, not lineage") {
+    val (r, _, _) = profile("q73_curation_full")
+    assert(r.analyzedNodes > 0 && r.analyzedNodes <= 64, r.report)
+    assert(r.report.contains(s"analyzed_nodes=${r.analyzedNodes} "), r.report)
+  }
+
   private def built(build: String => DataFrame): QueryProfile.Record =
     profileWith(QueryProfile.record(spark, "built", build, Sf0001))._1
 
