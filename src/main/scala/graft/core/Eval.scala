@@ -400,8 +400,8 @@ object Eval {
   }
 
   /** Decile lift table — the model-evaluation report next to ROC
-    * (q151) and calibration (q153): corpus ranked by score (global
-    * TWO-PHASE prefix rank, never a single-partition window), split
+    * (q151) and calibration (q153): corpus ranked by score (a global
+    * [[PrefixScan]] row rank, never a single-partition window), split
     * into `nBuckets` by the exact (rank−1)·k DIV n identity, per
     * bucket the positive rate and CUMULATIVE lift vs the base rate —
     * all BIGINT. The "how deep can the classifier cut" number a
@@ -412,16 +412,15 @@ object Eval {
     require(nBuckets >= 2, "liftTable needs at least 2 buckets")
     val scored = df.select(col(idCol), scoreMicro.cast("long").as("__s"),
         when(label, 1L).otherwise(0L).as("__y"))
-      .withColumn("n_tokens", lit(1L))
     // `cells` is nBuckets rows — materialize it eagerly so the
-    // two-phase rank's internal persist can be RELEASED here instead of
+    // prefix scan's internal persists can be RELEASED here instead of
     // leaking for the session lifetime (long-lived library callers).
     val cellsMat = Materialize.scope {
-      val ranked = Packing.offsetsOrdered(
-        scored, idCol, Seq(col("__s").desc, col(idCol).asc))
-      val tot = ranked.agg(max("tok_end").as("__n"), sum("__y").as("__p"))
+      val ranked = PrefixScan(scored, Seq(col("__s").desc, col(idCol).asc),
+        PrefixScan.RowRank("__r")).rows
+      val tot = ranked.agg(max("__r").as("__n"), sum("__y").as("__p"))
       Materialize.localCheckpoint(ranked.crossJoin(broadcast(tot))
-        .withColumn("bucket", expr(s"(tok_end - 1) * $nBuckets DIV __n"))
+        .withColumn("bucket", expr(s"(__r - 1) * $nBuckets DIV __n"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_docs"), sum("__y").as("n_pos"),
           max("__n").as("__n"), max("__p").as("__p")))

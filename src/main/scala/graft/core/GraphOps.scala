@@ -311,7 +311,7 @@ object GraphOps {
         least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") < col("b")).distinct()
-    // Vertex renumbering via the TWO-PHASE prefix rank (range-partition,
+    // Vertex renumbering via a [[PrefixScan]] row rank (range-partition,
     // per-partition row_number, broadcast per-partition offsets) — a
     // vertex set grows with the data, so a global Window.orderBy here
     // would funnel every vertex through one partition at scale. The
@@ -319,12 +319,10 @@ object GraphOps {
     // materializes it so the rank's internal persist is released
     // immediately instead of leaking for the session lifetime.
     val verts = Materialize.scope {
-      Materialize.localCheckpoint(graft.core.Packing.offsetsOrdered(
+      Materialize.localCheckpoint(PrefixScan(
           e.select(col("a").as("v"))
-            .unionAll(e.select(col("b").as("v"))).distinct()
-            .withColumn("n_tokens", lit(1L)),
-          "v", Seq(col("v")))
-        .select(col("v"), col("tok_end").as("vrank")))
+            .unionAll(e.select(col("b").as("v"))).distinct(),
+          Seq(col("v")), PrefixScan.RowRank("vrank")).rows)
     }
     val nV = verts.agg(count(lit(1)).as("n_v"))
     val draws = e

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing — the step that turns a curated corpus into
@@ -12,20 +11,8 @@ import org.apache.spark.sql.functions._
   * window may hold many short documents).
   *
   * The load-bearing primitive is a GLOBAL token prefix sum in id
-  * order. A naive `Window.orderBy(id)` computes it on ONE partition —
-  * the canonical driver-bottleneck anti-pattern. This implementation
-  * is the classic two-phase distributed prefix sum, fully
-  * declarative:
-  *
-  *   1. range-partition by id (contiguous id ranges per partition —
-  *      AQE may coalesce, but only ADJACENT ranges, so contiguity
-  *      survives);
-  *   2. partition-local running sums (window keyed on the range
-  *      partition id — the shuffle carries only (id, n_tokens));
-  *   3. per-partition totals (one tiny P-row aggregate) turned into
-  *      partition prefix offsets by a P-row window — the only
-  *      single-partition step, over ≤ a few thousand rows at any
-  *      scale — broadcast-joined back.
+  * order, computed by [[PrefixScan]] (never a one-partition
+  * `Window.orderBy(id)`); the shuffle carries only (id, n_tokens).
   *
   * Every downstream shape is embarrassingly parallel: a doc spanning
   * token interval [s, e) lands in sequences s/L .. (e-1)/L via
@@ -58,87 +45,18 @@ object Packing {
     * the same placement problem with a different weight.
     */
   def offsetsBy(counted: DataFrame, idCol: String): DataFrame =
-    offsetsOrdered(counted, idCol, Seq(col(idCol)))
+    offsetsOrdered(counted, Seq(col(idCol)))
 
-  /** The same two-phase prefix sum under an ARBITRARY total order
-    * (`order` must be total — include the id as the last key):
-    * placement by priority instead of id, the primitive under
-    * budget-capped selection ([[Sampling.tokenBudgetSelect]]).
+  /** The same prefix sum under an ARBITRARY total order (`order`
+    * must be total: include the id as the last key): placement by
+    * priority instead of id, the primitive under budget-capped
+    * selection ([[Sampling.tokenBudgetSelect]]). Caller columns pass
+    * through beside the offsets.
     */
-  def offsetsOrdered(counted: DataFrame, idCol: String,
-                     order: Seq[Column]): DataFrame = {
-    // persist the INPUT too (the denseRankDirect discipline):
-    // repartitionByRange SAMPLES its child to pick range boundaries,
-    // so an un-cached `counted` computes TWICE — once for the sampling
-    // pass, once for the exchange map pass. For tokenOffsets that is a
-    // whole extra corpus tokenize. The sampling pass reads every input
-    // row anyway, so it fills this cache and the map pass reads it.
-    // Rows are the caller's narrow (id, count[, order]) projection.
-    val countedC = Materialize.persist(counted)
-    val ranged = countedC.repartitionByRange(order: _*)
-      .withColumn("_pid", spark_partition_id())
-    // PERSIST: the per-partition totals below must see the SAME _pid
-    // assignment as this branch. Without it, Catalyst builds a second
-    // scan + range exchange for the totals branch, which (a) doubles
-    // the corpus scan and (b) only agrees on partition boundaries
-    // because range-boundary sampling happens to be deterministic —
-    // a coincidence this function must not lean on. The cached rows
-    // are (id, count, pid) — three words per doc.
-    val local = Materialize.persist(ranged.withColumn("_local_end",
-      sum("n_tokens").over(
-        Window.partitionBy("_pid").orderBy(order: _*))))
-    val prefixes = local.groupBy("_pid")
-      .agg(sum("n_tokens").as("_ptotal"))
-      .withColumn("_offset",
-        coalesce(sum("_ptotal").over(
-          Window.orderBy("_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_pid"), col("_offset"))
-    // pass through every caller column (offsetsBy's counted is
-    // (id, n_tokens) → the classic 4-column shape; ordered callers
-    // keep their priority columns alongside the offsets)
-    local.join(broadcast(prefixes), Seq("_pid"))
-      .select(counted.columns.map(col) ++ Seq(
-        (col("_local_end") + col("_offset") - col("n_tokens")).as("tok_start"),
-        (col("_local_end") + col("_offset")).as("tok_end")): _*)
-  }
-
-  /** Two-phase distributed RANK + inclusive running weight sum under
-    * an arbitrary total order, in ONE range-partitioned pass: `rank` =
-    * global 1-based position, `cum` = Σ weight through this row. The
-    * frequency-curve primitive (vocab coverage, cumulative-share
-    * tables): the naive formulation is an unpartitioned row_number +
-    * running-sum window — a single-partition sort of the WHOLE table,
-    * vocab-sized at web scale — which this replaces with per-partition
-    * locals plus a broadcast of per-partition (count, total) prefixes,
-    * the [[offsetsOrdered]] machinery with a second accumulator riding
-    * the same exchange. `order` must be total (include a unique key
-    * last). Output: caller columns + (rank, cum) BIGINT.
-    */
-  def rankAndCumOrdered(counted: DataFrame, weightCol: String,
-                        order: Seq[Column]): DataFrame = {
-    // input persist: same sampling-pass rationale as [[offsetsOrdered]]
-    val countedC = Materialize.persist(counted)
-    val ranged = countedC.repartitionByRange(order: _*)
-      .withColumn("_pid", spark_partition_id())
-    val w = Window.partitionBy("_pid").orderBy(order: _*)
-    // persist for the same reason offsetsOrdered does: the totals
-    // branch must see the SAME _pid assignment
-    val local = Materialize.persist(ranged
-      .withColumn("_local_rank", row_number().over(w).cast("long"))
-      .withColumn("_local_cum", sum(col(weightCol)).over(w)))
-    val before = Window.orderBy("_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixes = local.groupBy("_pid")
-      .agg(count(lit(1)).as("_pn"), sum(col(weightCol)).as("_pw"))
-      .withColumn("_rank_off", coalesce(sum("_pn").over(before), lit(0L)))
-      .withColumn("_cum_off", coalesce(sum("_pw").over(before), lit(0L)))
-      .select(col("_pid"), col("_rank_off"), col("_cum_off"))
-    local.join(broadcast(prefixes), Seq("_pid"))
-      .select(counted.columns.map(col) ++ Seq(
-        (col("_local_rank") + col("_rank_off")).as("rank"),
-        (col("_local_cum") + col("_cum_off")).as("cum")): _*)
-  }
+  def offsetsOrdered(counted: DataFrame, order: Seq[Column]): DataFrame =
+    PrefixScan(counted, order, PrefixScan.RunningSum("n_tokens", "tok_end"))
+      .rows.select(counted.columns.map(col) ++ Seq(
+        (col("tok_end") - col("n_tokens")).as("tok_start"), col("tok_end")): _*)
 
   /** The packing MAP — which documents contribute which token slices
     * to which sequence. One row per (doc, sequence) intersection:
@@ -218,7 +136,7 @@ object Packing {
     */
   def writeShards(seqs: DataFrame, table: String, shards: Int): Int = {
     require(shards >= 1, "shards must be >= 1")
-    // NO input persist here (unlike offsetsOrdered): packed
+    // NO input persist here (unlike PrefixScan): packed
     // sequences carry the token-id arrays, and caching payload-bearing
     // rows ahead of the range exchange was measured SLOWER than letting
     // the sampling pass recompute (the q100/q102 writer A/B, r17) —
@@ -294,9 +212,9 @@ object Packing {
     * Scale shape: a bucket can hold billions of rows, so rank-within-
     * bucket must NOT be a `Window.partitionBy(bucket)` (one task per
     * bucket = the skewed-window anti-pattern). The global rank comes
-    * from the same two-phase prefix sum as packing (weight 1 per row
-    * under the bucket-major total order) and the per-bucket rank is
-    * global rank − the bucket's first rank — a #buckets-row broadcast.
+    * from the same [[PrefixScan]] as packing (a row rank under the
+    * bucket-major total order) and the per-bucket rank is global
+    * rank − the bucket's first rank — a #buckets-row broadcast.
     * The shuffle carries (id, len, bucket), never text.
     */
   def lengthBatches(counted: DataFrame, idCol: String, lenCol: String,
@@ -306,15 +224,14 @@ object Packing {
     val bucketed = counted
       .select(col(idCol), col(lenCol).cast("long").as("len"),
         expr(s"cast($lenCol as bigint) DIV ${bucketWidth}L").as("bucket"))
-      .withColumn("n_tokens", lit(1L))
-    val ranked = offsetsOrdered(bucketed, idCol,
-      Seq(col("bucket"), col("len").desc, col(idCol)))
-    // tok_end under weight-1 rows IS the 1-based global rank
+    val ranked = PrefixScan(bucketed,
+      Seq(col("bucket"), col("len").desc, col(idCol)),
+      PrefixScan.RowRank("__rank")).rows
     val starts = ranked.groupBy("bucket")
-      .agg(min("tok_end").as("__bstart"))
+      .agg(min("__rank").as("__bstart"))
     ranked.join(broadcast(starts), Seq("bucket"))
       .select(col(idCol), col("len"), col("bucket"),
-        (col("tok_end") - col("__bstart")).as("rank_in_bucket"))
+        (col("__rank") - col("__bstart")).as("rank_in_bucket"))
       .withColumn("batch", expr(s"rank_in_bucket DIV ${batchSize}L"))
       .select(col(idCol), col("len"), col("bucket"), col("batch"),
         col("rank_in_bucket"))

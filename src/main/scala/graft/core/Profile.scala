@@ -302,8 +302,7 @@ object Profile {
     *
     * Scale shape: NO per-source window (a 20-source corpus would put
     * 5% of all rows in one window partition) — both rank passes are
-    * the two-phase distributed prefix rank
-    * ([[Packing.offsetsOrdered]], weight-1): one pass in
+    * [[PrefixScan]] row ranks: one pass in
     * (source, value, id) order whose per-source MIN gives each
     * source's rank offset (per-source rank = global position − source
     * start + 1), one pass in (value, id) order for the global order
@@ -317,20 +316,18 @@ object Profile {
   def quantileNormalize(df: DataFrame, idCol: String, sourceCol: String,
                         valueCol: String): DataFrame = Materialize.scope {
     val base = df.select(col(idCol), col(sourceCol), col(valueCol))
-    val c1 = base.withColumn("n_tokens", lit(1L))
-    val bysrc = Packing.offsetsOrdered(c1, idCol,
-      Seq(col(sourceCol), col(valueCol), col(idCol)))
+    val bysrc = PrefixScan(base,
+      Seq(col(sourceCol), col(valueCol), col(idCol)),
+      PrefixScan.RowRank("__r")).rows
     val starts = bysrc.groupBy(sourceCol)
-      .agg(min("tok_end").as("__s0"), count(lit(1)).as("n_source"))
+      .agg(min("__r").as("__s0"), count(lit(1)).as("n_source"))
     val ranked = bysrc.join(broadcast(starts), Seq(sourceCol))
       .select(col(idCol), col(sourceCol), col(valueCol),
-        (col("tok_end") - col("__s0") + 1L).as("src_rank"),
+        (col("__r") - col("__s0") + 1L).as("src_rank"),
         col("n_source"))
-    val c2 = base.select(col(idCol), col(valueCol))
-      .withColumn("n_tokens", lit(1L))
-    val byval = Packing.offsetsOrdered(c2, idCol,
-      Seq(col(valueCol), col(idCol)))
-    val globalStats = byval.select(col("tok_end").as("__grank"),
+    val byval = PrefixScan(base.select(col(idCol), col(valueCol)),
+      Seq(col(valueCol), col(idCol)), PrefixScan.RowRank("__grank")).rows
+    val globalStats = byval.select(col("__grank"),
       col(valueCol).as("qnorm"))
     val n = globalStats.agg(max("__grank").as("__n"))
     Materialize.localCheckpoint(ranked.crossJoin(broadcast(n))

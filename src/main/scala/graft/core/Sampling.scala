@@ -334,8 +334,7 @@ object Sampling {
     *
     * `counted` carries (idCol, n_tokens, priorityCol); priority should
     * be an exact integer (the fixed-point discipline) so the order is
-    * engine-portable. The cumulative sum is the two-phase distributed
-    * prefix sum ([[Packing.offsetsOrdered]]) under the
+    * engine-portable. The cumulative sum is a [[PrefixScan]] under the
     * priority order — never a one-partition window.
     *
     * @return the selected rows: (idCol, n_tokens, priorityCol,
@@ -345,7 +344,7 @@ object Sampling {
   def tokenBudgetSelect(counted: DataFrame, idCol: String,
                         priorityCol: String, budget: Long): DataFrame = {
     Packing.offsetsOrdered(
-      counted, idCol, Seq(col(priorityCol).desc, col(idCol).asc))
+      counted, Seq(col(priorityCol).desc, col(idCol).asc))
       .filter(col("tok_end") <= budget)
   }
 
@@ -432,8 +431,7 @@ object Sampling {
     * extras-to-early-buckets rule) a one-line integer identity both
     * engines share.
     *
-    * The global rank is the two-phase distributed prefix rank
-    * (weight-1 [[Packing.offsetsOrdered]]) — never a
+    * The global rank is a [[PrefixScan]] row rank — never a
     * single-partition `Window.orderBy`, which is the q121/q123
     * discipline for corpus-wide order at scale.
     *
@@ -442,14 +440,11 @@ object Sampling {
   def curriculumPhases(df: DataFrame, idCol: String, order: Seq[Column],
                        k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    val counted = df.withColumn("n_tokens", lit(1L))
-    val ranked = Packing.offsetsOrdered(counted, idCol, order)
-    val out = ranked.select(
-      df.columns.map(col) :+ col("tok_end").as("rank"): _*)
-    // n = max rank; the agg re-reads the persisted prefix-sum branch,
-    // not the corpus
-    val tot = out.agg(max("rank").as("n_total"))
-    out.crossJoin(broadcast(tot))
+    val ranked = PrefixScan(df, order, PrefixScan.RowRank("rank")).rows
+    // n = max rank; the agg re-reads the scan's persisted rows, not
+    // the corpus
+    val tot = ranked.agg(max("rank").as("n_total"))
+    ranked.crossJoin(broadcast(tot))
       .withColumn("phase", expr(s"(rank - 1) * $k DIV n_total"))
       .drop("n_total")
   }
@@ -463,9 +458,9 @@ object Sampling {
     * ensembling ranks. Lower blend = better; gate/select on it with
     * [[tokenBudgetSelect]] or a quantile cut.
     *
-    * Everything is exact integers: each per-signal rank is the
-    * two-phase distributed prefix rank (weight-1 rows — never a
-    * global `Window.orderBy`, the single-partition anti-pattern), and
+    * Everything is exact integers: each per-signal rank is a
+    * [[PrefixScan]] row rank (never a global `Window.orderBy`, the
+    * single-partition anti-pattern), and
     * the blend is a BIGINT sum. K signals cost K rank passes + K
     * id-keyed joins; shuffles carry (id, signal) pairs only.
     *
@@ -475,11 +470,9 @@ object Sampling {
                    signalCols: Seq[String]): DataFrame = {
     require(signalCols.nonEmpty, "rankEnsemble needs at least one signal")
     val ranked = signalCols.map { s =>
-      val counted = df.select(col(idCol), col(s))
-        .withColumn("n_tokens", lit(1L))
-      Packing.offsetsOrdered(counted, idCol,
-          Seq(col(s).desc, col(idCol).asc))
-        .select(col(idCol), col("tok_end").as(s"rank_$s"))
+      PrefixScan(df.select(col(idCol), col(s)),
+          Seq(col(s).desc, col(idCol).asc), PrefixScan.RowRank(s"rank_$s"))
+        .rows.select(col(idCol), col(s"rank_$s"))
     }
     val joined = ranked.reduce(_.join(_, Seq(idCol)))
     joined.withColumn("blend_rank",

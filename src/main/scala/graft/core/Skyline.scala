@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Pareto-frontier (skyline) selection — "best trade-off" curation:
@@ -16,9 +15,7 @@ import org.apache.spark.sql.functions._
   * 2001 made the sort-based observation): group to the distinct-x
   * grid with per-x max y, then a point is on the frontier iff its y
   * equals its x's max AND strictly exceeds every smaller x's max.
-  * That prefix max runs as the SAME two-phase distributed pattern as
-  * [[Packing.offsetsBy]] — range-partition by x, per-partition
-  * running max, per-partition totals broadcast back — so nothing
+  * That prefix max is a [[PrefixScan]] over the grid, so nothing
   * corpus-sized ever sorts in one task and the only global window
   * orders the partition-count-sized totals table (the documented
   * bounded exception).
@@ -37,22 +34,9 @@ object Skyline {
                 yMax: Column): DataFrame = Materialize.scope {
     val pts = df.select(id.as("id"), xMin.as("x"), yMax.as("y"))
     val grid = pts.groupBy("x").agg(max("y").as("ymax"))
-    // persist: the totals branch must see the SAME _pid assignment
-    // (the offsetsBy discipline — never lean on resample luck)
-    val ranged = Materialize.persist(grid.repartitionByRange(col("x"))
-      .withColumn("_pid", spark_partition_id()))
-    val localMax = ranged.withColumn("_run",
-      max("ymax").over(Window.partitionBy("_pid").orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)))
-    val ptotals = ranged.groupBy("_pid").agg(max("ymax").as("_pmax"))
-      .withColumn("_before",
-        max("_pmax").over(Window.orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)))
-      .select(col("_pid"), col("_before"))
-    val frontierX = localMax.join(broadcast(ptotals), Seq("_pid"))
-      .filter(col("ymax") > coalesce(greatest(
-        coalesce(col("_run"), col("_before")),
-        coalesce(col("_before"), col("_run"))), lit(Long.MinValue)))
+    val frontierX = PrefixScan(grid, Seq(col("x")),
+        PrefixScan.MaxBefore("ymax", "_before")).rows
+      .filter(col("ymax") > coalesce(col("_before"), lit(Long.MinValue)))
       .select(col("x").as("_fx"), col("ymax").as("_fy"))
     Materialize.localCheckpoint(pts.join(frontierX,
         col("x") === col("_fx") && col("y") === col("_fy"))

@@ -55,42 +55,6 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
-  /** Global DENSE rank of a level's `r` column (BIGINT result): range
-    * partitioning colocates EQUAL keys (a range partitioner assigns
-    * purely by key order), so a per-partition dense_rank plus the
-    * running offset of per-partition group counts IS the global dense
-    * rank — no distinct table, no rank join-back, and the group total
-    * (the caller's convergence test) rides the same bounded offsets
-    * collect (one row per shuffle partition) instead of a separate
-    * count action. Rank values are range-boundary-invariant, so the
-    * result never depends on the partitioner's sampling.
-    */
-  private def denseRankDirect(level: DataFrame, extraCols: Seq[String])
-      : (DataFrame, Long) = Materialize.scope {
-    val spark = level.sparkSession
-    import spark.implicits._
-    // persist the INPUT too: repartitionByRange SAMPLES its child to
-    // pick boundaries, so an unpersisted level would re-derive the
-    // whole upstream window chain twice (sampling pass + exchange)
-    val src = Materialize.persist(level)
-    val ranged = Materialize.persist(src.repartitionByRange(col("r"))
-      .withColumn("_pid", spark_partition_id()))
-    val parts = ranged.groupBy("_pid")
-      .agg(countDistinct(col("r")).as("_ng"))
-      .orderBy("_pid").collect()
-    var acc = 0L
-    val offsets = parts.toSeq.map { row =>
-      val off = acc; acc += row.getLong(1); (row.getInt(0), off)
-    }
-    val out = Materialize.localCheckpoint(ranged
-      .withColumn("_lr", dense_rank().over(
-        Window.partitionBy("_pid").orderBy("r")).cast("long"))
-      .join(broadcast(offsets.toDF("_pid", "_off")), Seq("_pid"))
-      .select(Seq(col("sa_doc"), col("pos")) ++ extraCols.map(col) :+
-        (col("_lr") + col("_off")).as("r"): _*))
-    (out, acc)
-  }
-
   /** The top-`topK` LONGEST exactly-repeated token substrings in the
     * corpus (length ≥ `minLen` tokens, length UNBOUNDED above —
     * whole-document clones surface at full length). A "repeat" here
@@ -199,13 +163,11 @@ object SuffixArray {
       // side never exchanges; a corpus-scale vocabulary (possible at
       // 100 TB with noisy text) falls back to the shuffled join
       val vocab = toks.select(col("tok")).distinct()
-        .withColumn("w", lit(1L))
       val r0 = Materialize.scope {
-        val vr = Packing.rankAndCumOrdered(vocab, "w", Seq(col("tok")))
+        val vr = PrefixScan(vocab, Seq(col("tok")), PrefixScan.RowRank("r")).rows
         val nVocab = vr.count()
-        val vrSlim = vr.select(col("tok"), col("rank").as("r"))
         Materialize.localCheckpoint(toks.join(
-            if (nVocab <= 1000000L) broadcast(vrSlim) else vrSlim, "tok")
+            if (nVocab <= 1000000L) broadcast(vr) else vr, "tok")
           .select(col("sa_doc"), col("pos"), col("r")))
       }
 
@@ -219,10 +181,11 @@ object SuffixArray {
     // consecutive rounds in one stage with no extra exchange. Because
     // each struct layer DOUBLES the rank's leaf count, every
     // `leafCap`-leaf level is compressed back to a dense BIGINT rank
-    // by [[denseRankDirect]] — range partitioning colocates equal
-    // keys, so one exchange + a per-partition dense_rank + a
+    // by a [[PrefixScan]] dense rank — range partitioning colocates
+    // equal keys, so one exchange + a per-partition dense_rank + a
     // broadcast of per-partition group counts IS the global dense
-    // rank (the old dense round's distinct + two-phase rank + count
+    // rank, and the sum of those counts is the round's group total
+    // (the old dense round's distinct + two-phase rank + count
     // action + join-back, measured 2–3.3 s each at sf0.1, is gone;
     // the direct form measures ~0.6 s). Dense rounds also carry the
     // convergence test: equal group counts across consecutive dense
@@ -253,7 +216,13 @@ object SuffixArray {
       val cur =
         if (leaves < leafCap) cur0
         else {
-          val (compressed, nGroups) = denseRankDirect(cur0, extra)
+          val (compressed, nGroups) = Materialize.scope {
+            val scan = PrefixScan(cur0, Seq(col("r")), PrefixScan.DenseRank("_dr"))
+            (Materialize.localCheckpoint(scan.rows.select(
+                Seq(col("sa_doc"), col("pos")) ++ extra.map(col) :+
+                  col("_dr").as("r"): _*)),
+              scan.totals.agg(sum("_dr")).head().getLong(0))
+          }
           if (nGroups == nTotal || nGroups == lastDenseRanks)
             converged = true
           lastDenseRanks = nGroups

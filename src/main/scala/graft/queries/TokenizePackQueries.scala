@@ -317,14 +317,14 @@ private[graft] object TokenizePackQueries extends QueryDomain {
     // cumulative token-mass share per rank — the table a tokenizer's
     // vocab size is chosen from ("how many types cover 99%?"). The
     // output IS vocab-sized (1e8–1e9 types on web text), so rank+cum
-    // go through the two-phase distributed prefix pass — never an
-    // unpartitioned window; cum·1e6 through DECIMAL(38,0) (BIGINT
-    // wraps past ~9.2e12 tokens)
+    // ride one PrefixScan — never an unpartitioned window; cum·1e6
+    // through DECIMAL(38,0) (BIGINT wraps past ~9.2e12 tokens)
     "q163_vocab_coverage" -> ((s, dir) => {
       val uni = Tables.documents(s, dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
-      graft.core.Packing.rankAndCumOrdered(uni, "c", Seq(desc("c"), asc("w")))
+      PrefixScan(uni, Seq(desc("c"), asc("w")), PrefixScan.RowRank("rank"),
+          PrefixScan.RunningSum("c", "cum")).rows
         .crossJoin(broadcast(uni.agg(sum("c").as("total"))))
         .select(col("rank"), col("w").as("token"), col("c"), col("cum"),
           expr("CAST(cum AS DECIMAL(38,0)) * 1000000 DIV total")
@@ -1066,9 +1066,7 @@ private[graft] object TokenizePackQueries extends QueryDomain {
         // re-running the encode per packing consumer at every
         // methodology tried — PLANS.md "q80 encode boundary" — and the
         // only shape that works when encode output exceeds memory).
-        graft.sources.SnapshotTable.overwrite(enc, t)
-        Packing.packIdSequences(
-          graft.sources.SnapshotTable.read(s, t), "doc_id", seqLen = 512)
+        Packing.packIdSequencesMaterialized(enc, t, "doc_id", seqLen = 512)
       case None =>
         // zero-side-effect small-corpus form: the result is lazy, so
         // the caches must outlive this call — one-shot jobs only

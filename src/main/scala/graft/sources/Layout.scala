@@ -1,43 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Physical table layout for scale: hive-style partitioning (partition
-  * pruning at the scan) and bucketing (co-located joins/aggregations
-  * with no exchange).
+/** Physical table layout for scale beyond what Spark's writer does
+  * in one call. Hive-style partitioning (`partitionBy`, pruning at the
+  * scan) and bucketing (`bucketBy` + `saveAsTable`, co-located joins
+  * with no exchange) are plain writer options; `LayoutSpec` pins their
+  * plans. What lives here is multi-column clustering.
   *
   * The reference's only layout decision is Cosmos's hash partition key
   * `/HomeID` (`blobToCosmos.py:21`); here the same intent becomes
   * columnar layout: partition coarse, low-cardinality columns
   * (Season / date bucket), bucket high-cardinality join keys (HomeID,
-  * user_id). At 100 TB the partition column prunes whole directories
-  * and the bucket spec removes the shuffle from every keyed join/agg
-  * that follows it.
+  * user_id), and z-order files on the columns queries filter by.
   */
 object Layout {
-
-  /** Hive-style partitioned parquet write — one directory per value;
-    * filters on `cols` become PartitionFilters (no data files touched
-    * outside matching partitions).
-    */
-  def writePartitioned(df: DataFrame, dir: String, cols: Seq[String],
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(cols: _*).parquet(dir)
-
-  /** Bucketed + sorted table (catalog-backed — bucketing metadata lives
-    * in the table catalog, not the files). Joins and aggregations on
-    * `bucketCol` between same-bucketed tables plan with ZERO exchange.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    nBuckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /** Z-order clustering into a [[SnapshotTable]]: interleave the bits
     * of per-column quantile-bucket ids so rows close in ANY clustered

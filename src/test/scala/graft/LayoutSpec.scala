@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.Layout
 import org.apache.spark.sql.functions._
 
 /** Partition pruning and bucketed-join plans — asserted at the plan
@@ -17,7 +16,7 @@ class LayoutSpec extends SparkSpec {
   private def assertPrunes(df: org.apache.spark.sql.DataFrame, part: String,
                            values: Seq[String], value: String): Unit = {
     val dir = Files.createTempDirectory("graft_layout").toString + "/t"
-    Layout.writePartitioned(df, dir, Seq(part))
+    df.write.mode("overwrite").partitionBy(part).parquet(dir)
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .map(_.getName).sorted.toSeq
     assert(dirs == values.map(v => s"$part=$v"))
@@ -56,15 +55,17 @@ class LayoutSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS ev_bucketed_a")
     spark.sql("DROP TABLE IF EXISTS ev_bucketed_b")
     val ev = Tables.events(spark, Sf0001).select("event_id", "user_id", "value")
-    Layout.writeBucketed(ev, "ev_bucketed_a", "user_id", 8)
-    Layout.writeBucketed(
-      ev.groupBy("user_id").agg(sum("value").as("total")),
-      "ev_bucketed_b", "user_id", 8)
+    def writeBucketed(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+      df.write.mode("overwrite").bucketBy(8, "user_id").sortBy("user_id")
+        .format("parquet").saveAsTable(table)
+    writeBucketed(ev, "ev_bucketed_a")
+    writeBucketed(ev.groupBy("user_id").agg(sum("value").as("total")),
+      "ev_bucketed_b")
     // merge hint: without it the tiny side would broadcast and hide
     // the property under test (bucketing removes the SHUFFLE, so we
     // assert no hash-partitioning exchange in the sort-merge plan)
-    val joined = Layout.readTable(spark, "ev_bucketed_a")
-      .join(Layout.readTable(spark, "ev_bucketed_b").hint("merge"), "user_id")
+    val joined = spark.table("ev_bucketed_a")
+      .join(spark.table("ev_bucketed_b").hint("merge"), "user_id")
     assert(joined.count() == ev.count())
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan)
